@@ -192,6 +192,41 @@ FORCE_RECHECK: dict[str, int] = {
     "stream_image_catalog_ingest": 19,
     "stream_split_by_neardup": 19,
 }
+# r21: every maintained-state registration (the six kinds' ingest arms plus
+# their compaction, TTL, gate and audit twins) now runs through the one
+# lifecycle engine (plans.stream.run_lifecycle + a MaintainedState spec per
+# kind) — oracles byte-identical, pytest parity green at sf0.001 and the
+# verify recipe green at sf0.01, but every earning run/compaction body was
+# replaced (the r14/r15/r18 refactor-re-proof precedent).
+# stream_minhash_probe rides along: its frozen catalog now builds through
+# the band catalog's seed builder (_mh_catalog_seed, same calls).
+# 10 CORE + these 19 fit the 50 slots.
+FORCE_RECHECK.update(
+    {
+        name: 21
+        for name in (
+            "stream_dedup_store_ingest",
+            "stream_dedup_store_bloom_ingest",
+            "stream_dedup_store_compacted",
+            "stream_dedup_store_retention",
+            "stream_minhash_catalog_ingest",
+            "stream_minhash_catalog_compacted",
+            "stream_minhash_catalog_retention",
+            "stream_image_catalog_ingest",
+            "stream_image_catalog_compacted",
+            "stream_image_catalog_retention",
+            "stream_embedding_catalog_ingest",
+            "stream_embedding_catalog_compacted",
+            "stream_embedding_catalog_retention",
+            "stream_pretrain_gate_v2",
+            "stream_pretrain_gate_v3",
+            "stream_split_by_neardup_incremental",
+            "stream_split_by_neardup_inc_audit",
+            "stream_split_by_neardup_inc_compacted",
+            "stream_minhash_probe",
+        )
+    }
+)
 
 
 # Unchecked queries enter the window in this order first, then registration

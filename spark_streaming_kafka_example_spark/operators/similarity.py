@@ -23,6 +23,8 @@ loop — measured on the dedup scorer).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.vectors import cosine_all_pandas, cosine_pandas
@@ -50,13 +52,23 @@ def _centroid_literal_array(cent_rows, k: int):
     it was meant to speed up); one expr string is a single round trip
     and parses server-side in ms. repr(float) round-trips exactly and
     SQL double literals parse correctly-rounded, so the embedded values
-    are bit-identical to the F.lit path."""
+    are bit-identical to the F.lit path. A non-finite component (NaN or
+    +-inf) has no SQL double literal, so it raises naming the centroid
+    instead of failing as an opaque parse error."""
     if len(cent_rows) > k:
         raise ValueError(
             f"centroid relation must be fixed-k (<= {k} rows), got"
             f" {len(cent_rows)} — a corpus-size-dependent centroid set"
             " cannot be embedded as plan literals"
         )
+    for r in cent_rows:
+        bad = [x for x in r["cv"] if not math.isfinite(float(x))]
+        if bad:
+            raise ValueError(
+                f"centroid cent_id={int(r['cent_id'])} has non-finite"
+                f" component(s) {bad[:3]} — a centroid must be finite to"
+                " embed as a plan literal"
+            )
     parts = [
         "named_struct('cent_id', {cid}, 'cv', array({cv}))".format(
             cid=int(r["cent_id"]),

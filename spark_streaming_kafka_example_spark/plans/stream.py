@@ -14,6 +14,9 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -565,43 +568,147 @@ def _id_range_parts(
     ]
 
 
+def _odd_plus_plants(
+    table: DataFrame, every: int, offset: int, payload="text"
+) -> list:
+    """The seeded kinds' arrival layout: odd ids in 3 id ranges + one
+    plants file re-crawling every ``every``-th row under id + ``offset``
+    (``payload``: the re-crawled column, or a Column rewriting it)."""
+    plants = table.filter(F.col("doc_id") % every == 0).select(
+        (F.col("doc_id") + offset).alias("doc_id"), payload
+    )
+    odds = table.filter(F.col("doc_id") % 2 == 1)
+    return _id_range_parts(odds, plants, plant_offset=offset)
+
+
 # Explicit state-relation schemas (r20, guide §6 / r19 VERDICT task 1):
 # every per-batch state read names the WRITER's schema instead of
 # re-inferring it from parquet footers — measured ~70-95 ms of
 # driver-side footer-read latency saved per read on this host, paid 1-3x
 # per micro-batch by every maintenance handler. batch_id is the
 # partition column every state write appends (int: F.lit(batch_id)).
-# The strings must track the writers exactly; schemas were captured from
-# the live relations (simpleString) when introduced.
-_FP_STORE_SCHEMA = "fp string, batch_id int"
-_BLOOM_BITS_SCHEMA = "pos bigint, batch_id int"
-_MH_CATALOG_SCHEMA = (
-    "doc_id long, band_id int, band_val string, batch_id int"
-)
-_IMG_CATALOG_SCHEMA = (
-    "doc_id long, phash string, chunk_id int, chunk_val string, "
-    "batch_id int"
-)
-_EMB_CODES_SCHEMA = "doc_id long, band_id int, code int, batch_id int"
-_EMB_VECS_SCHEMA = "doc_id long, embedding array<float>, batch_id int"
-_CLUSTER_MAP_SCHEMA = (
-    "doc_id long, rep_id long, rep_fp string, batch_id int"
-)
+# Each relation declares its schema ONCE (Relation.schema) and every
+# write checks its frame against it (_overwrite_batch_partition), so the
+# reader and the writer share one string by construction.
 
 
-def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Partitioned state-dir read with the writer's explicit schema (no
-    per-batch footer inference — see the schema constants above)."""
-    return spark.read.schema(schema).parquet(path)
+@dataclass(frozen=True)
+class Relation:
+    """One maintained state relation: its directory name, the writer's
+    data columns as DDL (batch_id is implied), and the seed builder that
+    maps the spec's input table to its batch_id=-1 rows (None: seedless,
+    the relation first appears at batch 0)."""
+
+    name: str
+    schema: str
+    seed: Callable[[DataFrame], DataFrame] | None = None
+
+
+@dataclass(frozen=True)
+class MaintainedState:
+    """One ingest-maintained state kind, declared once for run_lifecycle:
+    the input table (spark, sf_dir) -> DataFrame, its state relations,
+    the id-ordered arrival parts built from the table, the arrival
+    schema, the handler factory (StateIO -> foreachBatch handler), the
+    decisions DDL, and the output projection (selectExpr) of the drained
+    decisions."""
+
+    name: str
+    table: Callable[[SparkSession, str], DataFrame]
+    relations: tuple[Relation, ...]
+    parts: Callable[[DataFrame], list]
+    arrival_schema: str
+    handler: Callable
+    decisions: str
+    output: tuple[str, ...]
+
+
+@dataclass(frozen=True)
+class StateIO:
+    """One run of a spec: every relation, the decisions and the checkpoint
+    live in their own directory under ``base_dir``; ``retention_batches``
+    is the TTL window the run's reads apply. A handler reads through
+    _prior_state and writes through ONE write() call per batch."""
+
+    spec: MaintainedState
+    base_dir: str
+    retention_batches: int | None = None
+
+    def dir(self, name: str) -> str:
+        return os.path.join(self.base_dir, name)
+
+    def relation(self, name: str) -> Relation:
+        if name == "decisions":
+            return Relation("decisions", self.spec.decisions)
+        return next(r for r in self.spec.relations if r.name == name)
+
+    def write(self, batch_id: int, **frames: DataFrame) -> None:
+        """Overwrite this batch's partition of every named relation. The
+        writes are independent (own dirs, replay overwrites
+        per-partition) — overlap them (r19, guide §2.6); list the slow
+        decisions write first so the appends backfill its tail."""
+        _run_jobs(
+            *[
+                lambda n=n, df=df: _overwrite_batch_partition(
+                    df, self.dir(n), batch_id, self.relation(n)
+                )
+                for n, df in frames.items()
+            ]
+        )
+
+
+def _read_state(spark: SparkSession, path: str, rel: Relation) -> DataFrame:
+    """Partitioned state-dir read with the relation's declared schema (no
+    per-batch footer inference — see the comment above Relation)."""
+    return spark.read.schema(rel.schema + ", batch_id int").parquet(path)
+
+
+def _prior_state(spark: SparkSession, io: StateIO, batch_id: int) -> dict:
+    """Every relation AS OF this batch: only partitions appended by
+    EARLIER batches (batch_id < current — the read-your-predecessors
+    bound; a REPLAYED batch must never see its own appends). With
+    ``retention_batches`` only partitions batch_id >= current - W stay
+    visible (the seed ages out after W batches like any append), so the
+    scan is partition-pruned on BOTH sides. A missing dir reads as None
+    ("no prior state") only for a seedless spec before its first write;
+    a seeded spec writes every relation at batch_id=-1, so a missing one
+    is half-seeded state and fails fast, naming the relation."""
+    seeded = any(r.seed is not None for r in io.spec.relations)
+    prior = {}
+    for rel in io.spec.relations:
+        path = io.dir(rel.name)
+        if not os.path.isdir(path):
+            if seeded:
+                raise RuntimeError(
+                    f"{io.spec.name}: state relation '{rel.name}' is "
+                    f"missing at {path} — half-seeded state"
+                )
+            prior[rel.name] = None
+            continue
+        df = _read_state(spark, path, rel).filter(F.col("batch_id") < batch_id)
+        if io.retention_batches is not None:
+            df = df.filter(
+                F.col("batch_id") >= batch_id - io.retention_batches
+            )
+        prior[rel.name] = df
+    return prior
 
 
 def _overwrite_batch_partition(
-    df: DataFrame, path: str, batch_id: int
+    df: DataFrame, path: str, batch_id: int, rel: Relation
 ) -> None:
     """Write df as THIS batch's (batch_id=...) partition via dynamic
     overwrite — the exactly-once idiom every ingest-maintenance handler
     shares: a replayed batch overwrites its own partition instead of
-    double-appending."""
+    double-appending. The seed (and a compaction) is the batch_id=-1
+    partition. A frame whose columns drift from the relation's declared
+    schema raises before anything is written."""
+    declared = T.StructType.fromDDL(rel.schema).simpleString()
+    if df.schema.simpleString() != declared:
+        raise ValueError(
+            f"state relation '{rel.name}': writer schema "
+            f"{df.schema.simpleString()} drifted from the declared {declared}"
+        )
     (
         df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
@@ -611,79 +718,60 @@ def _overwrite_batch_partition(
     )
 
 
-def _fp_store_ranked(
-    store_dir: str,
-    fps: DataFrame,
-    batch_id: int,
-    retention_batches: int | None = None,
-) -> DataFrame:
+def _fp_ranked(fps: DataFrame, store: DataFrame) -> DataFrame:
     """Exact-dup decision relation shared by the store handlers: the batch's
     (doc_id, fp) rows ranked within-batch by doc_id per fp and left-joined
-    against the store AS OF this batch — only partitions appended by
-    EARLIER batches (batch_id is the partition key, so this prunes at
-    scan). Without the bound a REPLAYED batch would see its own appended
-    fps and flip its novel decisions to duplicate — the exactly-once
-    contract needs read-your-predecessors, never read-yourself (pinned by
-    test_dedup_store_cross_batch_maintenance's replay).
-    ``retention_batches`` additionally EXPIRES old state: only partitions
-    with batch_id >= current - W are visible (the seed -1 ages out after
-    W batches like any other append), so content re-admits after W
-    batches of absence — still a partition-pruned scan, now bounded on
-    BOTH sides. Output columns: the fps columns + rn + hit (True / null)."""
+    against the store AS OF this batch (``store`` is the _prior_state
+    read, so a TTL window EXPIRES old fps: content re-admits after W
+    batches of absence). Without the batch_id < current bound a REPLAYED
+    batch would see its own appended fps and flip its novel decisions to
+    duplicate (pinned by test_dedup_store_cross_batch_maintenance's
+    replay). Output columns: the fps columns + rn + hit (True / null)."""
     from pyspark.sql import Window
 
-    store = _read_state(
-        fps.sparkSession, store_dir, _FP_STORE_SCHEMA
-    ).filter(F.col("batch_id") < batch_id)
-    if retention_batches is not None:
-        store = store.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    store = store.select("fp").distinct()
     w = Window.partitionBy("fp").orderBy("doc_id")
     return fps.withColumn("rn", F.row_number().over(w)).join(
-        store.withColumn("hit", F.lit(True)), "fp", "left_outer"
+        store.select("fp").distinct().withColumn("hit", F.lit(True)),
+        "fp",
+        "left_outer",
     )
 
 
-def _dedup_store_handler(
-    store_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
+def _exact_status():
+    """The store arms' decision: duplicate if the fp hit prior state or a
+    smaller same-batch doc_id (first arrival wins), else novel."""
+    return (
+        F.when(F.col("hit") | (F.col("rn") > 1), "duplicate")
+        .otherwise("novel")
+        .alias("status")
+    )
+
+
+def _novel_fps(ranked: DataFrame) -> DataFrame:
+    """The fps a batch appends to the store: first arrivals of new content."""
+    return ranked.filter(
+        F.col("hit").isNull() & (F.col("rn") == 1)
+    ).select("fp")
+
+
+def _dedup_store_handler(io: StateIO):
     """foreachBatch handler: decide novel/duplicate against the store AS
     OF this batch, then append this batch's novel fps. Both writes are
     (batch_id)-partitioned dynamic overwrites — exactly-once on replay.
-    With ``retention_batches`` the decision window is the TTL'd store
-    (see _fp_store_ranked); a re-admitted fp appends again under its new
+    Under a TTL window a re-admitted fp appends again under its new
     batch_id, restarting its lifetime — duplicates never refresh it."""
     from ..functions.text import fingerprint
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
+        prior = _prior_state(batch_df.sparkSession, io, batch_id)
         fps = batch_df.select(
             "doc_id", fingerprint("text").alias("fp")
         ).localCheckpoint()  # one derivation feeds decisions AND the append
-        ranked = _fp_store_ranked(store_dir, fps, batch_id, retention_batches)
-        # The two state writes are independent (own dirs, replay
-        # overwrites per-partition) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                ranked.select(
-                    "doc_id",
-                    F.when(F.col("hit") | (F.col("rn") > 1), "duplicate")
-                    .otherwise("novel")
-                    .alias("status"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(
-                ranked.filter(
-                    F.col("hit").isNull() & (F.col("rn") == 1)
-                ).select("fp"),
-                store_dir,
-                batch_id,
-            ),
+        ranked = _fp_ranked(fps, prior["store"])
+        io.write(
+            batch_id,
+            decisions=ranked.select("doc_id", _exact_status()),
+            store=_novel_fps(ranked),
         )
 
     return handler
@@ -723,11 +811,9 @@ STREAM_DEDUP_STORE_ORACLE = f"""
     """
 
 
-def _seed_state(rows: DataFrame, state_dir: str) -> None:
-    """Write the pre-ingest state as the batch_id=-1 partition."""
-    rows.withColumn("batch_id", F.lit(-1)).write.partitionBy(
-        "batch_id"
-    ).parquet(state_dir)
+def _docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents relation the text ingests seed from and arrive as."""
+    return load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
 
 def _fp_store_seed(docs: DataFrame) -> DataFrame:
@@ -745,22 +831,15 @@ def _fp_arrival_parts(docs: DataFrame) -> list:
     """The store-ingest arrival files: odd ids in 3 id ranges + the
     +_FP_PLANT_OFFSET exact re-crawls of every 6th doc, id-ordered so
     arrival order == doc_id order (the oracle's rank-by-doc_id rule)."""
-    plants = docs.filter(F.col("doc_id") % 6 == 0).select(
-        (F.col("doc_id") + _FP_PLANT_OFFSET).alias("doc_id"), "text"
-    )
-    odds = docs.filter(F.col("doc_id") % 2 == 1)
-    return _id_range_parts(odds, plants, plant_offset=_FP_PLANT_OFFSET)
+    return _odd_plus_plants(docs, 6, _FP_PLANT_OFFSET)
 
 
 def _arrivals_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema: str = "doc_id long, text string",
+    spark: SparkSession, src_dir: str, schema: str
 ) -> DataFrame:
-    """One file per micro-batch over the id-ordered arrival files. The
-    default schema is the document ingests'; the embedding-catalog arm
-    passes its vector schema (id column stays doc_id — the shared
-    id-ordered plumbing keys on it)."""
+    """One file per micro-batch over the id-ordered arrival files (the
+    id column is doc_id for every kind — the shared id-ordered plumbing
+    keys on it)."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -768,24 +847,101 @@ def _arrivals_stream(
     )
 
 
-def _fp_store_setup(spark: SparkSession, sf_dir: str, prefix: str):
-    """Seed the fingerprint store (batch_id=-1) and write the id-ordered
-    arrival files — the shared setup of both store-ingest variants.
-    Returns (base_dir, store_dir, decisions_dir, arrivals stream)."""
+def run_lifecycle(
+    spark: SparkSession,
+    sf_dir: str,
+    spec: MaintainedState,
+    prefix: str,
+    compact: bool = False,
+    retention_batches: int | None = None,
+) -> tuple[DataFrame, StateIO]:
+    """The one run body of every maintained-state registration: seed
+    every relation (batch_id=-1) and write the id-ordered arrival files
+    in ONE overlapped call, stream the arrivals through the spec's
+    handler (one file per micro-batch), and return the drained decisions
+    (the spec's output projection) plus the run's StateIO — the audit
+    twin reads the cluster map through it. ``compact=True`` ingests
+    parts[:2], collapses every relation into a fresh batch_id=-1
+    partition (_compact_state), ingests parts[2:] against it from a fresh
+    checkpoint (batch ids restart at 0 > -1, so the whole compacted state
+    is visible), and unions both phases' decisions. ``retention_batches``
+    windows every state read (_prior_state); compaction is
+    unbounded-state-only, so asking for both raises."""
+    if compact and retention_batches is not None:
+        raise ValueError(
+            f"run_lifecycle({spec.name}): compaction is unbounded-state-only"
+            " (a TTL'd relation re-appends re-admitted rows and collapsing"
+            " to batch_id=-1 destroys per-row age) — pass compact or"
+            " retention_batches, not both"
+        )
+    from ..streaming.sinks import foreach_batch_sink
+
     from . import tmp_run_dir
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    table = spec.table(spark, sf_dir)
     base_dir = tmp_run_dir(prefix)
-    store_dir = os.path.join(base_dir, "store")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
+    runs = [
+        StateIO(spec, os.path.join(base_dir, ph), retention_batches)
+        for ph in (("a", "b") if compact else ("",))
+    ]
+    first = runs[0]
     # Seed and arrival writes are independent jobs — overlap (r19 §2.6).
     _run_jobs(
-        lambda: _seed_state(_fp_store_seed(docs), store_dir),
-        lambda: _write_id_ordered_arrivals(src_dir, _fp_arrival_parts(docs)),
+        *[
+            lambda r=r: _overwrite_batch_partition(
+                r.seed(table), first.dir(r.name), -1, r
+            )
+            for r in spec.relations
+            if r.seed is not None
+        ],
+        lambda: _write_id_ordered_arrivals(
+            first.dir("arrivals"), spec.parts(table)
+        ),
     )
-    return base_dir, store_dir, decisions_dir, _arrivals_stream(spark, src_dir)
+    if compact:  # phase B's source takes the later files (mtimes kept)
+        later = runs[1].dir("arrivals")
+        os.makedirs(later)
+        for i in range(2, len(os.listdir(first.dir("arrivals")))):
+            os.rename(
+                os.path.join(first.dir("arrivals"), f"b{i}"),
+                os.path.join(later, f"b{i}"),
+            )
+    for prev, io in zip([None] + runs, runs):
+        if prev is not None:  # relations collapse independently — overlap
+            _run_jobs(
+                *[
+                    lambda r=r: _compact_state(
+                        spark, prev.dir(r.name), io.dir(r.name), r
+                    )
+                    for r in spec.relations
+                ]
+            )
+        foreach_batch_sink(
+            _arrivals_stream(spark, io.dir("arrivals"), spec.arrival_schema),
+            spec.handler(io),
+            checkpoint=io.dir("ckpt"),
+            mode="append",
+        ).awaitTermination()
+    decisions = reduce(
+        DataFrame.unionByName,
+        [_read_state(spark, r.dir("decisions"), r.relation("decisions"))
+         for r in runs],
+    )
+    return decisions.selectExpr(*spec.output), runs[-1]
+
+
+_DOC_ARRIVAL_SCHEMA = "doc_id long, text string"
+
+FP_STORE = MaintainedState(
+    name="fp_store",
+    table=_docs_table,
+    relations=(Relation("store", "fp string", _fp_store_seed),),
+    parts=_fp_arrival_parts,
+    arrival_schema=_DOC_ARRIVAL_SCHEMA,
+    handler=_dedup_store_handler,
+    decisions="doc_id long, status string",
+    output=("doc_id", "status"),
+)
 
 
 @register("stream_dedup_store_ingest", STREAM_DEDUP_STORE_ORACLE)
@@ -798,19 +954,7 @@ def stream_dedup_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     later copy — same batch, later batch, or seeded — reads 'duplicate'.
     Cross-file odd/odd copies make the APPENDED partitions load-bearing
     (pytest: test_dedup_store_cross_batch_maintenance)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    base_dir, store_dir, decisions_dir, arriving = _fp_store_setup(
-        spark, sf_dir, "fpstore_"
-    )
-    q = foreach_batch_sink(
-        arriving,
-        _dedup_store_handler(store_dir, decisions_dir),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select("doc_id", "status")
+    return run_lifecycle(spark, sf_dir, FP_STORE, "fpstore_")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -854,9 +998,7 @@ def _store_bloom_bits(fps: DataFrame, m: int) -> DataFrame:
     return out.distinct()
 
 
-def _dedup_store_bloom_handler(
-    store_dir: str, decisions_dir: str, bits_dir: str, m: int
-):
+def _dedup_store_bloom_handler(m: int):
     """The _dedup_store_handler contract with a Bloom gate in front of
     the store join: possible = fps passing ALL k set-bit checks (chained
     left-semi joins on the position columns, the r11 probe's stateless
@@ -867,64 +1009,62 @@ def _dedup_store_bloom_handler(
 
     from ..functions.text import fingerprint
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fps = batch_df.select(
-            "doc_id", fingerprint("text").alias("fp")
-        ).localCheckpoint()
-        cand = fps.select("fp").distinct().select(
-            "fp",
-            *[_store_bloom_pos(F.col("fp"), m, j)
-              for j in range(_STORE_BLOOM_K)],
-        )
-        bits = (
-            _read_state(spark, bits_dir, _BLOOM_BITS_SCHEMA)
-            .filter(F.col("batch_id") < batch_id)
-            .select("pos")
-            .distinct()
-        )
-        possible = cand
-        for j in range(_STORE_BLOOM_K):
-            possible = possible.join(
-                bits.withColumnRenamed("pos", f"pos{j}"), f"pos{j}",
-                "left_semi",
+    def factory(io: StateIO):
+        def handler(batch_df: DataFrame, batch_id: int) -> None:
+            prior = _prior_state(batch_df.sparkSession, io, batch_id)
+            fps = batch_df.select(
+                "doc_id", fingerprint("text").alias("fp")
+            ).localCheckpoint()
+            cand = fps.select("fp").distinct().select(
+                "fp",
+                *[_store_bloom_pos(F.col("fp"), m, j)
+                  for j in range(_STORE_BLOOM_K)],
             )
-        # ONLY possible fps touch the store (the fp-keyed join the Bloom
-        # exists to spare; definite misses never read it)
-        store_hits = possible.select("fp").join(
-            _read_state(spark, store_dir, _FP_STORE_SCHEMA)
-            .filter(F.col("batch_id") < batch_id)
-            .select("fp"),
-            "fp",
-            "left_semi",
-        )
-        w = Window.partitionBy("fp").orderBy("doc_id")
-        ranked = fps.withColumn("rn", F.row_number().over(w)).join(
-            store_hits.withColumn("hit", F.lit(True)), "fp", "left_outer"
-        )
-        novel = ranked.filter(
-            F.col("hit").isNull() & (F.col("rn") == 1)
-        ).select("fp").localCheckpoint()  # feeds the store AND bits appends
-        # Three independent state writes (own dirs, replay overwrites
-        # per-partition) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                ranked.select(
-                    "doc_id",
-                    F.when(F.col("hit") | (F.col("rn") > 1), "duplicate")
-                    .otherwise("novel")
-                    .alias("status"),
-                ),
-                decisions_dir,
+            bits = prior["bloombits"].select("pos").distinct()
+            possible = cand
+            for j in range(_STORE_BLOOM_K):
+                possible = possible.join(
+                    bits.withColumnRenamed("pos", f"pos{j}"), f"pos{j}",
+                    "left_semi",
+                )
+            # ONLY possible fps touch the store (the fp-keyed join the
+            # Bloom exists to spare; definite misses never read it)
+            store_hits = possible.select("fp").join(
+                prior["store"].select("fp"), "fp", "left_semi"
+            )
+            w = Window.partitionBy("fp").orderBy("doc_id")
+            ranked = fps.withColumn("rn", F.row_number().over(w)).join(
+                store_hits.withColumn("hit", F.lit(True)), "fp", "left_outer"
+            )
+            novel = _novel_fps(ranked).localCheckpoint()  # store AND bits
+            io.write(
                 batch_id,
-            ),
-            lambda: _overwrite_batch_partition(novel, store_dir, batch_id),
-            lambda: _overwrite_batch_partition(
-                _store_bloom_bits(novel, m), bits_dir, batch_id
-            ),
-        )
+                decisions=ranked.select("doc_id", _exact_status()),
+                store=novel,
+                bloombits=_store_bloom_bits(novel, m),
+            )
 
-    return handler
+        return handler
+
+    return factory
+
+
+def _fp_bloom_spec(m: int) -> MaintainedState:
+    """FP_STORE plus the maintained bit relation, for a Bloom of m bits
+    (m is fixed for the store's lifetime: merging positions hashed under
+    different m is meaningless)."""
+    return replace(
+        FP_STORE,
+        name="fp_bloom_store",
+        relations=FP_STORE.relations + (
+            Relation(
+                "bloombits",
+                "pos bigint",
+                lambda docs: _store_bloom_bits(_fp_store_seed(docs), m),
+            ),
+        ),
+        handler=_dedup_store_bloom_handler(m),
+    )
 
 
 @register("stream_dedup_store_bloom_ingest", STREAM_DEDUP_STORE_ORACLE)
@@ -936,31 +1076,10 @@ def stream_dedup_store_bloom_ingest(
     but the store-join traffic (no false negatives). Prune effectiveness
     and decision equality pinned by
     tests/test_streaming.py::test_dedup_store_bloom_prunes_and_agrees."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    base_dir, store_dir, decisions_dir, arriving = _fp_store_setup(
-        spark, sf_dir, "fpbloom_"
-    )
-    bits_dir = os.path.join(base_dir, "bloombits")
-
-    seed = _read_state(spark, store_dir, _FP_STORE_SCHEMA).select("fp")
-    n_seed = seed.count()  # one scalar: sizes m for the store's lifetime
+    n_seed = _fp_store_seed(FP_STORE.table(spark, sf_dir)).count()
+    # one scalar: sizes m for the store's lifetime
     m = min(_STORE_BLOOM_M_CAP, 1 << max(8 * n_seed - 1, 1).bit_length())
-    (
-        _store_bloom_bits(seed, m)
-        .withColumn("batch_id", F.lit(-1))
-        .write.partitionBy("batch_id")
-        .parquet(bits_dir)
-    )
-
-    q = foreach_batch_sink(
-        arriving,
-        _dedup_store_bloom_handler(store_dir, decisions_dir, bits_dir, m),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select("doc_id", "status")
+    return run_lifecycle(spark, sf_dir, _fp_bloom_spec(m), "fpbloom_")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3018,21 +3137,8 @@ def stream_minhash_probe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     unhinted catalog equi-join), exposed for the hint-free plan test."""
     from ..functions.text import shingles_from_words
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    store_sig = _DD.minhash_signatures(
-        _DD.doc_shingles(
-            docs.filter(
-                (F.col("doc_id") % 2 == 0)
-                & (F.col("doc_id") < _MH_PLANT_OFFSET)
-            ),
-            distinct=False,
-        ),
-        num_hashes=_MH_NUM_HASHES,
-    )
     catalog = (
-        _DD.lsh_band_values(
-            store_sig, num_hashes=_MH_NUM_HASHES, bands=_MH_BANDS
-        )
+        _mh_catalog_seed(_docs_table(spark, sf_dir))  # the store's band rows
         .withColumnRenamed("doc_id", "store_id")
         .localCheckpoint()
     )
@@ -3109,47 +3215,49 @@ def stream_minhash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _mh_catalog_handler(
-    catalog_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
-    """foreachBatch handler: band the batch, count DISTINCT prior docs
-    (earlier partitions + same-batch smaller ids) sharing >= 1 band per
-    arriving doc, append the batch's band rows. Both writes are
-    (batch_id)-partitioned dynamic overwrites — exactly-once on replay,
-    and the batch_id < current catalog bound keeps a REPLAYED batch from
-    banding against its own rows. ``retention_batches`` windows the
-    probe to the last W batches' band rows (see _catalog_prior_hits);
-    appends are unchanged — an expired doc's bands simply stop being
-    probed, and would age back in only by re-arriving."""
+def _candidate_count_handler(derive, keys: tuple, verify=None):
+    """foreachBatch handler factory of the growing-catalog kinds (text
+    bands, image chunks): derive the batch's catalog rows, count DISTINCT
+    prior docs (earlier partitions + same-batch smaller ids) colliding on
+    ``keys`` and passing ``verify`` per arriving doc, append the batch's
+    rows. Both writes are (batch_id)-partitioned dynamic overwrites —
+    exactly-once on replay, and the batch_id < current bound keeps a
+    REPLAYED batch from matching its own rows. Under a TTL window the
+    probe sees only the last W batches' rows; appends are unchanged — an
+    expired doc's rows simply stop being probed, and would age back in
+    only by re-arriving."""
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        bands = _batch_band_rows(batch_df)
-        hits = _catalog_prior_hits(
-            catalog_dir, bands, batch_id, retention_batches
-        )
-        counts = hits.distinct().groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                batch_df.select("doc_id")
-                .join(counts, "doc_id", "left_outer")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("n"), F.lit(0))
-                    .cast("long")
-                    .alias("n_prior_candidates"),
-                ),
-                decisions_dir,
+    def factory(io: StateIO):
+        def handler(batch_df: DataFrame, batch_id: int) -> None:
+            prior = _prior_state(batch_df.sparkSession, io, batch_id)
+            rows = derive(batch_df)
+            hits = _prior_hits(rows, prior["catalog"], keys, verify)
+            io.write(
                 batch_id,
-            ),
-            lambda: _overwrite_batch_partition(bands, catalog_dir, batch_id),
-        )
+                decisions=_count_decisions(
+                    batch_df, hits.distinct(), "n_prior_candidates"
+                ),
+                catalog=rows,
+            )
 
-    return handler
+        return handler
+
+    return factory
+
+
+def _count_decisions(batch: DataFrame, hits: DataFrame, name: str):
+    """(doc_id, name) for every arriving doc: its (doc_id, prior_id) hit
+    count, 0 when it has none — the one decision projection of the
+    counting kinds."""
+    counts = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        batch.select("doc_id")
+        .join(counts, "doc_id", "left_outer")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias(name),
+        )
+    )
 
 
 def _batch_band_rows(batch_df: DataFrame) -> DataFrame:
@@ -3185,54 +3293,42 @@ def _batch_band_rows(batch_df: DataFrame) -> DataFrame:
     ).localCheckpoint()
 
 
-def _catalog_prior_hits(
-    catalog_dir: str,
-    bands: DataFrame,
-    batch_id: int,
-    retention_batches: int | None = None,
+def _prior_hits(
+    rows: DataFrame,
+    prior: DataFrame | None,
+    keys: tuple,
+    verify=None,
 ) -> DataFrame:
-    """(doc_id, prior_id) band collisions against every PRIOR ingested
-    doc: catalog partitions appended by earlier batches (batch_id <
-    current — the read-your-predecessors bound) plus same-batch rows with
-    a smaller doc_id (arrival order is id order by construction).
-    ``retention_batches`` EXPIRES old band rows: only partitions with
-    batch_id >= current - W stay visible (the seed ages out after W
-    batches), bounding the probe scan by the window. Unlike the fp
-    store, catalog visibility is NOT recursive — every ingested doc's
-    bands append regardless of status, so a row is visible iff its
-    batch is in the window. May contain duplicates; callers distinct()
-    as needed."""
-    prior = _read_state(
-        bands.sparkSession, catalog_dir, _MH_CATALOG_SCHEMA
-    ).filter(F.col("batch_id") < batch_id)
-    if retention_batches is not None:
-        prior = prior.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    prior = prior.select(
-        "band_id", "band_val", F.col("doc_id").alias("prior_id")
-    )
-    hits_prior = bands.join(prior, ["band_id", "band_val"]).select(
-        "doc_id", "prior_id"
-    )
-    return hits_prior.unionByName(_within_batch_band_hits(bands))
+    """(doc_id, prior_id) collisions against every PRIOR ingested doc:
+    the equi-join on ``keys`` (band or chunk values) against ``prior``
+    (the _prior_state read — None before a seedless spec's first batch,
+    which then probes within itself alone) plus same-batch rows with a
+    smaller doc_id (arrival order is id order by construction). Every
+    pair must pass ``verify`` — a thunk over the row's columns and their
+    p_-prefixed prior twins (the image arm's hamming <= 3 on phash vs
+    p_phash). Catalog visibility is NOT recursive — every ingested doc's
+    rows append regardless of status, so a row is visible iff its batch
+    is in the window. May contain duplicates; callers distinct() as
+    needed."""
+    payload = [c for c in rows.columns if c != "doc_id" and c not in keys]
 
-
-def _within_batch_band_hits(bands: DataFrame) -> DataFrame:
-    """(doc_id, prior_id) same-batch band collisions with a smaller
-    doc_id — the batch-bounded self-join arm of _catalog_prior_hits,
-    factored (r18) so the first micro-batch of a seedless ingest (no
-    catalog directory yet) can probe within itself alone."""
-    return (
-        bands.join(
-            bands.select(
-                "band_id", "band_val", F.col("doc_id").alias("prior_id")
-            ),
-            ["band_id", "band_val"],
+    def collide(other: DataFrame) -> DataFrame:
+        side = other.select(
+            *keys,
+            F.col("doc_id").alias("prior_id"),
+            *[F.col(c).alias("p_" + c) for c in payload],
         )
+        out = rows.join(side, list(keys))
+        return out if verify is None else out.filter(verify())
+
+    within = (
+        collide(rows)
         .filter(F.col("prior_id") < F.col("doc_id"))
         .select("doc_id", "prior_id")
     )
+    if prior is None:
+        return within
+    return collide(prior).select("doc_id", "prior_id").unionByName(within)
 
 
 # One oracle for the growing-catalog ingest AND its mid-lifecycle
@@ -3286,43 +3382,7 @@ def stream_minhash_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     frozen-catalog probe's, and odd/odd near-dups arriving in different
     files are counted via partitions an earlier batch APPENDED (pinned by
     tests/test_streaming.py::test_minhash_catalog_cross_batch_growth)."""
-    return _mh_catalog_run(spark, sf_dir, "mhcat_")
-
-
-def _mh_catalog_run(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """Seed the band catalog, stream the id-ordered arrivals through the
-    catalog handler, return the drained decisions — the one ingest body
-    shared by the unbounded and TTL'd registrations."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    catalog_dir = os.path.join(base_dir, "catalog")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    # Seed and arrival writes are independent jobs — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _seed_state(_mh_catalog_seed(docs), catalog_dir),
-        lambda: _write_id_ordered_arrivals(src_dir, _mh_arrival_parts(docs)),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _mh_catalog_handler(catalog_dir, decisions_dir, retention_batches),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        "doc_id", "n_prior_candidates"
-    )
+    return run_lifecycle(spark, sf_dir, MH_CATALOG, "mhcat_")[0]
 
 
 def _mh_catalog_seed(docs: DataFrame) -> DataFrame:
@@ -3347,14 +3407,34 @@ def _mh_catalog_seed(docs: DataFrame) -> DataFrame:
 def _mh_arrival_parts(docs: DataFrame) -> list:
     """The catalog-ingest arrival files: odd ids in 3 id ranges + the
     +_MH_PLANT_OFFSET tail-truncated re-uploads of every 10th doc."""
-    plants = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + _MH_PLANT_OFFSET).alias("doc_id"),
+    return _odd_plus_plants(
+        docs,
+        10,
+        _MH_PLANT_OFFSET,
         F.expr(
             "substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))"
         ).alias("text"),
     )
-    odds = docs.filter(F.col("doc_id") % 2 == 1)
-    return _id_range_parts(odds, plants, plant_offset=_MH_PLANT_OFFSET)
+
+
+_BAND_KEYS = ("band_id", "band_val")
+
+MH_CATALOG = MaintainedState(
+    name="minhash_catalog",
+    table=_docs_table,
+    relations=(
+        Relation(
+            "catalog",
+            "doc_id long, band_id int, band_val string",
+            _mh_catalog_seed,
+        ),
+    ),
+    parts=_mh_arrival_parts,
+    arrival_schema=_DOC_ARRIVAL_SCHEMA,
+    handler=_candidate_count_handler(_batch_band_rows, _BAND_KEYS),
+    decisions="doc_id long, n_prior_candidates long",
+    output=("doc_id", "n_prior_candidates"),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3378,10 +3458,7 @@ def _mh_arrival_parts(docs: DataFrame) -> list:
 
 
 def _compact_state(
-    spark: SparkSession,
-    state_dir: str,
-    out_dir: str,
-    schema: str | None = None,
+    spark: SparkSession, state_dir: str, out_dir: str, rel: Relation
 ) -> None:
     """Collapse every batch_id partition of an ingest-maintained state
     into ONE fresh batch_id=-1 seed partition. Pure rewrite: appends are
@@ -3394,62 +3471,11 @@ def _compact_state(
     AGE — just-expired content would resurrect for W more batches, then
     the whole store would expire at once at batch W. TTL-compatible
     compaction must rewrite FILES WITHIN each batch_id partition,
-    preserving the partition keys — a different operation."""
-    rows = (
-        _read_state(spark, state_dir, schema)
-        if schema is not None
-        else spark.read.parquet(state_dir)
+    preserving the partition keys — a different operation (run_lifecycle
+    refuses compact together with retention_batches)."""
+    _overwrite_batch_partition(
+        _read_state(spark, state_dir, rel).drop("batch_id"), out_dir, -1, rel
     )
-    _seed_state(rows.drop("batch_id"), out_dir)
-
-
-def _compacted_two_phase_ingest(
-    spark: SparkSession,
-    prefix: str,
-    seed_rows: DataFrame,
-    parts: list,
-    make_handler,
-    state_schema: str | None = None,
-):
-    """Seed state, ingest parts[:2], COMPACT, ingest parts[2:] against
-    the compacted state; return the two decisions dirs. Shared by the
-    state-maintenance compaction twins (fp store / band catalog / image
-    chunk catalog). ``make_handler`` is called with an EXPLICIT
-    ``retention_batches=None`` — _compact_state is unbounded-state-only
-    (see its docstring), so a factory curried with a TTL window fails
-    here with a TypeError instead of silently corrupting the retention
-    semantics (r17 ADVICE: the caveat must be checkable, not prose)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    base_dir = tmp_run_dir(prefix)
-    state_a = os.path.join(base_dir, "state_a")
-    state_b = os.path.join(base_dir, "state_b")
-    dec_a = os.path.join(base_dir, "dec_a")
-    dec_b = os.path.join(base_dir, "dec_b")
-
-    _seed_state(seed_rows, state_a)
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_a"), parts[:2])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_a")),
-        make_handler(state_a, dec_a, retention_batches=None),
-        checkpoint=os.path.join(base_dir, "ckpt_a"),
-        mode="append",
-    )
-    q.awaitTermination()
-
-    _compact_state(spark, state_a, state_b, schema=state_schema)
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_b"), parts[2:])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_b")),
-        make_handler(state_b, dec_b, retention_batches=None),
-        checkpoint=os.path.join(base_dir, "ckpt_b"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return dec_a, dec_b
 
 
 @register("stream_dedup_store_compacted", STREAM_DEDUP_STORE_ORACLE)
@@ -3459,20 +3485,9 @@ def stream_dedup_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the combined decisions share the uninterrupted ingest's oracle, so
     the driver hash proves the collapsed store preserves every
     first-arrival-wins decision."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark,
-        "fpcompact_",
-        _fp_store_seed(docs),
-        _fp_arrival_parts(docs),
-        _dedup_store_handler,
-        state_schema=_FP_STORE_SCHEMA,
-    )
-    return (
-        spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .select("doc_id", "status")
-    )
+    return run_lifecycle(
+        spark, sf_dir, FP_STORE, "fpcompact_", compact=True
+    )[0]
 
 
 @register("stream_minhash_catalog_compacted", STREAM_MH_CATALOG_ORACLE)
@@ -3483,20 +3498,9 @@ def stream_minhash_catalog_compacted(
     mid-lifecycle; shares the growing-catalog oracle, so the hash proves
     the collapsed catalog still bands every later arrival against every
     prior doc."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark,
-        "mhcompact_",
-        _mh_catalog_seed(docs),
-        _mh_arrival_parts(docs),
-        _mh_catalog_handler,
-        state_schema=_MH_CATALOG_SCHEMA,
-    )
-    return (
-        spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .select("doc_id", "n_prior_candidates")
-    )
+    return run_lifecycle(
+        spark, sf_dir, MH_CATALOG, "mhcompact_", compact=True
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3581,21 +3585,9 @@ def stream_dedup_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving after the seed aged out read 'novel' where the unbounded
     store reads 'duplicate' (expiry pinned by
     test_dedup_store_retention_expires_and_readmits)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    base_dir, store_dir, decisions_dir, arriving = _fp_store_setup(
-        spark, sf_dir, "fpttl_"
-    )
-    q = foreach_batch_sink(
-        arriving,
-        _dedup_store_handler(
-            store_dir, decisions_dir, retention_batches=_FP_TTL_W
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select("doc_id", "status")
+    return run_lifecycle(
+        spark, sf_dir, FP_STORE, "fpttl_", retention_batches=_FP_TTL_W
+    )[0]
 
 
 # The band catalog's TTL twin. Unlike the fp store, catalog retention is
@@ -3669,9 +3661,9 @@ def stream_minhash_catalog_retention(
     seed ages out at batch W and the plants' truncated sources stop
     being counted once out of window (expiry pinned by
     test_minhash_catalog_retention_expires)."""
-    return _mh_catalog_run(
-        spark, sf_dir, "mhttl_", retention_batches=_MH_TTL_W
-    )
+    return run_lifecycle(
+        spark, sf_dir, MH_CATALOG, "mhttl_", retention_batches=_MH_TTL_W
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3742,101 +3734,16 @@ def _image_chunk_rows(batch_df: DataFrame) -> DataFrame:
     ).localCheckpoint()
 
 
-def _image_catalog_prior_hits(
-    catalog_dir: str,
-    chunks: DataFrame,
-    batch_id: int,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """(doc_id, prior_id) hamming<=3 image near-dups against every PRIOR
-    ingested doc — the image twin of _catalog_prior_hits: chunk-keyed
-    candidate equi-joins (pigeonhole-complete) + the hamming verify in
-    codegen, over catalog partitions batch_id < current plus same-batch
-    smaller ids. ``retention_batches`` EXPIRES old chunk rows exactly
-    like the band catalog's window (non-recursive — every ingested doc's
-    chunks append regardless of status, so a row is visible iff its
-    batch is in [current - W, current)). May contain duplicates; callers
-    distinct()."""
+_CHUNK_KEYS = ("chunk_id", "chunk_val")
+
+
+def _phash_close():
+    """The image arm's collision verify over _prior_hits' pair columns:
+    hamming(phash, p_phash) <= 3, in codegen, on chunk collisions only
+    (the chunk equi-join is pigeonhole-complete for that bound)."""
     from ..operators.dedup import phash_hamming
 
-    prior = _read_state(
-        chunks.sparkSession, catalog_dir, _IMG_CATALOG_SCHEMA
-    ).filter(F.col("batch_id") < batch_id)
-    if retention_batches is not None:
-        prior = prior.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    prior = (
-        prior
-        .select(
-            "chunk_id",
-            "chunk_val",
-            F.col("doc_id").alias("prior_id"),
-            F.col("phash").alias("p_phash"),
-        )
-    )
-    hits_prior = (
-        chunks.join(prior, ["chunk_id", "chunk_val"])
-        .filter(phash_hamming(F.col("phash"), F.col("p_phash")) <= 3)
-        .select("doc_id", "prior_id")
-    )
-    hits_within = (
-        chunks.join(
-            chunks.select(
-                "chunk_id",
-                "chunk_val",
-                F.col("doc_id").alias("prior_id"),
-                F.col("phash").alias("p_phash"),
-            ),
-            ["chunk_id", "chunk_val"],
-        )
-        .filter(
-            (F.col("prior_id") < F.col("doc_id"))
-            & (phash_hamming(F.col("phash"), F.col("p_phash")) <= 3)
-        )
-        .select("doc_id", "prior_id")
-    )
-    return hits_prior.unionByName(hits_within)
-
-
-def _image_catalog_handler(
-    catalog_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
-    """foreachBatch handler: fingerprint the batch's images, count
-    DISTINCT prior near-dups (earlier partitions + same-batch smaller
-    ids, hamming <= 3), append the batch's chunk rows. Both writes are
-    dynamic-overwrite batch partitions — exactly-once on replay.
-    ``retention_batches`` windows the probe to the last W batches'
-    chunk rows (see _image_catalog_prior_hits); appends are unchanged."""
-
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        chunks = _image_chunk_rows(batch_df)
-        hits = _image_catalog_prior_hits(
-            catalog_dir, chunks, batch_id, retention_batches
-        )
-        counts = hits.distinct().groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                batch_df.select("doc_id")
-                .join(counts, "doc_id", "left_outer")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("n"), F.lit(0))
-                    .cast("long")
-                    .alias("n_prior_candidates"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(chunks, catalog_dir, batch_id),
-        )
-
-    return handler
+    return phash_hamming(F.col("phash"), F.col("p_phash")) <= 3
 
 
 @register("stream_image_catalog_ingest", STREAM_IMAGE_CATALOG_ORACLE)
@@ -3847,50 +3754,7 @@ def stream_image_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-upload of an image that arrived two micro-batches ago is caught
     via the chunk rows that batch appended (stream_image_phash's frozen
     catalog cannot)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    return _image_catalog_run(spark, sf_dir, "imgcat_")
-
-
-def _image_catalog_run(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """Seed the chunk catalog, stream the id-ordered arrivals through the
-    image-catalog handler, return the drained decisions — the one ingest
-    body shared by the unbounded and TTL'd registrations (the
-    _mh_catalog_run convention)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    catalog_dir = os.path.join(base_dir, "catalog")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    # Seed and arrival writes are independent jobs — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _seed_state(_image_catalog_seed(docs), catalog_dir),
-        lambda: _write_id_ordered_arrivals(
-            src_dir, _image_arrival_parts(docs)
-        ),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _image_catalog_handler(catalog_dir, decisions_dir, retention_batches),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        "doc_id", "n_prior_candidates"
-    )
+    return run_lifecycle(spark, sf_dir, IMAGE_CATALOG, "imgcat_")[0]
 
 
 def _image_catalog_seed(docs: DataFrame) -> DataFrame:
@@ -3910,11 +3774,27 @@ def _image_catalog_seed(docs: DataFrame) -> DataFrame:
 def _image_arrival_parts(docs: DataFrame) -> list:
     """The image-catalog-ingest arrival files: odd ids in 3 id ranges +
     the +_IMG_PLANT_OFFSET exact re-crawls of every 7th doc."""
-    plants = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + _IMG_PLANT_OFFSET).alias("doc_id"), "text"
-    )
-    odds = docs.filter(F.col("doc_id") % 2 == 1)
-    return _id_range_parts(odds, plants, plant_offset=_IMG_PLANT_OFFSET)
+    return _odd_plus_plants(docs, 7, _IMG_PLANT_OFFSET)
+
+
+IMAGE_CATALOG = MaintainedState(
+    name="image_catalog",
+    table=_docs_table,
+    relations=(
+        Relation(
+            "catalog",
+            "doc_id long, phash string, chunk_id int, chunk_val string",
+            _image_catalog_seed,
+        ),
+    ),
+    parts=_image_arrival_parts,
+    arrival_schema=_DOC_ARRIVAL_SCHEMA,
+    handler=_candidate_count_handler(
+        _image_chunk_rows, _CHUNK_KEYS, _phash_close
+    ),
+    decisions="doc_id long, n_prior_candidates long",
+    output=("doc_id", "n_prior_candidates"),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3937,24 +3817,12 @@ def stream_image_catalog_compacted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """(doc_id, n_prior_candidates): the image chunk-catalog ingest
-    compacted mid-lifecycle via the shared two-phase body; shares the
-    growing-catalog oracle, so the driver hash proves the collapsed
-    catalog still pairs every later arrival's cover against every prior
-    doc's."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark,
-        "imgcompact_",
-        _image_catalog_seed(docs),
-        _image_arrival_parts(docs),
-        _image_catalog_handler,
-        state_schema=_IMG_CATALOG_SCHEMA,
-    )
-    return (
-        spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .select("doc_id", "n_prior_candidates")
-    )
+    compacted mid-lifecycle; shares the growing-catalog oracle, so the
+    driver hash proves the collapsed catalog still pairs every later
+    arrival's cover against every prior doc's."""
+    return run_lifecycle(
+        spark, sf_dir, IMAGE_CATALOG, "imgcompact_", compact=True
+    )[0]
 
 
 _IMG_TTL_W = 2
@@ -4011,9 +3879,9 @@ def stream_image_catalog_retention(
     seed ages out at batch W and the +plant re-crawls of seeded (even)
     covers stop being counted once the seed is out of window (expiry
     pinned by test_image_catalog_retention_expires)."""
-    return _image_catalog_run(
-        spark, sf_dir, "imgttl_", retention_batches=_IMG_TTL_W
-    )
+    return run_lifecycle(
+        spark, sf_dir, IMAGE_CATALOG, "imgttl_", retention_batches=_IMG_TTL_W
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -4075,33 +3943,6 @@ STREAM_EMB_CATALOG_ORACLE = f"""
 )
 
 
-def _emb_prior_relations(
-    spark: SparkSession,
-    codes_dir: str,
-    vecs_dir: str,
-    batch_id: int,
-    retention_batches: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """The (prior code rows, prior vectors) visible to a batch: both
-    bounded batch_id < current, both windowed to [current - W, current)
-    under retention — the bounds reach BOTH scans as partition filters
-    (pinned by test_ttl_embedding_catalog_read_pruned_both_sides)."""
-    prior_codes = _read_state(spark, codes_dir, _EMB_CODES_SCHEMA).filter(
-        F.col("batch_id") < batch_id
-    )
-    prior_store = _read_state(spark, vecs_dir, _EMB_VECS_SCHEMA).filter(
-        F.col("batch_id") < batch_id
-    )
-    if retention_batches is not None:
-        prior_codes = prior_codes.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-        prior_store = prior_store.filter(
-            F.col("batch_id") >= batch_id - retention_batches
-        )
-    return prior_codes, prior_store
-
-
 def _emb_code_rows(batch_df: DataFrame) -> DataFrame:
     """(doc_id, band_id, code) hyperplane-LSH band codes for a
     micro-batch's vectors — the embedding twin of _batch_band_rows,
@@ -4121,98 +3962,46 @@ def _emb_code_rows(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def _embedding_catalog_handler(
-    codes_dir: str,
-    vecs_dir: str,
-    decisions_dir: str,
-    retention_batches: int | None = None,
-):
+def _embedding_catalog_handler(io: StateIO):
     """foreachBatch handler: band-code the batch's vectors, collect
     candidate (doc_id, prior_id) band collisions (earlier partitions +
     same-batch smaller ids), cosine-verify them round-4 against the
     vector store, count DISTINCT verified priors, append the batch's
     code rows and vectors. All writes dynamic-overwrite batch
     partitions — exactly-once on replay; reads bounded batch_id <
-    current. ``retention_batches`` windows BOTH state reads to the last
-    W batches (non-recursive — every vector's rows always append, so a
+    current. Under a TTL window BOTH state reads see only the last W
+    batches (non-recursive — every vector's rows always append, so a
     row is visible iff its batch is in [current - W, current))."""
     from ..functions.vectors import cosine_pandas
 
+    def vectors(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("doc_id").alias("prior_id"), F.col("embedding").alias("pv")
+        )
+
     def handler(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        prior = _prior_state(batch_df.sparkSession, io, batch_id)
         batch = batch_df.localCheckpoint()
         codes = _emb_code_rows(batch)
-        cand = (
-            codes.join(
-                codes.select(
-                    "band_id", "code", F.col("doc_id").alias("prior_id")
-                ),
-                ["band_id", "code"],
-            )
-            .filter(F.col("prior_id") < F.col("doc_id"))
-            .select("doc_id", "prior_id")
-        )
-        prior_vecs = batch.select(
-            F.col("doc_id").alias("prior_id"),
-            F.col("embedding").alias("pv"),
-        )
-        if os.path.isdir(codes_dir) != os.path.isdir(vecs_dir):
-            # fail fast on a half-seeded state pair (r18 ADVICE) instead
-            # of an opaque mid-stream AnalysisException on the lone read
-            raise RuntimeError(
-                "_embedding_catalog_handler: state dirs out of sync — "
-                f"codes={os.path.isdir(codes_dir)} "
-                f"vectors={os.path.isdir(vecs_dir)}"
-            )
-        if os.path.isdir(codes_dir):  # absent only before batch 0
-            prior_codes, prior_store = _emb_prior_relations(
-                spark, codes_dir, vecs_dir, batch_id, retention_batches
-            )
-            cand = cand.unionByName(
-                codes.join(
-                    prior_codes.select(
-                        "band_id", "code", F.col("doc_id").alias("prior_id")
-                    ),
-                    ["band_id", "code"],
-                ).select("doc_id", "prior_id")
-            )
-            prior_vecs = prior_vecs.unionByName(
-                prior_store.select(
-                    F.col("doc_id").alias("prior_id"),
-                    F.col("embedding").alias("pv"),
-                )
-            )
         hits = (
-            cand.distinct()
+            _prior_hits(codes, prior["codes"], ("band_id", "code"))
+            .distinct()
             .join(
                 batch.select("doc_id", F.col("embedding").alias("av")),
                 "doc_id",
             )
-            .join(prior_vecs, "prior_id")
+            .join(
+                vectors(batch).unionByName(vectors(prior["vectors"])),
+                "prior_id",
+            )
             .filter(F.round(cosine_pandas("av", "pv"), 4) >= 0.99)
             .select("doc_id", "prior_id")
         )
-        counts = hits.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                batch.select("doc_id")
-                .join(counts, "doc_id", "left_outer")
-                .select(
-                    "doc_id",
-                    F.coalesce(F.col("n"), F.lit(0))
-                    .cast("long")
-                    .alias("n_prior_neardups"),
-                ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(codes, codes_dir, batch_id),
-            lambda: _overwrite_batch_partition(
-                batch.select("doc_id", "embedding"), vecs_dir, batch_id
-            ),
+        io.write(
+            batch_id,
+            decisions=_count_decisions(batch, hits, "n_prior_neardups"),
+            codes=codes,
+            vectors=batch.select("doc_id", "embedding"),
         )
 
     return handler
@@ -4232,7 +4021,7 @@ def stream_embedding_catalog_ingest(
     vector: even sources dup the seed, ODD sources arrived earlier in
     the stream, so their copies are caught purely by appended
     partitions (the cross-batch catch)."""
-    return _embedding_catalog_run(spark, sf_dir, "embcat_")
+    return run_lifecycle(spark, sf_dir, EMB_CATALOG, "embcat_")[0]
 
 
 def _emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4254,56 +4043,30 @@ def _emb_catalog_seed(emb: DataFrame) -> DataFrame:
 def _emb_arrival_parts(emb: DataFrame) -> list:
     """The embedding-catalog arrival files: odd ids in 3 id ranges + the
     +_EMBCAT_OFF exact re-crawls of every 5th vector."""
-    plants = emb.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + _EMBCAT_OFF).alias("doc_id"), "embedding"
-    )
-    odds = emb.filter(F.col("doc_id") % 2 == 1)
-    return _id_range_parts(odds, plants, plant_offset=_EMBCAT_OFF)
+    return _odd_plus_plants(emb, 5, _EMBCAT_OFF, "embedding")
 
 
-def _embedding_catalog_run(
-    spark: SparkSession,
-    sf_dir: str,
-    prefix: str,
-    retention_batches: int | None = None,
-) -> DataFrame:
-    """Seed the code catalog + vector store, stream the id-ordered
-    arrivals through the embedding-catalog handler, return the drained
-    decisions — the one ingest body shared by the unbounded and TTL'd
-    registrations (the _image_catalog_run convention)."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    emb = _emb_table(spark, sf_dir)
-    base_dir = tmp_run_dir(prefix)
-    codes_dir = os.path.join(base_dir, "codes")
-    vecs_dir = os.path.join(base_dir, "vectors")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    seed = _emb_catalog_seed(emb).localCheckpoint()
-    # The two seed writes and the arrival write are independent jobs —
-    # overlap (r19 §2.6). _emb_code_rows eagerly checkpoints its code
-    # derivation before the pool, so the thunks only write.
-    code_rows = _emb_code_rows(seed)
-    _run_jobs(
-        lambda: _seed_state(code_rows, codes_dir),
-        lambda: _seed_state(seed.select("doc_id", "embedding"), vecs_dir),
-        lambda: _write_id_ordered_arrivals(src_dir, _emb_arrival_parts(emb)),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir, schema=_EMB_ARRIVAL_SCHEMA),
-        _embedding_catalog_handler(
-            codes_dir, vecs_dir, decisions_dir, retention_batches
+EMB_CATALOG = MaintainedState(
+    name="embedding_catalog",
+    table=_emb_table,
+    relations=(
+        # The code derivation checkpoints eagerly inside its seed thunk,
+        # so it overlaps the vector and arrival writes (r19 §2.6).
+        Relation(
+            "codes",
+            "doc_id long, band_id int, code int",
+            lambda emb: _emb_code_rows(_emb_catalog_seed(emb)),
         ),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        F.col("doc_id").alias("vec_id"), "n_prior_neardups"
-    )
+        Relation(
+            "vectors", "doc_id long, embedding array<float>", _emb_catalog_seed
+        ),
+    ),
+    parts=_emb_arrival_parts,
+    arrival_schema=_EMB_ARRIVAL_SCHEMA,
+    handler=_embedding_catalog_handler,
+    decisions="doc_id long, n_prior_neardups long",
+    output=("doc_id AS vec_id", "n_prior_neardups"),
+)
 
 
 @register("stream_embedding_catalog_compacted", STREAM_EMB_CATALOG_ORACLE)
@@ -4317,68 +4080,10 @@ def stream_embedding_catalog_compacted(
     partition between the two arrival phases. Registers against
     STREAM_EMB_CATALOG_ORACLE VERBATIM: the driver hash proves a
     phase-B copy of a phase-A vector is still counted through the
-    collapse. Bespoke two-phase body (seedful but TWO-relation — the
-    shared _compacted_two_phase_ingest seeds exactly one state dir),
-    same phase structure as the cluster-map compaction."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    emb = _emb_table(spark, sf_dir)
-    base_dir = tmp_run_dir("embcompact_")
-    parts = _emb_arrival_parts(emb)
-    dirs = {
-        f"{kind}_{ph}": os.path.join(base_dir, f"{kind}_{ph}")
-        for kind in ("codes", "vectors", "decisions")
-        for ph in ("a", "b")
-    }
-    seed = _emb_catalog_seed(emb).localCheckpoint()
-    _seed_state(_emb_code_rows(seed), dirs["codes_a"])
-    _seed_state(seed.select("doc_id", "embedding"), dirs["vectors_a"])
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_a"), parts[:2])
-    q = foreach_batch_sink(
-        _arrivals_stream(
-            spark, os.path.join(base_dir, "arr_a"), schema=_EMB_ARRIVAL_SCHEMA
-        ),
-        _embedding_catalog_handler(
-            dirs["codes_a"], dirs["vectors_a"], dirs["decisions_a"],
-            retention_batches=None,
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_a"),
-        mode="append",
-    )
-    q.awaitTermination()
-
-    # The two relations compact independently — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _compact_state(
-            spark, dirs["codes_a"], dirs["codes_b"], schema=_EMB_CODES_SCHEMA
-        ),
-        lambda: _compact_state(
-            spark, dirs["vectors_a"], dirs["vectors_b"],
-            schema=_EMB_VECS_SCHEMA,
-        ),
-    )
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_b"), parts[2:])
-    q = foreach_batch_sink(
-        _arrivals_stream(
-            spark, os.path.join(base_dir, "arr_b"), schema=_EMB_ARRIVAL_SCHEMA
-        ),
-        _embedding_catalog_handler(
-            dirs["codes_b"], dirs["vectors_b"], dirs["decisions_b"],
-            retention_batches=None,
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_b"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(dirs["decisions_a"])
-        .unionByName(spark.read.parquet(dirs["decisions_b"]))
-        .select(F.col("doc_id").alias("vec_id"), "n_prior_neardups")
-    )
+    collapse."""
+    return run_lifecycle(
+        spark, sf_dir, EMB_CATALOG, "embcompact_", compact=True
+    )[0]
 
 
 _EMBCAT_TTL_W = 2
@@ -4439,9 +4144,9 @@ def stream_embedding_catalog_retention(
     and the +plant re-crawls of seeded (even) vectors stop being
     counted once the seed is out of window (expiry pinned by
     test_embedding_catalog_retention_expires)."""
-    return _embedding_catalog_run(
-        spark, sf_dir, "embttl_", retention_batches=_EMBCAT_TTL_W
-    )
+    return run_lifecycle(
+        spark, sf_dir, EMB_CATALOG, "embttl_", retention_batches=_EMBCAT_TTL_W
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -4545,80 +4250,74 @@ PRETRAIN_GATE_V2_ORACLE = f"""
     """
 
 
-def _gate_v2_handler(
-    store_dir: str,
-    catalog_dir: str,
-    decisions_dir: str,
-    image_catalog_dir: str | None = None,
-):
-    """foreachBatch handler composing the maintenance arms: decide
-    (exact via fp store AS OF batch, near via band catalog AS OF batch,
-    quality projection), then append novel fps AND the batch's band rows.
-    All writes (decisions, store append, catalog appends) are
-    dynamic-overwrite batch partitions. ``image_catalog_dir`` (r18, the
-    r17 VERDICT task 4) composes the MAINTAINED image modality in: the
-    batch's cover chunks probe the growing chunk catalog
-    (_image_catalog_prior_hits, batch_id < current) and then append —
-    the default None keeps the v2 twin's decisions byte-identical (the
-    null img_hit column never matches a CASE arm)."""
+def _gate_handler(image_arm: bool):
+    """foreachBatch handler factory composing the maintenance arms:
+    decide (exact via fp store AS OF batch, near via band catalog AS OF
+    batch, quality projection), then append novel fps AND the batch's
+    band rows. All writes (decisions, store append, catalog appends) are
+    dynamic-overwrite batch partitions. ``image_arm`` (r18, the r17
+    VERDICT task 4) composes the MAINTAINED image modality in: the
+    batch's cover chunks probe the growing chunk catalog (batch_id <
+    current) and then append — without it the v2 twin's decisions stay
+    byte-identical (the null img_hit column never matches a CASE arm)."""
     from ..functions.text import fingerprint
     from .textprep import quality_p_col
 
-    def handler(batch_df: DataFrame, batch_id: int) -> None:
-        scored = batch_df.select(
-            "doc_id",
-            "text",
-            fingerprint("text").alias("fp"),
-            quality_p_col().alias("quality_p"),
-        ).localCheckpoint()  # one derivation feeds all arms + all appends
-        ranked = _fp_store_ranked(
-            store_dir, scored.select("doc_id", "fp", "quality_p"), batch_id
-        )
-        # The band derivation and the cover-image chunk derivation are
-        # independent eager materializations off the one checkpointed
-        # scored relation — overlap them (r19, guide §2.6).
-        derive = [lambda: _batch_band_rows(scored)]
-        if image_catalog_dir is not None:
-            derive.append(lambda: _image_chunk_rows(_gate_cover(scored)))
-        derived = _run_jobs(*derive)
-        bands = derived[0]
-        near = (
-            _catalog_prior_hits(catalog_dir, bands, batch_id)
-            .select("doc_id")
-            .distinct()
-            .withColumn("near_hit", F.lit(True))
-        )
-        joined = ranked.join(near, "doc_id", "left_outer")
-        if image_catalog_dir is not None:
-            chunks = derived[1]
-            imghit = (
-                _image_catalog_prior_hits(
-                    image_catalog_dir, chunks, batch_id
-                )
+    def factory(io: StateIO):
+        def handler(batch_df: DataFrame, batch_id: int) -> None:
+            prior = _prior_state(batch_df.sparkSession, io, batch_id)
+            scored = batch_df.select(
+                "doc_id",
+                "text",
+                fingerprint("text").alias("fp"),
+                quality_p_col().alias("quality_p"),
+            ).localCheckpoint()  # one derivation feeds all arms + appends
+            ranked = _fp_ranked(
+                scored.select("doc_id", "fp", "quality_p"), prior["store"]
+            )
+            # The band derivation and the cover-image chunk derivation are
+            # independent eager materializations off the one checkpointed
+            # scored relation — overlap them (r19, guide §2.6).
+            derive = [lambda: _batch_band_rows(scored)]
+            if image_arm:
+                derive.append(lambda: _image_chunk_rows(_gate_cover(scored)))
+            derived = _run_jobs(*derive)
+            near = (
+                _prior_hits(derived[0], prior["catalog"], _BAND_KEYS)
                 .select("doc_id")
                 .distinct()
-                .withColumn("img_hit", F.lit(True))
+                .withColumn("near_hit", F.lit(True))
             )
-            joined = joined.join(imghit, "doc_id", "left_outer")
-        else:
-            joined = joined.withColumn(
-                "img_hit", F.lit(None).cast("boolean")
+            joined = ranked.join(near, "doc_id", "left_outer")
+            appends = {"store": _novel_fps(ranked), "catalog": derived[0]}
+            if image_arm:
+                imghit = (
+                    _prior_hits(
+                        derived[1], prior["imgcatalog"], _CHUNK_KEYS,
+                        _phash_close,
+                    )
+                    .select("doc_id")
+                    .distinct()
+                    .withColumn("img_hit", F.lit(True))
+                )
+                joined = joined.join(imghit, "doc_id", "left_outer")
+                appends["imgcatalog"] = derived[1]
+            else:
+                joined = joined.withColumn(
+                    "img_hit", F.lit(None).cast("boolean")
+                )
+            reason = (
+                F.when(F.col("hit") | (F.col("rn") > 1), "exact_dup")
+                .when(F.col("near_hit"), "near_dup")
+                .when(F.col("img_hit"), "near_dup_image")
+                .when(F.col("quality_p") < _GATE_QUALITY_LT, "low_quality")
+                .otherwise("ok")
             )
-        reason = (
-            F.when(F.col("hit") | (F.col("rn") > 1), "exact_dup")
-            .when(F.col("near_hit"), "near_dup")
-            .when(F.col("img_hit"), "near_dup_image")
-            .when(F.col("quality_p") < _GATE_QUALITY_LT, "low_quality")
-            .otherwise("ok")
-        )
-        # All state writes are independent (own dirs, replay overwrites
-        # per-partition) — overlap them (r19, guide §2.6): the decisions
-        # write is the slow one (every probe arm in its lineage) and the
-        # three appends backfill its tail.
-        writes = [
-            lambda: _overwrite_batch_partition(
-                joined
-                .select("doc_id", reason.alias("reason"))
+            # The decisions write is the slow one (every probe arm in its
+            # lineage); the appends backfill its tail.
+            io.write(
+                batch_id,
+                decisions=joined.select("doc_id", reason.alias("reason"))
                 .select(
                     "doc_id",
                     F.when(F.col("reason") == "ok", "keep")
@@ -4626,27 +4325,12 @@ def _gate_v2_handler(
                     .alias("decision"),
                     "reason",
                 ),
-                decisions_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(
-                ranked.filter(
-                    F.col("hit").isNull() & (F.col("rn") == 1)
-                ).select("fp"),
-                store_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(bands, catalog_dir, batch_id),
-        ]
-        if image_catalog_dir is not None:
-            writes.append(
-                lambda: _overwrite_batch_partition(
-                    chunks, image_catalog_dir, batch_id
-                )
+                **appends,
             )
-        _run_jobs(*writes)
 
-    return handler
+        return handler
+
+    return factory
 
 
 @register("stream_pretrain_gate_v2", PRETRAIN_GATE_V2_ORACLE)
@@ -4658,126 +4342,96 @@ def stream_pretrain_gate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     near_dup > low_quality > ok). The +_GV2_CROSS_OFF / +_GV2_NEAR_OFF
     plants arrive in the LAST file and are caught purely by state earlier
     micro-batches appended — the freshness v1's frozen catalog lacks."""
-    return _gate_maintained_run(spark, sf_dir, "gatev2_", image_arm=False)
+    return run_lifecycle(spark, sf_dir, GATE_V2, "gatev2_")[0]
 
 
-def _gate_maintained_run(
-    spark: SparkSession, sf_dir: str, prefix: str, image_arm: bool
-) -> DataFrame:
-    """Seed the maintained stores, write the plant-bearing id-ordered
-    arrivals, stream them through the composed gate handler, return the
-    drained decisions — the one run body shared by the v2 (text-only)
-    and v3 (+maintained image catalog) gates (r18: factored so the image
-    arm extends via the parameter, never a copy)."""
-    from ..streaming.sinks import foreach_batch_sink
+def _gate_arrival_parts(image_arm: bool):
+    """The gates' plant-bearing id-ordered arrival parts: odd ids in 3
+    id ranges + ONE plants file holding every plant family (v3 adds
+    the cover-stable tail-scrambles)."""
 
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    store_dir = os.path.join(base_dir, "store")
-    catalog_dir = os.path.join(base_dir, "catalog")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-    image_catalog_dir = (
-        os.path.join(base_dir, "imgcatalog") if image_arm else None
-    )
-
-    # Seeds are the shared ingest-arm builders (the CLAUDE.md seed rule):
-    # the fp seed is _fp_store_seed verbatim; _mh_catalog_seed's
-    # < _MH_PLANT_OFFSET filter is vacuous here (the guard below bounds
-    # every real id far under it), so the band seed is the plain evens
-    # too; the image seed is the evens' COVER chunks (the v1 gate's
-    # prefix-stable cover derivation over the maintained-catalog chunker).
-    seed_writes = [
-        lambda: _seed_state(_fp_store_seed(docs), store_dir),
-        lambda: _seed_state(_mh_catalog_seed(docs), catalog_dir),
-    ]
-    if image_arm:
-        seed_writes.append(
-            lambda: _seed_state(
-                _image_chunk_rows(
-                    _gate_cover(docs.filter(F.col("doc_id") % 2 == 0))
-                ),
-                image_catalog_dir,
+    def parts(docs: DataFrame) -> list:
+        # The plant families share one arrivals file, so their id ranges
+        # must be DISJOINT (a collision would give two arrivals one doc_id —
+        # the oracle's quality join would fan out where the handler emits
+        # one row per physical arrival). Ranges stay disjoint iff every real
+        # id is below the smallest inter-offset gap; _id_range_parts'
+        # plant_offset guard only checks the odd max against _GV2_SEED_OFF,
+        # so bound the FULL corpus here.
+        families = [  # (modulus, remainder, id offset, text expression)
+            (6, 0, _GV2_SEED_OFF, "text"),
+            (12, 1, _GV2_CROSS_OFF, "text"),
+            (10, 1, _GV2_NEAR_OFF,
+             "substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))"),
+        ]
+        if image_arm:
+            # Cover-stable tail-scramble: same first _GATE_COVER_LEN chars
+            # (identical cover image), texturally unrelated tail (reversed
+            # chars -> different shingles, so the text bands miss w.h.p. and
+            # the IMAGE arm is what catches it).
+            families.append(
+                (8, 1, _GV3_IMG_OFF,
+                 f"concat(substring(text, 1, {_GATE_COVER_LEN}),"
+                 f" reverse(substring(text, {_GATE_COVER_LEN + 1})))")
             )
+        offsets = [off for _m, _r, off, _t in families]
+        m_all = docs.agg(F.max("doc_id")).first()[0]
+        gap = min(
+            b - a for a, b in zip([0] + offsets[:-1], offsets)
         )
+        if m_all is None or m_all >= gap:
+            raise ValueError(
+                f"stream_pretrain_gate: max doc_id {m_all} >= plant-family "
+                f"gap {gap}; the plant id ranges would overlap"
+            )
 
-    # The plant families share one arrivals file, so their id ranges
-    # must be DISJOINT (a collision would give two arrivals one doc_id —
-    # the oracle's quality join would fan out where the handler emits
-    # one row per physical arrival). Ranges stay disjoint iff every real
-    # id is below the smallest inter-offset gap; _id_range_parts'
-    # plant_offset guard only checks the odd max against _GV2_SEED_OFF,
-    # so bound the FULL corpus here.
-    offsets = [_GV2_SEED_OFF, _GV2_CROSS_OFF, _GV2_NEAR_OFF] + (
-        [_GV3_IMG_OFF] if image_arm else []
-    )
-    m_all = docs.agg(F.max("doc_id")).first()[0]
-    gap = min(
-        b - a for a, b in zip([0] + offsets[:-1], offsets)
-    )
-    if m_all is None or m_all >= gap:
-        raise ValueError(
-            f"stream_pretrain_gate: max doc_id {m_all} >= plant-family "
-            f"gap {gap}; the plant id ranges would overlap"
+        plants = reduce(
+            DataFrame.unionByName,
+            [
+                docs.filter(F.col("doc_id") % m == r).select(
+                    (F.col("doc_id") + off).alias("doc_id"),
+                    F.expr(text).alias("text"),
+                )
+                for m, r, off, text in families
+            ],
         )
+        odds = docs.filter(F.col("doc_id") % 2 == 1)
+        return _id_range_parts(odds, plants, plant_offset=_GV2_SEED_OFF)
 
-    plants = (
-        docs.filter(F.col("doc_id") % 6 == 0)
-        .select((F.col("doc_id") + _GV2_SEED_OFF).alias("doc_id"), "text")
-        .unionByName(
-            docs.filter(F.col("doc_id") % 12 == 1).select(
-                (F.col("doc_id") + _GV2_CROSS_OFF).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 10 == 1).select(
-                (F.col("doc_id") + _GV2_NEAR_OFF).alias("doc_id"),
-                F.expr(
-                    "substring(text, 1,"
-                    " CAST(floor(4*length(text)/5.0) AS INT))"
-                ).alias("text"),
-            )
-        )
-    )
-    if image_arm:
-        # Cover-stable tail-scramble: same first _GATE_COVER_LEN chars
-        # (identical cover image), texturally unrelated tail (reversed
-        # chars -> different shingles, so the text bands miss w.h.p. and
-        # the IMAGE arm is what catches it).
-        plants = plants.unionByName(
-            docs.filter(F.col("doc_id") % 8 == 1).select(
-                (F.col("doc_id") + _GV3_IMG_OFF).alias("doc_id"),
-                F.expr(
-                    f"concat(substring(text, 1, {_GATE_COVER_LEN}),"
-                    f" reverse(substring(text, {_GATE_COVER_LEN + 1})))"
-                ).alias("text"),
-            )
-        )
-    odds = docs.filter(F.col("doc_id") % 2 == 1)
-    # Seeds and arrivals are independent jobs — overlap (r19 §2.6); the
-    # guard above already raised before any of them starts.
-    _run_jobs(
-        *seed_writes,
-        lambda: _write_id_ordered_arrivals(
-            src_dir,
-            _id_range_parts(odds, plants, plant_offset=_GV2_SEED_OFF),
+    return parts
+
+
+# Seeds are the shared ingest-arm relations (the CLAUDE.md seed rule):
+# the fp seed is _fp_store_seed verbatim; _mh_catalog_seed's
+# < _MH_PLANT_OFFSET filter is vacuous here (the parts guard bounds
+# every real id far under it), so the band seed is the plain evens
+# too; the image seed is the evens' COVER chunks (the v1 gate's
+# prefix-stable cover derivation over the maintained-catalog chunker).
+GATE_V2 = MaintainedState(
+    name="pretrain_gate_v2",
+    table=_docs_table,
+    relations=FP_STORE.relations + MH_CATALOG.relations,
+    parts=_gate_arrival_parts(image_arm=False),
+    arrival_schema=_DOC_ARRIVAL_SCHEMA,
+    handler=_gate_handler(image_arm=False),
+    decisions="doc_id long, decision string, reason string",
+    output=("doc_id", "decision", "reason"),
+)
+GATE_V3 = replace(
+    GATE_V2,
+    name="pretrain_gate_v3",
+    relations=GATE_V2.relations + (
+        Relation(
+            "imgcatalog",
+            IMAGE_CATALOG.relations[0].schema,
+            lambda docs: _image_chunk_rows(
+                _gate_cover(docs.filter(F.col("doc_id") % 2 == 0))
+            ),
         ),
-    )
-
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _gate_v2_handler(
-            store_dir, catalog_dir, decisions_dir, image_catalog_dir
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return spark.read.parquet(decisions_dir).select(
-        "doc_id", "decision", "reason"
-    )
+    ),
+    parts=_gate_arrival_parts(image_arm=True),
+    handler=_gate_handler(image_arm=True),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -4913,7 +4567,7 @@ def stream_pretrain_gate_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARRIVING odd docs are caught purely by chunk rows previous
     micro-batches appended — the image freshness v1's frozen catalog and
     v2's missing image arm both lack."""
-    return _gate_maintained_run(spark, sf_dir, "gatev3_", image_arm=True)
+    return run_lifecycle(spark, sf_dir, GATE_V3, "gatev3_")[0]
 
 
 # ---------------------------------------------------------------------------
@@ -5002,9 +4656,7 @@ SPLIT_BY_NEARDUP_INC_ORACLE = f"""
     """
 
 
-def _neardup_clustermap_handler(
-    catalog_dir: str, map_dir: str, decisions_dir: str
-):
+def _neardup_clustermap_handler(io: StateIO):
     """foreachBatch handler maintaining the incremental cluster map:
     band the batch, pick each doc's earliest band-sharing prior as its
     parent, resolve representatives (map join for prior-batch parents;
@@ -5015,24 +4667,18 @@ def _neardup_clustermap_handler(
     from ..functions.text import fingerprint
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        # seedless: both relations read None before their first write
+        prior = _prior_state(batch_df.sparkSession, io, batch_id)
         scored = batch_df.select(
             "doc_id", "text", fingerprint("text").alias("fp")
         ).localCheckpoint()
         bands = _batch_band_rows(scored)
-        if os.path.isdir(catalog_dir):  # absent only before batch 0
-            hits = _catalog_prior_hits(catalog_dir, bands, batch_id)
-        else:  # seedless first batch probes within itself alone
-            hits = _within_batch_band_hits(bands)
+        hits = _prior_hits(bands, prior["catalog"], _BAND_KEYS)
         par = hits.groupBy("doc_id").agg(F.min("prior_id").alias("parent"))
         base = scored.select("doc_id", "fp").join(par, "doc_id", "left_outer")
-        if os.path.isdir(map_dir):
-            repmap = (
-                _read_state(spark, map_dir, _CLUSTER_MAP_SCHEMA)
-                .filter(F.col("batch_id") < batch_id)
-                .select(
-                    F.col("doc_id").alias("parent"), "rep_id", "rep_fp"
-                )
+        if prior["clustermap"] is not None:
+            repmap = prior["clustermap"].select(
+                F.col("doc_id").alias("parent"), "rep_id", "rep_fp"
             )
             base = base.join(repmap, "parent", "left_outer")
         else:
@@ -5096,22 +4742,14 @@ def _neardup_clustermap_handler(
                 "resolve — strictly-decreasing ids make this unreachable"
             )
 
-        # Independent writes (own dirs) — overlap them (r19, guide §2.6).
-        _run_jobs(
-            lambda: _overwrite_batch_partition(
-                resolved.select(
-                    "doc_id",
-                    cluster_split_column(F.col("rep_fp")).alias("split"),
-                ),
-                decisions_dir,
-                batch_id,
+        io.write(
+            batch_id,
+            decisions=resolved.select(
+                "doc_id",
+                cluster_split_column(F.col("rep_fp")).alias("split"),
             ),
-            lambda: _overwrite_batch_partition(
-                resolved.select("doc_id", "rep_id", "rep_fp"),
-                map_dir,
-                batch_id,
-            ),
-            lambda: _overwrite_batch_partition(bands, catalog_dir, batch_id),
+            clustermap=resolved.select("doc_id", "rep_id", "rep_fp"),
+            catalog=bands,
         )
 
     return handler
@@ -5128,39 +4766,29 @@ def stream_split_by_neardup_incremental(
     fingerprint, so a near-dup pair whose members BOTH arrive after
     stream start, in different micro-batches, still lands in one split
     (pinned by test_stream_split_by_neardup_incremental_cross_batch)."""
-    decisions_dir, _map_dir = _ndinc_run(spark, sf_dir, "ndinc_")
-    return spark.read.parquet(decisions_dir).select("doc_id", "split")
+    return run_lifecycle(spark, sf_dir, CLUSTER_MAP, "ndinc_")[0]
 
 
-def _ndinc_run(
-    spark: SparkSession, sf_dir: str, prefix: str
-) -> tuple[str, str]:
-    """Stream the near corpus (id-ordered) through the cluster-map
-    handler; return (decisions_dir, map_dir) — the one ingest body
-    shared by the assignment registration and the leakage audit."""
-    from ..streaming.sinks import foreach_batch_sink
+def _ndinc_arrival_parts(docs: DataFrame) -> list:
+    """The whole corpus in 3 id ranges + the near_plants re-crawls."""
+    return _id_range_parts(docs, near_plants(docs), plant_offset=100000)
 
-    from . import tmp_run_dir
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir(prefix)
-    catalog_dir = os.path.join(base_dir, "catalog")
-    map_dir = os.path.join(base_dir, "clustermap")
-    decisions_dir = os.path.join(base_dir, "decisions")
-    src_dir = os.path.join(base_dir, "arrivals")
-
-    _write_id_ordered_arrivals(
-        src_dir,
-        _id_range_parts(docs, near_plants(docs), plant_offset=100000),
-    )
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, src_dir),
-        _neardup_clustermap_handler(catalog_dir, map_dir, decisions_dir),
-        checkpoint=os.path.join(base_dir, "ckpt"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return decisions_dir, map_dir
+# Seedless: the catalog and the map first appear at batch 0. Shared by
+# the assignment registration, its compaction twin and the leakage audit.
+CLUSTER_MAP = MaintainedState(
+    name="cluster_map",
+    table=_docs_table,
+    relations=(
+        replace(MH_CATALOG.relations[0], seed=None),
+        Relation("clustermap", "doc_id long, rep_id long, rep_fp string"),
+    ),
+    parts=_ndinc_arrival_parts,
+    arrival_schema=_DOC_ARRIVAL_SCHEMA,
+    handler=_neardup_clustermap_handler,
+    decisions="doc_id long, split string",
+    output=("doc_id", "split"),
+)
 
 
 @register(
@@ -5198,14 +4826,13 @@ def stream_split_by_neardup_inc_audit(
     proves it against the recursive-chain oracle's replay. The cluster
     key is the maintained map's rep_id (founders rep themselves), the
     split_by_neardup_cluster_audit convention over at-ingest state."""
-    decisions_dir, map_dir = _ndinc_run(spark, sf_dir, "ndincaudit_")
+    decisions, io = run_lifecycle(spark, sf_dir, CLUSTER_MAP, "ndincaudit_")
+    clustermap = _read_state(
+        spark, io.dir("clustermap"), io.relation("clustermap")
+    )
     sp = (
-        spark.read.parquet(decisions_dir)
-        .select("doc_id", "split")
-        .join(
-            spark.read.parquet(map_dir).select(
-                "doc_id", F.col("rep_id").alias("cluster_id")
-            ),
+        decisions.join(
+            clustermap.select("doc_id", F.col("rep_id").alias("cluster_id")),
             "doc_id",
         )
         .localCheckpoint(eager=False)  # feeds train-cluster set + eval side
@@ -5243,62 +4870,10 @@ def stream_split_by_neardup_inc_compacted(
     holds for each) collapse to one batch_id=-1 partition between the
     two arrival phases. Registers against SPLIT_BY_NEARDUP_INC_ORACLE
     VERBATIM: the driver hash proves a phase-B arrival still adopts a
-    phase-A rep through the collapse. Bespoke two-phase body rather
-    than _compacted_two_phase_ingest because this state is SEEDLESS and
-    two-relation (that body seeds exactly one state dir); the phase
-    structure — ingest parts[:2], compact, ingest parts[2:] against the
-    compacted dirs, union both decisions — is the same."""
-    from ..streaming.sinks import foreach_batch_sink
-
-    from . import tmp_run_dir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tmp_run_dir("ndinccomp_")
-    parts = _id_range_parts(docs, near_plants(docs), plant_offset=100000)
-
-    dirs = {
-        f"{kind}_{ph}": os.path.join(base_dir, f"{kind}_{ph}")
-        for kind in ("catalog", "clustermap", "decisions")
-        for ph in ("a", "b")
-    }
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_a"), parts[:2])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_a")),
-        _neardup_clustermap_handler(
-            dirs["catalog_a"], dirs["clustermap_a"], dirs["decisions_a"]
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_a"),
-        mode="append",
-    )
-    q.awaitTermination()
-
-    # The two relations compact independently — overlap (r19 §2.6).
-    _run_jobs(
-        lambda: _compact_state(
-            spark, dirs["catalog_a"], dirs["catalog_b"],
-            schema=_MH_CATALOG_SCHEMA,
-        ),
-        lambda: _compact_state(
-            spark, dirs["clustermap_a"], dirs["clustermap_b"],
-            schema=_CLUSTER_MAP_SCHEMA,
-        ),
-    )
-
-    _write_id_ordered_arrivals(os.path.join(base_dir, "arr_b"), parts[2:])
-    q = foreach_batch_sink(
-        _arrivals_stream(spark, os.path.join(base_dir, "arr_b")),
-        _neardup_clustermap_handler(
-            dirs["catalog_b"], dirs["clustermap_b"], dirs["decisions_b"]
-        ),
-        checkpoint=os.path.join(base_dir, "ckpt_b"),
-        mode="append",
-    )
-    q.awaitTermination()
-    return (
-        spark.read.parquet(dirs["decisions_a"])
-        .unionByName(spark.read.parquet(dirs["decisions_b"]))
-        .select("doc_id", "split")
-    )
+    phase-A rep through the collapse."""
+    return run_lifecycle(
+        spark, sf_dir, CLUSTER_MAP, "ndinccomp_", compact=True
+    )[0]
 
 
 # ---------------------------------------------------------------------------

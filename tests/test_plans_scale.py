@@ -663,6 +663,23 @@ def test_centroid_literal_array_rejects_unbounded(spark):
         _centroid_literal_array(rows, k=2)
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_centroid_literal_array_rejects_non_finite(bad):
+    """A NaN or +-inf component has no SQL double literal ('nanD' would
+    fail as an opaque parse error): the function raises a ValueError that
+    names the offending centroid before any expression is built."""
+    from spark_streaming_kafka_example_spark.operators.similarity import (
+        _centroid_literal_array,
+    )
+
+    rows = [
+        {"cent_id": 0, "cv": [0.1, 0.2]},
+        {"cent_id": 7, "cv": [0.3, bad]},
+    ]
+    with pytest.raises(ValueError, match="cent_id=7 has non-finite"):
+        _centroid_literal_array(rows, k=2)
+
+
 def test_stride_centroids_bounded_at_any_corpus_size(spark):
     """stride_centroids must return <= _STRIDE_K_CAP rows no matter how
     large the corpus: it is broadcast (and in the oracle-parity configs,
@@ -1130,127 +1147,4 @@ def test_ivf_appendix_probe_prunable_both_parts(spark, sf_dir):
             pf = ln.split("PartitionFilters: [", 1)
             assert len(pf) == 2 and "bucket" in pf[1].split("]", 1)[0], (
                 f"{part} scan lost its static bucket partition filters"
-            )
-
-
-def test_ttl_store_read_pruned_both_sides(spark, tmp_path):
-    """r17: the retention window must reach the store scan as PARTITION
-    filters on BOTH sides (batch_id < current AND >= current - W) — a
-    TTL implemented as a post-scan filter would still read the store's
-    whole lifetime, defeating the O(window) claim."""
-    import pyspark.sql.functions as SF
-
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _fp_store_ranked,
-    )
-
-    store = str(tmp_path / "store")
-    for b in (-1, 0, 1, 2):
-        spark.createDataFrame([(f"f{b}",)], "fp string").withColumn(
-            "batch_id", SF.lit(b)
-        ).write.mode("append").partitionBy("batch_id").parquet(store)
-
-    fps = spark.createDataFrame([(1, "f0")], "doc_id long, fp string")
-    ranked = _fp_store_ranked(store, fps, batch_id=3, retention_batches=2)
-    plan = ranked._jdf.queryExecution().executedPlan().toString()
-    scans = [
-        ln for ln in plan.splitlines()
-        if "FileScan" in ln and "store" in ln
-    ]
-    assert scans, "no FileScan over the store"
-    for ln in scans:
-        pf = ln.split("PartitionFilters: [", 1)
-        assert len(pf) == 2, "store scan lost its partition filters"
-        filters = pf[1].split("]", 1)[0]
-        assert "batch_id#" in filters or "batch_id " in filters
-        assert "< 3" in filters and ">= 1" in filters, (
-            f"TTL bounds not pushed to partition pruning: {filters}"
-        )
-
-
-def test_ttl_image_catalog_read_pruned_both_sides(spark, tmp_path):
-    """r18: the image chunk catalog's retention window must reach the
-    catalog scan as PARTITION filters on BOTH sides (batch_id < current
-    AND >= current - W) — the fp-store pin's image twin."""
-    import pyspark.sql.functions as SF
-
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _image_catalog_prior_hits,
-        _image_chunk_rows,
-    )
-
-    catalog = str(tmp_path / "catalog")
-    schema = "doc_id long, text string"
-    for b in (-1, 0, 1, 2):
-        _image_chunk_rows(
-            spark.createDataFrame([(10 + b, f"text number {b} here")], schema)
-        ).withColumn("batch_id", SF.lit(b)).write.mode(
-            "append"
-        ).partitionBy("batch_id").parquet(catalog)
-
-    chunks = _image_chunk_rows(
-        spark.createDataFrame([(99, "probe text arriving now")], schema)
-    )
-    hits = _image_catalog_prior_hits(
-        catalog, chunks, batch_id=3, retention_batches=2
-    )
-    plan = hits._jdf.queryExecution().executedPlan().toString()
-    scans = [
-        ln for ln in plan.splitlines()
-        if "FileScan" in ln and "catalog" in ln
-    ]
-    assert scans, "no FileScan over the catalog"
-    for ln in scans:
-        pf = ln.split("PartitionFilters: [", 1)
-        assert len(pf) == 2, "catalog scan lost its partition filters"
-        filters = pf[1].split("]", 1)[0]
-        assert "batch_id#" in filters or "batch_id " in filters
-        assert "< 3" in filters and ">= 1" in filters, (
-            f"TTL bounds not pushed to partition pruning: {filters}"
-        )
-
-
-def test_ttl_embedding_catalog_read_pruned_both_sides(spark, tmp_path):
-    """r18: the embedding catalog's retention window must reach BOTH
-    state scans (code rows and vectors) as PARTITION filters
-    (batch_id < current AND >= current - W) — the image pin's vector
-    twin."""
-    import pyspark.sql.functions as SF
-
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _emb_code_rows,
-        _emb_prior_relations,
-    )
-
-    codes = str(tmp_path / "codes")
-    vecs = str(tmp_path / "vectors")
-    schema = "doc_id long, embedding array<float>"
-    for b in (-1, 0, 1, 2):
-        df = spark.createDataFrame(
-            [(10 + b, [float(b + i) for i in range(64)])], schema
-        )
-        _emb_code_rows(df).withColumn("batch_id", SF.lit(b)).write.mode(
-            "append"
-        ).partitionBy("batch_id").parquet(codes)
-        df.withColumn("batch_id", SF.lit(b)).write.mode(
-            "append"
-        ).partitionBy("batch_id").parquet(vecs)
-
-    prior_codes, prior_store = _emb_prior_relations(
-        spark, codes, vecs, batch_id=3, retention_batches=2
-    )
-    for rel, path_word in ((prior_codes, "codes"), (prior_store, "vectors")):
-        # each relation's plan holds exactly one FileScan (its own state
-        # dir); the location string truncates under pytest's long tmp
-        # paths, so don't key the match on the dir name
-        plan = rel._jdf.queryExecution().executedPlan().toString()
-        scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
-        assert scans, f"no FileScan over {path_word}"
-        for ln in scans:
-            pf = ln.split("PartitionFilters: [", 1)
-            assert len(pf) == 2, f"{path_word} scan lost its partition filters"
-            filters = pf[1].split("]", 1)[0]
-            assert "batch_id#" in filters or "batch_id " in filters
-            assert "< 3" in filters and ">= 1" in filters, (
-                f"TTL bounds not pushed to partition pruning: {filters}"
             )

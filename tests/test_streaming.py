@@ -1608,14 +1608,16 @@ def test_dedup_store_cross_batch_maintenance(spark, tmp_path):
 
     from spark_streaming_kafka_example_spark.functions.text import fingerprint
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _dedup_store_handler,
+        FP_STORE,
+        StateIO,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
     )
 
-    store = str(tmp_path / "store")
-    decisions = str(tmp_path / "decisions")
+    io = StateIO(FP_STORE, str(tmp_path))
+    store = io.dir("store")
+    decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
     schema = "doc_id long, text string"
 
@@ -1646,7 +1648,7 @@ def test_dedup_store_cross_batch_maintenance(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src + "/*")
     )
-    handler = _dedup_store_handler(store, decisions)
+    handler = FP_STORE.handler(io)
     q = foreach_batch_sink(
         arriving, handler, checkpoint=str(tmp_path / "ckpt"), mode="append"
     )
@@ -1683,14 +1685,16 @@ def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
 
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _mh_catalog_handler,
+        MH_CATALOG,
+        StateIO,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
     )
 
-    catalog = str(tmp_path / "catalog")
-    decisions = str(tmp_path / "decisions")
+    io = StateIO(MH_CATALOG, str(tmp_path))
+    catalog = io.dir("catalog")
+    decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
     schema = "doc_id long, text string"
 
@@ -1723,7 +1727,7 @@ def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _mh_catalog_handler(catalog, decisions)
+    handler = MH_CATALOG.handler(io)
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -1751,69 +1755,6 @@ def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
         for r in spark.read.parquet(decisions).collect()
     }
     assert got2 == got
-
-
-def test_handler_crash_between_overlapped_writes_replays_clean(
-    spark, tmp_path
-):
-    """r20 (r19 VERDICT task 8): _run_jobs overlaps a handler's sibling
-    state writes, so a crash can leave ANY SUBSET of them on disk before
-    the engine replays the batch. The invariant that makes this safe —
-    now pinned, not just commented — is that replay is idempotent
-    regardless of which sibling landed: reads are bounded batch_id <
-    current (a half-written current partition is never consulted) and
-    every write is a dynamic per-partition overwrite (the survivor is
-    rewritten byte-identically, the missing sibling is produced). Both
-    crash orders are simulated by deleting one sibling's partition after
-    a clean run and replaying."""
-    import shutil
-
-    import pyspark.sql.functions as SF
-
-    from spark_streaming_kafka_example_spark.functions.text import fingerprint
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _dedup_store_handler,
-    )
-
-    store = str(tmp_path / "store")
-    decisions = str(tmp_path / "decisions")
-    schema = "doc_id long, text string"
-
-    spark.createDataFrame([(2, "alpha beta")], schema).select(
-        fingerprint("text").alias("fp")
-    ).withColumn("batch_id", SF.lit(-1)).write.partitionBy("batch_id").parquet(
-        store
-    )
-
-    batches = [
-        [(11, "gamma delta")],                        # novel
-        [(13, "gamma delta"), (15, "epsilon zeta")],  # cross-batch dup + novel
-    ]
-    handler = _dedup_store_handler(store, decisions)
-    for i, rows in enumerate(batches):
-        handler(spark.createDataFrame(rows, schema), i)
-
-    def snapshot():
-        dec = sorted(
-            (r.doc_id, r.status, r.batch_id)
-            for r in spark.read.parquet(decisions).collect()
-        )
-        fps = sorted(
-            (r.fp, r.batch_id) for r in spark.read.parquet(store).collect()
-        )
-        return dec, fps
-
-    clean = snapshot()
-
-    # crash order (a): batch 1's store append landed, decisions did not
-    shutil.rmtree(os.path.join(decisions, "batch_id=1"))
-    handler(spark.createDataFrame(batches[1], schema), 1)
-    assert snapshot() == clean
-
-    # crash order (b): batch 1's decisions landed, store append did not
-    shutil.rmtree(os.path.join(store, "batch_id=1"))
-    handler(spark.createDataFrame(batches[1], schema), 1)
-    assert snapshot() == clean
 
 
 def test_batch_band_rows_within_row_equals_groupby_form(spark, sf_dir):
@@ -1874,15 +1815,17 @@ def test_pretrain_gate_v2_cross_batch_state(spark, tmp_path):
     )
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _gate_v2_handler,
+        GATE_V2,
+        StateIO,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
     )
 
-    store = str(tmp_path / "store")
-    catalog = str(tmp_path / "catalog")
-    decisions = str(tmp_path / "decisions")
+    io = StateIO(GATE_V2, str(tmp_path))
+    store = io.dir("store")
+    catalog = io.dir("catalog")
+    decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
     schema = "doc_id long, text string"
 
@@ -1926,7 +1869,7 @@ def test_pretrain_gate_v2_cross_batch_state(spark, tmp_path):
     ).first()[0]
     assert other_fp not in seed_fps
 
-    handler = _gate_v2_handler(store, catalog, decisions)
+    handler = GATE_V2.handler(io)
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -1977,25 +1920,25 @@ def test_image_catalog_cross_batch_growth(spark, tmp_path):
     catalog never hashed it); and a replayed batch, bounded to catalog
     partitions below its own batch_id, reproduces its counts exactly."""
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _image_catalog_handler,
+        IMAGE_CATALOG,
+        StateIO,
         _image_chunk_rows,
-        _seed_state,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
     )
 
-    catalog = str(tmp_path / "catalog")
-    decisions = str(tmp_path / "decisions")
+    io = StateIO(IMAGE_CATALOG, str(tmp_path))
+    decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
     schema = "doc_id long, text string"
 
     base = "the quick brown fox jumps over the lazy dog tonight"
     other = "pack my box with five dozen liquor jugs and carry them"
 
-    _seed_state(
-        _image_chunk_rows(spark.createDataFrame([(2, base)], schema)),
-        catalog,
+    io.write(
+        -1,
+        catalog=_image_chunk_rows(spark.createDataFrame([(2, base)], schema)),
     )
     batches = [
         [(11, other)],  # novel image
@@ -2012,7 +1955,7 @@ def test_image_catalog_cross_batch_growth(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _image_catalog_handler(catalog, decisions)
+    handler = IMAGE_CATALOG.handler(io)
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -2055,14 +1998,16 @@ def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
     )
     from spark_streaming_kafka_example_spark.plans.stream import (
         _FP_TTL_W,
-        _dedup_store_handler,
+        FP_STORE,
+        StateIO,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
     )
 
-    store = str(tmp_path / "store")
-    decisions = str(tmp_path / "decisions")
+    io = StateIO(FP_STORE, str(tmp_path), retention_batches=_FP_TTL_W)
+    store = io.dir("store")
+    decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
     schema = "doc_id long, text string"
 
@@ -2099,7 +2044,7 @@ def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src + "/*")
         ),
-        _dedup_store_handler(store, decisions, retention_batches=_FP_TTL_W),
+        FP_STORE.handler(io),
         checkpoint=str(tmp_path / "ckpt"),
         mode="append",
     )
@@ -2128,7 +2073,8 @@ def test_minhash_catalog_retention_expires(spark, tmp_path):
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
         _MH_TTL_W,
-        _mh_catalog_handler,
+        MH_CATALOG,
+        StateIO,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -2162,8 +2108,9 @@ def test_minhash_catalog_retention_expires(spark, tmp_path):
 
     got = {}
     for mode, retention in [("ttl", _MH_TTL_W), ("unbounded", None)]:
-        catalog = str(tmp_path / f"catalog_{mode}")
-        decisions = str(tmp_path / f"decisions_{mode}")
+        io = StateIO(MH_CATALOG, str(tmp_path / mode), retention)
+        catalog = io.dir("catalog")
+        decisions = io.dir("decisions")
         seed = spark.createDataFrame([(2, base)], schema)
         DD.lsh_band_values(
             DD.minhash_signatures(DD.doc_shingles(seed, distinct=False))
@@ -2176,8 +2123,8 @@ def test_minhash_catalog_retention_expires(spark, tmp_path):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src + "/*")
             ),
-            _mh_catalog_handler(catalog, decisions, retention),
-            checkpoint=str(tmp_path / f"ckpt_{mode}"),
+            MH_CATALOG.handler(io),
+            checkpoint=io.dir("ckpt"),
             mode="append",
         )
         q.awaitTermination()
@@ -2202,6 +2149,7 @@ def test_compact_state_single_partition(spark, tmp_path):
     import pyspark.sql.functions as SF
 
     from spark_streaming_kafka_example_spark.plans.stream import (
+        Relation,
         _compact_state,
     )
 
@@ -2212,7 +2160,7 @@ def test_compact_state_single_partition(spark, tmp_path):
             "batch_id", SF.lit(b)
         ).write.mode("append").partitionBy("batch_id").parquet(state)
 
-    _compact_state(spark, state, out)
+    _compact_state(spark, state, out, Relation("store", "fp string"))
     got = spark.read.parquet(out)
     assert sorted(r.fp for r in got.collect()) == ["a", "b", "c", "d", "e"]
     assert [r.batch_id for r in got.select("batch_id").distinct().collect()] == [-1]
@@ -2225,18 +2173,15 @@ def test_compacted_ingest_cross_phase_through_compaction(spark):
     state (the only place phase A's append survives), and a phase-B
     duplicate of the original seed proves the seed rode through the
     collapse too."""
-    from spark_streaming_kafka_example_spark.functions.text import (
-        fingerprint,
-    )
+    from dataclasses import replace
+
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _compacted_two_phase_ingest,
-        _dedup_store_handler,
+        FP_STORE,
+        run_lifecycle,
     )
 
     schema = "doc_id long, text string"
-    seed = spark.createDataFrame([(2, "alpha beta")], schema).select(
-        fingerprint("text").alias("fp")
-    )
+    seed = spark.createDataFrame([(2, "alpha beta")], schema)  # even: seeded
     parts = [
         spark.createDataFrame(rows, schema)
         for rows in [
@@ -2246,15 +2191,13 @@ def test_compacted_ingest_cross_phase_through_compaction(spark):
             [(17, "alpha beta")],  # phase B: dup of the seed via compact
         ]
     ]
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark, "fpcompact_test_", seed, parts, _dedup_store_handler
+    spec = replace(
+        FP_STORE, table=lambda _s, _sf: seed, parts=lambda _docs: parts
     )
-    got = {
-        r.doc_id: r.status
-        for r in spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .collect()
-    }
+    decisions, _io = run_lifecycle(
+        spark, "", spec, "fpcompact_test_", compact=True
+    )
+    got = {r.doc_id: r.status for r in decisions.collect()}
     assert got == {
         11: "novel",
         13: "novel",
@@ -2396,9 +2339,9 @@ def test_image_catalog_retention_expires(spark, tmp_path):
     and unbounded handlers and contrasting the counts."""
     from spark_streaming_kafka_example_spark.plans.stream import (
         _IMG_TTL_W,
-        _image_catalog_handler,
+        IMAGE_CATALOG,
+        StateIO,
         _image_chunk_rows,
-        _seed_state,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -2429,11 +2372,13 @@ def test_image_catalog_retention_expires(spark, tmp_path):
 
     got = {}
     for mode, retention in [("ttl", _IMG_TTL_W), ("unbounded", None)]:
-        catalog = str(tmp_path / f"catalog_{mode}")
-        decisions = str(tmp_path / f"decisions_{mode}")
-        _seed_state(
-            _image_chunk_rows(spark.createDataFrame([(2, base)], schema)),
-            catalog,
+        io = StateIO(IMAGE_CATALOG, str(tmp_path / mode), retention)
+        decisions = io.dir("decisions")
+        io.write(
+            -1,
+            catalog=_image_chunk_rows(
+                spark.createDataFrame([(2, base)], schema)
+            ),
         )
         q = foreach_batch_sink(
             (
@@ -2441,8 +2386,8 @@ def test_image_catalog_retention_expires(spark, tmp_path):
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src + "/*")
             ),
-            _image_catalog_handler(catalog, decisions, retention),
-            checkpoint=str(tmp_path / f"ckpt_{mode}"),
+            IMAGE_CATALOG.handler(io),
+            checkpoint=io.dir("ckpt"),
             mode="append",
         )
         q.awaitTermination()
@@ -2466,17 +2411,18 @@ def test_image_compacted_ingest_cross_phase(spark):
     COMPACTED catalog (the only place phase A's chunk rows survive), and
     a phase-B copy of the seed cover proves the seed rode through the
     collapse too."""
+    from dataclasses import replace
+
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _compacted_two_phase_ingest,
-        _image_catalog_handler,
-        _image_chunk_rows,
+        IMAGE_CATALOG,
+        run_lifecycle,
     )
 
     schema = "doc_id long, text string"
     base = "the quick brown fox jumps over the lazy dog tonight"
     other = "pack my box with five dozen liquor jugs and carry them"
     third = "sphinx of black quartz judge my vow and then some more"
-    seed = _image_chunk_rows(spark.createDataFrame([(2, base)], schema))
+    seed = spark.createDataFrame([(2, base)], schema)  # even: seeded
     parts = [
         spark.createDataFrame(rows, schema)
         for rows in [
@@ -2486,52 +2432,14 @@ def test_image_compacted_ingest_cross_phase(spark):
             [(17, base)],  # phase B: prior = the seed through the collapse
         ]
     ]
-    dec_a, dec_b = _compacted_two_phase_ingest(
-        spark, "imgcompact_test_", seed, parts, _image_catalog_handler
+    spec = replace(
+        IMAGE_CATALOG, table=lambda _s, _sf: seed, parts=lambda _docs: parts
     )
-    got = {
-        r.doc_id: r.n_prior_candidates
-        for r in spark.read.parquet(dec_a)
-        .unionByName(spark.read.parquet(dec_b))
-        .collect()
-    }
+    decisions, _io = run_lifecycle(
+        spark, "", spec, "imgcompact_test_", compact=True
+    )
+    got = {r.doc_id: r.n_prior_candidates for r in decisions.collect()}
     assert got == {11: 0, 13: 0, 15: 1, 17: 1}, got
-
-
-def test_compacted_ingest_rejects_retention_curried_handler(spark):
-    """r18 (r17 ADVICE): _compact_state is unbounded-state-only, and the
-    contract is now CHECKABLE — _compacted_two_phase_ingest builds its
-    handlers with an explicit retention_batches=None, so a factory
-    already curried with a TTL window fails fast with a TypeError
-    instead of silently corrupting the retention semantics."""
-    import pytest as _pytest
-
-    from spark_streaming_kafka_example_spark.functions.text import (
-        fingerprint,
-    )
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _compacted_two_phase_ingest,
-        _dedup_store_handler,
-    )
-
-    schema = "doc_id long, text string"
-    seed = spark.createDataFrame([(2, "alpha beta")], schema).select(
-        fingerprint("text").alias("fp")
-    )
-    parts = [
-        spark.createDataFrame([(11 + 2 * i, f"word {i}")], schema)
-        for i in range(4)
-    ]
-
-    def curried(state_dir, decisions_dir):  # no retention_batches param
-        return _dedup_store_handler(
-            state_dir, decisions_dir, retention_batches=2
-        )
-
-    with _pytest.raises(TypeError):
-        _compacted_two_phase_ingest(
-            spark, "fpcompact_guard_", seed, parts, curried
-        )
 
 
 def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
@@ -2550,19 +2458,20 @@ def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
     from spark_streaming_kafka_example_spark.operators import dedup as DD
     from spark_streaming_kafka_example_spark.plans.stream import (
         _GATE_COVER_LEN,
+        GATE_V3,
+        StateIO,
         _gate_cover,
-        _gate_v2_handler,
         _image_chunk_rows,
-        _seed_state,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
     )
 
-    store = str(tmp_path / "store")
-    catalog = str(tmp_path / "catalog")
-    imgcatalog = str(tmp_path / "imgcatalog")
-    decisions = str(tmp_path / "decisions")
+    io = StateIO(GATE_V3, str(tmp_path))
+    store = io.dir("store")
+    catalog = io.dir("catalog")
+    imgcatalog = io.dir("imgcatalog")
+    decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
     schema = "doc_id long, text string"
 
@@ -2583,7 +2492,7 @@ def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
     ).withColumn("batch_id", SF.lit(-1)).write.partitionBy(
         "batch_id"
     ).parquet(catalog)
-    _seed_state(_image_chunk_rows(_gate_cover(seed)), imgcatalog)
+    io.write(-1, imgcatalog=_image_chunk_rows(_gate_cover(seed)))
 
     batches = [
         [(11, other)],  # novel content, novel cover
@@ -2601,7 +2510,7 @@ def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _gate_v2_handler(store, catalog, decisions, imgcatalog)
+    handler = GATE_V3.handler(io)
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -2650,8 +2559,9 @@ def test_stream_split_by_neardup_incremental_cross_batch(spark, tmp_path):
     from collections import defaultdict
 
     from spark_streaming_kafka_example_spark.plans.stream import (
+        CLUSTER_MAP,
+        StateIO,
         _batch_band_rows,
-        _neardup_clustermap_handler,
     )
     from spark_streaming_kafka_example_spark.plans.textprep import (
         cluster_split_column,
@@ -2721,10 +2631,10 @@ def test_stream_split_by_neardup_incremental_cross_batch(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    catalog = str(tmp_path / "catalog")
-    map_dir = str(tmp_path / "clustermap")
-    decisions = str(tmp_path / "decisions")
-    handler = _neardup_clustermap_handler(catalog, map_dir, decisions)
+    io = StateIO(CLUSTER_MAP, str(tmp_path))
+    map_dir = io.dir("clustermap")
+    decisions = io.dir("decisions")
+    handler = CLUSTER_MAP.handler(io)
     q = foreach_batch_sink(
         (
             spark.readStream.schema(schema)
@@ -2772,8 +2682,9 @@ def test_neardup_inc_compacted_adopts_through_collapse(spark, tmp_path):
     its rep through the COMPACTED catalog + map (the only place phase
     A's state survives), where the stateless own-fp gate disagrees."""
     from spark_streaming_kafka_example_spark.plans.stream import (
+        CLUSTER_MAP,
+        StateIO,
         _compact_state,
-        _neardup_clustermap_handler,
     )
     from spark_streaming_kafka_example_spark.plans.textprep import (
         cluster_split_column,
@@ -2796,21 +2707,23 @@ def test_neardup_inc_compacted_adopts_through_collapse(spark, tmp_path):
     }
     assert own[13] != own[20], "fixture regression: gates agree"
 
-    cat_a, map_a, dec_a, cat_b, map_b, dec_b = (
-        str(tmp_path / d)
-        for d in ("cat_a", "map_a", "dec_a", "cat_b", "map_b", "dec_b")
-    )
-    handler_a = _neardup_clustermap_handler(cat_a, map_a, dec_a)
-    handler_a(spark.createDataFrame([(13, x_txt)], schema), 0)
+    io_a = StateIO(CLUSTER_MAP, str(tmp_path / "a"))
+    io_b = StateIO(CLUSTER_MAP, str(tmp_path / "b"))
+    CLUSTER_MAP.handler(io_a)(spark.createDataFrame([(13, x_txt)], schema), 0)
 
-    _compact_state(spark, cat_a, cat_b)
-    _compact_state(spark, map_a, map_b)
+    for rel in CLUSTER_MAP.relations:  # the catalog AND the rep map
+        _compact_state(spark, io_a.dir(rel.name), io_b.dir(rel.name), rel)
 
-    handler_b = _neardup_clustermap_handler(cat_b, map_b, dec_b)
-    handler_b(spark.createDataFrame([(20, y_txt)], schema), 0)
+    CLUSTER_MAP.handler(io_b)(spark.createDataFrame([(20, y_txt)], schema), 0)
 
-    reps = {r.doc_id: r.rep_id for r in spark.read.parquet(map_b).collect()}
-    got = {r.doc_id: r.split for r in spark.read.parquet(dec_b).collect()}
+    reps = {
+        r.doc_id: r.rep_id
+        for r in spark.read.parquet(io_b.dir("clustermap")).collect()
+    }
+    got = {
+        r.doc_id: r.split
+        for r in spark.read.parquet(io_b.dir("decisions")).collect()
+    }
     assert reps[20] == 13, reps
     assert got[20] == own[13] != own[20]
 
@@ -2823,17 +2736,16 @@ def test_embedding_catalog_cross_batch_growth(spark, tmp_path):
     below its own batch_id, reproduces its counts exactly."""
     from spark_streaming_kafka_example_spark.plans.stream import (
         _EMB_ARRIVAL_SCHEMA,
+        EMB_CATALOG,
+        StateIO,
         _emb_code_rows,
-        _embedding_catalog_handler,
-        _seed_state,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
     )
 
-    codes = str(tmp_path / "codes")
-    vecs = str(tmp_path / "vectors")
-    decisions = str(tmp_path / "decisions")
+    io = StateIO(EMB_CATALOG, str(tmp_path))
+    decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
 
     def vec(seed):  # deterministic unit-norm-ish 64-dim vectors
@@ -2843,8 +2755,7 @@ def test_embedding_catalog_cross_batch_growth(spark, tmp_path):
         pairs, _EMB_ARRIVAL_SCHEMA
     )
     seed_df = rows([(2, vec(1))]).localCheckpoint()
-    _seed_state(_emb_code_rows(seed_df), codes)
-    _seed_state(seed_df.select("doc_id", "embedding"), vecs)
+    io.write(-1, codes=_emb_code_rows(seed_df), vectors=seed_df)
 
     batches = [
         [(11, vec(5))],  # novel vector
@@ -2859,7 +2770,7 @@ def test_embedding_catalog_cross_batch_growth(spark, tmp_path):
                     (1_700_000_000 + i, 1_700_000_000 + i),
                 )
 
-    handler = _embedding_catalog_handler(codes, vecs, decisions)
+    handler = EMB_CATALOG.handler(io)
     q = foreach_batch_sink(
         (
             spark.readStream.schema(_EMB_ARRIVAL_SCHEMA)
@@ -2900,9 +2811,9 @@ def test_embedding_catalog_retention_expires(spark, tmp_path):
     from spark_streaming_kafka_example_spark.plans.stream import (
         _EMB_ARRIVAL_SCHEMA,
         _EMBCAT_TTL_W,
+        EMB_CATALOG,
+        StateIO,
         _emb_code_rows,
-        _embedding_catalog_handler,
-        _seed_state,
     )
     from spark_streaming_kafka_example_spark.streaming.sinks import (
         foreach_batch_sink,
@@ -2933,20 +2844,18 @@ def test_embedding_catalog_retention_expires(spark, tmp_path):
 
     got = {}
     for mode, retention in [("ttl", _EMBCAT_TTL_W), ("unbounded", None)]:
-        codes = str(tmp_path / f"codes_{mode}")
-        vecs = str(tmp_path / f"vectors_{mode}")
-        decisions = str(tmp_path / f"decisions_{mode}")
+        io = StateIO(EMB_CATALOG, str(tmp_path / mode), retention)
+        decisions = io.dir("decisions")
         seed_df = rows([(2, vec(1))]).localCheckpoint()
-        _seed_state(_emb_code_rows(seed_df), codes)
-        _seed_state(seed_df.select("doc_id", "embedding"), vecs)
+        io.write(-1, codes=_emb_code_rows(seed_df), vectors=seed_df)
         q = foreach_batch_sink(
             (
                 spark.readStream.schema(_EMB_ARRIVAL_SCHEMA)
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src + "/*")
             ),
-            _embedding_catalog_handler(codes, vecs, decisions, retention),
-            checkpoint=str(tmp_path / f"ckpt_{mode}"),
+            EMB_CATALOG.handler(io),
+            checkpoint=io.dir("ckpt"),
             mode="append",
         )
         q.awaitTermination()
