@@ -35,7 +35,6 @@ HEADLINE = [
     "j1_enrich_left_outer",
     "p12_a1_word_count",
     "p2_from_json_flatten",
-    # Added as phases land (missing names are skipped):
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q6_forecast_revenue",
@@ -283,111 +282,95 @@ def _calibration(spark) -> dict[str, float]:
     }
 
 
-# The driver's capture keeps only the trailing 2000 BYTES of stdout —
-# measured exactly on both BENCH_r10 and BENCH_r11 (the earlier "~3.5 KB
-# observed" premise was wrong; r11 VERDICT task 1). The emitted line
-# self-sizes to this budget so the WHOLE line (JSON head included)
-# survives and the driver's parse finally succeeds. 1900 leaves margin
-# for a stray trailing newline / shell prompt byte. The env override is a
-# DEV escape hatch for recording full per-query maps in BENCH_NOISE files
-# — the driver never sets it, so its line keeps the pinned budget.
-_EMIT_BUDGET = int(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1900"))
+# The driver's capture keeps only the trailing 2000 bytes of stdout
+# (measured on BENCH_r10 and BENCH_r11). The emitted line self-sizes to
+# this budget so the whole line, JSON head included, survives; 1900 leaves
+# margin for a stray trailing newline or shell prompt byte.
+_EMIT_BUDGET = 1900
+
+
+def _git(*args: str) -> str:
+    """stdout of a git command run in this file's directory; "" outside a
+    git checkout."""
+    import subprocess
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    try:
+        return subprocess.run(
+            ["git", "-C", here, *args],
+            capture_output=True, text=True, check=True,
+        ).stdout
+    except (OSError, subprocess.CalledProcessError):
+        return ""
 
 
 def _capture_rounds() -> dict[str, int]:
-    """name -> latest driver round whose recorded BENCH_r{N}.json capture
-    window actually holds a per-query time for name (a quote-delimited
-    `"name":` match inside the stored tail — works on the head-truncated
-    r01-r11 lines too; a name whose leading quote was cut off was not
-    legibly captured). Names absent from every capture have NO bench
-    history. BENCH_NOISE_* dev recordings are deliberately excluded: they
-    carry full per-query maps at a raised dev budget, which would mark
-    every name "just captured" and freeze the rotation.
-
-    This keying is STABLE across the round lifecycle (r12 VERDICT task 1 /
-    ADVICE): the driver writes BENCH_r{N} and CORRECTNESS_r{N} only AFTER
-    this round's bench run, and neither artifact can reorder a
-    *past* capture — unlike the r12 `_ordered_names()` keying, which
-    flipped the moment CORRECTNESS_r12.json landed and turned the pytest
-    gate red mid-round."""
-    import glob
+    """name -> latest driver round whose BENCH_r{N}.json capture holds a
+    per-query time for name (a quote-delimited `"name":` match inside the
+    stored tail, so head-truncated lines count too). Only files committed
+    at HEAD are read, so runs of the same commit emit the same names even
+    after the driver drops this round's capture into the working tree;
+    outside a git checkout the history is empty. BENCH_NOISE_* recordings
+    are excluded: their full per-query maps would mark every name just
+    captured and freeze the rotation."""
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
     seen: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
+    listing = _git("ls-tree", "--name-only", "HEAD")
+    for m in re.finditer(r"^BENCH_r(\d+)\.json$", listing, re.M):
         try:
-            with open(path) as f:
-                tail = json.load(f).get("tail", "")
-        except Exception:
+            tail = json.loads(_git("show", f"HEAD:./{m.group(0)}"))["tail"]
+        except (ValueError, KeyError, TypeError):
             continue
         for name in re.findall(r'"([A-Za-z0-9_]+)":[0-9]', tail):
-            # Envelope keys (sf, value, n_queries, n_emitted, jvm_agg_sec,
-            # ...) match the pattern too; only HEADLINE names are capture
-            # history — without this filter a future query named like an
-            # envelope key would be wrongly marked just-captured and
-            # starved of emission (r13 ADVICE).
-            if name not in _HEADLINE_SET:
-                continue
-            seen[name] = max(seen.get(name, 0), rnd)
+            # Envelope keys (sf, value, n_queries, ...) match the pattern
+            # too; only HEADLINE names are capture history.
+            if name in _HEADLINE_SET:
+                seen[name] = max(seen.get(name, 0), int(m.group(1)))
     return seen
 
 
 def _drop_order(names) -> list[str]:
-    """Emission-eviction order (r13, r12 VERDICT task 5): drop the MOST-
-    recently-captured names first, so every HEADLINE query lands a
-    captured per-query time within ~2 rounds — the names the 61-slot r12
-    line starved rotate in automatically because last round's survivors
-    now sort to the drop-first end. Ties (same latest capture round, and
-    the whole never-captured class at round 0) break by HEADLINE index
-    ascending — registration order, a stable notion of age — so the
-    newest registrations always sit at the kept tail regardless of their
-    driver-green status."""
+    """Emission-eviction order: drop the most-recently-captured names
+    first, so every HEADLINE query lands a captured per-query time within
+    a few rounds. Ties (same latest capture round, and the whole
+    never-captured class at round 0) break by HEADLINE index, so the
+    newest registrations sit at the kept tail."""
     cap = _capture_rounds()
     idx = {n: i for i, n in enumerate(HEADLINE)}
     return sorted(names, key=lambda n: (-cap.get(n, 0), idx.get(n, -1)))
 
 
+def _render(timings: dict[str, float], keep, sf, calibration: dict) -> str:
+    """The output envelope with per-query entries for `keep`; `value` and
+    `n_queries` always cover every sampled query."""
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "queries": {n: timings[n] for n in keep},
+            "sf": sf,
+            "unit": "sec",
+            "value": round(sum(timings.values()), 3),
+            "n_queries": len(timings),
+            "n_emitted": len(keep),
+            "calibration": calibration,
+        },
+        separators=(",", ":"),
+    )
+
+
 def emit_line(timings: dict[str, float], sf, calibration: dict) -> str:
-    """The ONE output line, guaranteed <= _EMIT_BUDGET bytes (r11 VERDICT
-    task 1): per-query entries are dropped in `_drop_order` (most-recently-
-    captured first; never-captured and newest registrations survive
-    longest) until the serialized line fits, so the head of the JSON is
-    never truncated and per-query coverage ROTATES across rounds. `value`
-    stays the total over ALL sampled queries (not just the emitted map);
-    `n_queries` / `n_emitted` record the coverage so a reader knows when
-    entries were dropped.
-    tests/test_operators.py::test_bench_line_fits_driver_capture pins the
-    worst-case emitted length against the measured capture — with
-    structural assertions only, so the gate stays green after the
-    driver's round artifacts land (r12 VERDICT task 1)."""
-    names = _drop_order(timings)
-    total = round(sum(timings.values()), 3)
-
-    def render(keep: list[str]) -> str:
-        return json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "queries": {n: timings[n] for n in keep},
-                "sf": sf,
-                "unit": "sec",
-                "value": total,
-                "n_queries": len(timings),
-                "n_emitted": len(keep),
-                "calibration": calibration,
-            },
-            separators=(",", ":"),
-        )
-
-    keep = list(names)
-    line = render(keep)
+    """The ONE output line, guaranteed <= _EMIT_BUDGET bytes: per-query
+    entries are dropped in `_drop_order` until the serialized line fits,
+    so the head of the JSON is never truncated and per-query coverage
+    rotates across rounds. `n_queries` / `n_emitted` tell a reader when
+    entries were dropped. tests/test_operators.py pins the worst case and
+    its determinism against untracked capture files."""
+    keep = _drop_order(timings)
+    line = _render(timings, keep, sf, calibration)
     while len(line) > _EMIT_BUDGET and keep:
         keep.pop(0)
-        line = render(keep)
+        line = _render(timings, keep, sf, calibration)
     return line
 
 
@@ -415,9 +398,7 @@ def main() -> None:
     # plan + execution end-to-end.
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        fn = plans.QUERIES.get(name)
-        if fn is None:
-            continue
+        fn = plans.QUERIES[name]
         samples = []
         for _ in range(3):
             pre = _PRE_SAMPLE.get(name)
@@ -428,17 +409,16 @@ def main() -> None:
             samples.append(time.perf_counter() - t0)
         timings[name] = round(min(samples), 2)
 
-    # Field order matters (r09 VERDICT task 3): the driver's capture keeps
-    # the TAIL of the line, so totals and calibration go AFTER the
-    # per-query map. Still exactly ONE JSON line; emit_line documents the
-    # r11 shrink/ordering moves.
-    print(
-        emit_line(
-            timings,
-            float(sf) if sf.replace(".", "").isdigit() else sf,
-            _calibration(spark),
-        )
-    )
+    # Field order matters: the driver's capture keeps the TAIL of the line,
+    # so totals and calibration go AFTER the per-query map. stdout gets
+    # exactly ONE JSON line; the full per-query map, in the same envelope,
+    # goes to bench_last.json beside this file.
+    sf_value = float(sf) if sf.replace(".", "").isdigit() else sf
+    calibration = _calibration(spark)
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "bench_last.json"), "w") as f:
+        f.write(_render(timings, list(timings), sf_value, calibration) + "\n")
+    print(emit_line(timings, sf_value, calibration))
     spark.stop()
 
 

@@ -2361,21 +2361,14 @@ def test_bloom_pos_col_matches_row_form(spark):
 
 def test_bench_line_fits_driver_capture():
     """emit_line's worst case (every HEADLINE query at a 4-digit time,
-    full calibration block) must fit ENTIRELY inside the driver's capture,
-    which both BENCH_r10 and BENCH_r11 measured at exactly 2000 trailing
-    bytes (r11 VERDICT task 1 — the earlier 3300-byte bound assumed a
-    ~3.5 KB capture that does not exist, so the r10/r11 lines arrived
-    head-truncated and unparseable). The line self-sizes by dropping the
-    MOST-RECENTLY-CAPTURED per-query entries first (r12 VERDICT task 5 —
-    coverage rotates, so every headline query lands a captured time
-    within ~2 rounds); totals cover ALL queries regardless.
+    full calibration block) must fit ENTIRELY inside the driver's capture
+    of the trailing 2000 bytes of stdout. The line self-sizes by dropping
+    the MOST-RECENTLY-CAPTURED per-query entries first, so coverage
+    rotates across rounds; totals cover ALL queries regardless.
 
     Assertions are STRUCTURAL — re-derived from the same capture-history
-    key emit_line uses, with no hard-coded current-round survivor and no
-    `_ordered_names()` dependence — so the gate stays green both before
-    AND after the driver writes this round's BENCH/CORRECTNESS artifacts
-    (r12 VERDICT task 1: the old keying flipped when the untracked
-    CORRECTNESS_r12.json landed, reddening the committed tree mid-round)."""
+    key emit_line uses, with no hard-coded survivor — so the gate holds
+    for any committed capture history."""
     import bench
 
     worst = {n: 9999.99 for n in bench.HEADLINE}
@@ -2410,6 +2403,36 @@ def test_bench_line_fits_driver_capture():
             history[n] for n in parsed["queries"] if n in history
         ]
         assert all(c <= oldest_dropped for c in survived_caps)
+
+
+def test_bench_line_ignores_untracked_captures():
+    """emit_line reads capture history only from committed BENCH_r*.json
+    files: a capture file dropped into the working tree (as the driver
+    does mid-round) must not change the emitted line, so runs of the same
+    commit at different core counts emit the same names."""
+    import json
+    import os
+
+    import bench
+
+    worst = {n: 9999.99 for n in bench.HEADLINE}
+    calib = {"jvm_agg_sec": 999.999, "jvm_agg32_sec": 999.999,
+             "python_hash_sec": 999.999}
+    before = bench.emit_line(worst, 0.1, calib)
+    planted = os.path.join(
+        os.path.dirname(os.path.abspath(bench.__file__)), "BENCH_r99.json"
+    )
+    assert not os.path.exists(planted)
+    tail = json.dumps(
+        {"queries": {n: 1.0 for n in bench.HEADLINE}}, separators=(",", ":")
+    )
+    try:
+        with open(planted, "w") as f:
+            json.dump({"tail": tail}, f)
+        after = bench.emit_line(worst, 0.1, calib)
+    finally:
+        os.remove(planted)
+    assert after == before
 
 
 def test_minhash_within_row_sigs_match_groupby(spark):

@@ -80,75 +80,38 @@ def test_entry_smoke(spark):
 def test_driver_window_covers_all_unchecked():
     """Rotation invariant (CLAUDE.md): the driver runs only the FIRST 50
     of queries(), so every query with no green driver row under its
-    current oracle (including FORCE_RECHECK re-entries) must sort inside
-    that window — an unchecked query past the cut would never earn a
-    correctness row. Fails loudly when a round registers more new queries
-    than the window has slack."""
+    current code and oracle (including FORCE_RECHECK re-entries) must sort
+    inside that window — an unchecked query past the cut would never earn
+    a correctness row. Fails loudly when more names are pending than the
+    window has slack."""
     import __spark_entry__ as m
 
-    last_green = m._last_green_round()
-    for name, since_round in m.FORCE_RECHECK.items():
-        if last_green.get(name, 0) < since_round:
-            last_green.pop(name, None)
-    names = m._ordered_names()
-    past_cut = [n for n in names[50:] if n not in last_green]
-    # DEFER_TO_TAIL names are deliberately past the cut ONLY during their
-    # registration round (r16 VERDICT task 1: the exemption must be
-    # round-scoped, or the deadlock it caused hides forever). An entry
-    # whose registration round's CORRECTNESS file has landed is released —
-    # it must sort inside the window like any other unchecked name.
-    max_round = m._max_correctness_round()
-    past_cut = [
-        n for n in past_cut if m.DEFER_TO_TAIL.get(n, 0) <= max_round
-    ]
+    checked = m._checked_rounds()
+    past_cut = [n for n in m._ordered_names()[50:] if n not in checked]
     assert not past_cut, (
         f"{len(past_cut)} unchecked queries past the 50-query driver "
         f"window: {past_cut}"
     )
 
 
-def test_defer_to_tail_round_scoped_expiry(monkeypatch):
-    """DEFER_TO_TAIL self-expiry contract (r16 VERDICT task 1): an entry
-    registered in round N sorts AFTER the freshness tail only while
-    max(CORRECTNESS rounds) < N; once the registration round's file lands
-    the name re-enters the normal unchecked block INSIDE the window. The
-    old green-row-based expiry was circular (past-the-cut names can never
-    earn the releasing green row)."""
+def test_force_recheck_expired_entry_is_noop(monkeypatch):
+    """A FORCE_RECHECK entry whose round is at or below the name's last
+    green round changes nothing, which is why expired entries are deleted
+    rather than kept; a live entry moves the name into the window."""
     import __spark_entry__ as m
 
-    # Pick any registered name with a green history and strip its greens
-    # so it counts as unchecked, then defer it under both clock states.
     last_green = m._last_green_round()
+    before = m._ordered_names()
     name = next(
-        n
-        for n in m._ordered_names()
-        if n in last_green and n not in m.CORE_WINDOW
+        n for n in reversed(before)
+        if n in last_green and n not in m.FORCE_RECHECK
     )
-    real_last_green = m._last_green_round
 
-    def no_green_for_name():
-        d = real_last_green()
-        d.pop(name, None)
-        return d
+    monkeypatch.setitem(m.FORCE_RECHECK, name, last_green[name])
+    assert m._ordered_names() == before
 
-    monkeypatch.setattr(m, "_last_green_round", no_green_for_name)
-    max_round = m._max_correctness_round()
-
-    # Still pending (registered in a future round): sorts into the
-    # deferred tail, after every non-deferred name.
-    monkeypatch.setitem(m.DEFER_TO_TAIL, name, max_round + 1)
-    names = m._ordered_names()
-    pending = [n for n in names if m.DEFER_TO_TAIL.get(n, 0) > max_round]
-    assert name in pending
-    assert names.index(name) >= len(names) - len(pending)
-
-    # Registration round's file has landed: released into the unchecked
-    # block, which sorts before every freshness re-pin — inside the window.
-    monkeypatch.setitem(m.DEFER_TO_TAIL, name, max_round)
-    names = m._ordered_names()
-    assert names.index(name) < 50, (
-        f"expired deferral for {name} must re-enter the driver window"
-    )
+    monkeypatch.setitem(m.FORCE_RECHECK, name, last_green[name] + 1)
+    assert m._ordered_names().index(name) < before.index(name)
 
 
 def test_mixture_source_cardinality(spark, sf_dir):
