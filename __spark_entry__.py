@@ -102,6 +102,24 @@ FORCE_RECHECK: dict[str, int] = {
     "stream_split_by_neardup_inc_audit": 21,
     "stream_split_by_neardup_inc_compacted": 21,
     "stream_minhash_probe": 21,
+    # Reference-parity queries and their streaming twins call the product
+    # operators (analytics.windowed_agg, transforms, udfs.register_udfs);
+    # the IVF appendix handler writes through sinks.overwrite_partitions.
+    "flagship_sliding_alert": 21,
+    "stream_flagship_alert": 21,
+    "a2_tumbling_window_agg": 21,
+    "a3_sliding_window_agg": 21,
+    "stream_tumbling_complete": 21,
+    "stream_sliding_update": 21,
+    "p2_from_json_flatten": 21,
+    "p8_p9_timestamp_roundtrip": 21,
+    "p10_month_partition_key": 21,
+    "p12_a1_word_count": 21,
+    "stream_wordcount_complete": 21,
+    "stream_stateful_running_count": 21,
+    "u1_u3_udf_sql": 21,
+    "stream_ivf_appendix_probe": 21,
+    "sim_ivf_compacted_probe": 21,
     # The windowed count-min and HLL drains overlap with their batch arm,
     # and residual IVF-PQ assigns buckets with keep_cv.
     "stream_countmin_windowed": 20,

@@ -10,17 +10,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "enrich_join",
-    "windowed_sum",
+    "windowed_agg",
     "alert_filter",
     "group_count",
 ]
-
-# The window-agg input measures (reference TumblingWindow.scala:53-58).
-SENSOR_MEASURES = ("temperature", "humidity", "ph", "whc")
 
 
 def enrich_join(
@@ -47,24 +44,25 @@ def enrich_join(
     return stream_df.join(master_df, on=key, how=how)
 
 
-def windowed_sum(
+def windowed_agg(
     df: DataFrame,
-    ts_col: str = "timestamp",
-    group_col: str = "field_id",
-    window_duration: str = "5 minutes",
-    slide_duration: str | None = "1 minute",
-    measures: Sequence[str] = SENSOR_MEASURES,
+    ts_col: str,
+    group_col: str,
+    window_duration: str,
+    slide_duration: str | None,
+    aggs: Sequence[Column],
     watermark: str | None = None,
-    prefix: str = "sum_",
 ) -> DataFrame:
-    """Tumbling/sliding event-time window multi-sum (SURVEY A2/A3, W1-W4;
-    reference TumblingWindow.scala:52-58, SlidingWindow.scala:52-59).
+    """Tumbling/sliding event-time window aggregation (SURVEY A2/A3, W1-W4;
+    reference TumblingWindow.scala:52-58, SlidingWindow.scala:52-59) — the
+    one window aggregation the sensor pipeline, the reference-parity
+    queries and their streaming twins all run.
 
-    The reference computes ``sum`` but aliases the results ``avg_*``
-    (SURVEY §2.6 semantic trap); we keep the computation under honest
-    ``sum_*`` names. Pass ``slide_duration=None`` for a tumbling window.
-    ``watermark`` (e.g. "10 minutes", reference SlidingWindow.scala:52) only
-    matters on streaming inputs, where it bounds state and drops late rows.
+    Pass ``slide_duration=None`` for a tumbling window. ``aggs`` are aliased
+    Columns; the result is ``window_start, window_end, group_col`` followed
+    by the aggs in order. ``watermark`` (e.g. "10 minutes", reference
+    SlidingWindow.scala:52) applies only to streaming inputs, where it
+    bounds state and drops late rows; a batch input keeps its plan.
 
     Scale: one shuffle on (window, group) with map-side partial aggregation;
     skewed groups are split by AQE. State size in streaming is bounded by
@@ -72,19 +70,13 @@ def windowed_sum(
     """
     if watermark is not None and df.isStreaming:
         df = df.withWatermark(ts_col, watermark)
-    win = (
-        F.window(F.col(ts_col), window_duration, slide_duration)
-        if slide_duration
-        else F.window(F.col(ts_col), window_duration)
-    )
-    aggs = [F.sum(m).alias(f"{prefix}{m}") for m in measures]
+    win = F.window(F.col(ts_col), window_duration, slide_duration)
     out = df.groupBy(win, F.col(group_col)).agg(*aggs)
     # Window-bounds extraction (SURVEY W4; reference TumblingWindow.scala:60).
     return out.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
-        group_col,
-        *[f"{prefix}{m}" for m in measures],
+        *out.columns[1:],
     )
 
 

@@ -35,7 +35,6 @@ __all__ = [
     "attach_synthetic_audio",
     "attach_synthetic_image",
     "decode_features",
-    "decode_features_arrow",
     "resize_media",
     "sample_frames",
     "FEATURE_DIM",
@@ -377,43 +376,3 @@ def resize_media(
 
     return df.mapInPandas(batches, out_schema)
 
-
-def decode_features_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-    fake: bool = False,
-) -> DataFrame:
-    """Arrow-native twin of decode_features via mapInArrow: RecordBatch in,
-    RecordBatch out, no pandas materialization between Arrow and the
-    extractor — the lowest-overhead Python hop for MB-scale blobs (pandas
-    object-dtype copies skipped entirely). Same fake/real contract and
-    output as decode_features; test-pinned equal.
-    """
-    import pyarrow as pa
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("n_bytes", T.LongType()),
-            _FEATURES_FIELD,
-        ]
-    )
-
-    extract = _fake_feature if fake else _real_feature
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            content = batch.column(batch.schema.get_field_index(content_col))
-            blobs = [c.as_py() for c in content]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index(id_col)),
-                    pa.array([len(b) for b in blobs], pa.int64()),
-                    pa.array([extract(b) for b in blobs],
-                             pa.list_(pa.float64())),
-                ],
-                names=[id_col, "n_bytes", "features"],
-            )
-
-    return df.mapInArrow(batches, out_schema)

@@ -13,9 +13,16 @@ import pandas as pd  # module-level: pandas_udf type hints resolve by name
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..analytics import alert_filter, enrich_join
-from ..schemas import EVENT_PROPS_SCHEMA
+from ..analytics import alert_filter, enrich_join, group_count, windowed_agg
+from ..schemas import DATE_FMT, EVENT_PROPS_SCHEMA
 from ..sources import load_table
+from ..transforms import (
+    parse_json,
+    split_explode_words,
+    with_date_roundtrip,
+    with_event_time,
+    with_month,
+)
 from . import register
 
 # ---------------------------------------------------------------------------
@@ -47,37 +54,37 @@ HAVING round(sum(value), 4) < 200.0
 """
 
 
-def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window alerting over the enriched event stream.
+def flagship_alert(events: DataFrame, customer: DataFrame) -> DataFrame:
+    """Sliding-window alerting over the enriched events — ONE body for the
+    batch flagship and its streaming twin (plans/stream.py).
 
     Reference pipeline shape: StreamingWithKafkaJoinedData.scala:46 (join) ->
-    SlidingWindow.scala:52-63 (window + filter). Batch `F.window()` has
+    SlidingWindow.scala:52-63 (window + filter). Batch event-time windows have
     identical pane semantics to streaming, so this is DuckDB-checkable
-    (SURVEY §5); the streaming twin lives in plans/stream.py.
+    (SURVEY §5); the watermark applies only to the streaming input.
 
     Scale: dimension side broadcast (no stream shuffle); single shuffle on
     (window, segment) with partial aggregation; AQE handles skewed segments.
     """
-    events = load_table(spark, sf_dir, "events")
-    customer = load_table(spark, sf_dir, "customer").select(
+    segments = customer.select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
-    enriched = enrich_join(events, customer, key="user_id", how="left_outer")
-    agg = (
-        enriched.groupBy(F.window("ts", "5 minutes", "1 minute"), "segment")
-        .agg(
+    enriched = enrich_join(events, segments, key="user_id", how="left_outer")
+    agg = windowed_agg(
+        enriched, "ts", "segment", "5 minutes", "1 minute",
+        [
             F.round(F.sum("value"), 4).alias("sum_value"),
             F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "segment",
-            "sum_value",
-            "n_events",
-        )
+        ],
+        watermark="10 minutes",
     )
     return alert_filter(agg, "sum_value", 200.0)
+
+
+def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return flagship_alert(
+        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
+    )
 
 
 register("flagship_sliding_alert", FLAGSHIP_ORACLE)(flagship)
@@ -125,7 +132,7 @@ def p1_cast_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p2_from_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = load_table(spark, sf_dir, "events")
-    parsed = df.withColumn("parsed", F.from_json("props", EVENT_PROPS_SCHEMA))
+    parsed = parse_json(df, col="props", schema=EVENT_PROPS_SCHEMA)
     return parsed.select("event_id", F.col("parsed.k").alias("k"))
 
 
@@ -189,16 +196,11 @@ def p7_rename_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def p8_p9_timestamp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fmt = "yyyy/MM/dd HH:mm:ss"
-    df = load_table(spark, sf_dir, "events")
-    return df.select(
-        "event_id",
-        F.date_format("ts", fmt).alias("date_str"),
-        F.from_unixtime(F.unix_timestamp(F.date_format("ts", fmt), fmt)).alias(
-            "roundtrip_str"
-        ),
-        F.to_timestamp(F.date_format("ts", fmt), fmt).alias("event_time"),
+    df = load_table(spark, sf_dir, "events").select(
+        "event_id", F.date_format("ts", DATE_FMT).alias("date_str")
     )
+    df = with_date_roundtrip(df, col="date_str", out="roundtrip_str")
+    return with_event_time(df, col="date_str", out="event_time")
 
 
 # ---------------------------------------------------------------------------
@@ -217,9 +219,8 @@ def p8_p9_timestamp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def p10_month_partition_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_table(spark, sf_dir, "events")
     return (
-        df.select(F.date_format("ts", "yyyyMM").alias("month"), "*")
+        with_month(load_table(spark, sf_dir, "events"), "ts")
         .groupBy("month")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
     )
@@ -241,9 +242,8 @@ def p10_month_partition_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def p12_a1_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(F.explode(F.split("text", " ")).alias("word"))
-    return words.groupBy("word").count().withColumnRenamed("count", "cnt")
+    words = split_explode_words(load_table(spark, sf_dir, "documents"), col="text")
+    return group_count(words, "word").withColumnRenamed("count", "cnt")
 
 
 # ---------------------------------------------------------------------------
@@ -263,10 +263,12 @@ def p12_a1_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def u1_u3_udf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Plain Python UDF kept deliberately: it reproduces U3's scalar-UDF-in-SQL
-    # surface. Hot-path string work should use built-ins or pandas_udf
-    # (functions/udfs.py provides the vectorized twin).
-    spark.udf.register("doubleString", lambda s: None if s is None else s + s, T.StringType())
+    from ..functions.udfs import register_udfs
+
+    # doubleString is the plain Python UDF on purpose: it reproduces U3's
+    # scalar-UDF-in-SQL surface. Hot-path string work should use built-ins
+    # or the vectorized doubleStringVec.
+    register_udfs(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("sensor_master")
     return spark.sql(
         """
@@ -323,22 +325,13 @@ def j1_enrich_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a2_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_table(spark, sf_dir, "events")
-    return (
-        df.groupBy(F.window("ts", "1 minute"), "event_type")
-        .agg(
+    return windowed_agg(
+        load_table(spark, sf_dir, "events"), "ts", "event_type", "1 minute", None,
+        [
             F.round(F.sum("value"), 4).alias("sum_value"),
             F.round(F.avg("value"), 4).alias("avg_value"),
             F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "sum_value",
-            "avg_value",
-            "n_events",
-        )
+        ],
     )
 
 
@@ -366,20 +359,12 @@ def a2_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a3_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_table(spark, sf_dir, "events")
-    return (
-        df.groupBy(F.window("ts", "5 minutes", "1 minute"), "event_type")
-        .agg(
+    return windowed_agg(
+        load_table(spark, sf_dir, "events"), "ts", "event_type", "5 minutes", "1 minute",
+        [
             F.round(F.sum("value"), 4).alias("sum_value"),
             F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "sum_value",
-            "n_events",
-        )
+        ],
     )
 
 

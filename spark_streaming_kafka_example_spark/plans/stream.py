@@ -21,10 +21,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..analytics import enrich_join
+from ..analytics import enrich_join, group_count, windowed_agg
 from ..sources import load_table
-from ..streaming.sinks import memory_sink
+from ..streaming.sinks import memory_sink, overwrite_partitions
 from ..streaming.stateful import stateful_running_count, stateful_topk_fold
+from ..transforms import split_explode_words
 from . import register
 
 # Physical schema of events.parquet as the *streaming* reader sees it (file
@@ -162,27 +163,21 @@ def run_to_table(
     name = f"mem_{uuid.uuid4().hex[:10]}"
     query = memory_sink(df, name, mode=mode)
     query.awaitTermination()
-    if require_single_batch and mode != "update":
+    if mode == "update" or require_single_batch:
         data_batches = sum(
             1 for p in query.recentProgress if p["numInputRows"] > 0
         )
         if data_batches > 1:
-            raise AssertionError(
-                f"order-sensitive oracle run processed {data_batches} "
-                "micro-batches; the fold would run in arrival order, not "
-                "the global order the oracle replays. Re-bound the source "
-                "to a single batch before comparing."
+            why = (
+                "per-key update rows would be duplicated in the memory table"
+                if mode == "update"
+                else "the order-sensitive fold would run in arrival order, "
+                "not the global order the oracle replays"
             )
-    if mode == "update":
-        data_batches = sum(
-            1 for p in query.recentProgress if p["numInputRows"] > 0
-        )
-        if data_batches > 1:
             raise AssertionError(
-                f"update-mode oracle run processed {data_batches} micro-batches;"
-                " per-key update rows would be duplicated in the memory table."
-                " Re-bound the source to a single batch or dedupe to the last"
-                " update per key before comparing."
+                f"{mode}-mode oracle run processed {data_batches} "
+                f"micro-batches; {why}. Re-bound the source to a single "
+                "batch before comparing."
             )
     return spark.table(name)
 
@@ -207,21 +202,13 @@ def run_to_table(
     """,
 )
 def stream_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = (
-        events_stream(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 minute"), "event_type")
-        .agg(
+    agg = windowed_agg(
+        events_stream(spark, sf_dir), "ts", "event_type", "1 minute", None,
+        [
             F.round(F.sum("value"), 2).alias("sum_value"),
             F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "sum_value",
-            "n_events",
-        )
+        ],
+        watermark="10 minutes",
     )
     return run_to_table(spark, agg, "complete")
 
@@ -249,17 +236,10 @@ def stream_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_sliding_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    agg = (
-        events_stream(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes", "1 minute"), "event_type")
-        .agg(F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "sum_value",
-        )
+    agg = windowed_agg(
+        events_stream(spark, sf_dir), "ts", "event_type", "5 minutes", "1 minute",
+        [F.round(F.sum("value"), 2).alias("sum_value")],
+        watermark="10 minutes",
     )
     return run_to_table(spark, agg, "update")
 
@@ -303,11 +283,8 @@ WORDCOUNT_ORACLE = """
 
 @register("stream_wordcount_complete", WORDCOUNT_ORACLE)
 def stream_wordcount_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words = documents_stream(spark, sf_dir).select(
-        F.explode(F.split("text", " ")).alias("word")
-    )
-    counts = words.groupBy("word").count()
-    return run_to_table(spark, counts, "complete")
+    words = split_explode_words(documents_stream(spark, sf_dir), col="text")
+    return run_to_table(spark, group_count(words, "word"), "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -319,43 +296,20 @@ def stream_wordcount_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("stream_stateful_running_count", WORDCOUNT_ORACLE)
 def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words = documents_stream(spark, sf_dir).select(
-        F.explode(F.split("text", " ")).alias("word")
-    )
-    counts = stateful_running_count(words)
-    return run_to_table(spark, counts, "update")
+    words = split_explode_words(documents_stream(spark, sf_dir), col="text")
+    return run_to_table(spark, stateful_running_count(words), "update")
 
 
 # ---------------------------------------------------------------------------
 # W5 extension through streaming: session_window gap sessions with watermark,
 # complete mode (update is unsupported for streaming session windows; oracle
-# is the same lag/cumsum derivation as the batch twin in plans/tpch.py).
+# is the batch twin's lag/cumsum derivation in plans/tpch.py).
 # ---------------------------------------------------------------------------
 
+from .tpch import RANGE_JOIN_ORACLE, SESSION_WINDOW_ORACLE  # noqa: E402
 
-@register(
-    "stream_session_window",
-    """
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
-                    THEN 1 ELSE 0 END AS is_new
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ), sess AS (
-        SELECT user_id, ts,
-               CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        FROM flagged
-    )
-    SELECT user_id,
-           min(ts) AS session_start,
-           max(ts) + INTERVAL '30 minutes' AS session_end,
-           count(*) AS n_events
-    FROM sess GROUP BY user_id, sid
-    """,
-)
+
+@register("stream_session_window", SESSION_WINDOW_ORACLE)
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = (
         events_stream(spark, sf_dir)
@@ -376,19 +330,11 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stream-stream inner join with event-time range + watermarks (beyond the
 # reference's stream-static J1): both sides keep bounded state (watermark
 # horizon) and matches emit in append mode. Bounded single-batch run =>
-# result == the batch range join, so it oracles.
+# result == the batch range join, so it shares that oracle.
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "stream_stream_join",
-    """
-    SELECT p.event_id AS purchase_id, e.event_id AS error_id, e.ts AS error_ts
-    FROM events p JOIN events e ON p.user_id = e.user_id
-    WHERE p.event_type = 'purchase' AND e.event_type = 'error'
-      AND e.ts >= p.ts AND e.ts <= p.ts + INTERVAL '1 hour'
-    """,
-)
+@register("stream_stream_join", RANGE_JOIN_ORACLE)
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = (
         events_stream(spark, sf_dir)
@@ -709,13 +655,7 @@ def _overwrite_batch_partition(
             f"state relation '{rel.name}': writer schema "
             f"{df.schema.simpleString()} drifted from the declared {declared}"
         )
-    (
-        df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
+    overwrite_partitions(df.withColumn("batch_id", F.lit(batch_id)), path, "batch_id")
 
 
 def _fp_ranked(fps: DataFrame, store: DataFrame) -> DataFrame:
@@ -1276,13 +1216,9 @@ def _ivf_appendix_handler(path: str, centroids: DataFrame):
     from ..operators.similarity import assign_buckets
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            assign_buckets(batch_df, centroids)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket", "batch_id")
-            .parquet(path)
+        overwrite_partitions(
+            assign_buckets(batch_df, centroids).withColumn("batch_id", F.lit(batch_id)),
+            path, "bucket", "batch_id",
         )
 
     return handler
@@ -1413,33 +1349,15 @@ def stream_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # drained result equals the batch flagship and shares its oracle.
 # ---------------------------------------------------------------------------
 
-from .parity import FLAGSHIP_ORACLE  # noqa: E402  (same result, same oracle)
+from .parity import FLAGSHIP_ORACLE, flagship_alert  # noqa: E402  (one body, one oracle)
 
 
 @register("stream_flagship_alert", FLAGSHIP_ORACLE)
 def stream_flagship_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = events_stream(spark, sf_dir)
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
+    alerts = flagship_alert(
+        events_stream(spark, sf_dir), load_table(spark, sf_dir, "customer")
     )
-    enriched = enrich_join(stream, dim, key="user_id", how="left_outer")
-    agg = (
-        enriched.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes", "1 minute"), "segment")
-        .agg(
-            F.round(F.sum("value"), 4).alias("sum_value"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "segment",
-            "sum_value",
-            "n_events",
-        )
-        .filter(F.col("sum_value") < 200.0)
-    )
-    return run_to_table(spark, agg, "complete")
+    return run_to_table(spark, alerts, "complete")
 
 
 # ---------------------------------------------------------------------------

@@ -627,9 +627,7 @@ def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "session_window_batch",
-    """
+SESSION_WINDOW_ORACLE = """
     WITH flagged AS (
         SELECT user_id, ts,
                CASE WHEN lag(ts) OVER w IS NULL
@@ -648,8 +646,10 @@ def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(ts) + INTERVAL '30 minutes' AS session_end,
            count(*) AS n_events
     FROM sess GROUP BY user_id, sid
-    """,
-)
+    """
+
+
+@register("session_window_batch", SESSION_WINDOW_ORACLE)
 def session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "events")
@@ -670,15 +670,15 @@ def session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "range_join_purchase_errors",
-    """
+RANGE_JOIN_ORACLE = """
     SELECT p.event_id AS purchase_id, e.event_id AS error_id, e.ts AS error_ts
     FROM events p JOIN events e ON p.user_id = e.user_id
     WHERE p.event_type = 'purchase' AND e.event_type = 'error'
       AND e.ts >= p.ts AND e.ts <= p.ts + INTERVAL '1 hour'
-    """,
-)
+    """
+
+
+@register("range_join_purchase_errors", RANGE_JOIN_ORACLE)
 def range_join_purchase_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.rangejoin import interval_point_join
 

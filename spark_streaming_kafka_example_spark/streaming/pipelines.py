@@ -9,8 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..analytics import alert_filter, enrich_join, group_count, windowed_sum
-from ..schemas import SENSOR_JOINED_SCHEMA, SENSOR_RAW_SCHEMA
+from ..analytics import alert_filter, enrich_join, group_count, windowed_agg
+from ..schemas import SENSOR_JOINED_SCHEMA
 from ..transforms import (
     cast_value_string,
     flatten_sensor,
@@ -28,6 +28,9 @@ __all__ = [
     "windowed_analysis",
     "word_count",
 ]
+
+# The window-agg input measures (reference TumblingWindow.scala:53-58).
+SENSOR_MEASURES = ("temperature", "humidity", "ph", "whc")
 
 
 def sensor_ingest(raw: DataFrame) -> DataFrame:
@@ -72,16 +75,16 @@ def windowed_analysis(
 ) -> DataFrame:
     """The flagship analysis (reference SlidingWindow.scala:39-63 /
     TumblingWindow.scala:39-58): to_timestamp event time -> watermark ->
-    window multi-sum -> optional threshold alert on sum_whc (the reference's
-    `avg_whc < 25.0`, which really sums — SURVEY §2.6 trap, honest names
-    here)."""
-    timed = with_event_time(joined)
-    agg = windowed_sum(
-        timed,
-        ts_col="timestamp",
-        group_col="field_id",
-        window_duration=window_duration,
-        slide_duration=slide_duration,
+    window multi-sum -> optional threshold alert on sum_whc. The reference
+    computes ``sum`` but aliases the results ``avg_*`` (SURVEY §2.6 semantic
+    trap); the sums keep honest ``sum_*`` names here."""
+    agg = windowed_agg(
+        with_event_time(joined),
+        "timestamp",
+        "field_id",
+        window_duration,
+        slide_duration,
+        [F.sum(m).alias(f"sum_{m}") for m in SENSOR_MEASURES],
         watermark=watermark,
     )
     if alert_threshold is None:

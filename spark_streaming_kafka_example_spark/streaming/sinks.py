@@ -25,6 +25,7 @@ __all__ = [
     "kafka_sink",
     "foreach_batch_sink",
     "foreach_row_sink",
+    "overwrite_partitions",
     "idempotent_parquet_handler",
     "rollup_upsert_handler",
 ]
@@ -113,6 +114,20 @@ def foreach_row_sink(df: DataFrame, writer_obj: Any, mode: str = "append") -> St
     return df.writeStream.outputMode(mode).foreach(writer_obj).start()
 
 
+def overwrite_partitions(df: DataFrame, path: str, *partition_cols: str) -> None:
+    """Write df under path, replacing exactly the ``partition_cols``
+    partitions it contains (dynamic partition overwrite) and leaving every
+    other partition alone — the one exactly-once write every foreachBatch
+    handler here shares: a replayed batch rewrites its own partitions with
+    the same rows instead of appending them twice."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
 def idempotent_parquet_handler(base_dir: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch handler with exactly-once semantics: each micro-batch
     lands in its own ``batch_id=N`` partition via dynamic partition
@@ -122,12 +137,8 @@ def idempotent_parquet_handler(base_dir: str) -> Callable[[DataFrame, int], None
     reference's per-row CQL inserts silently double-write on replay)."""
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(base_dir)
+        overwrite_partitions(
+            batch_df.withColumn("batch_id", F.lit(batch_id)), base_dir, "batch_id"
         )
 
     return handler
@@ -149,11 +160,6 @@ def rollup_upsert_handler(
     cols = partition_cols if isinstance(partition_cols, list) else [partition_cols]
 
     def handler(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*cols)
-            .parquet(base_dir)
-        )
+        overwrite_partitions(batch_df, base_dir, *cols)
 
     return handler

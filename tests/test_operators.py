@@ -519,17 +519,14 @@ def test_multimodal_permissive_decode_modes(spark):
 
 
 def test_multimodal_real_decode_end_to_end(spark):
-    """In-test-generated PNG/PPM images through the REAL decode path on
-    both mapInPandas and mapInArrow: features must equal the locally
-    computed luminance histogram (VERDICT r1 'what's missing' #2)."""
+    """In-test-generated PNG/PPM images through the REAL decode path:
+    features must equal the locally computed luminance histogram
+    (VERDICT r1 'what's missing' #2)."""
     import numpy as np
     from pyspark.sql import types as T
 
     from spark_streaming_kafka_example_spark.functions import imaging as I
-    from spark_streaming_kafka_example_spark.operators.multimodal import (
-        decode_features_arrow,
-        resize_media,
-    )
+    from spark_streaming_kafka_example_spark.operators.multimodal import resize_media
 
     imgs = {
         1: I.encode_png(_gradient_image(16, 12, 3)),
@@ -549,12 +546,11 @@ def test_multimodal_real_decode_end_to_end(spark):
     ]
     blobs = spark.createDataFrame(rows, schema)
 
-    for decoder in (decode_features, decode_features_arrow):
-        feats = decoder(blobs, fake=False).toPandas().set_index("doc_id")
-        for i, blob in imgs.items():
-            expected = I.intensity_histogram(I.decode_image(blob), FEATURE_DIM)
-            assert np.allclose(list(feats.loc[i, "features"]), expected), decoder
-            assert feats.loc[i, "n_bytes"] == len(blob)
+    feats = decode_features(blobs, fake=False).toPandas().set_index("doc_id")
+    for i, blob in imgs.items():
+        expected = I.intensity_histogram(I.decode_image(blob), FEATURE_DIM)
+        assert np.allclose(list(feats.loc[i, "features"]), expected)
+        assert feats.loc[i, "n_bytes"] == len(blob)
 
     resized = resize_media(blobs, width=6, height=4, fake=False).toPandas()
     for _, row in resized.iterrows():
@@ -713,24 +709,6 @@ def test_connected_components_transitive_chains(spark):
         10: 10, 11: 10,
         20: 20, 21: 20, 22: 20, 23: 20, 24: 20,
     }
-
-
-def test_mapinarrow_decode_matches_mapinpandas(spark, sf_dir):
-    """The Arrow-native decode path produces byte-identical features to the
-    mapInPandas path (same Arrow batches, no pandas hop)."""
-    from spark_streaming_kafka_example_spark.operators.multimodal import (
-        attach_blob,
-        decode_features,
-        decode_features_arrow,
-    )
-
-    blobs = attach_blob(load_table(spark, sf_dir, "documents").limit(50))
-    a = decode_features(blobs, fake=True).toPandas().set_index("doc_id")
-    b = decode_features_arrow(blobs, fake=True).toPandas().set_index("doc_id")
-    assert sorted(a.index) == sorted(b.index)
-    for doc_id in a.index:
-        assert a.loc[doc_id, "n_bytes"] == b.loc[doc_id, "n_bytes"]
-        assert list(a.loc[doc_id, "features"]) == list(b.loc[doc_id, "features"])
 
 
 def test_ivf_materialized_index_matches_inline(spark, sf_dir, tmp_path):

@@ -455,6 +455,30 @@ def test_streaming_sink_compaction(spark, sf_dir, tmp_path):
     assert compacted.exceptAll(archive).count() == 0
 
 
+def test_run_to_table_rejects_multi_batch_drains(spark, tmp_path):
+    """run_to_table's single-batch guard: a 2-file source read one file per
+    trigger drains in 2 data batches, which update mode and an
+    order-sensitive append (require_single_batch) reject loudly; a plain
+    append drain returns every row."""
+    from spark_streaming_kafka_example_spark.plans.stream import run_to_table
+
+    src = str(tmp_path / "src")
+    for b in range(2):
+        write_value_batch(spark, src, [f"w{b}", "shared"], b)
+    stream = (
+        spark.readStream.schema(VALUE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+    with pytest.raises(AssertionError, match="update-mode .* 2 micro-batches"):
+        run_to_table(spark, stream.groupBy("value").count(), "update")
+    with pytest.raises(AssertionError, match="append-mode .* 2 micro-batches"):
+        run_to_table(spark, stream, "append", require_single_batch=True)
+    got = run_to_table(spark, stream, "append")
+    assert sorted(r.value for r in got.collect()) == ["shared", "shared", "w0", "w1"]
+
+
 def test_stateful_sessionizer_closed_sessions_match_batch(spark, sf_dir):
     """The explicit-state sessionizer's CLOSED sessions equal the batch
     sessionization minus each key's final (still-open) session."""
