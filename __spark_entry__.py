@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_streaming_kafka_example_spark import plans  # noqa: E402
+from spark_streaming_kafka_example_spark.engine import session_conf  # noqa: E402
 
 plans.load_all()
 
@@ -153,23 +154,11 @@ def _ordered_names() -> list[str]:
 
 
 def _apply_session_conf(spark: SparkSession) -> None:
-    """The driver owns the SparkSession; re-apply the runtime-settable confs
-    our plans rely on (engine.get_session sets the same ones)."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.legacy.timeParserPolicy": "CORRECTED",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # The driver's plain session defaults to 200 shuffle partitions —
-        # at sf0.01 that is 6x more tasks than data; 32 matches engine.py
-        # (results are partition-count independent by oracle convention).
-        "spark.sql.shuffle.partitions": "32",
-    }.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a started session — engine default applies
+    """The caller owns the SparkSession; apply engine.session_conf for its
+    task slots (results are partition-count independent by oracle
+    convention)."""
+    for k, v in session_conf(spark.sparkContext.defaultParallelism).items():
+        spark.conf.set(k, v)
 
 
 def entry(spark: SparkSession) -> DataFrame:

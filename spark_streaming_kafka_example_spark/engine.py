@@ -2,14 +2,22 @@
 
 The reference creates one ad-hoc ``SparkSession.builder.master("local[4]")``
 per program (e.g. reference StreamingWithKafka.scala:11-15,
-BasicStreaming.scala:10-12). Here a single factory owns the configuration so
-every pipeline and test shares the same tuned session.
+BasicStreaming.scala:10-12). Here ``session_conf`` owns the runtime-settable
+configuration, so every pipeline, test and caller-owned session shares it.
 
-Scale notes (local[32] today, 1000-executor cluster tomorrow):
-- AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
-  dynamic broadcast selection replace hand-tuned partition counts.
-- ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; on a real
-  cluster raise it to ~2-3x total cores and let AQE coalesce.
+Shuffle partitions (``cores`` = the session's task slots: ``_default_parallelism``
+for ``get_session``, ``defaultParallelism`` for a session someone else owns):
+- Streams: Spark runs every streaming query with AQE off, so
+  ``spark.sql.shuffle.partitions`` = ``cores`` is a stateful stream's
+  state-partition count: one state store per core, one commit wave per
+  trigger. A checkpoint fixes that count at its first start; a restart
+  keeps it whatever the session says.
+- Batch: with AQE on, ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
+  = ``max(cores, 8)`` is the pre-coalesce bound in place of
+  ``spark.sql.shuffle.partitions``; AQE coalesces small partitions and
+  splits skewed ones. On a real cluster raise it to ~2-3x total cores.
+
+Other confs:
 - UTC session timezone pinned: parquet/DuckDB oracle comparison is
   timezone-naive, and the reference's timestamp parsing (SURVEY P8-P10)
   is locale-sensitive otherwise.
@@ -29,15 +37,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "stop_session", "run_parallel"]
+__all__ = ["get_session", "session_conf", "stop_session", "run_parallel"]
 
 
 def run_parallel(*thunks):
     """Run independent Spark actions CONCURRENTLY from driver threads
-    (optimization guide §2.6: actions are only sequential because the
-    driver calls them sequentially; FIFO scheduling backfills each job's
-    straggler tail with the next job's tasks). The session-level utility
-    behind plans.stream._run_jobs and the independent-training overlap in
+    (actions are only sequential because the driver calls them
+    sequentially; FIFO scheduling backfills each job's straggler tail with
+    the next job's tasks). The session-level utility behind
+    plans.stream._run_jobs and the independent-training overlap in
     plans.llm. Only for thunks with NO lineage ordering requirement.
     Returns the thunk results in order; exceptions propagate."""
     if len(thunks) == 1:
@@ -51,21 +59,45 @@ def run_parallel(*thunks):
 def materialize(df):
     """Execute ``df``'s pending computation NOW (one count() through its
     lazy localCheckpoint lineage cut) and return it. run_parallel thunks
-    wrap independent trainings with this so the §2.6 overlap is GENUINE:
+    wrap independent trainings with this so the overlap is GENUINE:
     a thunk that only constructs a lazy frame returns instantly and
     overlaps nothing — the trainings would still serialize at the first
-    consuming action (r19 ADVICE, measured r20). The count is a k-row
-    action; the checkpoint it fills is what every later consumer
-    reuses."""
+    consuming action. The count is a k-row action; the checkpoint it
+    fills is what every later consumer reuses."""
     df.count()
     return df
 
 
 def _default_parallelism() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity mask and cpuset, which ``os.cpu_count`` ignores)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus:
         return int(cpus)
-    return os.cpu_count() or 8
+    return len(os.sched_getaffinity(0))
+
+
+def session_conf(cores: int) -> dict[str, str]:
+    """The runtime-settable confs every plan relies on, for a session with
+    ``cores`` task slots. ``get_session`` builds with them; a session
+    someone else owns gets them via ``spark.conf.set``."""
+    return {
+        # Streams (AQE off): one state store per core. Batch (AQE on): the
+        # initial bound replaces shuffle.partitions before coalescing.
+        "spark.sql.shuffle.partitions": str(cores),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(max(cores, 8)),
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # Oracle-comparison determinism.
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.legacy.timeParserPolicy": "CORRECTED",
+        # events.parquet carries INT64 TIMESTAMP(NANOS).
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        # Arrow for pandas UDFs / toPandas (the only Python<->JVM data plane).
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
 
 
 def get_session(
@@ -79,36 +111,21 @@ def get_session(
     runtime-settable confs are re-applied on it.
     """
     cores = _default_parallelism()
-    master = master or f"local[{cores}]"
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        # Shuffle discipline: pre-AQE bound ~= local core count, AQE coalesces
-        # down when partitions are small and splits skewed ones.
-        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Oracle-comparison determinism.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-        # events.parquet carries INT64 TIMESTAMP(NANOS).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Arrow for pandas UDFs / toPandas (the only Python<->JVM data plane).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
+    conf = {
+        **session_conf(cores),
+        "spark.ui.enabled": "false",
         # NB: driver memory is a static JVM conf — it only takes effect when
         # THIS call launches the JVM. If getOrCreate() returns an
         # already-running session (driver-owned session in verify, second
         # get_session call), it is silently ignored; launch paths that need a
         # guaranteed heap must set it via spark-submit/SPARK_DRIVER_MEMORY
         # before the first session is created.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-    )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.appName(app_name).master(master or f"local[{cores}]")
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -252,6 +252,112 @@ def test_enrich_join_and_foreach_batch(spark, master_df, tmp_path):
     assert out == {1851632: "field1", 9999999: None}
 
 
+def write_text_file(dirpath: str, name: str, rows: list[str]) -> None:
+    """One JSON-lines file, moved into the watched directory whole."""
+    os.makedirs(dirpath, exist_ok=True)
+    tmp = os.path.join(os.path.dirname(dirpath), name + ".tmp")
+    with open(tmp, "w") as f:
+        f.write("\n".join(rows) + "\n")
+    os.rename(tmp, os.path.join(dirpath, name))
+
+
+def sensor_window_sums(spark, src: str, master, ckpt: str):
+    """Drain the paper pipeline (text source -> enrich -> sliding-window
+    sums) once; return the query and its batches' rows by batch id."""
+    agg = windowed_analysis(
+        sensor_enrich(spark.readStream.text(src), master), alert_threshold=None
+    )
+    batches: dict[int, dict] = {}
+
+    def handler(batch_df, batch_id: int) -> None:
+        batches[batch_id] = {
+            (r.field_id, r.window_start.isoformat()): r.sum_whc
+            for r in batch_df.collect()
+        }
+
+    q = foreach_batch_sink(agg, handler, checkpoint=ckpt)
+    drain(q)
+    return q, {b: rows for b, rows in batches.items() if rows}
+
+
+def state_partitions(q, ckpt: str) -> set[int]:
+    """State partition counts the query reported, plus the count of state
+    store directories its checkpoint holds."""
+    stores = [d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()]
+    return {len(stores)} | {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p.get("stateOperators") or []
+    }
+
+
+def test_default_parallelism_counts_usable_cpus(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the session sizes itself to the CPUs this
+    process may run on, not the host's: a cpuset of 2 on a 64-CPU host
+    means 2 slots and 2 state stores per stream."""
+    from spark_streaming_kafka_example_spark import engine
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert engine._default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1})
+    assert engine._default_parallelism() == 2
+
+
+def test_stream_state_partitions_follow_cores(spark, master_df, tmp_path):
+    """The session rule: a fresh stateful stream keeps one state store per
+    core (streams run with AQE off, so shuffle.partitions is their state
+    partition count), while batch keeps max(cores, 8) as AQE's initial
+    bound."""
+    cores = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
+    assert spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    ) == str(max(cores, 8))
+    src = str(tmp_path / "src")
+    for i in range(3):
+        write_text_file(src, f"f{i}.json", [
+            sensor_json(1851632, f"2018/06/15 09:1{i}:00", whc=10.0),
+            sensor_json(1851634, f"2018/06/15 09:1{i}:30", whc=4.0),
+        ])
+    ckpt = str(tmp_path / "ckpt")
+    q, batches = sensor_window_sums(spark, src, master_df, ckpt)
+    assert batches
+    assert state_partitions(q, ckpt) == {cores}
+
+
+def test_checkpoint_keeps_first_start_state_partitions(spark, master_df, tmp_path):
+    """A checkpoint fixes its state partition count at first start: one
+    begun under an older, larger count restarts under the current session
+    with the same state stores, and its next batch continues the sums."""
+    cores = spark.sparkContext.defaultParallelism
+    first = 2 * cores  # the old max(cores, 8) rule on a 4-core host
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    write_text_file(src, "f0.json", [
+        sensor_json(1851632, "2018/06/15 09:12:00", whc=10.0),
+        sensor_json(1851632, "2018/06/15 09:12:30", whc=2.5),
+        sensor_json(1851634, "2018/06/15 09:13:00", whc=4.0),
+    ])
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(first))
+    try:
+        q, run1 = sensor_window_sums(spark, src, master_df, ckpt)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert state_partitions(q, ckpt) == {first}
+    (sums1,) = run1.values()
+
+    write_text_file(src, "f1.json", [sensor_json(1851632, "2018/06/15 09:12:40", whc=1.25)])
+    q, run2 = sensor_window_sums(spark, src, master_df, ckpt)
+    assert state_partitions(q, ckpt) == {first}
+    (sums2,) = run2.values()
+    # 09:12:40 falls in the five 5-min windows starting 09:08..09:12, which
+    # the first run filled with 10.0 + 2.5 from the same sensor.
+    starts = [f"2018-06-15T09:{m:02d}:00" for m in range(8, 13)]
+    assert {k: sums1[k] for k in sums2} == {("field1", w): 12.5 for w in starts}
+    assert sums2 == {k: sums1[k] + 1.25 for k in sums2}
+
+
 def test_multi_sink_fanout(spark, tmp_path):
     """K8: two concurrent queries off one lineage, each with its own
     checkpoint (reference SlidingWindow.scala:66-73)."""
