@@ -6,8 +6,8 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is forced end-to-end with a noop-format write (every column
 materialized, nothing collected): count() would let Catalyst prune the
-projected expressions of projection-only queries and understate their work
-(VERDICT r1 item #5). Timings include plan + execution, excluding session
+projected expressions of projection-only queries and understate their work.
+Timings include plan + execution, excluding session
 startup.
 """
 
@@ -26,7 +26,8 @@ from spark_streaming_kafka_example_spark.engine import get_session
 plans.load_all()
 
 # Headline queries: the flagship pipeline plus the heaviest representatives
-# of each operator family that exists in the registry at bench time.
+# of each operator family, in the order they joined the list (the index
+# breaks emission-eviction ties, so new names go at the end).
 HEADLINE = [
     "flagship_sliding_alert",
     "stream_flagship_alert",
@@ -52,23 +53,22 @@ HEADLINE = [
     "text_quality_score",
     "text_levenshtein_lsh",
     "stream_vector_bucketize",
-    # r05 additions (r04 VERDICT task 5): round-over-round history for the
-    # r04-new operators, plus the capped-LSH production twin.
+    # Containment and star-cluster dedup, the capped-LSH production twin,
+    # hashing features and the embedding profile.
     "dedup_containment",
     "dedup_clusters_star",
     "dedup_minhash_lsh_capped",
     "text_hashing_features",
     "dq_profile_embeddings",
-    # r05-new operator families
+    # Semantic dedup, decontamination, BM25, greedy packing, pretrain v2.
     "dedup_semdedup",
     "text_decontaminate",
     "sim_bm25_topk",
     "pack_sequences_greedy",
     "pipeline_pretrain_v2",
-    # r06-new: materialized IVF (build + partition-pruned probe), recall
-    # gate, packed-payload materialization
+    # Materialized IVF (build + partition-pruned probe).
     "sim_ivf_indexed_topk",
-    # r07 (r06 VERDICT task 3): the amortized serving cost — probes the
+    # The amortized serving cost — probes the
     # index sim_ivf_indexed_topk just built, so this times the
     # partition-pruned probe alone while indexed_topk keeps charging
     # build+probe (its samples force a rebuild; see _PRE_SAMPLE).
@@ -80,28 +80,27 @@ HEADLINE = [
     "sim_quantize_int8",
     "cohort_daily_retention",
     "pipeline_rag_prep",
-    # r07-new heavy representatives: bigram-LM perplexity bucketing,
+    # Heavy representatives: bigram-LM perplexity bucketing,
     # iterative PageRank, path mining, the 7-day stickiness expansion
     "text_perplexity_buckets",
     "graph_pagerank_2iter",
     "paths_event_trigrams",
     "dau_stickiness_7d",
-    # r08 (r07 VERDICT task 6): the window-function analytics families get
-    # bench history; plus the new perceptual-hash image dedup pipeline
-    # (synthesize -> real decode -> aHash -> Hamming-band LSH).
+    # The window-function analytics families, plus the perceptual-hash
+    # image dedup pipeline (synthesize -> real decode -> aHash ->
+    # Hamming-band LSH).
     "latency_percentile_bands",
     "timeseries_rolling_corr_intraday",
     "dedup_image_phash",
-    # r08 new-family representatives: audio-modality dedup, O(1)-state
+    # Audio-modality dedup, O(1)-state
     # streaming sequence mining, vocabulary building, quantile binning.
     "dedup_audio_envelope",
     "stream_markov_transitions",
     "text_vocab_coverage",
     "train_feature_binning",
-    # r09 (r08 VERDICT task 8): the r08 round-trip rows get bench history —
-    # file-sink machinery, the at-ingest image probe, funnel latency; plus
-    # the r09-new families (audio at-ingest probe, spectral fingerprint,
-    # multimodal pretrain capstone, z-order read-back).
+    # File-sink machinery, the at-ingest image probe, funnel latency; the
+    # audio at-ingest probe, spectral fingerprint, multimodal pretrain
+    # capstone, z-order read-back.
     "k4_parquet_sink_roundtrip",
     "stream_image_phash",
     "funnel_time_to_convert",
@@ -112,15 +111,14 @@ HEADLINE = [
     "dedup_video_frames",
     "sketch_countmin_users",
     "layout_bucketed_join",
-    # r10 (r09 VERDICT task 8): the remaining r09 rows that ran in the
-    # driver but had no bench history — the streaming media/sketch twins,
-    # A/B lift, and the window-distribution family.
+    # The streaming media/sketch twins, A/B lift, and the
+    # window-distribution family.
     "stream_audio_spectral",
     "stream_video_frames",
     "stream_countmin_users",
     "experiment_ab_lift",
     "window_distribution_tour",
-    # r10-new families: iterative BPE tokenizer training, the mergeable
+    # Iterative BPE tokenizer training, the mergeable
     # quantile sketch (batch + stream), the at-ingest pretrain gate.
     "train_bpe_merges",
     "sketch_quantile_values",
@@ -129,7 +127,7 @@ HEADLINE = [
     "sketch_hll_distinct",
     "stream_hll_distinct",
     "sketch_bloom_decontaminate",
-    # r11-new rows: the four streaming twins closing sketch/tokenizer
+    # The four streaming twins closing sketch/tokenizer
     # batch+stream symmetry, plus the at-ingest MinHash probe and the
     # windowed count-min dashboard.
     "stream_bloom_decontaminate",
@@ -141,7 +139,7 @@ HEADLINE = [
     "stream_hll_sliding",
     "layout_bloom_prefilter",
     "sim_pq_adc_recall",
-    # r12-new: the IVF-PQ composition tier (coarse probe + ADC over PQ
+    # The IVF-PQ composition tier (coarse probe + ADC over PQ
     # reconstructions), its at-ingest serving probe, and the windowed +
     # sliding quantile / sliding count-min sketches.
     "sim_ivfpq_recall",
@@ -152,55 +150,53 @@ HEADLINE = [
     "sim_ivfpq_residual_recall",
     "sim_sq8_recall",
     "sketch_quantile_rollup",
-    # r15 (r14 VERDICT task 6): the raw-vector at-ingest ANN probe's
-    # implementation changed in r14 (the O(k)-state top-k fold) with no
-    # recorded timing — only the coded-catalog twin was measured; plus the
-    # r15-new clustered-corpus recall surface.
+    # The raw-vector at-ingest ANN probe (the O(k)-state top-k fold) and
+    # the clustered-corpus recall surface.
     "stream_ann_probe",
     "sim_ivfpq_clustered_recall",
-    # r16 (r15 VERDICT task 2): the content-keyed split pair — map-side
+    # The content-keyed split pair — map-side
     # assignment + the audit re-run that reads exactly 0 contamination.
     "split_by_cluster",
     "split_by_cluster_audit",
-    # r16 (r15 VERDICT task 7): incremental IVF maintenance end-to-end —
+    # Incremental IVF maintenance end-to-end —
     # base build + streamed appendix (foreachBatch dynamic-overwrite
     # appends) + the union probe; times the full freshness path.
     "stream_ivf_appendix_probe",
-    # r16: the near-dup-robust split (representative-fp gate over the
+    # The near-dup-robust split (representative-fp gate over the
     # LSH->jaccard->components clusters) and its cluster-level audit,
     # plus the at-ingest stateless split-assignment twin.
     "split_by_neardup_cluster",
     "split_by_neardup_cluster_audit",
     "stream_split_by_cluster",
-    # r16: the compaction arm of the index lifecycle (build -> append ->
+    # The compaction arm of the index lifecycle (build -> append ->
     # compact -> probe, one shared oracle across all of it), and the
     # at-ingest dedup against a foreachBatch-maintained fingerprint store.
     "sim_ivf_compacted_probe",
     "stream_dedup_store_ingest",
-    # r16: near-dup detection against a GROWING band catalog — the third
+    # Near-dup detection against a GROWING band catalog — the third
     # ingest-maintenance arm (vectors, exact fps, near-dup bands), and
     # the Bloom-prefiltered store variant (same oracle, pruned store
     # traffic).
     "stream_minhash_catalog_ingest",
     "stream_dedup_store_bloom_ingest",
-    # r17: the maintenance composition — the at-ingest pretrain gate
+    # The maintenance composition — the at-ingest pretrain gate
     # reading the MAINTAINED fp store + band catalog (cross-batch dups) —
     # and the at-ingest rep-fp split (re-crawls land in their source's
     # split via the materialized cluster map).
     "stream_pretrain_gate_v2",
     "stream_split_by_neardup",
-    # r17: mid-lifecycle compaction of the fp store and band catalog
+    # Mid-lifecycle compaction of the fp store and band catalog
     # (decisions hash-unchanged across the collapse — the housekeeping
     # arm the IVF index already has).
     "stream_dedup_store_compacted",
     "stream_minhash_catalog_compacted",
-    # r17: the TTL'd store + catalog — the expiry stage of the lifecycle —
+    # The TTL'd store + catalog — the expiry stage of the lifecycle —
     # and the maintained IMAGE chunk catalog (the frozen-probe upgrade,
     # completing the maintenance matrix across modalities).
     "stream_dedup_store_retention",
     "stream_minhash_catalog_retention",
     "stream_image_catalog_ingest",
-    # r18: the image catalog's lifecycle symmetry (compaction + TTL),
+    # The image catalog's lifecycle symmetry (compaction + TTL),
     # the v3 gate composing the maintained image arm, and the
     # ingest-maintained cluster map for the near-dup split (a cluster
     # formed entirely after stream start still moves as one unit).
@@ -210,7 +206,7 @@ HEADLINE = [
     "stream_split_by_neardup_incremental",
     "stream_split_by_neardup_inc_compacted",
     "stream_split_by_neardup_inc_audit",
-    # r18: the embedding modality's dedup-maintenance arm (the matrix's
+    # The embedding modality's dedup-maintenance arm (the matrix's
     # vector row as a true dedup arm, not just IVF serving) + its
     # lifecycle twins.
     "stream_embedding_catalog_ingest",
@@ -222,7 +218,7 @@ _HEADLINE_SET = frozenset(HEADLINE)
 
 def _force_ivf_rebuild() -> None:
     """sim_ivf_indexed_topk documents CREATE-INDEX (build+probe) timing;
-    the build memoizes per session (r06 ADVICE), so each bench sample must
+    the build memoizes per session, so each bench sample must
     drop the memo to keep measuring the end-to-end cost. sim_ivf_probe_only
     then reuses the last built index — the amortized number."""
     from spark_streaming_kafka_example_spark.plans import llm
@@ -234,19 +230,18 @@ _PRE_SAMPLE = {"sim_ivf_indexed_topk": _force_ivf_rebuild}
 
 
 def _calibration(spark) -> dict[str, float]:
-    """Fixed-size, data-independent load probes (r06 VERDICT task 4): two
-    consecutive driver rounds drifted ~+20% uniformly from host load, which
-    took manual same-code reruns to prove. These two constants let a future
+    """Fixed-size, data-independent load probes: host load can shift every
+    query's time uniformly by ~20%, which otherwise takes same-code reruns
+    to prove. These constants let a future
     reader normalize totals without re-running:
     - jvm_agg_sec: a constant 20M-row in-JVM hash+sum aggregation
       (whole-stage codegen, no IO) — tracks JVM/CPU contention;
     - python_hash_sec: 2M iterations of hashlib in the driver process —
       tracks raw host CPU availability outside the JVM;
-    - jvm_agg32_sec (r09 VERDICT task 3): the SAME aggregation over 640M
-      rows forced onto 32 partitions, so every local[32] slot runs — the
-      single-threaded probes provably under-report 32-way contention
-      (BASELINE.md r09 caveat: a 1.5x single-probe ratio coincided with a
-      ~1.4x spread on multi-core queries), and this probe saturates the
+    - jvm_agg32_sec: the SAME aggregation over 640M rows forced onto 32
+      partitions, so every local[32] slot runs — the single-threaded probes
+      under-report 32-way contention (a 1.5x single-probe ratio has coincided
+      with a ~1.4x spread on multi-core queries), and this probe saturates the
       host the way the headline queries do.
     All are min-of-3 like every headline query. BASELINE.md documents the
     reference values and how to use the ratio."""
@@ -310,9 +305,9 @@ def _capture_rounds() -> dict[str, int]:
     stored tail, so head-truncated lines count too). Only files committed
     at HEAD are read, so runs of the same commit emit the same names even
     after the driver drops this round's capture into the working tree;
-    outside a git checkout the history is empty. BENCH_NOISE_* recordings
-    are excluded: their full per-query maps would mark every name just
-    captured and freeze the rotation."""
+    outside a git checkout the history is empty. Only exact
+    ``BENCH_r{N}.json`` names count: a recording holding a full per-query
+    map would mark every name just captured and freeze the rotation."""
     import re
 
     seen: dict[str, int] = {}
@@ -333,8 +328,8 @@ def _capture_rounds() -> dict[str, int]:
 def _drop_order(names) -> list[str]:
     """Emission-eviction order: drop the most-recently-captured names
     first, so every HEADLINE query lands a captured per-query time within
-    a few rounds. Ties (same latest capture round, and the whole
-    never-captured class at round 0) break by HEADLINE index, so the
+    a few captures. Ties (same latest capture, and the whole
+    never-captured class) break by HEADLINE index, so the
     newest registrations sit at the kept tail."""
     cap = _capture_rounds()
     idx = {n: i for i, n in enumerate(HEADLINE)}
@@ -393,7 +388,7 @@ def main() -> None:
 
     # Min of three runs per query: single samples on a shared host swing up
     # to 2x on unchanged queries (observed on idle-vs-busy reruns), and even
-    # min-of-two left a phantom +15% on q9 in r03 that r04 had to chase; the
+    # min-of-two can leave a phantom +15% on one query; the
     # min is the standard noise-resistant point estimate and still includes
     # plan + execution end-to-end.
     timings: dict[str, float] = {}

@@ -148,7 +148,7 @@ def _window_analysis(
         alert_threshold=alert_threshold,
     )
     queries = [sinks.console_sink(agg, mode="update")]
-    if to_kafka_topic and checkpoint:
+    if to_kafka_topic:
         queries.append(sinks.kafka_sink(agg, bootstrap, to_kafka_topic, checkpoint))
     return queries
 
@@ -174,7 +174,14 @@ def sliding_window_analysis(
     joined: DataFrame | None = None,
 ) -> list[StreamingQuery]:
     """5-min/1-min sliding sum + whc<25 alert, console + Kafka fan-out
-    (reference SlidingWindow.scala:52-73, K8)."""
+    (reference SlidingWindow.scala:52-73, K8). The Kafka alert sink needs a
+    checkpoint; pass ``alert_topic=None`` for the console query alone."""
+    if alert_topic and not checkpoint:
+        raise ValueError(
+            f"alert_topic={alert_topic!r} needs a checkpoint: pass "
+            "checkpoint= for the Kafka alert sink, or alert_topic=None to "
+            "run without it"
+        )
     return _window_analysis(
         spark, bootstrap, topic, joined, "5 minutes", "1 minute", 25.0,
         alert_topic, checkpoint,

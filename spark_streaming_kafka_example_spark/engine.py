@@ -37,7 +37,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "session_conf", "stop_session", "run_parallel"]
+__all__ = ["get_session", "session_conf", "run_parallel"]
 
 
 def run_parallel(*thunks):
@@ -70,9 +70,15 @@ def materialize(df):
 
 def _default_parallelism() -> int:
     """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
-    affinity mask and cpuset, which ``os.cpu_count`` ignores)."""
+    affinity mask and cpuset, which ``os.cpu_count`` ignores). A set value
+    must be a positive integer: anything else would only fail later, as a
+    Spark master or shuffle-partition error far from its cause."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus:
+        if not cpus.isdecimal() or int(cpus) < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}"
+            )
         return int(cpus)
     return len(os.sched_getaffinity(0))
 
@@ -129,9 +135,3 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_session() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

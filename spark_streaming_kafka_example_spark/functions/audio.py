@@ -132,8 +132,8 @@ def scalogram_hash(
 ) -> str:
     """Haar time-frequency (scalogram) perceptual fingerprint as a hex
     string of levels*segments bits — the SPECTRAL twin of envelope_hash
-    (r08 VERDICT task 5: the envelope sees only the loudness contour; this
-    sees which frequency octave the energy lives in, per time segment).
+    (the envelope sees only the loudness contour; this sees which frequency
+    octave the energy lives in, per time segment).
 
     channel-mean signal -> UNNORMALIZED Haar transform (per level:
     d[i] = a[2i] - a[2i+1], a'[i] = a[2i] + a[2i+1] — sums/differences

@@ -16,7 +16,6 @@ __all__ = [
     "token_count_bpe",
     "stopword_ratio",
     "punct_ratio",
-    "quality_score",
     "lang_scores",
     "lang_id",
     "fingerprint",
@@ -52,8 +51,7 @@ BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 # digits (GPT-2 splits digit runs per digit) and \s whitespace class —
 # deliberately DIFFERENT from BPE_TOKEN_RE above ('2024' is 1 token there,
 # 4 here). Both constants live side by side so the two published token
-# budgets are distinguishable by definition, not just by column name
-# (r06 review).
+# budgets are distinguishable by definition, not just by column name.
 BPE_TOKEN_RE_GPT2 = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 
@@ -78,16 +76,6 @@ def punct_ratio(col: str = "text") -> Column:
     """Fraction of characters that are neither alphanumeric nor space."""
     stripped = F.regexp_replace(F.col(col), "[^A-Za-z0-9 ]", "")
     return (F.length(F.col(col)) - F.length(stripped)) / F.length(F.col(col))
-
-
-def quality_score(col: str = "text") -> Column:
-    """Deterministic doc-quality heuristic in [0,1]: enough length, healthy
-    stopword density, low punctuation noise. The point is the *shape* (cheap,
-    columnar, filterable at scan time); swap weights per corpus."""
-    length_term = F.least(F.lit(1.0), token_count_ws(col) / F.lit(100.0))
-    return (
-        length_term * 0.3 + stopword_ratio(col) * 0.4 + (1.0 - punct_ratio(col)) * 0.3
-    )
 
 
 # Tiny marker vocabularies per language — the classic cheap n-gram/stopword
@@ -149,9 +137,8 @@ def pii_counts(col: str = "text") -> dict[str, Column]:
     number of placeholders actually emitted; the counts answer "how often
     does each pattern fire", not "how many redactions happened". Both
     engines replay the same raw-text semantics, so oracle parity is
-    unaffected (r03 ADVICE: documented deviation, kept intentionally —
-    counting on scrubbed text would hide cross-kind hits from the
-    data-quality profile)."""
+    unaffected. The deviation is deliberate: counting on scrubbed text
+    would hide cross-kind hits from the data-quality profile."""
     return {
         kind: F.size(F.regexp_extract_all(F.col(col), F.lit(pat), 0))
         for kind, pat, _ in PII_PATTERNS

@@ -40,8 +40,8 @@ def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
     list fold perform, so results match the oracle to the last ulp. numpy's
     pairwise ``.sum(axis=1)`` would be faster per batch but sums in a
     different association order — last-ulp drift that round(4) can flip on a
-    boundary-landing value, making oracle parity data-dependent (r03
-    ADVICE). The dim-loop keeps the batch-vectorized speed (dim ops per
+    boundary-landing value, making oracle parity data-dependent. The
+    dim-loop keeps the batch-vectorized speed (dim ops per
     batch, never per-row Python) AND the exact fold semantics."""
     import numpy as np
 
@@ -72,7 +72,7 @@ def cosine_all_pandas(a: pd.Series, cents_flat: pd.Series) -> pd.Series:
     costs more than the maths). output[i] pairs with centroid i in
     flatten order.
 
-    This is the nearest-centroid hot path (r19): one Arrow batch crosses
+    This is the nearest-centroid hot path: one Arrow batch crosses
     the boundary per corpus partition and numpy computes the n x k cosine
     matrix — replacing a k-way row explosion through the pairwise kernel
     followed by a corpus-wide argmax shuffle.

@@ -42,7 +42,7 @@ def asof_join(
     INTERVAL n SECONDS``), never truncated to whole seconds — a match
     whose true age falls in ``(n, n+1)`` seconds with a larger left-side
     µs fraction must be nulled, matching both pd.merge_asof and DuckDB's
-    ``ts >= ts - INTERVAL`` (r06 ADVICE).
+    ``ts >= ts - INTERVAL``.
     """
     left_payload = [c for c in left.columns if c != key]
     carried = [right_ts, *[c for c in right_cols if c != right_ts]]

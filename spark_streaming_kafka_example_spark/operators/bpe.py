@@ -1,4 +1,4 @@
-"""Distributed BPE-merge tokenizer training (r10, r09 VERDICT task 4).
+"""Distributed BPE-merge tokenizer training.
 
 Byte-pair encoding training (Sennrich et al. 2016) over a distributed
 word-frequency table: N fixed merge rounds; each round counts adjacent
@@ -28,7 +28,7 @@ corpus tokens); each round is one partial-aggregated pair count (shuffle
 on the pair key), one 1-row driver fetch (the argmax — fixed-size by
 construction, per the FIXED-K discipline), and one map-side replace. The
 per-round localCheckpoint keeps round i+1 from recomputing the whole
-merge chain from round 0 (the blocked-self-join idiom). The merge table
+merge chain from the first round (the blocked-self-join idiom). The merge table
 itself is <= n_rounds rows.
 
 Reference scope: the reference repo (492 LoC of Spark-API Scala main()s)
@@ -40,8 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-#: adjacent-pair explode over the symbols-array column `s` — shared by the
-#: trainer and the fertility test so the pair definition can't drift.
+#: adjacent-pair explode over the symbols-array column `s`.
 _PAIRS_EXPR = (
     "explode(zip_with(slice(s, 1, size(s)-1), slice(s, 2, size(s)-1),"
     " (x, y) -> struct(x AS a, y AS b))) AS pr"
@@ -93,21 +92,10 @@ def train_bpe(words: DataFrame, n_rounds: int) -> tuple[list[tuple], DataFrame]:
         )
         pat, rep = merge_pattern(top["a"], top["b"])
         # Eager checkpoint per round: round i+1's pair count otherwise
-        # recomputes the whole replace chain from round 0 (O(N^2) work).
+        # recomputes the whole replace chain from the first round (O(N^2)
+        # work).
         enc = enc.withColumn(
             "enc", F.regexp_replace("enc", pat, rep)
         ).localCheckpoint()
     return merges, enc
 
-
-def apply_merges(words: DataFrame, merges: list[tuple]) -> DataFrame:
-    """Apply a learned merge table to a (word, ...) relation, returning it
-    with `enc` (encoded symbols) — merges MUST be applied in training
-    order (a later merge can consume an earlier round's merged symbol).
-    Pure map-side column chain: no shuffle, no driver work."""
-    out = words.withColumn("enc", encode_symbols("word"))
-    col = F.col("enc")
-    for _rnd, a, b, _m, _pc in merges:
-        pat, rep = merge_pattern(a, b)
-        col = F.regexp_replace(col, pat, rep)
-    return out.withColumn("enc", col)

@@ -64,8 +64,8 @@ def connected_components(
         )
         # Carry the old label through the join so convergence is a cheap
         # filter+count over the ALREADY-MATERIALIZED checkpoint — one join
-        # job per round, not two (the old self-join convergence check cost a
-        # full extra join+shuffle per iteration).
+        # job per round, not two (a self-join convergence check would cost
+        # a full extra join+shuffle per iteration).
         step = (
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left_outer")
             .select(
@@ -131,7 +131,7 @@ def connected_components_star(
     propagation loop needs fewer total jobs. Same failure contract: loud
     RuntimeError if not converged within ``max_iterations``.
 
-    Convergence detection (r05 ADVICE): ``exact_convergence=True`` (default)
+    Convergence detection: ``exact_convergence=True`` (default)
     compares edge sets exactly — count equality + an empty ``exceptAll`` —
     so correctness never rests on a hash. Opting into
     ``exact_convergence=False`` swaps in a (count, sum-of-xxhash64)

@@ -86,7 +86,7 @@ def doc_shingles(
 # oracle reproduces signatures exactly.
 MINHASH_PRIME = 4294967311
 
-# The production family standard (r12, r11 ADVICE): every registered
+# The production family standard: every registered
 # MinHash query uses 15 hashes in 5 bands of 3 — these are THE defaults, so
 # a caller relying on them builds signatures/bands consistent with every
 # stored catalog. plans/llm.py re-exports them as _NUM_HASHES/_BANDS.
@@ -155,9 +155,9 @@ def minhash_sig_cols_within_row(num_hashes: int = NUM_HASHES) -> list:
     """sig_0..sig_{n-1} as WITHIN-ROW columns over a `_hs` shingle-hash
     array: array_min of the same affine permutations minhash_signatures
     min-aggregates (min over a set = min over its array). The single
-    definition the streaming probe plan and its parity test share (r11
-    review: a test validating its own inline copy would miss drift in the
-    production expression)."""
+    definition the streaming probe plan and its parity test share (a test
+    validating its own inline copy would miss drift in the production
+    expression)."""
     return [
         F.expr(
             f"array_min(transform(_hs, h -> ({_minhash_a(j)} * h"
@@ -174,7 +174,7 @@ def lsh_band_values(
     bands: int = BANDS,
 ) -> DataFrame:
     """(id, band_id, band_val): the banded-signature relation — factored
-    out of lsh_candidate_pairs (r11) so at-ingest probes can equi-join a
+    out of lsh_candidate_pairs so at-ingest probes can equi-join a
     band-value CATALOG directly instead of self-joining. band_val =
     md5('|'-joined band of signature components); the stack melt stays in
     codegen."""
@@ -263,7 +263,7 @@ def jaccard_pairs(
     — two key-lookup joins whose work is |candidates| * avg shingles per
     doc, never a shingle self-join. This is the at-scale shape: a web corpus
     has boilerplate shingles in millions of docs, and a self-join keyed on
-    the shingle explodes quadratically on those hot keys (r03 VERDICT #1).
+    the shingle explodes quadratically on those hot keys.
 
     Without ``candidates``, falls back to the shingle self-join (work
     proportional to per-shingle collision counts): only for small or
@@ -490,15 +490,15 @@ def simhash_near_pairs(
     return pairs.filter(F.col("hamming") <= max_hamming)
 
 
-# --- Perceptual-hash image dedup (r08) -------------------------------------
+# --- Perceptual-hash image dedup -------------------------------------------
 # aHash/dHash fingerprints over REALLY-decoded pixels (functions.imaging:
 # PNG/PPM -> luminance -> resample -> threshold bits), packed as hex in
 # reading order so hamming = sum of per-nibble bit_count(xor) — replayable
 # in both engines. Candidate pairs reuse the simhash pigeonhole idea
 # generalized to hex strings: hamming <= k with k+1 substring chunks
 # forces >= 1 identical chunk, so the join is bucket-bounded, never
-# all-pairs. This makes multimodal columns a first-class dedup family
-# (r07 VERDICT task 5), not feature-extraction-only.
+# all-pairs. This makes multimodal columns a first-class dedup family,
+# not feature-extraction-only.
 
 
 def image_phash_fingerprints(
@@ -548,7 +548,7 @@ def _audio_fingerprints(df: DataFrame, id_col: str, content_col: str, hash_fn):
     """Shared mapInPandas scaffold for the audio fingerprint family:
     decode every WAV blob through the REAL codec and hash the samples
     with ``hash_fn`` (envelope or scalogram) — one place for the Arrow
-    batch shape / bytes coercion / decode error surface (r09 review)."""
+    batch shape / bytes coercion / decode error surface."""
     from ..functions.audio import decode_wav
 
     out_schema = T.StructType(
@@ -600,8 +600,8 @@ def audio_spectral_fingerprints(
 ) -> DataFrame:
     """(id, phash): Haar-scalogram SPECTRAL fingerprint per audio blob via
     the REAL WAV decode path (mapInPandas, Arrow batches) — the
-    pitch-sensitive robust twin of audio_envelope_fingerprints (r08
-    VERDICT task 5). The envelope hash is volume-invariant but deaf to
+    pitch-sensitive robust twin of audio_envelope_fingerprints. The
+    envelope hash is volume-invariant but deaf to
     frequency content; the scalogram places detail-coefficient energy in
     levels x segments time-octave cells, so clips with identical loudness
     contours but different spectra fingerprint apart, while white-noise
@@ -655,7 +655,7 @@ def phash_chunks(
         width = base + (1 if c < extra else 0)
         bounds.append((start, width))
         start += width
-    # Loud runtime guard (r08 review): a fingerprint whose length doesn't
+    # Loud runtime guard: a fingerprint whose length doesn't
     # match hex_len would otherwise produce empty trailing chunks (ALL
     # rows bucket together — candidate explosion) and zero-padded hamming
     # positions — silently wrong in both directions. assert_true stays in
@@ -761,7 +761,7 @@ def embedding_near_pairs(
     seed: int = 7,
 ) -> DataFrame:
     """Cosine near-dup pairs via hyperplane-LSH blocking — never an
-    all-pairs crossJoin (that was VERDICT r1's #1 scale-killer).
+    all-pairs crossJoin, which is quadratic in the corpus.
 
     Candidates are pairs sharing >= 1 of ``bands`` sign-bit band codes; the
     join is an equi-join on (band_id, code), so work scales with bucket

@@ -61,7 +61,7 @@ def pack_greedy(
     slim = df.select(shard_col, order_col, size_col)
     # Output schema = input fields verbatim + seq_id, so non-default shard/
     # order/size column types (int shard keys, int32 sizes) round-trip
-    # instead of silently assuming string/long (r05 ADVICE).
+    # instead of silently assuming string/long.
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType(list(slim.schema.fields) + [StructField("seq_id", LongType())])

@@ -43,8 +43,7 @@ def _centroid_literal_array(cent_rows, k: int):
     """Embed a FIXED-K centroid table as a plan-literal array of
     (cent_id, cv) structs. Guards the scale contract: the collect feeding
     this must be bounded by the centroid count k, never by the corpus.
-    (Moved here from plans.stream in r20 so the batch tier shares the one
-    guarded builder; stream re-exports it.)
+    The batch tier and plans.stream share this one guarded builder.
 
     Built as ONE parsed SQL expression, not nested F.lit()/F.struct()
     calls: k x dim literals as individual Column objects cost a py4j
@@ -105,7 +104,7 @@ def brute_force_topk(
 
 def _centroids_row(centroids: DataFrame, cents_col: str = "_cents") -> DataFrame:
     """The FIXED-K centroid table folded into ONE row holding an
-    array<struct<cent_id, cv>> (r19): cross-joining this single broadcast
+    array<struct<cent_id, cv>>: cross-joining this single broadcast
     row gives every corpus row the whole centroid set as a column, so the
     nearest-centroid argmax becomes a WITHIN-ROW array_max — zero
     exchanges — instead of a k-way row explosion followed by a corpus-wide
@@ -126,7 +125,7 @@ def _scored_cents(vec, cents="_cents"):
     array<struct<cent_id, cv>>. Cosines come batched from
     ``cosine_all_pandas`` (one Arrow pass, bit-identical per pair to the
     proven pairwise kernel); round(4) and the struct layout stay
-    JVM-side so the comparison semantics are exactly the pre-r19 ones."""
+    JVM-side so the comparison semantics match the pairwise kernel's."""
     vec = F.col(vec) if isinstance(vec, str) else vec
     cents = F.col(cents) if isinstance(cents, str) else cents
     # Only the vector and the FLATTENED numeric codebook cross the Python
@@ -171,7 +170,7 @@ def kmeans_centroids(
     assignment with round(4) + centroid-id tie-break, per-dimension means
     rounded to 6 decimals. Every step is reproducible across engines, so a
     SQL oracle can replay training exactly (the id-stride subset this
-    replaces was VERDICT r1 'missing' #3).
+    replaces could not be replayed).
 
     Output: (cent_id, cv) with cv array<double>. Scale: each iteration is
     one broadcast-centroid pass over the corpus + one (bucket, dim) agg —
@@ -181,11 +180,10 @@ def kmeans_centroids(
         F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cv")
     )
     for _ in range(iterations):
-        # r19: within-row argmax against the 1-row folded centroid set —
-        # the old crossJoin(k rows) + pandas cosine + corpus-wide max_by
-        # shuffle (which carried the full vector per scored row) becomes
-        # a zero-exchange projection; values bit-identical (see
-        # _nearest_centroid_struct).
+        # Within-row argmax against the 1-row folded centroid set: a
+        # zero-exchange projection, where a crossJoin(k rows) + pandas
+        # cosine + corpus-wide max_by would shuffle the full vector per
+        # scored row; values bit-identical (see _nearest_centroid_struct).
         best = _nearest_centroid_struct(vec_col)
         assigned = (
             emb.select(F.col(id_col), F.col(vec_col))
@@ -207,7 +205,7 @@ def kmeans_centroids(
     # centroid table from several operators (IVF assigns with it AND
     # probes with it), and without the cut each broadcast would re-run
     # the whole Lloyd chain; eager=False keeps plan construction /
-    # explain() free of Spark jobs (r05 review) while the first action
+    # explain() free of Spark jobs while the first action
     # still materializes once and reuses. At cluster scale this is
     # "write the centroid table" — k rows.
     return cent.localCheckpoint(eager=False)
@@ -223,10 +221,10 @@ def assign_buckets(
     """Assign every corpus vector to its nearest centroid (broadcast the
     1-row folded centroid set; one MAP-SIDE pass over the corpus — the
     argmax is a within-row array_max, so the assignment has ZERO
-    exchanges; r19, previously a k-way crossJoin + corpus-wide max_by
-    shuffle that moved the full vector per scored row).
+    exchanges, where a k-way crossJoin + corpus-wide max_by would shuffle
+    the full vector per scored row).
 
-    ``keep_cv`` (r20): additionally emit the winning centroid's vector
+    ``keep_cv``: additionally emit the winning centroid's vector
     as ``cv`` — the argmax struct already holds it, so callers that need
     it (residual coding) skip a bucket⋈centroid re-join."""
     c = centroids.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cv"))
@@ -248,17 +246,15 @@ def probe_buckets(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(q_id, qv, bucket): each query's ``n_probe`` nearest centroid
-    buckets — the probe half of every IVF variant (r12: factored out of
-    ivf_topk / ivf_topk_indexed, now also the IVF-PQ composition's coarse
-    probe). Centroids broadcast (FIXED-K); rank ties break on cent_id so
-    the probed set is reproducible across engines."""
+    """(q_id, qv, bucket): each query's ``n_probe`` nearest centroid buckets —
+    the probe half of every IVF variant (ivf_topk, ivf_topk_indexed and the
+    IVF-PQ composition's coarse probe). Centroids broadcast (FIXED-K); rank
+    ties break on cent_id so the probed set is reproducible across engines."""
     c = centroids.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cv"))
-    # r19: same (q_id, cent_id, ccos) rows as the old k-way crossJoin +
-    # pairwise pandas cosine, now produced by exploding the within-row
-    # scored-centroid array (batched kernel, bit-identical values) — one
-    # broadcast row instead of k; the window rank (and therefore the
-    # probed set, ties included) is unchanged.
+    # The (q_id, cent_id, ccos) rows come from exploding the within-row
+    # scored-centroid array (batched kernel, values bit-identical to the
+    # pairwise cosine) — one broadcast row instead of a k-way crossJoin;
+    # the window rank fixes the probed set, ties included.
     qprobe = (
         queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
         .crossJoin(F.broadcast(_centroids_row(c)))

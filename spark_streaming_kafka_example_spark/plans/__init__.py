@@ -46,9 +46,8 @@ def hex_bigint_sql(h: str, start: int, n_chars: int) -> str:
     """``n_chars`` hex chars of SQL expression ``h`` starting at 1-based
     ``start`` as a BIGINT — the strpos-nibble idiom (DuckDB has no conv())
     as ONE parametrized generator, so the HLL rank bits (start=3, 15
-    chars) and the Bloom position bits (start=1, 6 chars) cannot drift
-    (r10 review; the emitted text is byte-identical to the generators it
-    replaced, so no oracle text changed). n_chars <= 15 keeps every
+    chars) and the Bloom position bits (start=1, 6 chars) cannot drift.
+    n_chars <= 15 keeps every
     partial product and the sum exact in BIGINT."""
     terms = [
         f"(strpos('0123456789abcdef', substring({h}, {start + i}, 1)) - 1)"
@@ -63,8 +62,8 @@ _RUN_TMPDIRS: list[str] = []
 
 def tmp_run_dir(prefix: str) -> str:
     """Tempdir for queries that must materialize files (sink round-trips,
-    z-ordered writes), removed at interpreter exit (r08 ADVICE: leaked
-    event-table copies in /tmp). Cleanup is deferred to atexit because the
+    z-ordered writes), removed at interpreter exit so event-table copies
+    never leak into /tmp. Cleanup is deferred to atexit because the
     read-back is lazy — the driver/pytest materializes the returned
     DataFrame after the query function returns."""
     import atexit

@@ -213,7 +213,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # 5 bands x 3 rows: at jaccard ~0.75 (the planted truncations) recall is
 # 1-(1-j^3)^5 ~ 0.95, vs 0.80 for 4x4 — and one fewer hash. The authority
-# is operators/dedup.py (r12: also the helpers' defaults, r11 ADVICE).
+# is operators/dedup.py (also the helpers' defaults).
 _NUM_HASHES, _BANDS = DD.NUM_HASHES, DD.BANDS
 # 32-bit base hash from the first 8 md5 hex digits (nibble arithmetic —
 # DuckDB has no conv()); must equal Spark's conv(substring(md5,1,8),16,10).
@@ -276,8 +276,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.lsh_candidate_pairs(sig, num_hashes=_NUM_HASHES, bands=_BANDS)
 
 
-# Production hot-bucket guard, driver-proven (r04 VERDICT "What's wrong"
-# #2): buckets holding > _MAX_BUCKET docs are dropped BEFORE the pair
+# Production hot-bucket guard, driver-proven: buckets holding > _MAX_BUCKET
+# docs are dropped BEFORE the pair
 # self-join — the cap that bounds LSH's quadratic term on boilerplate-heavy
 # corpora. The cap is deterministic, so the oracle replays it exactly
 # (HAVING count(*) <= K on the same (band_id, band_val) key) and the check
@@ -389,8 +389,8 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Dedup 3: exact n-gram Jaccard (>= 0.4), candidate-bounded by MinHash-LSH.
 # The LSH prefilter is what makes this scale: the intersection is computed
 # candidate-driven (two key-lookup joins), never via a shingle self-join
-# whose hot boilerplate shingles would explode quadratically at 100 TB
-# (r03 VERDICT "What's wrong" #1). Recall at the planted jaccard ~0.75 is
+# whose hot boilerplate shingles would explode quadratically at 100 TB.
+# Recall at the planted jaccard ~0.75 is
 # ~0.95 per the 5x3 banding math at _NUM_HASHES; the oracle replays the
 # identical candidate generation, so the check stays exact.
 # ---------------------------------------------------------------------------
@@ -704,12 +704,12 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 # materialized bucket-partitioned index): the index is a cached copy of the
 # SAME assignment relation, so one oracle describes both results.
 #
-# The stride centroid set is CAPPED at a fixed k (_STRIDE_K_CAP): bare
-# `vec_id % 50` grows linearly with the corpus, so broadcasting it — and
-# every driver fetch derived from it — would scale with N (r06 VERDICT
-# task 2). `% 50 AND < 50*cap` keeps the oracle-replayable determinism of
-# the stride pick while bounding the centroid relation at ≤ cap rows at
-# ANY corpus size (identical sets at sf≤0.01, where N/50 < cap already).
+# The stride centroid set is CAPPED at a fixed k (_STRIDE_K_CAP): bare `vec_id
+# % 50` grows linearly with the corpus, so broadcasting it — and every driver
+# fetch derived from it — would scale with N. `% 50 AND < 50*cap` keeps the
+# oracle-replayable determinism of the stride pick while bounding the centroid
+# relation at ≤ cap rows at ANY corpus size (identical sets at sf≤0.01, where
+# N/50 < cap already).
 _STRIDE_K_CAP = 32
 
 _IVF_STRIDE_SQL = f"""
@@ -762,15 +762,13 @@ def stride_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-# r20 note (r19 VERDICT task 5, attempted and MEASURED OUT): embedding
-# the stride centroid set as plan literals (collect + one parsed expr)
-# does erase the folded-row 1-row agg + broadcast stage, but at
-# _STRIDE_K_CAP=32 x 64 dims the 2048-literal catalyst tree costs more
-# in analysis/codegen than the stage it removes — interleaved min-of-4
-# at sf0.1: folded-row 1.46s, expr-literal 2.83s, collected-local-row
-# 2.14s (OPTIMIZATION_r20.md). The r19 folded-row form stays; the
-# literal idiom remains right where a FIXED-K set must live inside a
-# STREAMING projection (the k=8 at-ingest probes).
+# Measured out: embedding the stride centroid set as plan literals (collect +
+# one parsed expr) does erase the folded-row 1-row agg + broadcast stage, but
+# at _STRIDE_K_CAP=32 x 64 dims the 2048-literal catalyst tree costs more in
+# analysis/codegen than the stage it removes — interleaved min-of-4 at sf0.1:
+# folded-row 1.46s, expr-literal 2.83s, collected-local-row 2.14s. So the
+# folded-row form stays; the literal idiom remains right where a FIXED-K set
+# must live inside a STREAMING projection (the k=8 at-ingest probes).
 
 
 @register("sim_ivf_topk", _IVF_STRIDE_SQL)
@@ -785,8 +783,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stale entry). CREATE INDEX IF NOT EXISTS semantics: the first
 # construction in a session pays the build, every later construction —
 # including plan enumerations and the probe-only twin below — reuses the
-# files (r06 ADVICE: the registry's one side-effectful entry no longer
-# re-runs its write per construction).
+# files (the registry's one side-effectful entry must not re-run its
+# write per construction).
 _IVF_INDEX_BUILT: set[str] = set()
 
 
@@ -803,7 +801,7 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
 
     # Key on the FULL resolved sf_dir, not just its basename: two
     # directories named alike (e.g. /a/sf0.1 and /b/sf0.1) must never
-    # share (and silently reuse) one index in a session (r07 review).
+    # share (and silently reuse) one index in a session.
     resolved = os.path.abspath(os.path.normpath(sf_dir))
     path = os.path.join(
         SparkFiles.getRootDirectory(),
@@ -833,7 +831,7 @@ def sim_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     build (a write action) — parquet can't be planned against files that
     don't exist yet, exactly as CREATE INDEX runs before the SELECT that
     uses it; later constructions reuse the materialized files
-    (_ensure_ivf_index memoizes per path, r06 ADVICE). In a fresh session
+    (_ensure_ivf_index memoizes per path). In a fresh session
     this query therefore measures build+probe end-to-end; the amortized
     per-query cost is the separately-benched sim_ivf_probe_only."""
     path = _ensure_ivf_index(spark, sf_dir)
@@ -852,8 +850,8 @@ def sim_ivf_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The amortized serving cost of the materialized IVF index: probe a
     PRE-BUILT index (built at most once per session by _ensure_ivf_index —
     in bench.py's HEADLINE order sim_ivf_indexed_topk has already paid the
-    build, so this query times the partition-pruned probe alone, r06
-    VERDICT task 3). Identical results to sim_ivf_topk / indexed_topk, so
+    build, so this query times the partition-pruned probe alone).
+    Identical results to sim_ivf_topk / indexed_topk, so
     all three share one oracle."""
     path = _ensure_ivf_index(spark, sf_dir)
 
@@ -886,9 +884,8 @@ def _kmeans_iter_sql(i: int, prev: str) -> str:
 
 # The coarse-IVF training + assignment + probe chain (c0 -> c2 k-means,
 # per-vector bucket argmax, per-query top-2 probed buckets) — ONE text
-# shared by _IVF_KMEANS_SQL, _IVF_RECALL_SQL and _IVFPQ_SQL (r12: factored
-# byte-identically out of the first two, which restated it verbatim, so
-# the three oracles can never drift; their rendered texts are unchanged).
+# shared by _IVF_KMEANS_SQL, _IVF_RECALL_SQL and _IVFPQ_SQL, so the three
+# oracles can never drift.
 _IVF_COARSE_CTES = f"""c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < {_KMEANS_K}),
     {_kmeans_iter_sql(1, 'c0')},
     {_kmeans_iter_sql(2, 'c1')},
@@ -918,7 +915,7 @@ _IVF_COARSE_CTES = f"""c0 AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec
 # Shared by sim_ivf_kmeans_topk (batch) and stream_ann_probe (the serving
 # twin in plans/stream.py): both run the k-means-trained IVF probe, so one
 # oracle describes both results. The centroid relation is FIXED-K (k =
-# _KMEANS_K) — never a corpus-size-dependent subset (r06 VERDICT task 2).
+# _KMEANS_K) — never a corpus-size-dependent subset.
 _IVF_KMEANS_SQL = f"""
     WITH {_EMB_D},
     {_IVF_COARSE_CTES},
@@ -937,20 +934,18 @@ _IVF_KMEANS_SQL = f"""
     """
 
 
-# r20 note (r19 VERDICT task 4, attempted and MEASURED OUT alongside the
-# stride literal above): collecting the trained coarse centroids / PQ
-# codebooks and embedding them as plan literals regressed the whole
-# kmeans/PQ tier — alternating r19-vs-literal runs: sim_ivfpq_recall
-# 5.29/5.50 -> 6.45/6.70, sim_pq_adc_recall 3.45/3.56 -> 4.96/5.37
-# (min-of-3 each, two rounds). Mechanism: a k x d literal array is
-# COPIED into the expression tree at every reference (_pq_nearest
-# references the codebook set ~3x per subspace x 4 subspaces), so
-# catalyst analysis/codegen pay ~thousands of literal nodes per plan,
-# where the folded-row form duplicates only a column reference. The
-# r19 folded-row forms stay; what r20 KEEPS from the experiment is the
-# genuine §2.6 training overlap (engine.materialize thunks in
-# _ivfpq_recall_frame / stream_ivfpq_probe_plan) and assign_buckets'
-# keep_cv (join elimination with no literals, residual path).
+# Measured out alongside the stride literal above: collecting the trained
+# coarse centroids / PQ codebooks and embedding them as plan literals regressed
+# the whole kmeans/PQ tier — alternating folded-row-vs-literal runs:
+# sim_ivfpq_recall 5.29/5.50 -> 6.45/6.70, sim_pq_adc_recall 3.45/3.56 ->
+# 4.96/5.37 (min-of-3 each, two runs). Mechanism: a k x d literal array is
+# COPIED into the expression tree at every reference (_pq_nearest references
+# the codebook set ~3x per subspace x 4 subspaces), so catalyst
+# analysis/codegen pay ~thousands of literal nodes per plan, where the
+# folded-row form duplicates only a column reference. So the folded-row forms
+# stay, next to the genuine training overlap (engine.materialize thunks in
+# _ivfpq_recall_frame / stream_ivfpq_probe_plan) and assign_buckets' keep_cv
+# (join elimination with no literals, residual path).
 
 
 @register("sim_ivf_kmeans_topk", _IVF_KMEANS_SQL)
@@ -1573,7 +1568,7 @@ _TOK_BUCKET_SQL = (
 def tok_bucket_col(tok: str = "tok"):
     """Hashing-trick bucket for a token column — the ONE Spark definition
     of the md5-nibble bucket assignment (SQL twin: _TOK_BUCKET_SQL).
-    Shared by text_hashing_features and pipeline_rag_prep (r06 review)."""
+    Shared by text_hashing_features and pipeline_rag_prep."""
     nib1 = F.instr(F.lit("0123456789abcdef"), F.substring(F.md5(tok), 1, 1)) - 1
     nib2 = F.instr(F.lit("0123456789abcdef"), F.substring(F.md5(tok), 2, 1)) - 1
     return (nib1 * 16 + nib2) % _HASH_BUCKETS
@@ -1876,7 +1871,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-style frame sampling over the blob table (r08): every 4th
+    """Video-style frame sampling over the blob table: every 4th
     16-byte frame of each payload, one output row per kept frame —
     promotes sample_frames' one-to-many mapInPandas contract from
     pytest-only to a driver-checked row. The fake frame slicer is
@@ -1898,7 +1893,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Perceptual-hash image dedup (r08, r07 VERDICT task 5): the exact corpus
+# Perceptual-hash image dedup: the exact corpus
 # is rendered to REAL 8x8 grayscale PPM images (md5-derived pixels,
 # operators/multimodal.attach_synthetic_image), fingerprinted through the
 # genuine decode -> luminance -> aHash path (functions/imaging.py), and
@@ -1981,7 +1976,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio-envelope dedup (r08): the audio sibling of dedup_image_phash. The
+# Audio-envelope dedup: the audio sibling of dedup_image_phash. The
 # exact corpus is rendered to REAL 16-bit PCM WAV clips (md5-derived
 # samples, attach_synthetic_audio), fingerprinted through the genuine
 # decode -> amplitude-envelope -> threshold-bits path (functions/audio.py
@@ -2055,7 +2050,7 @@ def dedup_audio_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Spectral (Haar-scalogram) audio dedup (r09, r08 VERDICT task 5): the
+# Spectral (Haar-scalogram) audio dedup: the
 # pitch-sensitive robust twin of dedup_audio_envelope. The oracle replays
 # the UNNORMALIZED Haar transform on q = byte - 128 (Spark fingerprints
 # (byte-128)/128 — a uniform positive scale factor the per-level
@@ -2192,7 +2187,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The pair graph is the candidate-bounded jaccard output (MinHash-LSH
     candidates -> exact jaccard verify), so no stage of the pipeline is a
-    shingle self-join — the r03-flagged hot-shingle skew path is gone."""
+    shingle self-join, so no hot-shingle skew path."""
     from ..operators.components import connected_components
 
     cc = connected_components(jaccard_pair_graph(spark, sf_dir))
@@ -2236,7 +2231,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_image_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image duplicate CLUSTERS (r08): connected components over the
+    """Image duplicate CLUSTERS: connected components over the
     hamming<=3 aHash pair graph — the image pipeline gets the same
     pairs -> transitive-cluster -> canonical-representative story as text
     dedup, reusing the min-label propagation engine and the reachability-
@@ -2249,7 +2244,7 @@ def dedup_image_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Repeated-span mining (r06): exact-substring dedup signal in the style of
+# Repeated-span mining: exact-substring dedup signal in the style of
 # Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
 # Better") — find W-token spans that occur in more than one document.
 # A true suffix-array pass is sequential; the distributed re-expression is
@@ -2317,7 +2312,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Int8 embedding quantization (r06): the ANN storage path at 100 TB — a
+# Int8 embedding quantization: the ANN storage path at 100 TB — a
 # symmetric per-vector max-abs scale and 8-bit codes cut vector storage
 # (and probe-scan I/O) 4x vs float32, with reconstruction error bounded by
 # scale/254 per dimension. Pure higher-order-function projection (no UDF,
@@ -2372,7 +2367,7 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Language-ID accuracy gate (r06): lang_pred (marker-list n-gram heuristic)
+# Language-ID accuracy gate: lang_pred (marker-list n-gram heuristic)
 # scored against the fixture's true `lang` labels, per language — the
 # langid analogue of sim_ivf_recall: classifier quality as a
 # driver-checked number rather than a docstring claim. One hash agg over
@@ -2420,7 +2415,7 @@ def text_langid_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup-rate dashboard (r06): per source shard, how much of it is exact
+# Dedup-rate dashboard: per source shard, how much of it is exact
 # duplicate mass — the number every dedup run reports before/after. One
 # fingerprint agg + one source agg over the planted-copy corpus (plants
 # land in a 'planted' pseudo-source via the id offset so the rate is
@@ -2464,7 +2459,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Doc-length histogram (r06): log2-bucketed whitespace-token counts — the
+# Doc-length histogram: log2-bucketed whitespace-token counts — the
 # one-glance length distribution every corpus report leads with. floor of
 # log2 keeps bucket edges engine-exact on integers; one map-side bucket
 # expression + a tiny agg.
@@ -2498,7 +2493,7 @@ def dq_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Matryoshka-style dimension truncation (r07): how much ANN quality
+# Matryoshka-style dimension truncation: how much ANN quality
 # survives scoring on only the first _MRL_DIMS of the 64-dim embeddings —
 # the "shorten the vectors, keep the index cheap" trade every
 # MRL-trained embedding deployment measures. recall@k of truncated-dim
@@ -2570,7 +2565,7 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal pretrain capstone (r09, r08 VERDICT task 4): pretrain_v2's
+# Multimodal pretrain capstone: pretrain_v2's
 # text chain gets the media front-end a multimodal training pipeline
 # actually runs FIRST — image (aHash) and audio (envelope) near-dup pair
 # graphs, unioned, transitively clustered, non-representatives dropped —
@@ -2584,7 +2579,7 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the plants are synthetic probes, all of which cluster with (and lose
 # representative election to) their lower-id originals.
 #
-# Scale: the media stage is the r08 Hamming-band machinery (bucketed
+# Scale: the media stage is the Hamming-band machinery (bucketed
 # equi-joins, never all-pairs), CC is the checkpointed min-label engine,
 # and the text chain is pretrain_v2's (fingerprint shuffle, broadcast
 # rates, per-source window over the sampled minority).
@@ -2783,7 +2778,7 @@ def pipeline_pretrain_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Video near-dup by frame-fingerprint overlap (r09): the VIDEO entry of the
+# Video near-dup by frame-fingerprint overlap: the VIDEO entry of the
 # media dedup matrix (text shingles / image aHash / audio envelope+
 # scalogram / video frame sets). A video is its SET of per-frame
 # fingerprints (content-ID style): md5 of every fixed-size frame through
@@ -2885,7 +2880,7 @@ def dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product quantization with ADC scoring (r11): the third ANN tier after
+# Product quantization with ADC scoring: the third ANN tier after
 # brute force and IVF — the memory-side compression story. Each 64-dim
 # vector splits into _PQ_M=4 subvectors of 16 dims; a deterministic
 # spherical k-means (the SAME machinery sim_ivf_kmeans_topk trains with,
@@ -2936,7 +2931,7 @@ def _pq_chain(m: int, src: str = "e") -> str:
     """One subspace's renamed train/encode/decode CTE chain. ``src`` is
     the relation the subvector slice reads from — "e" (raw vectors, the
     proven default whose renders are byte-frozen) or a residual relation
-    (r12, sim_ivfpq_residual_recall)."""
+    (sim_ivfpq_residual_recall)."""
     lo, hi = m * _PQ_SUBDIM + 1, (m + 1) * _PQ_SUBDIM
     renamed = _rename_ctes(
         _PQ_RAW_CHAIN, {n: f"p{n}{m}" for n in _PQ_CTE_NAMES}
@@ -2993,7 +2988,7 @@ def _pq_codebooks(emb: DataFrame) -> DataFrame:
     deterministic spherical k-means the per-subspace oracle chains replay
     (init = the k lowest-id subvectors, 2 Lloyd rounds, cosine round(4)
     assignment with lowest-cent_id tie-break, per-dim avg round(6)) —
-    trained FUSED (r19): one corpus pass per Lloyd iteration computes all
+    trained FUSED: one corpus pass per Lloyd iteration computes all
     four subspace assignments within the row (batched cosine kernel +
     within-row argmax against the 1-row folded codebook set), and ONE
     (m, bucket, ord) aggregation updates all four codebooks, where the
@@ -3089,19 +3084,19 @@ def _pq_reconstruction(
     subspace, train the deterministic k-means codebook, code each
     subvector as its nearest centroid, and concatenate the 4 looked-up
     centroids back into a 64-dim vector. The single definition
-    sim_pq_adc_recall and sim_ivfpq_recall share (r12): both oracles
+    sim_pq_adc_recall and sim_ivfpq_recall share: both oracles
     replay the same four renamed subspace chains, so both Spark sides
     must build the same reconstruction.
 
-    r19 shape: the four codebooks fold to one broadcast row each
+    Shape: the four codebooks fold to one broadcast row each
     (similarity._centroids_row) and code+decode happen WITHIN the row
-    (array_max over struct(ccos, -cent_id, cv) — exactly the old max_by
+    (array_max over struct(ccos, -cent_id, cv) — exactly a max_by
     tie-break, the winning struct's cv IS the decode), so the whole
-    reconstruction is ONE map-side projection over the corpus — the
-    previous shape paid a per-subspace corpus-wide argmax shuffle plus
-    three corpus-sized vec_id joins to stitch the four subspaces back
-    together. Values are bit-identical (JVM cosine == cosine_pandas,
-    re-verified on the full sf0.1 corpus this round). ``keep`` forwards
+    reconstruction is ONE map-side projection over the corpus, with no
+    per-subspace corpus-wide argmax shuffle and no corpus-sized vec_id
+    joins to stitch the four subspaces back together. Values are
+    bit-identical (JVM cosine == cosine_pandas, verified on the full
+    sf0.1 corpus). ``keep`` forwards
     extra input columns (e.g. the coarse bucket) so callers don't need a
     corpus-sized re-join to recover them. ``codebooks`` lets a caller
     train on an equal-valued but lineage-independent relation (e.g. the
@@ -3158,7 +3153,7 @@ def sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF-PQ composition (r12, r11 VERDICT task 5): the production ANN tier the
+# IVF-PQ composition: the production ANN tier the
 # two existing pieces imply — a coarse IVF quantizer restricts each query to
 # its 2 probed buckets (the _IVF_COARSE_CTES machinery, unchanged), and
 # WITHIN those buckets candidates are scored by ADC against their PQ
@@ -3210,10 +3205,10 @@ _IVFPQ_TOPK_SQL = f"""
 def _ivfpq_recall_sql(base_ctes: str, e_cte: str = _EMB_D) -> str:
     """ONE recall-vs-brute scaffold (rank qscored -> exact brute top-k ->
     per-query hit count) shared by the raw and residual IVF-PQ oracles
-    (r12 review: the ~35-line scaffold was restated verbatim).
+    (so the ~35-line scaffold is never restated).
     ``base_ctes`` must end by defining qscored(q_id, n_id, cos).
 
-    ``e_cte`` (r15) swaps the corpus definition — it must end by defining
+    ``e_cte`` swaps the corpus definition — it must end by defining
     e(vec_id, v); the default keeps every existing render byte-identical.
     sim_ivfpq_clustered_recall passes the synthesized clustered corpus."""
     return f"""
@@ -3270,10 +3265,9 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_recall_frame(emb: DataFrame) -> DataFrame:
     """Per-query (q_id, hits, recall) of IVF-PQ vs exact brute force over
-    ``emb`` (vec_id, embedding) — the ONE Spark-side recall body (r15:
-    factored out of sim_ivfpq_recall so sim_ivfpq_clustered_recall runs
-    the identical ranker on the synthesized clustered corpus; the raw
-    render and result are unchanged)."""
+    ``emb`` (vec_id, embedding) — the ONE Spark-side recall body, so
+    sim_ivfpq_recall and sim_ivfpq_clustered_recall (the synthesized
+    clustered corpus) run the identical ranker."""
     from pyspark.sql import Window
 
     from ..functions.vectors import cosine_pandas
@@ -3288,11 +3282,11 @@ def _ivfpq_recall_frame(emb: DataFrame) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5)
     # The coarse quantizer and the four PQ codebooks train on the SAME
     # corpus but independently of each other — train them in parallel
-    # driver threads (guide §2.6). r20 (r19 ADVICE): the thunks
-    # MATERIALIZE their chains (engine.materialize = one k-row count
-    # through the lazy-checkpoint cut), so the overlap is genuine — the
-    # r19 lazy-construction thunks ran no jobs and the trainings still
-    # serialized at the first consuming action. Training the codebooks
+    # driver threads. The thunks MATERIALIZE their chains
+    # (engine.materialize = one k-row count through the lazy-checkpoint
+    # cut), so the overlap is genuine — lazy-construction thunks would
+    # run no jobs and the trainings would still serialize at the first
+    # consuming action. Training the codebooks
     # on emb rather than the coarse-assigned projection is value-
     # identical (same vectors) and keeps the chains independent.
     coarse, cbs = run_parallel(
@@ -3302,7 +3296,7 @@ def _ivfpq_recall_frame(emb: DataFrame) -> DataFrame:
     cent_as_emb = coarse.select(
         F.col("cent_id").alias("vec_id"), F.col("cv").alias("embedding")
     )
-    # r19: coarse bucket + PQ reconstruction computed in ONE map-side
+    # Coarse bucket + PQ reconstruction computed in ONE map-side
     # corpus pass (the coded catalog — bucket forwarded through
     # _pq_reconstruction's keep, so no corpus-sized assigned ⋈ recon
     # vec_id join remains; same rows, both relations were 1:1 on vec_id).
@@ -3343,7 +3337,7 @@ def _ivfpq_recall_frame(emb: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Residual IVF-PQ (r12): the textbook IVFADC detail sim_ivfpq_recall
+# Residual IVF-PQ: the textbook IVFADC detail sim_ivfpq_recall
 # omits — PQ codebooks train on and encode RESIDUALS v - coarse_centroid(v)
 # instead of raw vectors, and ADC scores queries against coarse_cv +
 # decoded_residual. Residuals concentrate around zero once the coarse
@@ -3390,7 +3384,7 @@ _IVFPQ_RES_SQL = _ivfpq_recall_sql(_IVFPQ_RES_BASE_CTES)
 
 
 # ---------------------------------------------------------------------------
-# Scalar-quantization recall (r12): sim_quantize_int8 ships the 4x int8
+# Scalar-quantization recall: sim_quantize_int8 ships the 4x int8
 # codes with a per-dimension error bound, but no RANKING-quality number —
 # this closes the compression-recall table with the same recall@k surface
 # every other tier reports (brute 1.0 | int8 ~1.0 at 4x | IVF | PQ ~0.2 at
@@ -3398,7 +3392,7 @@ _IVFPQ_RES_SQL = _ivfpq_recall_sql(_IVFPQ_RES_BASE_CTES)
 # guess. Candidates are ranked by cosine against their DEQUANTIZED vectors
 # round(127*x/scale) * scale/127 — the exact reconstruction the stored
 # codes imply; the round-trip arithmetic is the proven sim_quantize_int8
-# expression (q-value parity already driver-green), so the oracle replays
+# expression (its q-value parity is oracle-checked), so the oracle replays
 # quantize -> dequantize -> both rankings exactly via the shared
 # _ivfpq_recall_sql scaffold.
 # ---------------------------------------------------------------------------
@@ -3500,16 +3494,16 @@ def sim_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Lazy lineage cut (the kmeans_centroids idiom): res is sliced by all
     # four subspace trainings plus the catalog projection — without the
-    # cut one action replays the residual derivation many times over
-    # (r12 review). At cluster scale this is "write the residual table
-    # once". r19: the assignment itself is a map-side projection with
-    # zero exchanges; r20: keep_cv forwards the winning centroid's vector
+    # cut one action replays the residual derivation many times over.
+    # At cluster scale this is "write the residual table once". The
+    # assignment itself is a map-side projection with zero exchanges;
+    # keep_cv forwards the winning centroid's vector
     # in the SAME row (the within-row argmax already holds it), so the
     # residual subtraction and the later coarse_cv + decoded-residual add
     # need NO bucket ⋈ centroid broadcast joins at all — bucket, cv and
     # the decoded residual travel in ONE catalog row via
-    # _pq_reconstruction's keep (plan: 2 BroadcastHashJoins removed, see
-    # plans/r20/sim_ivfpq_residual_recall_*).
+    # _pq_reconstruction's keep (two BroadcastHashJoins fewer than
+    # re-joining bucket and centroid).
     res = (
         assign_buckets(emb, cent_as_emb, keep_cv=True)
         .select(
@@ -3559,7 +3553,7 @@ def sim_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Clustered-corpus ANN recall (r15, r12 VERDICT task 4): every quantized
+# Clustered-corpus ANN recall: every quantized
 # recall surface above is measured on uniform-random embeddings —
 # quantization's documented WORST case (~0.2-0.4 recall), where a broken
 # ranker also scores ~0.2, so those numbers cannot distinguish a correct

@@ -657,7 +657,7 @@ def cogroup_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# S4 driver-proven (r08): the CSV-with-declared-schema source over the
+# S4 driver-proven: the CSV-with-declared-schema source over the
 # repo's static sensor_field.csv fixture — promotes S4 from
 # pytest-local to a hash-checked driver row. Both engines read the SAME
 # shipped file (Spark: read_csv_master with SENSOR_MASTER_SCHEMA, header
@@ -713,7 +713,7 @@ _JSONL_FIXTURE = _os.path.join(
 )
 def jsonl_source_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom Python DataSource (sources/jsonl.py) graduates to a
-    driver-checked row (r08): read the shipped sample.jsonl through the
+    driver-checked row: read the shipped sample.jsonl through the
     registered "jsonl" format with a DECLARED schema and a tiny
     partition_bytes so the fixture fans out over several newline-aligned
     byte-range slices — the slicing, per-slice reads, and missing-key ->

@@ -57,8 +57,8 @@ def _events_schema(sf_dir: str) -> tuple[T.StructType, bool]:
         ts_is_nanos = getattr(t, "unit", "ns") == "ns"
     except (ImportError, OSError, KeyError, ValueError) as exc:
         # ValueError covers pyarrow's ArrowInvalid (its subclass) on a
-        # corrupt/truncated footer — r03 ADVICE: without it the documented
-        # warn-and-assume fallback never fired for exactly that case.
+        # corrupt/truncated footer: without it the documented
+        # warn-and-assume fallback would never fire for exactly that case.
         # Unreadable footer: assume the original nanos layout, but say so —
         # a mis-sniffed round would otherwise fail opaquely downstream.
         import warnings
@@ -402,7 +402,7 @@ def stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest dedup with a PERSISTED fingerprint store (r16): the dedup twin
+# At-ingest dedup with a PERSISTED fingerprint store: the dedup twin
 # of the incremental IVF appendix, and the production shape
 # dedup_incremental_exact (plans/llm.py:176) sketches — the store is not a
 # one-shot relation but a partitioned table MAINTAINED at ingest: each
@@ -440,9 +440,9 @@ def _write_id_ordered_arrivals(src_dir: str, parts: list) -> None:
     order == doc_id order is what lets a first-arrival-wins oracle rank
     by doc_id (shared by the fp-store and minhash-catalog ingests).
 
-    r19: ONE Spark job writes every part (partitionBy on the part tag,
-    one task per part, then the partition dirs rename into the b{i}
-    layout the reader globs) — the per-part coalesce(1) writes paid one
+    ONE Spark job writes every part (partitionBy on the part tag, one
+    task per part, then the partition dirs rename into the b{i} layout
+    the reader globs) — per-part coalesce(1) writes would pay one
     serialized job + commit per part. Intra-file row order changes
     (shuffle by tag), which no consumer observes: every handler decides
     by doc_id rank / set joins, never by arrival-row position, and the
@@ -472,7 +472,7 @@ def _write_id_ordered_arrivals(src_dir: str, parts: list) -> None:
         os.rename(part_dir, os.path.join(src_dir, f"b{i}"))
     # The staging dir has served its purpose (_SUCCESS marker + any
     # empty partition dirs would otherwise accumulate per run and trap
-    # future directory scans — r19 ADVICE).
+    # future directory scans).
     import shutil
 
     shutil.rmtree(stage_dir, ignore_errors=True)
@@ -527,7 +527,7 @@ def _odd_plus_plants(
     return _id_range_parts(odds, plants, plant_offset=offset)
 
 
-# Explicit state-relation schemas (r20, guide §6 / r19 VERDICT task 1):
+# Explicit state-relation schemas:
 # every per-batch state read names the WRITER's schema instead of
 # re-inferring it from parquet footers — measured ~70-95 ms of
 # driver-side footer-read latency saved per read on this host, paid 1-3x
@@ -591,7 +591,7 @@ class StateIO:
     def write(self, batch_id: int, **frames: DataFrame) -> None:
         """Overwrite this batch's partition of every named relation. The
         writes are independent (own dirs, replay overwrites
-        per-partition) — overlap them (r19, guide §2.6); list the slow
+        per-partition) — overlap them; list the slow
         decisions write first so the appends backfill its tail."""
         _run_jobs(
             *[
@@ -825,7 +825,7 @@ def run_lifecycle(
         for ph in (("a", "b") if compact else ("",))
     ]
     first = runs[0]
-    # Seed and arrival writes are independent jobs — overlap (r19 §2.6).
+    # Seed and arrival writes are independent jobs — overlap them.
     _run_jobs(
         *[
             lambda r=r: _overwrite_batch_partition(
@@ -898,7 +898,7 @@ def stream_dedup_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom-prefiltered store ingest (r16): SCALE.md's "prefilter the store
+# Bloom-prefiltered store ingest: SCALE.md's "prefilter the store
 # read at 100 TB" made driver-checked. A Bloom filter over the store's
 # fingerprints is MAINTAINED alongside it (per-batch set-bit partitions,
 # merged by reading them — OR of bit sets is plain distinct-union), and
@@ -914,7 +914,8 @@ def stream_dedup_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # capped) and FIXED for the store's lifetime — merging positions hashed
 # under different m is meaningless, so a resize is a rebuild (the
 # centroid re-train rule). Capability lineage: the reference's dedup
-# intent (BasicStreaming.scala:17 state) + the r11 Bloom probe pattern.
+# intent (BasicStreaming.scala:17 state) + the stream_bloom_decontaminate
+# probe pattern.
 # ---------------------------------------------------------------------------
 
 _STORE_BLOOM_K = 3
@@ -941,7 +942,7 @@ def _store_bloom_bits(fps: DataFrame, m: int) -> DataFrame:
 def _dedup_store_bloom_handler(m: int):
     """The _dedup_store_handler contract with a Bloom gate in front of
     the store join: possible = fps passing ALL k set-bit checks (chained
-    left-semi joins on the position columns, the r11 probe's stateless
+    left-semi joins on the position columns, the Bloom probe's stateless
     form); only those join the store. Appends novel fps AND their set
     bits, both (batch_id)-partitioned dynamic overwrites with the same
     read-your-predecessors bound."""
@@ -1039,7 +1040,7 @@ def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest content-keyed split assignment (r16): the streaming twin of
+# At-ingest content-keyed split assignment: the streaming twin of
 # split_by_cluster — the property that makes the content gate the RIGHT
 # split for an ingest pipeline is exactly that it needs no state: a doc's
 # split depends only on its own bytes, so arriving docs are labeled by a
@@ -1061,7 +1062,7 @@ def stream_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest NEAR-DUP-robust split assignment (r17, r16 VERDICT task 5):
+# At-ingest NEAR-DUP-robust split assignment:
 # stream_split_by_cluster's stateless gate handles exact copies, but a
 # truncated re-crawl arriving at ingest has a different fingerprint -> an
 # independent gate -> it can land opposite its source (the measured
@@ -1161,8 +1162,7 @@ from .llm import _DOT, _IVF_STRIDE_SQL, _NORM, _STRIDE_K_CAP  # noqa: E402
 def stream_vector_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arriving vectors bucketed against a FIXED-K broadcast centroid set
     (stride pick capped at _STRIDE_K_CAP rows — a bare id-stride subset
-    grows linearly with the corpus and so would the broadcast; r06 VERDICT
-    task 2)."""
+    grows linearly with the corpus and so would the broadcast)."""
     from ..functions.vectors import cosine_pandas
 
     from .llm import stride_centroids
@@ -1186,7 +1186,7 @@ def stream_vector_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental IVF index maintenance at ingest (r16, r15 VERDICT task 7):
+# Incremental IVF index maintenance at ingest:
 # the index-freshness story a 100 TB serving tier needs. The batch index
 # is built ONCE over the already-ingested corpus; newly arriving vectors
 # are bucketized in-stream (the stream_vector_bucketize assignment, batch
@@ -1410,7 +1410,7 @@ def stream_sessionizer_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming greedy sequence packing (r05): the pack_sequences_greedy fold
+# Streaming greedy sequence packing: the pack_sequences_greedy fold
 # as arbitrary keyed state — one open (seq, fill) pair per shard carried
 # across micro-batches, each doc's assignment emitted exactly once
 # (append). The bounded single-batch drain equals the batch operator, so
@@ -1434,7 +1434,7 @@ def stream_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decontamination AT INGEST (r05): the batch text_decontaminate check as a
+# Decontamination AT INGEST: the batch text_decontaminate check as a
 # stream-static join — arriving docs explode to n-grams and semi-join the
 # broadcast benchmark set, so contaminated docs are flagged the moment
 # they enter the pipeline (map-side per micro-batch, no streaming state at
@@ -1511,7 +1511,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming quality-drift monitor (r06): the at-ingest twin of
+# Streaming quality-drift monitor: the at-ingest twin of
 # dq_quality_drift — per-source mean logistic quality maintained as ONE
 # streaming aggregation (complete mode), z-scored against a STATIC
 # baseline (the across-shard moments, prefetched from the batch table:
@@ -1538,8 +1538,7 @@ def stream_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()  # two scalars — the static baseline the stream scores against
     # Fail LOUDLY on a degenerate baseline instead of emitting null/inf
     # z-scores that silently diverge from the batch oracle: stddev_samp is
-    # NULL below 2 sources and 0 when every per-source mean coincides
-    # (r06 ADVICE).
+    # NULL below 2 sources and 0 when every per-source mean coincides.
     if base["g_mean"] is None or base["g_sd"] is None or base["g_sd"] == 0:
         raise ValueError(
             "stream_quality_drift: degenerate quality baseline"
@@ -1563,24 +1562,24 @@ def stream_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming ANN probe (r06, fixed-k r07): vectors arrive on a stream and
+# Streaming ANN probe: vectors arrive on a stream and
 # are answered against the STATIC corpus — the serving shape of the IVF
 # family. Streams cannot rank with window functions, so the two rank steps
 # of the batch plan are re-expressed stream-legally:
 # - probe-bucket selection happens MAP-SIDE per query row: the centroid
 #   table — k-means-trained, so EXACTLY _KMEANS_K rows at any corpus size
-#   (the r06 stride pick collected N/50 full vectors to the driver, a
-#   scale-killer; r06 VERDICT task 2) — is fetched once to the driver and
+#   (a stride pick would collect N/50 full vectors to the driver) — is
+#   fetched once to the driver and
 #   embedded as a literal array; slice(array_sort(transform(...))) picks
 #   the n_probe nearest buckets inside codegen;
 # - the per-query top-k is a BOUNDED keyed-state fold
-#   (streaming.stateful.stateful_topk_fold, r14 — r12/r13 VERDICT task 1):
+#   (streaming.stateful.stateful_topk_fold):
 #   each micro-batch merges its candidates into the stored best-k and keeps
-#   exactly k, so state is O(k) per query key. The r12-era shape
-#   (complete-mode slice(array_sort(collect_list(...)))) held EVERY probed
+#   exactly k, so state is O(k) per query key. A complete-mode
+#   slice(array_sort(collect_list(...))) would hold EVERY probed
 #   candidate (~ n_probe/k of the corpus) per query in one state row
 #   before the emit-time slice — the state-space version of the
-#   corpus-proportional-literal problem the FIXED-K rule killed in r06/r07.
+#   corpus-proportional-literal problem the FIXED-K rule forbids.
 # Drained availableNow result == sim_ivf_kmeans_topk, so it shares that
 # oracle (the SQL replays Lloyd training exactly).
 # ---------------------------------------------------------------------------
@@ -1588,9 +1587,8 @@ def stream_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .llm import _IVF_KMEANS_SQL, _KMEANS_K  # noqa: E402  (same result/oracle)
 
 
-# r20: the guarded literal builder moved to operators.similarity (and
-# became ONE parsed expr instead of a py4j round trip per value); this
-# name stays the streaming modules' import path.
+# The guarded literal builder lives in operators.similarity; this name is
+# the streaming modules' import path.
 from ..operators.similarity import _centroid_literal_array  # noqa: E402
 
 
@@ -1639,7 +1637,7 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming cohort retention (r07, r06 VERDICT task 7): the live-dashboard
+# Streaming cohort retention: the live-dashboard
 # twin of cohort_daily_retention. Cohort assignment (user -> first-seen
 # day) is a MATERIALIZED dimension — in production yesterday's cohort map,
 # here derived once from the static batch table (the stream_quality_drift
@@ -1659,7 +1657,7 @@ def stream_cohort_retention_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-drain streaming plan, exposed for plan-shape tests.
 
     The cohort map GROWS WITH USERS, so it must NOT carry a hard-coded
-    broadcast hint (r08 VERDICT task 1): it is eagerly checkpointed so the
+    broadcast hint: it is eagerly checkpointed so the
     planner sees its real size and picks broadcast while it fits under
     autoBroadcastJoinThreshold, falling back to a shuffled equi-join beyond
     — exactly the degradation a 100x scale-up needs.
@@ -1694,7 +1692,7 @@ def stream_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming volume-anomaly monitor (r07): the at-ingest twin of
+# Streaming volume-anomaly monitor: the at-ingest twin of
 # anomaly_minute_zscore. Per-minute counts/sums maintained as ONE
 # complete-mode streaming aggregation, z-scored against a STATIC baseline
 # (the batch minute-count moments — in production yesterday's materialized
@@ -1743,7 +1741,7 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming funnel (r07, the r06 VERDICT task-7 pair): the live
+# Streaming funnel: the live
 # final-stage monitor of funnel_view_click_purchase. The earlier stages'
 # entry times (first view, first qualifying click) are MATERIALIZED
 # dimensions — in production yesterday's stage tables, here derived once
@@ -1763,7 +1761,7 @@ def stream_funnel_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-drain streaming plan, exposed for plan-shape tests.
 
     The click-stage map is PER-USER, i.e. unbounded in the data — no
-    hard-coded broadcast hint (r08 VERDICT task 1). Both stage tables are
+    hard-coded broadcast hint. Both stage tables are
     checkpoint-materialized (the count() below forces the lazy checkpoint),
     so the planner has accurate stats: broadcast while small, shuffled
     equi-join at scale.
@@ -1819,7 +1817,7 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming Markov transition monitor (r08, r07 VERDICT task 8): the
+# Streaming Markov transition monitor: the
 # at-ingest twin of paths_markov_transitions. The pair mining runs through
 # applyInPandasWithState holding ONLY each user's last event — O(1) per-key
 # state, the bounded-state alternative to the batch collect (which needs
@@ -1842,7 +1840,7 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id").isNotNull())
         .select("user_id", "ts", "event_id", "event_type")
     )
-    # Twin-divergence guard (r08 ADVICE): MARKOV_ORACLE embeds the batch
+    # Twin-divergence guard: MARKOV_ORACLE embeds the batch
     # _PATH_MAX_EVENTS rank cap; the stateful miner enforces the same
     # bound INSIDE its O(1) state (pair counter) and fails the offending
     # key at ingest — no post-drain audit job.
@@ -1859,7 +1857,7 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming image-dedup probe (r08): the at-ingest NEAR-dup complement of
+# Streaming image-dedup probe: the at-ingest NEAR-dup complement of
 # stream_dedup_fingerprint's exact check — every arriving image is
 # fingerprinted (real decode -> aHash, mapInPandas works unchanged on a
 # stream) and probed against a STATIC fingerprint catalog via the
@@ -1884,7 +1882,7 @@ def _media_probe_plan(spark: SparkSession, sf_dir: str, fingerprint) -> DataFram
     chunk_val), hamming in codegen, no stream-side state.
 
     The catalog is 4x|corpus| rows — CORPUS-proportional, so no
-    hard-coded broadcast hint (r08 VERDICT task 1). The eager
+    hard-coded broadcast hint. The eager
     localCheckpoint gives the planner its true size: broadcast while
     dim-sized, shuffled equi-join beyond. ``fingerprint`` maps a
     (doc_id, text) relation to (doc_id, phash) through the real
@@ -1939,7 +1937,7 @@ def stream_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming audio-dedup probe (r09, r08 VERDICT task 3): the audio twin of
+# Streaming audio-dedup probe: the audio twin of
 # stream_image_phash, completing the at-ingest modality matrix. Every
 # arriving clip is rendered/decoded through the REAL WAV path and envelope-
 # hashed map-side (mapInPandas works unchanged on a stream); the resulting
@@ -1978,7 +1976,7 @@ def stream_audio_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming spectral-dedup probe (r09): the Haar-scalogram twin — catches
+# Streaming spectral-dedup probe: the Haar-scalogram twin — catches
 # at-ingest duplicates whose loudness contour was altered but whose
 # spectral shape survives. Same probe shape, same oracle-sharing argument.
 # ---------------------------------------------------------------------------
@@ -2009,7 +2007,7 @@ def stream_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming video-dedup probe (r09): the VIDEO twin completing the
+# Streaming video-dedup probe: the VIDEO twin completing the
 # at-ingest modality matrix (image/audio envelope/audio spectral/video).
 # Frame-set Jaccard needs per-PAIR aggregation, so unlike the phash
 # probes the stream emits one (id_a, id_b, fh) HIT row per shared frame
@@ -2037,8 +2035,7 @@ def _video_frame_sets(df: DataFrame, dedupe: bool = True) -> DataFrame:
     deliberately OFF on the streaming probe side: a streaming distinct
     is an unbounded stateful dropDuplicates (corpus x frames state, the
     exact growth class task 1 banned), and duplicate hit rows collapse
-    for free in the bounded batch-side distinct after the drain (r09
-    review)."""
+    for free in the bounded batch-side distinct after the drain."""
     from ..operators.multimodal import attach_blob, sample_frames
 
     frames = sample_frames(
@@ -2107,7 +2104,7 @@ def stream_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# K4/K6 driver-proven (r08): the file-sink rows graduate from pytest-local
+# K4/K6 driver-proven: the file-sink rows graduate from pytest-local
 # to hash-checked driver rows by ROUND-TRIPPING through the real sink
 # machinery — stream events through the checkpointed parquet sink (K4,
 # month-partitioned like the reference's ParquetOutput) / the
@@ -2122,7 +2119,7 @@ def stream_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Sink/checkpoint tempdirs are tracked and removed at interpreter exit
-# (r08 ADVICE) — shared helper in plans/__init__.py.
+# — shared helper in plans/__init__.py.
 from . import tmp_run_dir as _tmp_sink_dir  # noqa: E402
 
 
@@ -2193,7 +2190,7 @@ def k6_foreach_batch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def k8_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K8 driver-proven (r08): TWO streaming queries off one lineage — the
+    """K8 driver-proven: TWO streaming queries off one lineage — the
     same projection drains simultaneously into the checkpointed parquet
     sink AND a memory sink (the reference's console+parquet fan-out
     shape). The returned relation aggregates the parquet read-back; a
@@ -2231,7 +2228,7 @@ def k8_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t2_checkpoint_restart_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2 driver-proven (r08): per-query checkpoint EXACTLY-ONCE across a
+    """T2 driver-proven: per-query checkpoint EXACTLY-ONCE across a
     restart, in one call — drain the bounded source into the parquet sink,
     then start a SECOND query on the SAME checkpoint + path. The restarted
     query finds the source fully committed and must write NOTHING; any
@@ -2259,7 +2256,7 @@ def t2_checkpoint_restart_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def t3_default_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T3 driver-proven (r08): the SESSION-DEFAULT checkpoint location
+    """T3 driver-proven: the SESSION-DEFAULT checkpoint location
     (reference Basic.scala's spark.sql.streaming.checkpointLocation
     conf) — the sink declares NO checkpointLocation of its own, the query
     checkpoints under the session conf dir (loudly verified non-empty),
@@ -2296,7 +2293,7 @@ def t3_default_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Streaming count-min sketch (r09): the mergeable-sketch story ON A STREAM.
+# Streaming count-min sketch: the mergeable-sketch story ON A STREAM.
 # The d x w cell table is exactly the state complete-mode maintains for a
 # (j, bucket) count aggregation — fixed at 1024 cells regardless of stream
 # length, the textbook bounded-state summary. Heavy-hitter scoring (exact
@@ -2323,7 +2320,7 @@ def stream_countmin_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming quantile sketch (r10, r09 VERDICT task 5): the histogram-cell
+# Streaming quantile sketch: the histogram-cell
 # twin of stream_countmin_users. The grid bounds are the sketch's
 # CONFIGURATION (a 1-row static relation — broadcast is always safe on a
 # fixed-size side); each arriving value is bucketed map-side and the
@@ -2343,7 +2340,7 @@ from .windows_stats import (  # noqa: E402
 
 @register("stream_quantile_values", _ORACLE_REG["sketch_quantile_values"])
 def stream_quantile_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEPLOYMENT CONTRACT (r10 VERDICT obs. 2): the grid bounds here are
+    """DEPLOYMENT CONTRACT: the grid bounds here are
     computed batch-side BEFORE the stream runs — the bounds are the
     sketch's epoch CONFIGURATION, exactly like the Bloom filter's bits/m
     or the BPE serving row's merge table: in production they come from a
@@ -2364,7 +2361,7 @@ def stream_quantile_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming HLL distinct sketch (r10): the third sketch twin, completing
+# Streaming HLL distinct sketch: the third sketch twin, completing
 # batch+stream symmetry for the whole sketch family (count-min, quantile
 # histogram, HLL). Each arriving order is hashed map-side (stateless md5 +
 # rank projection shared with the batch twin via hll_hashed) and the
@@ -2414,7 +2411,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest pretrain gate (r10, r09 VERDICT task 6): the streaming twin of
+# At-ingest pretrain gate: the streaming twin of
 # pipeline_pretrain_v3's front door. Every arriving doc is, in ONE
 # streaming query (a union of two stateless arms over the same source —
 # no stream-stream join, no stream-side aggregation state):
@@ -2427,7 +2424,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     tail edits — is probed against the near-dup chunk catalog
 #     (_media_probe_plan's Hamming-band shape).
 # Both static sides are corpus-proportional: checkpoint-materialized, NO
-# broadcast hint (the r08-task-1 rule; pinned in
+# broadcast hint (the stream-static-join rule; pinned in
 # test_stream_static_joins_unhinted_equi). The drained rows collapse
 # per-doc batch-side into keep/drop with the FIRST matching reason
 # (exact_dup > near_dup_image > low_quality > ok) — the batch decision for
@@ -2596,7 +2593,7 @@ def stream_pretrain_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming Bloom decontamination probe (r11, r10 VERDICT task 1): the
+# Streaming Bloom decontamination probe: the
 # fourth and final sketch twin, completing batch+stream symmetry for the
 # whole deterministic-sketch family (count-min = frequency, histogram =
 # quantiles, HLL = distinct, Bloom = membership). stream_decontaminate
@@ -2633,7 +2630,7 @@ def stream_bloom_probe_plan(
     sides are constant-bounded (bits <= _BLOOM_M_CAP rows, mrel is the
     1-row m config), so the broadcast hints are CORRECT here — the
     opposite case from the corpus-proportional stream-static sides the
-    r08 rule un-hints."""
+    stream-static-join rule un-hints."""
     from ..functions.text import shingles_from_words
     from .textprep import _DECON_N
 
@@ -2687,7 +2684,7 @@ def stream_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest BPE tokenization (r11, r10 VERDICT task 4): closes the
+# At-ingest BPE tokenization: closes the
 # trainer->serving loop the way the sketch twins close batch->stream.
 # train_bpe_merges LEARNS the merge table; this query SERVES it on a
 # document stream. The table is trained batch-side (in production:
@@ -2765,8 +2762,8 @@ def stream_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The oracle unrolls exactly _BPE_ROUNDS doc-level CTEs; a trainer that
     # exhausted pairs early would empty the oracle's m{i} CROSS JOIN and
-    # fail parity confusingly downstream — fail HERE instead (r11 ADVICE;
-    # a real raise, not assert, so python -O can't strip the guard).
+    # fail parity confusingly downstream — fail HERE instead (a real
+    # raise, not assert, so python -O can't strip the guard).
     if len(merges) != _BPE_ROUNDS:
         raise ValueError(
             f"train_bpe returned {len(merges)} merges, oracle unrolls "
@@ -2778,7 +2775,7 @@ def stream_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Two-phase self-contained quantile sketch (r11, r10 VERDICT task 5):
+# Two-phase self-contained quantile sketch:
 # stream_quantile_values scores against batch-computed bounds (the
 # epoch-config contract its docstring states); THIS twin derives its own
 # bounds from the stream, making the whole sketch self-contained. Phase 1
@@ -2813,7 +2810,7 @@ def stream_quantile_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Windowed streaming HLL (r11, r10 VERDICT task 8): approximate distinct
+# Windowed streaming HLL: approximate distinct
 # users OVER TIME WINDOWS — the distinct-users-per-hour dashboard every
 # serving tier wants, as one streaming query. The register fold keys by
 # (tumbling 1h window, event_type, bucket): complete-mode state is
@@ -2840,16 +2837,14 @@ from .windows_stats import (  # noqa: E402
 _HLL_EV_H_SQL = "md5('hll:' || CAST(user_id AS VARCHAR))"
 
 def _hll_window_oracle(ev_cte: str, gcols: tuple) -> str:
-    """ONE oracle generator for the windowed/sliding HLL twins (r11
-    review: the register-sum and estimate SQL were restated per variant
-    and could drift). ``ev_cte`` must end by defining ev(gcols...,
-    user_id); the chain replays windows_stats.HLL_SKETCH_ORACLE's
-    hashed -> regs -> grid -> full_regs -> sk -> exact -> est stages
-    keyed by ``gcols`` — the register-rank derivation, fixed-point
-    indicator sum, and pinned est_raw op order MUST stay textually in
-    sync with that batch oracle (its text is driver-green and cannot
-    change without a FORCE_RECHECK slot, so it stays the canonical
-    copy)."""
+    """ONE oracle generator for the windowed/sliding HLL twins (the
+    register-sum and estimate SQL restated per variant could drift). ``ev_cte``
+    must end by defining ev(gcols..., user_id); the chain replays
+    windows_stats.HLL_SKETCH_ORACLE's hashed -> regs -> grid -> full_regs -> sk
+    -> exact -> est stages keyed by ``gcols`` — the register-rank derivation,
+    fixed-point indicator sum, and pinned est_raw op order MUST stay textually
+    in sync with that batch oracle (changing its text costs a FORCE_RECHECK
+    slot, so it stays the canonical copy)."""
     g = ", ".join(gcols)
     grid_g = ", ".join(f"grid.{c}" for c in gcols)
     sk_g = ", ".join(f"sk.{c}" for c in gcols)
@@ -2918,72 +2913,86 @@ HLL_WINDOWED_ORACLE = _hll_window_oracle(
     _HLL_WIN_EV_CTE, ("window_start", "window_end", "event_type")
 )
 
-_HLL_WIN_GCOLS = ("window_start", "window_end", "event_type")
-
-
-def hll_windowed_fold(ev: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """The windowed HLL register fold — hash each (ts, event_type, user)
-    row to (bucket, rank), watermark, and max-fold registers per
-    (tumbling 1h window, event_type, bucket). THE production definition
-    stream_hll_windowed drains and
+def hll_windowed_fold(
+    ev: DataFrame,
+    watermark: str = "2 hours",
+    win: tuple = ("1 hour",),
+    keys: tuple = ("event_type",),
+) -> DataFrame:
+    """The windowed HLL register fold — hash each (ts, keys..., user) row
+    to (bucket, rank), watermark, and max-fold registers per (window,
+    keys..., bucket). ``win`` is the F.window argument tail after "ts":
+    ("1 hour",) tumbling or ("3 hours", "1 hour") sliding. THE production
+    definition both windowed HLL queries drain and
     tests/test_streaming.py::test_windowed_sketch_watermark_expires_state
-    runs in append mode across micro-batches (r12, r11 VERDICT task 4):
-    the watermark bound ("state = ACTIVE windows x groups x 256") is a
-    pinned contract, not prose."""
+    runs in append mode across micro-batches: the watermark bound
+    ("state = ACTIVE windows x groups x 256") is a pinned contract, not
+    prose."""
     return (
-        hll_hashed(ev, key="user_id", group_cols=("ts", "event_type"))
+        hll_hashed(ev, key="user_id", group_cols=("ts", *keys))
         .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour"), "event_type", "bucket")
+        .groupBy(F.window("ts", *win), *keys, "bucket")
         .agg(F.max("r").alias("r"))
         .select(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
-            "event_type", "bucket", "r",
+            *keys, "bucket", "r",
         )
     )
 
 
-@register("stream_hll_windowed", HLL_WINDOWED_ORACLE)
-def stream_hll_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _hll_windowed_query(
+    spark: SparkSession, sf_dir: str, win: tuple, watermark: str, keys: tuple
+) -> DataFrame:
+    """The windowed HLL query body: drain ``hll_windowed_fold`` and score
+    its registers against a batch exact arm that keys identically (batch
+    F.window replicates sliding panes the same way the streaming fold
+    does)."""
+    gcols = ("window_start", "window_end", *keys)
     ev = (
         events_stream(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
-        .select("ts", "event_type", "user_id")
+        .select("ts", *keys, "user_id")
     )
     ev_b = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
-        .select(F.window("ts", "1 hour").alias("window"), "event_type",
-                "user_id")
+        .select(F.window("ts", *win).alias("window"), *keys, "user_id")
         .select(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
-            "event_type", "user_id",
+            *keys, "user_id",
         )
     )
-    groups = ev_b.select(*_HLL_WIN_GCOLS).distinct()
-    exact = ev_b.groupBy(*_HLL_WIN_GCOLS).agg(
-        F.countDistinct("user_id").alias("n")
-    )
-    # r20 (guide §2.6): the exact-distinct/groups batch arms are
-    # independent of the drain — materialize them in parallel with it
-    # (the _cms_windowed_query idiom; checkpoints double as true stats
-    # for the downstream grid/score joins).
+    groups = ev_b.select(*gcols).distinct()
+    exact = ev_b.groupBy(*gcols).agg(F.countDistinct("user_id").alias("n"))
+    # The exact-distinct and groups batch arms do not depend on the drain:
+    # materialize them in parallel with it. The checkpoints double as true
+    # stats for the downstream grid and score joins.
     regs_drained, groups, exact = _run_jobs(
-        lambda: run_to_table(spark, hll_windowed_fold(ev), "complete"),
+        lambda: run_to_table(
+            spark, hll_windowed_fold(ev, watermark, win, keys), "complete"
+        ),
         lambda: groups.localCheckpoint(),
         lambda: exact.localCheckpoint(),
     )
     return hll_score(
         spark, sf_dir,
-        hll_grid_fill(regs_drained, groups, group_cols=_HLL_WIN_GCOLS),
-        group_cols=_HLL_WIN_GCOLS,
+        hll_grid_fill(regs_drained, groups, group_cols=gcols),
+        group_cols=gcols,
         exact=exact,
     )
 
 
+@register("stream_hll_windowed", HLL_WINDOWED_ORACLE)
+def stream_hll_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _hll_windowed_query(
+        spark, sf_dir, ("1 hour",), "2 hours", ("event_type",)
+    )
+
+
 # ---------------------------------------------------------------------------
-# At-ingest MinHash near-dup probe (r11): the TEXT near-dup member of the
+# At-ingest MinHash near-dup probe: the TEXT near-dup member of the
 # at-ingest probe matrix — stream_image_phash/audio/video probe media
 # fingerprints, stream_dedup_fingerprint probes EXACT text fingerprints;
 # this probes NEAR-dup text the production way: MinHash + LSH bands. The
@@ -2995,7 +3004,7 @@ def stream_hll_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # values are md5s of signature slices (identical to lsh_band_values') and
 # stack-explode to (band_id, band_val) rows that equi-join the STORE's
 # banded catalog. The catalog is corpus-proportional: checkpoint-
-# materialized, UNHINTED (the r08 rule; eighth builder in
+# materialized, UNHINTED (the stream-static-join rule; eighth builder in
 # test_stream_static_joins_unhinted_equi). Arriving = odd docs + tail-
 # truncated (4/5) copies of every 10th doc under +400000 — the planted
 # near-dups land at Jaccard ~0.75 where 5x3 banding recalls ~95%. Hits
@@ -3013,8 +3022,7 @@ from .llm import (  # noqa: E402
 from ..operators import dedup as _DD  # noqa: E402
 
 # Planted near-dups land at source doc_id + this offset. Both sides use it
-# symmetrically (r11 ADVICE: the Spark store side previously relied on
-# max(doc_id) < offset implicitly while the oracle filtered explicitly) —
+# symmetrically (neither side may rely on max(doc_id) < offset implicitly) —
 # the store is "even AND below the plant range" in BOTH texts, so a corpus
 # whose ids ever crossed the offset would diverge loudly in neither.
 _MH_PLANT_OFFSET = 400000
@@ -3108,7 +3116,7 @@ def stream_minhash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest near-dup detection with a GROWING band catalog (r16): the
+# At-ingest near-dup detection with a GROWING band catalog: the
 # third ingest-maintenance operator (IVF appendix = vectors, fp store =
 # exact dedup, this = near-dup) and the production upgrade of
 # stream_minhash_probe, whose catalog is frozen at stream start — a
@@ -3180,12 +3188,12 @@ def _count_decisions(batch: DataFrame, hits: DataFrame, name: str):
 
 def _batch_band_rows(batch_df: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_val) for a micro-batch, computed WITHIN THE
-    ROW (r20, guide §2.4 — the r11 stream_minhash_probe idiom applied to
-    the maintenance handlers): sig_j = array_min over the doc's
+    ROW (the stream_minhash_probe idiom applied to the maintenance
+    handlers): sig_j = array_min over the doc's
     shingle-hash array of the same affine family minhash_signatures
     min-aggregates (min over a set = min over its array), band values =
-    the shared lsh_band_values md5s. A pure projection — the old
-    doc_shingles explode + groupBy form paid a full shuffle of the
+    the shared lsh_band_values md5s. A pure projection — a doc_shingles
+    explode + groupBy form would pay a full shuffle of the
     exploded shingle rows PER MICRO-BATCH (profiled ~0.8-1.2s/batch at
     sf0.1, the dominant handler phase). Rows identical: same shingles,
     same permutation constants, duplicate shingles irrelevant to min.
@@ -3356,12 +3364,12 @@ MH_CATALOG = MaintainedState(
 
 
 # ---------------------------------------------------------------------------
-# Mid-lifecycle state compaction (r17, r16 VERDICT stretch task 8): the
-# IVF index got its housekeeping arm (sim_ivf_compacted_probe); the fp
-# store and band catalog accumulate one partition per micro-batch
-# FOREVER — at one batch per minute that is half a million partitions a
-# year, and the per-batch "batch_id < current" scan pays for every one
-# of them. Compaction collapses all partitions into a single fresh seed
+# Mid-lifecycle state compaction: the IVF index has its housekeeping arm
+# (sim_ivf_compacted_probe); the fp store and band catalog accumulate one
+# partition per micro-batch FOREVER — at one batch per minute that is half a
+# million partitions a year, and the per-batch "batch_id < current" scan pays
+# for every one of them. Compaction collapses all partitions into a single
+# fresh seed
 # partition (one read, one write, off the ingest path — the directory-
 # swap deployment sim_ivf_compacted_probe documents). The proof is
 # STRONGER than compact-at-end: compaction runs MID-INGEST — the first
@@ -3422,7 +3430,7 @@ def stream_minhash_catalog_compacted(
 
 
 # ---------------------------------------------------------------------------
-# Store retention / TTL (r17): the last stage of the state lifecycle —
+# Store retention / TTL: the last stage of the state lifecycle —
 # birth (seed), growth (per-batch appends), housekeeping (compaction),
 # and now EXPIRY. A TTL'd dedup store re-admits content after
 # _FP_TTL_W batches of absence (the "re-crawl after N days is fresh
@@ -3585,7 +3593,7 @@ def stream_minhash_catalog_retention(
 
 
 # ---------------------------------------------------------------------------
-# At-ingest IMAGE near-dup catalog (r17): the maintained-catalog upgrade
+# At-ingest IMAGE near-dup catalog: the maintained-catalog upgrade
 # of stream_image_phash, whose Hamming-band chunk catalog freezes at
 # stream start — the same gap stream_minhash_catalog_ingest closed for
 # text bands, now closed for the image modality, completing the
@@ -3677,7 +3685,7 @@ def stream_image_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _image_catalog_seed(docs: DataFrame) -> DataFrame:
     """The seeded catalog's chunk rows: even doc ids BELOW the plant
-    range (r17 ADVICE: the oracle's seed branch is doc_id % 2 = 0 AND
+    range (the oracle's seed branch is doc_id % 2 = 0 AND
     doc_id < _IMG_PLANT_OFFSET, and _id_range_parts' guard only checks
     the max ODD id — mirror _mh_catalog_seed's bound so a corpus whose
     even ids reach the plant range cannot diverge from the oracle)."""
@@ -3716,9 +3724,9 @@ IMAGE_CATALOG = MaintainedState(
 
 
 # ---------------------------------------------------------------------------
-# Image-catalog lifecycle symmetry (r18, r17 VERDICT task 5): the text
-# band catalog and the fp store each have a compaction arm AND a TTL arm
-# (r17); the image chunk catalog had neither. Both transfer verbatim:
+# Image-catalog lifecycle symmetry: the text
+# band catalog and the fp store each have a compaction arm AND a TTL
+# arm; the image chunk catalog had neither. Both transfer verbatim:
 # chunk-row appends are per-doc-unique, so _compact_state's novel-only
 # premise holds and the compacted twin registers against
 # STREAM_IMAGE_CATALOG_ORACLE unchanged (the hash IS the compaction-
@@ -3803,7 +3811,7 @@ def stream_image_catalog_retention(
 
 
 # ---------------------------------------------------------------------------
-# At-ingest embedding near-dup catalog (r18): the EMBEDDING modality's
+# At-ingest embedding near-dup catalog: the EMBEDDING modality's
 # dedup-maintenance arm, completing the matrix's vector row as a true
 # dedup arm (the IVF appendix is the SERVING arm). Each micro-batch's
 # vectors hyperplane-band-code (dedup_embedding_cosine's fixed
@@ -3853,7 +3861,7 @@ STREAM_EMB_CATALOG_ORACLE = f"""
     FROM arr LEFT JOIN hits h ON arr.vec_id = h.vec_id
     GROUP BY arr.vec_id
     """.format(
-    # Rendered from llm's _DOT/_NORM templates (r18 ADVICE) so this text
+    # Rendered from llm's _DOT/_NORM templates so this text
     # can never silently diverge from dedup_embedding_cosine's 0.99 rule.
     dot=_DOT.format(a="a.v", b="p.v"),
     na=_NORM.format(a="a.v"),
@@ -3969,7 +3977,7 @@ EMB_CATALOG = MaintainedState(
     table=_emb_table,
     relations=(
         # The code derivation checkpoints eagerly inside its seed thunk,
-        # so it overlaps the vector and arrival writes (r19 §2.6).
+        # so it overlaps the vector and arrival writes.
         Relation(
             "codes",
             "doc_id long, band_id int, code int",
@@ -4041,7 +4049,7 @@ STREAM_EMB_CATALOG_RETENTION_ORACLE = f"""
     FROM arr LEFT JOIN hits h ON arr.vec_id = h.vec_id
     GROUP BY arr.vec_id
     """.format(
-    # Same _DOT/_NORM renders as STREAM_EMB_CATALOG_ORACLE (r18 ADVICE).
+    # Same _DOT/_NORM renders as STREAM_EMB_CATALOG_ORACLE.
     dot=_DOT.format(a="a.v", b="p.v"),
     na=_NORM.format(a="a.v"),
     np=_NORM.format(a="p.v"),
@@ -4068,8 +4076,8 @@ def stream_embedding_catalog_retention(
 
 
 # ---------------------------------------------------------------------------
-# At-ingest pretrain gate v2 (r17, r16 VERDICT task 4): the maintenance
-# composition. stream_pretrain_gate (r10) probes state FROZEN at stream
+# At-ingest pretrain gate v2: the maintenance
+# composition. stream_pretrain_gate probes state FROZEN at stream
 # start — a duplicate of a doc that arrived two micro-batches ago sails
 # through. v2 gates every arriving doc against MAINTAINED state: the
 # exact-dup arm reads the fp store (per-batch novel-fp appends, the
@@ -4169,15 +4177,14 @@ PRETRAIN_GATE_V2_ORACLE = f"""
 
 
 def _gate_handler(image_arm: bool):
-    """foreachBatch handler factory composing the maintenance arms:
-    decide (exact via fp store AS OF batch, near via band catalog AS OF
-    batch, quality projection), then append novel fps AND the batch's
-    band rows. All writes (decisions, store append, catalog appends) are
-    dynamic-overwrite batch partitions. ``image_arm`` (r18, the r17
-    VERDICT task 4) composes the MAINTAINED image modality in: the
-    batch's cover chunks probe the growing chunk catalog (batch_id <
-    current) and then append — without it the v2 twin's decisions stay
-    byte-identical (the null img_hit column never matches a CASE arm)."""
+    """foreachBatch handler factory composing the maintenance arms: decide
+    (exact via fp store AS OF batch, near via band catalog AS OF batch, quality
+    projection), then append novel fps AND the batch's band rows. All writes
+    (decisions, store append, catalog appends) are dynamic-overwrite batch
+    partitions. ``image_arm`` composes the MAINTAINED image modality in: the
+    batch's cover chunks probe the growing chunk catalog (batch_id < current)
+    and then append — without it the v2 twin's decisions stay byte-identical
+    (the null img_hit column never matches a CASE arm)."""
     from ..functions.text import fingerprint
     from .textprep import quality_p_col
 
@@ -4195,7 +4202,7 @@ def _gate_handler(image_arm: bool):
             )
             # The band derivation and the cover-image chunk derivation are
             # independent eager materializations off the one checkpointed
-            # scored relation — overlap them (r19, guide §2.6).
+            # scored relation — overlap them.
             derive = [lambda: _batch_band_rows(scored)]
             if image_arm:
                 derive.append(lambda: _image_chunk_rows(_gate_cover(scored)))
@@ -4353,10 +4360,10 @@ GATE_V3 = replace(
 
 
 # ---------------------------------------------------------------------------
-# At-ingest pretrain gate v3 (r18, r17 VERDICT task 4): v2 + the
+# At-ingest pretrain gate v3: v2 + the
 # MAINTAINED image modality. v1 gated near_dup_image against a chunk
 # catalog FROZEN at stream start; v2 made the exact/near-text arms
-# maintained but dropped the image arm entirely. v3 composes the r17
+# maintained but dropped the image arm entirely. v3 composes the
 # image-catalog machinery in: every batch's cover images (the v1
 # prefix-stable _gate_cover derivation — the cover renders from the
 # first _GATE_COVER_LEN chars, so tail edits keep it identical) probe
@@ -4489,8 +4496,8 @@ def stream_pretrain_gate_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Ingest-maintained cluster map for the near-dup split (r18, r17 VERDICT
-# task 6). stream_split_by_neardup reads a rep-fp map MATERIALIZED from
+# Ingest-maintained cluster map for the near-dup split.
+# stream_split_by_neardup reads a rep-fp map MATERIALIZED from
 # the last batch clustering run — between refreshes, a brand-new
 # near-dup pair arriving at ingest still gates independently. This twin
 # maintains the map AT ingest with a deterministic incremental
@@ -4609,18 +4616,17 @@ def _neardup_clustermap_handler(io: StateIO):
         # carry their map row. Same-batch parents (rep still null) chase
         # the strictly-decreasing parent chain against the growing
         # resolved set — depth-bounded, so the loop terminates.
-        # r19 loop shape: ONE eager materialization per hop — a single
+        # Loop shape: ONE eager materialization per hop — a single
         # left-outer pass splits the pending set into rows whose ancestor
         # just resolved (rep_id non-null; resolved reps are always
         # non-null by construction) and rows that advance one hop
         # (par_b's inner/outer distinction is immaterial: every same-
         # batch ancestor is in base, and an unresolved ancestor always
         # has a parent, else it would be a founder and resolved).
-        # resolved stays a LAZY union over checkpointed pieces, so the
-        # old shape's two extra jobs per hop (pending checkpoint +
-        # eager resolved-union checkpoint) are gone; results are
-        # identical — the same (doc_id, rep) pairs resolve at the same
-        # hop, only the materialization boundaries moved.
+        # resolved stays a LAZY union over checkpointed pieces, so a hop pays
+        # no extra jobs (pending checkpoint + eager resolved-union checkpoint);
+        # results are identical — the same (doc_id, rep) pairs resolve at the
+        # same hop, only the materialization boundaries moved.
         resolved = base.filter(
             F.col("parent").isNull() | F.col("rep_id").isNotNull()
         ).select(
@@ -4795,7 +4801,7 @@ def stream_split_by_neardup_inc_compacted(
 
 
 # ---------------------------------------------------------------------------
-# Windowed streaming count-min (r11): heavy hitters PER TIME WINDOW — the
+# Windowed streaming count-min: heavy hitters PER TIME WINDOW — the
 # frequency companion to stream_hll_windowed's windowed distinct count,
 # completing the sketches-over-windows surface (count-min x windows,
 # HLL x windows). ONE streaming query folds the d x w cell table keyed by
@@ -4821,10 +4827,9 @@ _CMS_WIN_TOPN = 5
 
 
 def _cms_window_oracle(ev_cte: str) -> str:
-    """ONE oracle generator for the windowed/sliding count-min twins (r12,
-    the _hll_window_oracle convention): ``ev_cte`` must end by defining
-    ev(window_start, window_end, user_id). The tumbling render is
-    byte-identical to the r11 driver-green CMS_WINDOWED_ORACLE text."""
+    """ONE oracle generator for the windowed/sliding count-min twins (the
+    _hll_window_oracle convention): ``ev_cte`` must end by defining
+    ev(window_start, window_end, user_id)."""
     return f"""
     WITH {ev_cte.strip()},
     js AS (SELECT unnest(range(0, {_CMS_D})) AS j),
@@ -4883,8 +4888,8 @@ def _cms_windowed_query(
     spark: SparkSession, sf_dir: str, win: tuple, watermark: str
 ) -> DataFrame:
     """The windowed count-min query body, parametrized by the window spec
-    (r12: factored from stream_countmin_windowed so the sliding twin
-    extends via parameters — the hll fold convention). ``win`` is the
+    (the sliding twin extends via parameters — the hll fold convention).
+    ``win`` is the
     F.window argument tail after "ts": ("1 hour",) tumbling or
     ("3 hours", "1 hour") sliding (batch F.window replicates panes the
     same way the streaming fold does, so both arms key identically)."""
@@ -4934,14 +4939,14 @@ def _cms_windowed_query(
         .filter(F.col("rk") <= _CMS_WIN_TOPN)
         .drop("rk")
     )
-    # r20 (guide §2.6 + §3.1): the exact/top batch arm is independent of
-    # the drain — materialize it (eager localCheckpoint) IN PARALLEL with
-    # the streaming drain instead of serially after it. The checkpoint
-    # doubles as the r08 stats idiom: the planner now SEES top's true
-    # (windows x top-N) size and picks broadcast-vs-shuffle for the cells
-    # join itself (measured: the 562k-row sliding cells side stopped
-    # being shuffled — SMJ -> stats-chosen BHJ — with no hint, so the
-    # choice still degrades to shuffle when retained windows grow).
+    # The exact/top batch arm is independent of the drain — materialize
+    # it (eager localCheckpoint) IN PARALLEL with the streaming drain
+    # instead of serially after it. The checkpoint doubles as the stats
+    # idiom: the planner SEES top's true (windows x top-N) size and picks
+    # broadcast-vs-shuffle for the cells join itself (measured: the
+    # 562k-row sliding cells side is not shuffled — stats-chosen BHJ, not
+    # SMJ — with no hint, so the choice still degrades to shuffle when
+    # retained windows grow).
     cells, top = _run_jobs(
         lambda: run_to_table(spark, folded, "complete"),
         lambda: top.localCheckpoint(),
@@ -4987,7 +4992,7 @@ CMS_SLIDING_ORACLE = _cms_window_oracle(_CMS_SLIDE_EV_CTE)
 def stream_countmin_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters over a TRAILING 3-hour window sliding hourly — the
     frequency companion to stream_hll_sliding, completing tumbling +
-    sliding symmetry for the count-min sketch (r12). Every event feeds 3
+    sliding symmetry for the count-min sketch. Every event feeds 3
     hourly-spaced panes (the pinned sliding replay); state = panes x
     {_CMS_D} x {_CMS_W} cells in complete mode on the bounded drain,
     watermark-expired to ACTIVE panes in append deployments (the fold
@@ -4998,7 +5003,7 @@ def stream_countmin_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Windowed streaming quantile sketch (r12): per-hour value percentiles —
+# Windowed streaming quantile sketch: per-hour value percentiles —
 # the THIRD windowed sketch, completing the sketches-over-windows matrix
 # (windowed HLL = distinct, windowed count-min = frequency, this =
 # distribution; the Bloom filter has no windowed form — membership is not
@@ -5153,7 +5158,7 @@ def stream_quantile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _quantile_windowed_query(spark, sf_dir, ("1 hour",), "2 hours")
 
 
-# Hour -> day rollup (r12): the shared-global-grid mergeability claim as
+# Hour -> day rollup: the shared-global-grid mergeability claim as
 # a DRIVER-CHECKED fact, not only a pytest — the Spark side builds DAILY
 # quantile sketches by SUM-merging the HOURLY fold's cells (never
 # re-reading values into buckets), while the oracle builds daily cells
@@ -5237,7 +5242,7 @@ QUANTILE_SLIDING_ORACLE = _quantile_window_oracle(_QSK_SLIDE_V_CTE)
 def stream_quantile_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-3h value percentiles refreshed hourly — the distribution
     companion to stream_hll_sliding/stream_countmin_sliding, completing
-    tumbling + sliding symmetry for ALL THREE windowed sketches (r12).
+    tumbling + sliding symmetry for ALL THREE windowed sketches.
     Every value feeds 3 hourly-spaced panes; state = panes x <= _QSK_W
     cells in complete mode on the bounded drain, watermark-expired to
     ACTIVE panes in append deployments. The shared global grid means a
@@ -5248,14 +5253,14 @@ def stream_quantile_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest IVF-PQ probe (r12): the serving twin of sim_ivfpq_recall and
+# At-ingest IVF-PQ probe: the serving twin of sim_ivfpq_recall and
 # the compressed-tier upgrade of stream_ann_probe — arriving query vectors
 # rank the CODED catalog (bucket + PQ reconstruction per corpus vector)
 # instead of raw vectors. Stream arm stays the proven stream_ann_probe
 # shape: coarse centroids embed as FIXED-K plan literals
 # (_centroid_literal_array, guarded), probe selection is a map-side
 # slice(array_sort(transform(...))) inside codegen, and per-query top-k is
-# the BOUNDED O(k)-state fold (stateful_topk_fold, r14 — see the
+# the BOUNDED O(k)-state fold (stateful_topk_fold — see the
 # stream_ann_probe block). The catalog (assignment + reconstruction) is
 # corpus-proportional: checkpoint-materialized, UNHINTED equi-join on
 # bucket. At 100 TB the catalog column rv IS the stored 4-byte code
@@ -5277,7 +5282,7 @@ def stream_ivfpq_probe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog join -> bounded O(k)-state top-k fold), exposed for the
     hint-free plan test (ninth builder in
     test_stream_static_joins_unhinted_equi — the catalog grows with the
-    corpus, so a hard-coded broadcast would be the r08 regression class)."""
+    corpus, so a hard-coded broadcast would not scale)."""
     from ..functions.vectors import cosine, cosine_pandas
     from ..operators.similarity import assign_buckets, kmeans_centroids
 
@@ -5285,11 +5290,11 @@ def stream_ivfpq_probe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # Coarse training and the four PQ codebook trainings are independent
-    # — overlap them (guide §2.6). r20 (r19 ADVICE): the thunks
-    # MATERIALIZE their chains (engine.materialize — one k-row count
-    # through the lazy-checkpoint cut), so the overlap is genuine; the
-    # r19 lazy-construction thunks ran no jobs and the trainings still
-    # serialized at the first consuming action.
+    # — overlap them. The thunks MATERIALIZE their chains
+    # (engine.materialize — one k-row count through the lazy-checkpoint
+    # cut), so the overlap is genuine; lazy-construction thunks would run
+    # no jobs and the trainings would still serialize at the first
+    # consuming action.
     from ..engine import materialize as _mat
 
     cent, cbs = _run_jobs(
@@ -5299,9 +5304,9 @@ def stream_ivfpq_probe_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent_arr = _centroid_literal_array(cent.collect(), _KMEANS_K)
     # The coded catalog: one bucket id + one reconstruction per corpus
     # vector, materialized once (at scale: the written IVF-PQ index).
-    # r19: both come out of ONE map-side corpus pass (zero-exchange
-    # assign_buckets + _pq_reconstruction's keep) — the old shape paid a
-    # corpus-sized assigned ⋈ recon vec_id join here.
+    # Both come out of ONE map-side corpus pass (zero-exchange
+    # assign_buckets + _pq_reconstruction's keep), with no corpus-sized
+    # assigned ⋈ recon vec_id join.
     catalog = (
         _pq_reconstruction(
             assign_buckets(
@@ -5356,7 +5361,7 @@ def stream_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sliding-window streaming HLL (r11): distinct users over a TRAILING 3-hour
+# Sliding-window streaming HLL: distinct users over a TRAILING 3-hour
 # window sliding hourly — the "unique visitors, last 3 hours, refreshed
 # hourly" dashboard. Composes the two machineries this repo already pins:
 # sliding windows (every event lands in 3 hourly-spaced panes, the a3
@@ -5383,54 +5388,8 @@ HLL_SLIDING_ORACLE = _hll_window_oracle(
     _HLL_SLIDE_EV_CTE, ("window_start", "window_end")
 )
 
-_HLL_SLIDE_GCOLS = ("window_start", "window_end")
-
-
 @register("stream_hll_sliding", HLL_SLIDING_ORACLE)
 def stream_hll_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("user_id").isNotNull())
-        .select("ts", "user_id")
-    )
-    folded = (
-        hll_hashed(ev, key="user_id", group_cols=("ts",))
-        .withWatermark("ts", "4 hours")
-        .groupBy(F.window("ts", "3 hours", "1 hour"), "bucket")
-        .agg(F.max("r").alias("r"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "bucket", "r",
-        )
-    )
-    ev_b = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(F.window("ts", "3 hours", "1 hour").alias("window"),
-                "user_id")
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "user_id",
-        )
-    )
-    groups = ev_b.select(*_HLL_SLIDE_GCOLS).distinct()
-    exact = ev_b.groupBy(*_HLL_SLIDE_GCOLS).agg(
-        F.countDistinct("user_id").alias("n")
-    )
-    # r20 (guide §2.6): the exact-distinct/groups batch arms are
-    # independent of the drain — materialize them in parallel with it
-    # (the _cms_windowed_query idiom; checkpoints double as true stats
-    # for the downstream grid/score joins).
-    regs_drained, groups, exact = _run_jobs(
-        lambda: run_to_table(spark, folded, "complete"),
-        lambda: groups.localCheckpoint(),
-        lambda: exact.localCheckpoint(),
-    )
-    return hll_score(
-        spark, sf_dir,
-        hll_grid_fill(regs_drained, groups, group_cols=_HLL_SLIDE_GCOLS),
-        group_cols=_HLL_SLIDE_GCOLS,
-        exact=exact,
+    return _hll_windowed_query(
+        spark, sf_dir, ("3 hours", "1 hour"), "4 hours", ()
     )

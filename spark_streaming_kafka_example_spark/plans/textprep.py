@@ -1,4 +1,4 @@
-"""Training-data text-prep queries (r05): decontamination, repetition
+"""Training-data text-prep queries: decontamination, repetition
 profiling, BM25 retrieval, sequence packing, PMI collocations.
 
 These extend the LLM-pipeline surface of plans/llm.py with the remaining
@@ -90,7 +90,7 @@ def _hash256(col):
 def _gate_sql(md5_expr: str) -> str:
     """First-byte value (0..255) of an md5 hex SQL expression — the single
     strpos-nibble idiom (SQL twin of _md5_gate); every hash gate below
-    derives from this one definition (r06 review)."""
+    derives from this one definition."""
     return (
         f"((strpos('0123456789abcdef', substring({md5_expr}, 1, 1)) - 1) * 16 + "
         f"(strpos('0123456789abcdef', substring({md5_expr}, 2, 1)) - 1))"
@@ -139,7 +139,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom-filter decontamination sketch (r10): the membership member of the
+# Bloom-filter decontamination sketch: the membership member of the
 # deterministic-sketch family (count-min = frequency, histogram =
 # quantiles, HLL = distinct, Bloom = membership). text_decontaminate
 # broadcasts the raw eval n-gram SET; at 100 TB-of-eval-suites scale you
@@ -218,10 +218,10 @@ def sketch_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     _BLOOM_M_CAP) and the 1-row m config — are broadcast-hinted; the
     exact AUDIT arm joins the raw gram set UNHINTED (it grows with the
     eval suite, so the planner chooses from its checkpointed stats — the
-    r08 stream-static lesson; at true scale you drop the audit arm and
+    stream-static-join rule; at true scale you drop the audit arm and
     ship only the sketch). bg feeds FOUR consumers (m config, bits
-    build, exact arm), so it is checkpointed once (r10 review: lazily it
-    re-derived the bench-gram explode per consumer — six documents scans
+    build, exact arm), so it is checkpointed once (lazily it would
+    re-derive the bench-gram explode per consumer — six documents scans
     in one query). The corpus explode stays lazy: its two consumers are
     one-pass arms (the text_decontaminate shape), and materializing a
     corpus-proportional relation costs more than the second scan."""
@@ -265,7 +265,7 @@ def bloom_score(
 
     No distinct on the audit arm: the corpus explode is already distinct
     on (doc_id, gram) and bg on gram, so the equi-join cannot duplicate
-    (r10 ADVICE — the extra aggregation bought nothing)."""
+    (an extra aggregation would buy nothing)."""
     corpus = bloom_corpus_grams(load_table(spark, sf_dir, "documents"))
     exact = corpus.join(bg, "gram").select("doc_id", "gram")
     bagg = bloomhit.groupBy("doc_id").agg(
@@ -298,7 +298,7 @@ def bloom_m(bg: DataFrame) -> DataFrame:
     length(bin(8n-1)) < 63, i.e. |grams| < 2^59 — Java shiftleft masks the
     shift width (&63) while DuckDB does not. Far beyond _BLOOM_M_CAP's
     intent, but the validity bound belongs next to the n >= 1 one
-    (r10 ADVICE)."""
+."""
     return bg.agg(F.count(F.lit(1)).alias("n")).select(
         F.least(
             F.expr(
@@ -573,7 +573,7 @@ def pack_sequences_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # AND pack_sequences_payload AND pipeline_export_shards: ONE definition of
 # the packing recurrence's reference implementation, parameterized over
 # the source relation so the train-filtered export oracle replays the
-# same CTE chain instead of a hand-maintained copy (r06 review).
+# same CTE chain instead of a hand-maintained copy.
 
 
 def pack_greedy_ctes(doc_rel: str) -> str:
@@ -631,7 +631,7 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _payload_select_sql(doc_rel: str) -> str:
     """SQL payload materialization over a `packed` CTE joined back to
     ``doc_rel`` — one definition shared by pack_sequences_payload and
-    pipeline_export_shards (r06 review)."""
+    pipeline_export_shards."""
     return f"""SELECT p.source, CAST(p.seq_id AS BIGINT) AS seq_id,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(p.n_tok) AS BIGINT) AS tok_total,
@@ -790,7 +790,7 @@ _MIX_W_SRC0, _MIX_W_SRC1 = 0.30, 0.20  # ...weighted toward curated shards
 # asserted by tests/test_oracle_parity.py::test_mixture_source_cardinality),
 # so 18 = 20 - the 2 named shards. A real pipeline would compute this per
 # remaining shard from the ns aggregate; the literal keeps the oracle SQL
-# and the Spark plan trivially identical (r05 ADVICE: name the assumption).
+# and the Spark plan trivially identical (the assumption is named here).
 _MIX_N_SOURCES = 20
 _MIX_RESIDUAL_SHARDS = _MIX_N_SOURCES - 2
 
@@ -862,8 +862,7 @@ _SPLIT_HASH_SQL = _gate_sql(f"md5('{_SPLIT_SALT}' || CAST(doc_id AS VARCHAR))")
 
 # The ONE split-assignment definition, both sides: every query that needs
 # the split (assignment, export shards, leakage audit) derives from these
-# two, so thresholds/gate changes can never diverge between them (r07
-# review).
+# two, so thresholds/gate changes can never diverge between them.
 _SPLIT_CASE_SQL = f"""CASE WHEN {_SPLIT_HASH_SQL} < {_SPLIT_VALID_LT} THEN 'valid'
                 WHEN {_SPLIT_HASH_SQL} < {_SPLIT_TEST_LT} THEN 'test'
                 ELSE 'train' END"""
@@ -922,7 +921,7 @@ def _shard_rank(df: DataFrame, h, n_shards: int, tie_cols: list) -> DataFrame:
     REMAINING hex (decorrelated from the shard byte) then ``tie_cols``.
     One shard-key exchange + per-shard sort — the no-global-sort
     permutation shared by shuffle_training_order and
-    pipeline_export_shards (r06 review). Keeps all input columns."""
+    pipeline_export_shards. Keeps all input columns."""
     from pyspark.sql import Window
 
     keyed = df.select(
@@ -970,7 +969,7 @@ _CHUNK_SIZE, _CHUNK_STRIDE = 32, 24  # 8-token overlap
 
 # The ONE definition of the chunk-window grid — (doc_id, w, start) rows,
 # one per window — shared by text_chunk_windows and pipeline_rag_prep
-# (r06 review: size/stride semantics must not be hand-synced).
+# (size/stride semantics must not be hand-synced).
 CHUNK_STARTS_CTE = f"""wl AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     starts AS (
         SELECT doc_id, w,
@@ -1097,7 +1096,7 @@ def text_quality_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# The end-to-end pretraining prep pipeline (r05 capstone): every stage a
+# The end-to-end pretraining prep pipeline (the capstone): every stage a
 # real 100 TB corpus run chains, in the order that keeps each stage cheap —
 # exact dedup first (mass duplicates die in one fingerprint shuffle),
 # then benchmark decontamination (broadcast gram set, map-side),
@@ -1484,7 +1483,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Export capstone (r06): the last mile of the pretraining pipeline — take
+# Export capstone: the last mile of the pretraining pipeline — take
 # the TRAIN split, greedy-pack it into cap-sized sequences per source
 # shard, materialize each sequence's text payload, and assign every
 # sequence a (shard, rank) position in a deterministic training order.
@@ -1526,7 +1525,7 @@ _EXPORT_SHARD_SQL = f"{_gate_sql(_EXPORT_MD5_SQL)} % {_EXPORT_SHARDS}"
 def pipeline_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(shard, rank, source, seq_id, n_docs, tok_total, payload): the
     train-split corpus packed and laid out for training. Composes the
-    r06 stages end-to-end — split gate (map-side), greedy packing (one
+    packing stages end-to-end — split gate (map-side), greedy packing (one
     source-key shuffle, keyed applyInPandas), payload materialization
     (one hash agg), deterministic shard/rank order (per-shard window) —
     and the oracle replays the whole chain in one recursive-CTE query.
@@ -1553,7 +1552,7 @@ def pipeline_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE-ish token counting (r06): whitespace tokens vs subword-style regex
+# BPE-ish token counting: whitespace tokens vs subword-style regex
 # tokens (letter runs | single digits | single punctuation — the ASCII
 # core of the GPT-2 pre-tokenizer pattern, constrained to constructs RE2
 # and Java regex interpret identically). The ratio ("fertility") is the
@@ -1590,7 +1589,7 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Per-source quality drift monitor (r06): the data-ops check a pipeline
+# Per-source quality drift monitor: the data-ops check a pipeline
 # runs per ingest batch — each source shard's mean quality score as a
 # z-score against the across-shard distribution; |z| >= 2 flags a shard
 # whose crawler/extractor likely regressed. Reuses the ONE logistic
@@ -1602,7 +1601,7 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ONE oracle for the batch monitor AND its streaming twin
 # (plans/stream.py imports it): the drained availableNow stream equals
-# the batch result, so a single SQL definition covers both (r06 review).
+# the batch result, so a single SQL definition covers both.
 QUALITY_DRIFT_ORACLE = f"""
     WITH {_quality_cte_sql('documents').strip()},
     per_src AS (
@@ -1650,7 +1649,7 @@ def dq_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Join-key skew profile (r06): the diagnostic run BEFORE choosing a join
+# Join-key skew profile: the diagnostic run BEFORE choosing a join
 # strategy — per candidate key column, the share of rows held by the
 # hottest key, total keys, and rows per key. top_share near 1/n_keys means
 # uniform (hash join fine); a large top_share says salt that key or
@@ -1662,7 +1661,7 @@ def dq_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _skew_sql(key_col: str) -> str:
     # NULL keys drop out of any equi-join, so they are excluded from the
     # hot-key arithmetic and reported as their own count instead — a 30%
-    # NULL column must not masquerade as a salting candidate (r06 review).
+    # NULL column must not masquerade as a salting candidate.
     return f"""
         SELECT '{key_col}' AS key_col,
                CAST(max(c) AS BIGINT) AS top_key_n,
@@ -1707,7 +1706,7 @@ def skew_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RAG prep capstone (r06): chunk -> featurize -> retrieve, end to end —
+# RAG prep capstone: chunk -> featurize -> retrieve, end to end —
 # the serving-side sibling of pipeline_pretrain_v2 (pretraining) and
 # pipeline_export_shards (export). Documents are cut into the standard
 # overlapping token windows, every chunk gets a vocabulary-free
@@ -1783,7 +1782,7 @@ def pipeline_rag_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Chunk grid + tokens: the shared _chunk_starts_df grid, exploding the
     # sliced token array DIRECTLY (no join-to-string-and-resplit round
-    # trip — r06 review).
+    # trip).
     toks = _chunk_starts_df(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
         ((F.col("start") - 1) / _CHUNK_STRIDE).cast("long").alias("chunk_id"),
@@ -1836,7 +1835,7 @@ def pipeline_rag_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Quality-weighted sampling (r07): keep each document with probability
+# Quality-weighted sampling: keep each document with probability
 # proportional to its logistic quality score — the importance-sampling
 # step between quality scoring and mixture construction in a pretraining
 # pipeline (upsample clean text without hard-thresholding). The coin is
@@ -1874,7 +1873,7 @@ def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Distributed model training (r07): 2 full-batch gradient-descent steps of
+# Distributed model training: 2 full-batch gradient-descent steps of
 # a logistic-regression quality classifier, trained to imitate the fixed
 # scorer's labels (self-distillation — the setup for replacing a heuristic
 # with a learned filter). The third iterative-training operator after
@@ -1990,7 +1989,7 @@ def train_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Both terms sit on the 1e-6 grid, so this snap is never at a
         # rounding boundary — Python round() == SQL round() here. The
         # "+ 0.0" kills IEEE -0.0 (Python round keeps the sign bit, and a
-        # F.lit(-0.0) would leak it into the result; r07 hash-fail class).
+        # F.lit(-0.0) would leak it into the result and fail the hash).
         w = [
             round(w[j] - _LR * g[j], 6) + 0.0
             for j in range(4)
@@ -2013,7 +2012,7 @@ def train_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Split-leakage audit (r07): do any eval-split documents share an exact
+# Split-leakage audit: do any eval-split documents share an exact
 # content fingerprint with the train split? The QA gate every pipeline
 # runs after splitting — the fixtures plant exact duplicate docs, and
 # hash-gated splits assign copies INDEPENDENTLY (different doc_ids ->
@@ -2030,8 +2029,7 @@ def _leakage_audit_sql(split_case_sql: str) -> str:
     """The ONE leakage-audit oracle body, parametrized on the split CASE
     expression — split_leakage_audit (doc-id gate) and
     split_by_cluster_audit (content gate) render from this template, so
-    the audit semantics can never diverge between them. Rendering with
-    _SPLIT_CASE_SQL is byte-identical to the r07–r15 driver-green text."""
+    the audit semantics can never diverge between them."""
     return f"""
     WITH s AS (
         SELECT doc_id,
@@ -2087,7 +2085,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Content-aware split (r16, closes the loop split_leakage_audit opened):
+# Content-aware split (closes the loop split_leakage_audit opened):
 # gate the split on the CONTENT fingerprint instead of the doc_id, so
 # every copy of a document — planted re-crawls, mirrored pages, new ids
 # for old bytes — lands in the SAME split by construction. The exact
@@ -2108,8 +2106,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: identical profile to split_train_valid_test — fp + md5 gate are
 # per-row codegen expressions, so at 100 TB this is a full scan and
-# nothing else; the audit twin below adds the one fp-keyed equi-join the
-# r07 audit already carries.
+# nothing else; the audit twin below adds the one fp-keyed equi-join
+# split_leakage_audit already carries.
 # ---------------------------------------------------------------------------
 
 _SPLITC_SALT = "splitc:"
@@ -2162,7 +2160,7 @@ def split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("split_by_cluster_audit", _leakage_audit_sql(_SPLITC_CASE_SQL))
 def split_by_cluster_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r07 leakage audit re-run on the content-keyed split: every
+    """The split_leakage_audit re-run on the content-keyed split: every
     eval-split fingerprint is disjoint from train BY CONSTRUCTION (equal
     fp => equal gate => equal split), so n_contaminated is exactly 0
     where the doc-id split's audit shows the planted-duplicate leak.
@@ -2173,7 +2171,7 @@ def split_by_cluster_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Near-dup-robust split (r16): the exact-fp gate puts exact COPIES in one
+# Near-dup-robust split: the exact-fp gate puts exact COPIES in one
 # split, but a NEAR-duplicate (re-crawl with a truncated tail, the
 # _near_corpus plants) has a different fingerprint -> an independent gate
 # -> its cluster can straddle train and eval (measured: 4 straddling
@@ -2299,7 +2297,7 @@ def split_by_neardup_cluster_audit(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Vocabulary coverage / OOV reporting (r08): build the top-V token
+# Vocabulary coverage / OOV reporting: build the top-V token
 # vocabulary by corpus frequency (the tokenizer-building precursor) and
 # report per-source out-of-vocabulary rates — the go/no-go check before
 # committing a tokenizer to a data mixture. Scale: token counts are one
@@ -2358,7 +2356,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Quantile feature binning (r08): the distributed QuantileDiscretizer —
+# Quantile feature binning: the distributed QuantileDiscretizer —
 # assign every document to a quality-score decile and profile each bin.
 # The scalable shape: per-VALUE counts (one hash shuffle over a relation
 # bounded by the score's 1e-4 rounding grid, so <= ~10k rows regardless of
@@ -2442,7 +2440,7 @@ def train_feature_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE-merge tokenizer training (r10, r09 VERDICT task 4): the missing
+# BPE-merge tokenizer training: the missing
 # iterative TEXT operator — kmeans/PageRank/logreg prove the exactly-
 # oracle-replayable fixed-round pattern; tokenizer training is the
 # LLM-pipeline operator that class exists for. _BPE_ROUNDS merge rounds
@@ -2484,8 +2482,7 @@ def _bpe_round_ctes(i: int) -> str:
 
 # w0 + the unrolled merge rounds, shared between the trainer's oracle and
 # the streaming tokenizer's (which replays the training to obtain the same
-# m1..m{_BPE_ROUNDS} the Spark side embeds as literals). The emitted
-# TRAIN_BPE_ORACLE text is byte-identical to its pre-refactor form.
+# m1..m{_BPE_ROUNDS} the Spark side embeds as literals).
 _BPE_W0_CTE = """w0 AS (
         SELECT word, CAST(count(*) AS BIGINT) AS cnt,
                regexp_replace(word, '(.)', ' \\1 ', 'g') AS enc

@@ -804,8 +804,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0.0001/SF) is data-scale-dependent; here the cut is 1.5x the MEAN
     per-part value, which is scale-free — non-empty and selective at every
     SF (49 of 2000 parts at sf0.01), so the driver row actually exercises
-    the scalar-subquery arithmetic instead of matching empty relations
-    (r04 VERDICT item)."""
+    the scalar-subquery arithmetic instead of matching empty relations."""
     li = load_table(spark, sf_dir, "lineitem")
     pv = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("val")

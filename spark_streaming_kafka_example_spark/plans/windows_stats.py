@@ -268,7 +268,7 @@ def agg_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_join silently drops nulls, so a null heavy-hitter would
     otherwise vanish from the serialized output; -1 sits outside the
     generator's id domain (ids start at 0), so the sentinel cannot alias
-    a real user (r06 review)."""
+    a real user."""
     freq = (
         load_table(spark, sf_dir, "events")
         .select(F.coalesce("user_id", F.lit(-1)).alias("user_id"), "event_type")
@@ -369,7 +369,7 @@ def agg_bitwise_tour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Funnel analysis (r06): strictly-ordered view -> click -> purchase
+# Funnel analysis: strictly-ordered view -> click -> purchase
 # conversion. Each stage's entry time is the user's first qualifying event
 # AT OR AFTER the previous stage's entry — the standard product-analytics
 # funnel, expressed as per-user min-aggregations chained by equi-joins on
@@ -414,14 +414,13 @@ def funnel_stage_tables(
     relation. ``within_hours`` bounds each transition (click within N
     hours of first view, etc. — the attribution-window variant); None
     keeps the unbounded ordered funnel. Three pushed-filter scans,
-    per-user min aggs, user_id-keyed joins — no window over the event
-    stream. Each stage relation is lazily checkpointed (the
-    kmeans_centroids idiom): it feeds both the NEXT stage's join and its
-    own consumer, and without the cut every consumer re-derives the chain
-    from the raw scan (a 12-scan plan, caught by r06 review; the plan
-    test pins <= 3 scans). ONE stage-builder shared by the summary,
+    per-user min aggs, user_id-keyed joins — no window over the event stream.
+    Each stage relation is lazily checkpointed (the kmeans_centroids idiom): it
+    feeds both the NEXT stage's join and its own consumer, and without the cut
+    every consumer re-derives the chain from the raw scan (a 12-scan plan; the
+    plan test pins <= 3 scans). ONE stage-builder shared by the summary,
     attribution, and time-to-convert queries so the staged-join semantics
-    cannot drift between them (r08 review)."""
+    cannot drift between them."""
 
     def first_at_or_after(etype: str, prev: DataFrame | None, prev_t: str, out: str) -> DataFrame:
         e = ev.filter(F.col("event_type") == etype).select("user_id", "ts")
@@ -505,14 +504,14 @@ FUNNEL_24H_ORACLE = """
 
 @register("funnel_within_24h", FUNNEL_24H_ORACLE)
 def funnel_within_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Attribution-window funnel (r08): click within 24h of first view,
+    """Attribution-window funnel: click within 24h of first view,
     purchase within 24h of first click."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     return funnel_summary(ev, within_hours=24)
 
 
 # ---------------------------------------------------------------------------
-# Time-to-convert distribution (r08): for users who complete the funnel,
+# Time-to-convert distribution: for users who complete the funnel,
 # how long did view -> purchase take — bucketed by whole days. A bucketed
 # histogram instead of a percentile agg on purpose: an exact percentile
 # buffer would hold every converting user's latency in one aggregation
@@ -574,7 +573,7 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cohort retention (r06): users grouped by first-seen day; per (cohort,
+# Cohort retention: users grouped by first-seen day; per (cohort,
 # day-offset), how many came back. Two user_id-keyed aggregations + one
 # join, then a tiny (cohort, offset) agg — the canonical retention matrix
 # without any window function, so every stage is a partial-aggregated
@@ -604,7 +603,7 @@ def cohort_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     # act feeds BOTH the cohort-min agg and the retention join; the lazy
     # checkpoint materializes the (much smaller) distinct user-day relation
-    # once instead of scanning events twice (r06 review).
+    # once instead of scanning events twice.
     act = (
         ev.select("user_id", F.date_trunc("day", "ts").alias("d"))
         .distinct()
@@ -623,7 +622,7 @@ def cohort_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Gap-filled minute rollup with LOCF (r06): the hypertable
+# Gap-filled minute rollup with LOCF: the hypertable
 # time_bucket_gapfill shape — a dense per-entity minute spine over a
 # bounded horizon from each entity's first event, per-minute sums where
 # data exists, last-observation-carried-forward through the gaps, and a
@@ -707,7 +706,7 @@ def rollup_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Gaps-and-islands (r06): collapse each user's consecutive same-state days
+# Gaps-and-islands: collapse each user's consecutive same-state days
 # into intervals — the classic rn-difference trick (row_number over all
 # days minus row_number within the state partition is constant exactly
 # across a consecutive run). State here is scale-free: a day is 'above' or
@@ -777,7 +776,7 @@ def islands_user_daily_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Event-sequence path mining (r07): per-user ordered event-type journeys ->
+# Event-sequence path mining: per-user ordered event-type journeys ->
 # sliding trigram paths -> global top-20. The clickstream "top paths"
 # report. Scale: one exchange on user_id for the ordered collect (state per
 # user = that user's events, the same bound as sessionization), trigram
@@ -785,7 +784,7 @@ def islands_user_daily_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregated hash shuffle, and the top-20 is TakeOrderedAndProject — no
 # global sort, nothing quadratic.
 #
-# r08 (r07 VERDICT task 4): the per-user collect is CAPPED at the most
+# The per-user collect is CAPPED at the most
 # recent _PATH_MAX_EVENTS events. At 100 TB one bot/power user would
 # otherwise materialize an unbounded array in a single aggregation buffer
 # (straggler/OOM); the rank prefilter bounds it while the row_number
@@ -889,7 +888,7 @@ def paths_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Per-minute volume anomaly detection (r07): minute rollup z-scored against
+# Per-minute volume anomaly detection: minute rollup z-scored against
 # the distribution of ALL minute counts — the ops-dashboard "traffic spike"
 # monitor. Scale: one minute-rollup shuffle; the two global moments are a
 # broadcast one-row relation (never a driver fetch), so the flagging pass
@@ -945,7 +944,7 @@ def anomaly_minute_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DAU / trailing-7-day stickiness (r07): per day, distinct daily actives
+# DAU / trailing-7-day stickiness: per day, distinct daily actives
 # and distinct actives over the trailing week. count(DISTINCT) over a
 # sliding RANGE window doesn't exist in either engine; the scalable
 # composition materializes the (user, day) relation once, then each
@@ -1010,7 +1009,7 @@ def dau_stickiness_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PageRank over the customer->supplier purchase graph (r07): the second
+# PageRank over the customer->supplier purchase graph: the second
 # iterative graph operator (operators/pagerank.py) next to connected
 # components — who are the structurally central suppliers. Fixed 2
 # iterations with per-step round(8) make Lloyd-style exact oracle replay
@@ -1060,7 +1059,7 @@ def graph_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Latency-style percentile bands (r07): the P50/P95/P99-by-dimension
+# Latency-style percentile bands: the P50/P95/P99-by-dimension
 # dashboard query — exact interpolated percentiles per (event_type,
 # hour-of-day) cell. Scale: one hash exchange on the (small) group key;
 # the per-group sort is bounded by the cell size. The sketch-based
@@ -1084,7 +1083,7 @@ def latency_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # ONE percentile buffer per cell (array-argument form), not three:
     # each separate percentile(value, p) aggregate would accumulate and
-    # sort the cell's values independently (r07 review).
+    # sort the cell's values independently.
     agg = ev.groupBy(
         "event_type", F.hour("ts").cast("int").alias("hod")
     ).agg(
@@ -1100,7 +1099,7 @@ def latency_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Intraday rolling correlation (r07): per day, the correlation between
+# Intraday rolling correlation: per day, the correlation between
 # hourly view and click value sums over the trailing 7 OBSERVED hourly
 # buckets (hours with no view/click rows are absent from the series, so
 # the ROWS frame skips them — gap-fill the grid upstream if a strict
@@ -1182,7 +1181,7 @@ def timeseries_rolling_corr_intraday(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# First-order Markov transition matrix over event journeys (r07): per
+# First-order Markov transition matrix over event journeys: per
 # (src, dst) event-type pair, the transition count and conditional
 # probability P(dst | src) — the sequence model behind next-event
 # prediction and journey simulation. Shares the per-user ordered-collect
@@ -1236,7 +1235,7 @@ def paths_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Z-order layout key (r08): driver-checked oracle row for the Morton-code
+# Z-order layout key: driver-checked oracle row for the Morton-code
 # machinery behind operators/zorder.py (zorder_layout itself stays
 # pytest-verified — repartitionByRange samples boundaries, so file
 # assignment is not oracle-deterministic, but the z-VALUE is pure bit
@@ -1301,7 +1300,7 @@ def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Z-ordered WRITE read-back (r09, r08 VERDICT task 6): the layout machinery
+# Z-ordered WRITE read-back: the layout machinery
 # itself moves inside a driver hash — events are zorder_layout-ed on
 # (user_id, iv), written to parquet, read BACK, and filtered with a
 # selective two-dimension corner predicate (the query shape z-ordering
@@ -1362,7 +1361,7 @@ def layout_zorder_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Count-min sketch heavy hitters (r09): the mergeable-sketch story. The
+# Count-min sketch heavy hitters: the mergeable-sketch story. The
 # sketch is d=4 rows x w=256 buckets of COUNTS — built by one map-side
 # hash projection + a partial-aggregated groupBy over (row, bucket), so at
 # 100 TB every executor folds its partition into 1024 cells and the merge
@@ -1471,8 +1470,8 @@ def cms_cells(hashed: DataFrame) -> DataFrame:
 def cms_score(spark: SparkSession, sf_dir: str, cells: DataFrame) -> DataFrame:
     """Exact top-20 + min-cell estimates against a GIVEN cells relation —
     the single definition of the tie-break / d / overcount surface shared
-    by the batch and streaming twins (r09 review: a copy in each twin
-    could drift under one oracle)."""
+    by the batch and streaming twins (a copy in each twin could drift
+    under one oracle)."""
     exact = _cms_events(spark, sf_dir).groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -1495,11 +1494,11 @@ def cms_score(spark: SparkSession, sf_dir: str, cells: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bucketed co-located join read-back (r09): bucketing is SCALE.md's answer
+# Bucketed co-located join read-back: bucketing is SCALE.md's answer
 # to repeated big-big joins (write both sides bucketed on the key once;
 # every later join runs shuffle-free). Promoted from pytest-only
-# (tests/test_bucketing.py) to a driver row the same way r08 promoted the
-# sink round-trips: both sides are WRITTEN bucketed into a scratch
+# (tests/test_bucketing.py) to a driver row the same way as the sink
+# round-trips: both sides are WRITTEN bucketed into a scratch
 # database, read back through the bucketed tables, joined with broadcast
 # disabled, and aggregated — the write -> bucketed-read -> join path is
 # inside the hash, and the co-location property itself is asserted
@@ -1560,7 +1559,7 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # EAGER checkpoint: the lazy return would otherwise replan at the
         # driver's collection time, AFTER the finally restores the
         # broadcast threshold — taking the co-located join OUT of the
-        # hashed execution (r09 review). Materializing here pins the
+        # hashed execution. Materializing here pins the
         # hashed rows to the broadcast-disabled bucketed-join run.
         return agg.localCheckpoint()
     finally:
@@ -1568,8 +1567,8 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The checkpointed result no longer needs the scratch tables; drop
         # the UUID database so catalog entries don't accumulate per replay
         # (bench's min-of-3 would otherwise leave three per run, dangling
-        # once the atexit tmp cleanup removes the backing files — r09
-        # ADVICE). Best-effort: a failed drop must not mask the result.
+        # once the atexit tmp cleanup removes the backing files).
+        # Best-effort: a failed drop must not mask the result.
         try:
             spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         except Exception:
@@ -1577,7 +1576,7 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# A/B experiment lift (r09): the experimentation readout every product
+# A/B experiment lift: the experimentation readout every product
 # analytics stack runs. Assignment is the repo's deterministic md5 gate
 # (first byte of md5(user_id) < 128 -> treatment) — reproducible across
 # runs and engines, no rand(); the metric is purchases PER exposed
@@ -1638,7 +1637,7 @@ def experiment_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_purch") / F.count(F.lit(1)).cast("double"), 4
         ).alias("avg_p"),
     ).localCheckpoint()  # 2 rows; filtering lazily twice would otherwise
-    # re-run the full events scan + both aggregations per arm (r09 review)
+    # re-run the full events scan + both aggregations per arm
     c = arms.filter(F.col("variant") == "control").select(
         F.col("n_users").alias("control_users"),
         F.col("n_purchases").alias("control_purchases"),
@@ -1660,7 +1659,7 @@ def experiment_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Window distribution-function tour (r09): ntile / percent_rank /
+# Window distribution-function tour: ntile / percent_rank /
 # cume_dist — the last uncovered built-in window family (rank/row_number/
 # lag/lead/frames live in window_rank_tour / window_frame_navigation).
 # Per event_type, users ranked by their rounded spend; the user_id
@@ -1704,7 +1703,7 @@ def window_distribution_tour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic mergeable quantile sketch (r10, r09 VERDICT task 5): the
+# Deterministic mergeable quantile sketch: the
 # sibling of sketch_countmin_users, completing the sketch story
 # (agg_percentile_approx is rows-only by necessity — approx_percentile's
 # internal sketch isn't SQL-replayable; this one is BY CONSTRUCTION). A
@@ -1816,7 +1815,7 @@ def quantile_score(
     no-global-window rule), and the exact-rank count joins the value scan
     against the broadcast 4-row estimate relation.
 
-    ``group_cols`` (r12, the hll_grid_fill/hll_score convention): scores a
+    ``group_cols`` (the hll_grid_fill/hll_score convention): scores a
     sketch keyed by extra columns (the windowed twin) — ``cells`` carries
     them, ``vals`` must too (for the window-scoped rank audit), target
     ranks come from per-group n = sum(c) (derivable from the sketch
@@ -1927,7 +1926,7 @@ def sketch_quantile_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic HyperLogLog distinct sketch (r10): third of the sketch trio
+# Deterministic HyperLogLog distinct sketch: third of the sketch trio
 # (count-min = frequency, fixed-grid histogram = quantiles, HLL = distinct
 # count), making approximate COUNT DISTINCT hash-checkable the same way —
 # agg_approx_distinct stays rows-only because approx_count_distinct's
@@ -2029,7 +2028,7 @@ def hll_hashed(
     first hash byte (shared nibble idiom), rank from the next 60 bits via
     conv() on the Spark side (exact for < 2^63; the oracle replays it with
     the 15-term nibble sum). ``key``/``group_cols`` parametrize the keyed
-    variants (r11: the windowed twin counts user_id per time window) with
+    variants (the windowed twins count user_id per time window) with
     defaults preserving the original orders-table signature."""
     from ..operators.dedup import _nibble
 
@@ -2100,7 +2099,7 @@ def hll_score(
     indicator sum (BIGINT, exact); ONE float division at the end with the
     multiplication order pinned to the oracle's. ``exact`` overrides the
     default orders-table exact arm with any (group_cols..., n) relation
-    (r11: the windowed twin's per-window countDistinct)."""
+    (the windowed twins' per-window countDistinct)."""
     sk = regs.groupBy(*group_cols).agg(
         F.sum(
             F.expr(
@@ -2149,7 +2148,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom-pruned join (r11): the layout family's third technique after
+# Bloom-pruned join: the layout family's third technique after
 # z-order and bucketing — RUNTIME-FILTER join pruning, hand-rolled with
 # the deterministic Bloom machinery. The selective dimension side's join
 # keys build a self-sizing Bloom filter (textprep.bloom_m/bloom_bits:

@@ -16,7 +16,6 @@ __all__ = [
     "SENSOR_MASTER_SCHEMA",
     "SENSOR_JOINED_SCHEMA",
     "EVENT_PROPS_SCHEMA",
-    "EVENTS_SCHEMA",
     "DATE_FMT",
 ]
 
@@ -81,16 +80,3 @@ SENSOR_JOINED_SCHEMA = T.StructType(
 
 # The testdata `events.props` JSON column (TESTDATA.md).
 EVENT_PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])
-
-# events.parquet logical schema after the ns->timestamp conversion in
-# sources.load_table (physical file stores ts as INT64 TIMESTAMP(NANOS)).
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)

@@ -37,14 +37,11 @@ __all__ = [
     "TABLES",
     "read_jsonl",
     "load_table",
-    "load_tables",
-    "register_views",
     "read_csv_master",
     "read_json_stream_as_table",
     "kafka_stream",
     "kafka_batch",
     "socket_stream",
-    "file_stream",
     "rate_stream",
 ]
 
@@ -84,16 +81,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (SURVEY U1)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def read_csv_master(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """CSV batch source with declared schema + header (SURVEY S4).
 
@@ -118,8 +105,9 @@ def kafka_stream(
     Returns the standard Kafka columns (key/value binary, topic, partition,
     offset, timestamp, timestampType). Requires the spark-sql-kafka-0-10
     package on the classpath and a live broker — neither exists in the test
-    container, so this is exercised only when configured (tests use
-    ``file_stream``/``rate_stream`` instead; SURVEY §5).
+    container, so this is exercised only when configured (tests stream
+    bounded parquet or JSON directories through ``spark.readStream``
+    instead; SURVEY §5).
 
     Scale: one Spark input partition per Kafka partition; set
     ``minPartitions`` to fan out hotter topics.
@@ -153,15 +141,6 @@ def socket_stream(spark: SparkSession, host: str = "localhost", port: int = 9999
     return (
         spark.readStream.format("socket").option("host", host).option("port", port).load()
     )
-
-
-def file_stream(spark: SparkSession, path: str, schema, fmt: str = "parquet") -> DataFrame:
-    """Bounded-file streaming source — the oracle-testable stand-in for Kafka
-    (SURVEY §5 "streaming determinism"): run with trigger(availableNow=True)
-    and the result is a deterministic batch-equivalent table.
-    """
-    reader = spark.readStream.schema(schema)
-    return reader.format(fmt).load(path)
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:

@@ -20,10 +20,10 @@ Scale design (the part that matters at 100 TB):
   task failure.
 
 Batch-only by design: streaming JSONL ingestion goes through the file
-stream source on a directory (``sources.file_stream``), which already
+stream source on a directory (``spark.readStream.json``), which already
 handles discovery/exactly-once.
 
-Filesystem contract (r07 ADVICE): listing, sizing, and reads go through
+Filesystem contract: listing, sizing, and reads go through
 local ``os``/``open`` calls, so driver and executors must share a POSIX
 view of ``path`` (local disk in tests, NFS/FUSE-mounted object storage on
 a cluster). Native object-store URLs (s3://, hdfs://) are NOT resolved —
@@ -81,7 +81,7 @@ def _infer_field(value) -> T.DataType:
 
 def _merge_types(a: T.DataType | None, b: T.DataType | None) -> T.DataType | None:
     """Widening merge across probe lines (the spark.read.json sampling
-    contract, r07 ADVICE): equal types keep, long+double widens to double,
+    contract): equal types keep, long+double widens to double,
     any other conflict widens to string; None (only nulls seen so far)
     defers to whichever side has evidence."""
     if a is None:
@@ -96,7 +96,7 @@ def _merge_types(a: T.DataType | None, b: T.DataType | None) -> T.DataType | Non
 def _json_text(v) -> str:
     """Render a non-string JSON value cast into a string column as JSON
     text (compact separators, true/false booleans, raw UTF-8), never the
-    Python repr (r07 ADVICE — str({'a': 1}) gave "{'a': 1}").
+    Python repr (str({'a': 1}) would give "{'a': 1}").
 
     Documented divergence from spark.read.json, which returns the RAW
     input substring: values here are RE-RENDERED from the parsed object,
@@ -196,7 +196,7 @@ class JsonlDataSource(DataSource):
     def name(cls) -> str:
         return "jsonl"
 
-    # Bounded multi-file probe (r08 ADVICE): sample the head of up to
+    # Bounded multi-file probe: sample the head of up to
     # _PROBE_FILES files, not just the first — keys appearing only in
     # later files of a multi-file path would otherwise be silently
     # dropped, unlike spark.read.json's cross-file sampling. Still
@@ -210,9 +210,8 @@ class JsonlDataSource(DataSource):
         """Infer by MERGING keys and types across the whole bounded probe
         window (first _PROBE_LINES lines of each of the first
         _PROBE_FILES files), the spark.read.json sampling contract in
-        miniature (r07/r08 ADVICE — the old first-line return dropped
-        keys that only appear later; the first-file-only window dropped
-        keys appearing only in later files): field order is first
+        miniature (a first-line or first-file-only window would drop keys
+        that only appear later): field order is first
         appearance, long+double widens to double, other conflicts widen
         to string, a field seen only as null types as string. Callers
         with a known layout use the S4 declared-schema path

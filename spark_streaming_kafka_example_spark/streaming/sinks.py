@@ -38,14 +38,14 @@ def console_sink(df: DataFrame, mode: str = "append", **options: Any) -> Streami
 
 
 def memory_sink(
-    df: DataFrame, name: str, mode: str = "append", trigger_available_now: bool = True
+    df: DataFrame, name: str, mode: str = "append"
 ) -> StreamingQuery:
-    """Memory sink — the deterministic test harness sink (pyspark_guide):
-    bounded source + availableNow + memory table == batch-equivalent result."""
-    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    """Memory sink — the deterministic test harness sink: bounded source +
+    availableNow + memory table == batch-equivalent result."""
+    return (
+        df.writeStream.outputMode(mode).format("memory").queryName(name)
+        .trigger(availableNow=True).start()
+    )
 
 
 def parquet_sink(

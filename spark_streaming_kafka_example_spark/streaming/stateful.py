@@ -63,47 +63,6 @@ def stateful_running_count(words: DataFrame, key_col: str = "word") -> DataFrame
     )
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas (the Spark 4.x-native arbitrary-state API)
-    speaks protobuf to the state server; this container ships a broken
-    google.protobuf, so the TWS path is gated. applyInPandasWithState above
-    is the fully-supported equivalent."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stateful_running_count_tws(words: DataFrame, key_col: str = "word") -> DataFrame:
-    """transformWithStateInPandas running count — same semantics as
-    ``stateful_running_count`` via the newer API (requires RocksDB state
-    store provider + working protobuf; see ``tws_available``)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._count = handle.getValueState("count", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            new = sum(len(pdf) for pdf in rows)
-            prev = self._count.get()
-            total = (prev[0] if prev else 0) + new
-            self._count.update((total,))
-            yield pd.DataFrame({"word": [key[0]], "count": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return words.groupBy(key_col).transformWithStateInPandas(
-        RunningCount(),
-        outputStructType=_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 _SESSION_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -209,7 +168,7 @@ def stateful_sessionizer(
     Emits CLOSED sessions only; the still-open session per key stays in
     the state store (bounded by keys, not stream length).
 
-    ``idle_timeout_ms`` (r15): without it, a key's FINAL session closes
+    ``idle_timeout_ms``: without it, a key's FINAL session closes
     only when a later event for that key arrives past the gap — i.e.
     never, for a user who left. When set, a key idle for idle_timeout_ms
     of processing time has its open session FLUSHED (emitted as closed,
@@ -279,8 +238,8 @@ def stateful_greedy_packer(
         raise ValueError("cap must be >= 1")
 
     # Output schema/columns derive from the passed column NAMES and the
-    # input's own field types (r05 ADVICE: the previous hard-coded
-    # source/doc_id/n_tok schema silently mislabeled non-default callers).
+    # input's own field types: a hard-coded source/doc_id/n_tok schema
+    # would silently mislabel non-default callers.
     in_fields = {f.name: f for f in docs.schema.fields}
     out_schema = T.StructType(
         [in_fields[shard_col], in_fields[order_col], in_fields[size_col],
@@ -313,7 +272,7 @@ def stateful_greedy_packer(
 
 # state per query key: the CURRENT top-k candidate lists (ids + scores,
 # parallel arrays, each <= k) — O(k) per key no matter how many candidates
-# stream past. This is the state-space FIXED-K rule (r06/r07): a streaming
+# stream past. This is the state-space FIXED-K rule: a streaming
 # top-k whose state is collect_list-of-everything holds ~n_probe/k of the
 # corpus per query before the emit-time slice applies; this fold never
 # holds more than k. The capability traces to the reference's stateful-agg
@@ -338,7 +297,7 @@ def _topk_update_fn(
     tests can drive it directly against a fake GroupState and pin the
     <= k state bound).
 
-    Merge semantics (r15 ADVICE): candidates DEDUPE BY ID keeping the best
+    Merge semantics: candidates DEDUPE BY ID keeping the best
     score — a re-observed (key, id) pair (source replay after restart, a
     generator that re-yields) must not occupy two of the k slots — and NaN
     scores are excluded before ranking, matching the batch rankers'
@@ -423,9 +382,8 @@ def stateful_topk_fold(
     """Bounded streaming top-k: fold (key, id, score) candidate rows into
     the per-key best k, holding ONLY those k as state.
 
-    Replaces the complete-mode ``slice(array_sort(collect_list(...)), 1, k)``
-    aggregation the at-ingest ANN probes used through r13 (r12/r13 VERDICT
-    task 1): that shape's state row per query held EVERY probed candidate
+    Replaces a complete-mode ``slice(array_sort(collect_list(...)), 1, k)``
+    aggregation: that shape's state row per query held EVERY probed candidate
     (~ n_probe/k of the corpus) and only applied the slice at emit —
     unbounded at 100 TB. Here each micro-batch merges its candidates with
     the stored k, re-ranks, and keeps the best k (descending score, id
@@ -441,7 +399,7 @@ def stateful_topk_fold(
     Candidates dedupe by id (best score wins) and NaN scores are dropped
     before ranking — the batch rankers' semantics (see _topk_update_fn).
 
-    ``ttl_ms`` (r15, r14 VERDICT task 2): when set, a served key whose
+    ``ttl_ms``: when set, a served key whose
     state goes idle for ttl_ms is EXPIRED via a processing-time timeout
     (state.remove on fire), so a long-running serving deployment holds
     O(k x ACTIVE query keys) — not O(k x keys ever seen), the last
@@ -450,13 +408,13 @@ def stateful_topk_fold(
     TOPK_TTL_MS (or a deployment choice) in a continuously-triggered
     serving stream; expiry is pinned end-to-end by
     test_stateful_topk_fold_ttl_expires_idle_key. The default is None
-    (NoTimeout) because merely CONFIGURING ProcessingTimeTimeout makes
-    the operator request follow-up micro-batches unconditionally
+    (NoTimeout) because merely CONFIGURING ProcessingTimeTimeout makes the
+    operator request follow-up micro-batches unconditionally
     (shouldRunAnotherBatch — see TOPK_TTL_MS comment), so a bounded
-    availableNow oracle drain would never terminate; the r14 VERDICT's
-    "bounded drains are timeout-free" assumption fails at the engine
-    level, and the drained VALUES are TTL-independent anyway (expiry only
-    removes state, never changes emissions).
+    availableNow oracle drain would never terminate ("bounded drains are
+    timeout-free" does not hold at the engine level), and the drained VALUES
+    are TTL-independent anyway (expiry only removes state, never changes
+    emissions).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -506,7 +464,7 @@ def stateful_transition_pairs(
     with O(1) instead of O(history) per-key state — no cap needed for
     MEMORY because nothing accumulates.
 
-    ``pair_cap`` is a SEMANTIC guard, not a memory one (r08 ADVICE): when a
+    ``pair_cap`` is a SEMANTIC guard, not a memory one: when a
     consumer shares an oracle with the batch twin — whose derivation is
     rank-capped at _PATH_MAX_EVENTS events per user — a user exceeding the
     cap would make the twins silently diverge under one oracle. Passing
@@ -538,19 +496,18 @@ def stateful_transition_pairs(
         types = list(rows[type_col])
         n_prev = 0
         if state.exists:
-            # STATE-SCHEMA BREAK (r09): n_pairs is a FOURTH state field. A
-            # checkpoint written by the 3-field r08 schema cannot restart
+            # STATE-SCHEMA BREAK: n_pairs is a FOURTH state field. A
+            # checkpoint written by the older 3-field schema cannot restart
             # against it — Spark's state-store schema check
             # (spark.sql.streaming.stateStore.stateSchemaCheck, default on)
             # rejects the store with StateSchemaNotCompatible at load,
             # BEFORE this function ever runs, so a defensive short-tuple
-            # unpack here would be dead code. Upgrading across r08->r09
-            # requires a fresh checkpoint directory (r09 ADVICE, resolved
-            # by documenting the break rather than papering over it).
+            # unpack here would be dead code. Upgrading across the break
+            # requires a fresh checkpoint directory.
             # If a deployment DISABLES that check (or the checkpoint
             # predates state-schema files), the strict unpack below is the
             # first thing to notice — name the break instead of dying with
-            # a bare worker-side ValueError (r10 ADVICE).
+            # a bare worker-side ValueError.
             try:
                 _last_ts, _last_id, last_type, n_prev = state.get
             except ValueError as exc:

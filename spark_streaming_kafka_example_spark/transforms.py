@@ -19,7 +19,6 @@ __all__ = [
     "with_event_time",
     "with_month",
     "with_date_roundtrip",
-    "to_json_rows",
     "split_explode_words",
 ]
 
@@ -75,13 +74,6 @@ def with_date_roundtrip(df: DataFrame, col: str = "date", out: str = "ts_string"
     NB from_unixtime emits the session-default pattern, matching the
     reference's behavior."""
     return df.withColumn(out, F.from_unixtime(F.unix_timestamp(F.col(col), fmt)))
-
-
-def to_json_rows(df: DataFrame, out: str = "value") -> DataFrame:
-    """Whole-row -> JSON string, the Kafka-sink serialization idiom
-    (SURVEY P5; reference StreamingWithKafkaJoinedData.scala:49
-    ``selectExpr("to_json(struct(*)) AS value")``)."""
-    return df.select(F.to_json(F.struct("*")).alias(out))
 
 
 def split_explode_words(df: DataFrame, col: str = "value", out: str = "word") -> DataFrame:

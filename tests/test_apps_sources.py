@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -112,6 +114,16 @@ def test_sliding_window_analysis_app(spark, tmp_path):
     for q in queries:
         q.processAllAvailable()
         q.stop()
+
+
+def test_sliding_window_analysis_alert_sink_needs_checkpoint(spark):
+    """The default alert_topic with no checkpoint is refused before any
+    query starts, rather than running without the reference's Kafka alert
+    fan-out (SlidingWindow.scala:69-73)."""
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="alert_topic=.*checkpoint"):
+        apps.sliding_window_analysis(spark)
+    assert len(spark.streams.active) == active
 
 
 def test_foreach_external_app(spark, tmp_path):

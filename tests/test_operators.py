@@ -1777,17 +1777,16 @@ def test_bpe_fertility_improves(spark, sf_dir):
     strictly below the character baseline, and every merge strictly
     reduced total token count (pair_count > 0 per round)."""
     from spark_streaming_kafka_example_spark.operators.bpe import (
-        apply_merges,
         symbols_array,
         train_bpe,
     )
     from spark_streaming_kafka_example_spark.plans.textprep import bpe_word_freqs
 
     words = bpe_word_freqs(load_table(spark, sf_dir, "documents"))
-    merges, _ = train_bpe(words, 8)
+    merges, enc = train_bpe(words, 8)
     assert len(merges) == 8
     assert all(m[4] > 0 for m in merges)
-    toks = apply_merges(words, merges).select(
+    toks = enc.select(
         "cnt",
         F.size(symbols_array("enc")).alias("n_tok"),
         F.length("word").alias("n_chr"),
@@ -1801,26 +1800,6 @@ def test_bpe_fertility_improves(spark, sf_dir):
     # only if later merges never undo earlier ones; at minimum the
     # reduction is bounded by it.
     assert agg["chr"] - agg["tok"] >= merges[-1][4]
-
-
-def test_bpe_apply_matches_trainer_final_state(spark, sf_dir):
-    """apply_merges (the serving path) reproduces the trainer's final
-    encoded relation exactly — replay in training order is sufficient."""
-    from spark_streaming_kafka_example_spark.operators.bpe import (
-        apply_merges,
-        train_bpe,
-    )
-    from spark_streaming_kafka_example_spark.plans.textprep import bpe_word_freqs
-
-    words = bpe_word_freqs(load_table(spark, sf_dir, "documents"))
-    merges, enc = train_bpe(words, 5)
-    replayed = apply_merges(words, merges).select("word", "enc")
-    diff = (
-        enc.select("word", "enc")
-        .exceptAll(replayed)
-        .unionAll(replayed.exceptAll(enc.select("word", "enc")))
-    )
-    assert diff.count() == 0
 
 
 def test_quantile_sketch_rank_bound(spark, sf_dir):

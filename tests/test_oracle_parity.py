@@ -114,6 +114,54 @@ def test_force_recheck_expired_entry_is_noop(monkeypatch):
     assert m._ordered_names().index(name) < before.index(name)
 
 
+def _comments_and_docstrings(path):
+    """(line, text) of every comment and docstring in one source file."""
+    import ast
+    import io
+    import tokenize
+
+    src = path.read_text()
+    doc_starts = set()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef)) and node.body:
+            first = node.body[0]
+            if isinstance(first, ast.Expr) and isinstance(
+                first.value, ast.Constant
+            ) and isinstance(first.value.value, str):
+                doc_starts.add((first.lineno, first.col_offset))
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT or (
+            tok.type == tokenize.STRING and tok.start in doc_starts
+        ):
+            yield tok.start[0], tok.string
+
+
+def test_comments_state_rules_not_history():
+    """Comments and docstrings in the package, bench.py and
+    __spark_entry__.py state the rule or the reason, never the review
+    round that produced it; history lives in git and CHANGES.md. String
+    constants (oracle SQL, messages) are exempt."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    tag = re.compile(r"\br\d{2}\b|round \d+|VERDICT|ADVICE|guide §")
+    files = [
+        *sorted((root / "spark_streaming_kafka_example_spark").rglob("*.py")),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    hits = [
+        f"{path.relative_to(root)}:{line + i}: {text_line.strip()}"
+        for path in files
+        for line, text in _comments_and_docstrings(path)
+        for i, text_line in enumerate(text.splitlines())
+        if tag.search(text_line)
+    ]
+    assert not hits, "round history in comments:\n" + "\n".join(hits)
+
+
 def test_mixture_source_cardinality(spark, sf_dir):
     """sample_domain_mixture's residual weight splits over exactly
     _MIX_RESIDUAL_SHARDS = 20 - 2 unnamed shards; if the fixture's source

@@ -23,6 +23,7 @@ from spark_streaming_kafka_example_spark.streaming.pipelines import (
 )
 from spark_streaming_kafka_example_spark.streaming.sinks import (
     foreach_batch_sink,
+    foreach_row_sink,
     memory_sink,
     parquet_sink,
 )
@@ -252,6 +253,51 @@ def test_enrich_join_and_foreach_batch(spark, master_df, tmp_path):
     assert out == {1851632: "field1", 9999999: None}
 
 
+def test_foreach_row_sink_open_process_close(spark, tmp_path):
+    """K6 row-at-a-time parity (reference ForeachWriter,
+    StreamingWithCasssandra.scala:31-39): each (partition, epoch) gets one
+    open, its rows through process, then close, which publishes the file
+    it wrote; every row lands exactly once across two epochs."""
+    src = str(tmp_path / "row_src")
+    rows = [f"r{i}" for i in range(6)]
+    write_value_batch(spark, src, rows[:3], 0)
+    write_value_batch(spark, src, rows[3:], 1)
+    out = str(tmp_path / "row_out")
+    os.makedirs(out)
+
+    class FileRowWriter:
+        def open(self, partition_id, epoch_id):
+            self.path = os.path.join(out, f"p{partition_id}_e{epoch_id}")
+            self.f = open(self.path + ".part", "w")
+            return True
+
+        def process(self, row):
+            self.f.write(row.value + "\n")
+
+        def close(self, error):
+            self.f.close()
+            if error is None:
+                os.rename(self.path + ".part", self.path + ".done")
+
+    stream = (
+        spark.readStream.schema(VALUE_SCHEMA).option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = foreach_row_sink(stream, FileRowWriter())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    files = os.listdir(out)
+    assert files and all(f.endswith(".done") for f in files)  # close ran
+    assert {f.split("_")[1] for f in files} == {"e0.done", "e1.done"}
+    landed = []
+    for f in files:
+        with open(os.path.join(out, f)) as fh:
+            landed += fh.read().split()
+    assert sorted(landed) == rows
+
+
 def write_text_file(dirpath: str, name: str, rows: list[str]) -> None:
     """One JSON-lines file, moved into the watched directory whole."""
     os.makedirs(dirpath, exist_ok=True)
@@ -294,7 +340,8 @@ def state_partitions(q, ckpt: str) -> set[int]:
 def test_default_parallelism_counts_usable_cpus(monkeypatch):
     """Without SPARK_GRAFT_CPUS the session sizes itself to the CPUs this
     process may run on, not the host's: a cpuset of 2 on a 64-CPU host
-    means 2 slots and 2 state stores per stream."""
+    means 2 slots and 2 state stores per stream. A set value wins, and one
+    that is not a positive integer fails at once, naming the variable."""
     from spark_streaming_kafka_example_spark import engine
 
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
@@ -302,6 +349,12 @@ def test_default_parallelism_counts_usable_cpus(monkeypatch):
     monkeypatch.setattr(os, "cpu_count", lambda: 64)
     monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1})
     assert engine._default_parallelism() == 2
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert engine._default_parallelism() == 3
+    for bad in ("0", "-2", "1.5", "four"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            engine._default_parallelism()
 
 
 def test_stream_state_partitions_follow_cores(spark, master_df, tmp_path):
@@ -404,36 +457,6 @@ def test_stateful_running_count_across_batches(spark, tmp_path):
     for r in rows:  # update mode appends; last emission per word wins
         latest[r.word] = max(latest.get(r.word, 0), r["count"])
     assert latest == {"x": 3, "y": 1, "z": 1}
-
-
-def test_stateful_running_count_tws(spark, tmp_path):
-    """4.x-native transformWithStateInPandas twin — runs only where
-    python-protobuf works (gated; broken in this container)."""
-    from spark_streaming_kafka_example_spark.streaming.stateful import (
-        stateful_running_count_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf unavailable: TWS state protocol needs it")
-    src = str(tmp_path / "tws_src")
-    write_value_batch(spark, src, ["x y", "x"], 0)
-    stream = spark.readStream.schema(VALUE_SCHEMA).parquet(src)
-    words = stream.select(F.explode(F.split("value", " ")).alias("word"))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = (
-        stateful_running_count_tws(words)
-        .writeStream.outputMode("update").format("memory").queryName("t_tws")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    counts = {r.word: r["count"] for r in spark.table("t_tws").collect()}
-    assert counts == {"x": 2, "y": 1}
 
 
 def test_rate_source_smoke(spark):
