@@ -29,12 +29,21 @@ Other confs:
   drops and naive TIMESTAMP(MICROS) in others; with this conf the nanos
   layout reads as raw longs, and sources.load_table normalizes BOTH layouts
   to TimestampType (truncating nanos like DuckDB does).
+- Checkpoint files go through Spark's FileSystem-based checkpoint manager,
+  not its FileContext default for ``file:`` paths. Without Hadoop's native
+  library, FileContext's local rename starts a ``readlink`` process per
+  link-status lookup (8 per checkpoint file with its ``.crc``), and every
+  stream writes offset, commit and state-delta files each trigger. The
+  FileSystem manager renames with ``rename(2)``, which is atomic on local
+  disk. Both checksum layers stay: Spark's ``<file>.crc`` checkpoint
+  checksum and Hadoop's ``.<file>.crc`` sidecar.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 __all__ = ["get_session", "session_conf", "run_parallel"]
@@ -47,13 +56,17 @@ def run_parallel(*thunks):
     the next job's tasks). The session-level utility behind
     plans.stream._run_jobs and the independent-training overlap in
     plans.llm. Only for thunks with NO lineage ordering requirement.
-    Returns the thunk results in order; exceptions propagate."""
+    Each pool thread inherits the caller's local properties and job tags
+    (job group, description, scheduler pool), so its jobs carry the
+    caller's labels. Returns the thunk results in order; exceptions
+    propagate."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        return [f.result() for f in [pool.submit(t) for t in thunks]]
+        return [f.result() for f in [pool.submit(inherit(t)) for t in thunks]]
 
 
 def materialize(df):
@@ -103,6 +116,11 @@ def session_conf(cores: int) -> dict[str, str]:
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Arrow for pandas UDFs / toPandas (the only Python<->JVM data plane).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Checkpoint renames by rename(2), no shell processes (see above).
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
     }
 
 

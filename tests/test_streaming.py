@@ -357,11 +357,35 @@ def test_default_parallelism_counts_usable_cpus(monkeypatch):
             engine._default_parallelism()
 
 
+def test_run_parallel_threads_inherit_job_labels(spark):
+    """run_parallel's pool threads run their jobs under the caller's job
+    description and tags. Two thunks: a single one runs inline, on the
+    caller's thread, and would pass without inheritance."""
+    from spark_streaming_kafka_example_spark.engine import run_parallel
+
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller/step")
+    spark.addTag("caller-tag")
+    try:
+        def labels():
+            return sc.getLocalProperty("spark.job.description"), spark.getTags()
+
+        got = run_parallel(labels, labels)
+    finally:
+        spark.removeTag("caller-tag")
+        sc.setJobDescription(prev)
+    assert [d for d, _ in got] == ["caller/step", "caller/step"]
+    assert all("caller-tag" in tags for _, tags in got)
+
+
 def test_stream_state_partitions_follow_cores(spark, master_df, tmp_path):
     """The session rule: a fresh stateful stream keeps one state store per
     core (streams run with AQE off, so shuffle.partitions is their state
     partition count), while batch keeps max(cores, 8) as AQE's initial
-    bound."""
+    bound. Its checkpoint goes through the FileSystem-based manager, and
+    every checkpoint file keeps both checksum layers: Spark's
+    ``<file>.crc`` and Hadoop's ``.<file>.crc`` sidecar."""
     cores = spark.sparkContext.defaultParallelism
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
     assert spark.conf.get(
@@ -377,6 +401,19 @@ def test_stream_state_partitions_follow_cores(spark, master_df, tmp_path):
     q, batches = sensor_window_sums(spark, src, master_df, ckpt)
     assert batches
     assert state_partitions(q, ckpt) == {cores}
+
+    jvm = spark.sparkContext._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(ckpt), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    state = os.path.join(ckpt, "state", "0")
+    for part in (d for d in os.listdir(state) if d.isdigit()):
+        files = set(os.listdir(os.path.join(state, part)))
+        assert {"1.delta", "1.delta.crc", ".1.delta.crc"} <= files, (part, files)
+    for log in ("offsets", "commits"):
+        files = set(os.listdir(os.path.join(ckpt, log)))
+        assert {"0", ".0.crc"} <= files, (log, files)
 
 
 def test_checkpoint_keeps_first_start_state_partitions(spark, master_df, tmp_path):
