@@ -16,7 +16,7 @@ import os
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, replace
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -485,46 +485,122 @@ def _write_id_ordered_arrivals(src_dir: str, parts: list) -> None:
                 )
 
 
-def _id_range_parts(
-    odds: DataFrame, plants: DataFrame, plant_offset: int | None = None
-) -> list:
-    """Split the odd-id arrivals into 3 contiguous id ranges (one scalar
-    driver fetch for the boundaries — the fixed-size class) + the plants
-    file last (their ids sit above every real id by construction).
-    ``plant_offset`` guards that construction: the first-arrival-wins
-    oracles rank by doc_id, which is only the arrival order if every
-    plant id exceeds every real id."""
-    m = odds.agg(F.max("doc_id")).first()[0]
-    if m is None:
-        raise ValueError(
-            "_id_range_parts: odd-id arrival relation is empty — the "
-            "id-ordered multi-batch arrival fixture needs real rows"
-        )
-    if plant_offset is not None and m >= plant_offset:
-        raise ValueError(
-            f"_id_range_parts: max real doc_id {m} >= plant offset "
-            f"{plant_offset}; plant ids must sit above every real id or "
-            "arrival order stops matching the oracle's rank-by-doc_id rule"
-        )
+def _id_range_parts(rows: DataFrame, plants: DataFrame, m: int) -> list:
+    """``rows`` in 3 contiguous id ranges (split at m // 3 and 2m // 3, m
+    the largest id of ``rows``), then the plants file."""
     return [
-        odds.filter(F.col("doc_id") <= m // 3),
-        odds.filter((F.col("doc_id") > m // 3) & (F.col("doc_id") <= 2 * m // 3)),
-        odds.filter(F.col("doc_id") > 2 * m // 3),
+        rows.filter(F.col("doc_id") <= m // 3),
+        rows.filter((F.col("doc_id") > m // 3) & (F.col("doc_id") <= 2 * m // 3)),
+        rows.filter(F.col("doc_id") > 2 * m // 3),
         plants,
     ]
 
 
-def _odd_plus_plants(
-    table: DataFrame, every: int, offset: int, payload="text"
-) -> list:
-    """The seeded kinds' arrival layout: odd ids in 3 id ranges + one
-    plants file re-crawling every ``every``-th row under id + ``offset``
-    (``payload``: the re-crawled column, or a Column rewriting it)."""
-    plants = table.filter(F.col("doc_id") % every == 0).select(
-        (F.col("doc_id") + offset).alias("doc_id"), payload
+def _odd_plus_plants(table: DataFrame, families: tuple) -> list:
+    """The seeded kinds' arrival parts, built from their plant families
+    ``(every, rem, offset, payload_sql)``: the odd ids in 3 id ranges,
+    then ONE plants file where each family re-crawls the rows with
+    doc_id % every = rem under doc_id + offset, its payload column
+    rewritten by ``payload_sql`` (an expression Spark and DuckDB both
+    accept; _arrival_ctes renders the oracle side from the same tuples).
+    The first-arrival-wins oracles rank by doc_id, so every plant id must
+    sort above every real id and the family id ranges must stay disjoint
+    (two arrivals sharing a doc_id would fan out the oracle joins): the
+    largest id must be below the smallest gap between offsets, counted
+    from 0. A violation raises before anything is written."""
+    offsets = sorted(off for _every, _rem, off, _sql in families)
+    gap = min(b - a for a, b in zip([0] + offsets, offsets))
+    if gap <= 0:
+        raise ValueError(
+            f"plant offsets {offsets}: smallest offset gap {gap} — two "
+            "families share an id range"
+        )
+    top, m = table.agg(
+        F.max("doc_id"), F.max(F.when(F.col("doc_id") % 2 == 1, F.col("doc_id")))
+    ).first()
+    if m is None:
+        raise ValueError(
+            "plant families: the table has no odd ids — the id-ordered "
+            "multi-batch arrival fixture needs real rows"
+        )
+    if top >= gap:
+        raise ValueError(
+            f"plant offsets {offsets}: max doc_id {top} >= smallest offset "
+            f"gap {gap}; plant ids would collide with real ids or each other"
+        )
+    (payload,) = [c for c in table.columns if c != "doc_id"]
+    plants = reduce(
+        DataFrame.unionByName,
+        [
+            table.filter(F.col("doc_id") % every == rem).select(
+                (F.col("doc_id") + off).alias("doc_id"),
+                F.expr(sql).alias(payload),
+            )
+            for every, rem, off, sql in families
+        ],
     )
-    odds = table.filter(F.col("doc_id") % 2 == 1)
-    return _id_range_parts(odds, plants, plant_offset=offset)
+    return _id_range_parts(table.filter(F.col("doc_id") % 2 == 1), plants, m)
+
+
+def _arrival_ctes(families: tuple, table: str = "documents", col: str = "text"):
+    """The oracle side of _odd_plus_plants, rendered from the same
+    families over ``table``'s (doc_id, ``col``) — a table name or a
+    parenthesized query: ``corpus`` (every seed and arrival row), ``mx``
+    (the largest odd id) and ``bmap`` (each corpus id's micro-batch:
+    seed -1, the odd thirds 0-2, plants 3)."""
+    plants = "".join(
+        f"""
+        UNION ALL
+        SELECT doc_id + {off} AS doc_id, {sql} AS {col}
+        FROM {table} WHERE doc_id % {every} = {rem}"""
+        for every, rem, off, sql in families
+    )
+    return f"""corpus AS (
+        SELECT doc_id, {col} FROM {table}{plants}
+    ),
+    mx AS (SELECT max(doc_id) AS m FROM {table} WHERE doc_id % 2 = 1),
+    bmap AS (
+        SELECT doc_id,
+               CASE WHEN doc_id >= {min(f[2] for f in families)} THEN 3
+                    WHEN doc_id % 2 = 0 THEN -1
+                    WHEN doc_id <= (SELECT m // 3 FROM mx) THEN 0
+                    WHEN doc_id <= (SELECT (2 * m) // 3 FROM mx) THEN 1
+                    ELSE 2 END AS b
+        FROM corpus
+    )"""
+
+
+def _prior_pairs_sql(
+    rel: str, on: str = "TRUE", verify: str = "TRUE", window: int | None = None
+) -> str:
+    """(doc_id, prior_id) for every arrival of ``rel`` (its batch from
+    bmap) and each row visible to it: the seed and earlier batches (only
+    the last ``window`` under a TTL), or a smaller id in its own batch —
+    the handlers' _prior_state + _prior_hits rule. Pairs join ``on`` and
+    must pass ``verify``."""
+    ttl = "" if window is None else f" AND bp.b >= ba.b - {window}"
+    return f"""SELECT DISTINCT a.doc_id, p.doc_id AS prior_id
+        FROM {rel} a
+        JOIN bmap ba ON ba.doc_id = a.doc_id
+        JOIN {rel} p ON {on}
+        JOIN bmap bp ON bp.doc_id = p.doc_id
+        WHERE ba.b >= 0
+          AND ((bp.b < ba.b{ttl}) OR (bp.b = ba.b AND p.doc_id < a.doc_id))
+          AND {verify}"""
+
+
+def _catalog_oracle(ctes: str, pairs: str, name: str, id_col="doc_id") -> str:
+    """A counting kind's oracle: every arrival's number of distinct
+    visible priors (``pairs``, over ``ctes``), 0 when it has none."""
+    return f"""
+    WITH {ctes},
+    hits AS ({pairs})
+    SELECT ba.doc_id AS {id_col},
+           CAST(count(h.prior_id) AS BIGINT) AS {name}
+    FROM bmap ba LEFT JOIN hits h ON ba.doc_id = h.doc_id
+    WHERE ba.b >= 0
+    GROUP BY ba.doc_id
+    """
 
 
 # Explicit state-relation schemas:
@@ -717,37 +793,32 @@ def _dedup_store_handler(io: StateIO):
     return handler
 
 
-# Re-crawl plant ids = doc_id + _FP_PLANT_OFFSET. The offset must exceed
-# every real doc_id (guarded in _id_range_parts): the plants file arrives
-# LAST, so arrival order == doc_id order only holds if plant ids sort
-# above all real ids — the oracle's rank-by-doc_id rule depends on it.
-_FP_PLANT_OFFSET = 300000
+# The store's plants: exact re-crawls of every 6th doc. Arrival order ==
+# doc_id order, so the oracle's rank-by-doc_id replays first-arrival-wins.
+_FP_FAMILIES = ((6, 0, 300000, "text"),)
+
+# The fp store's oracle rows: every corpus doc's batch and fingerprint.
+_FP_BATCH_CTES = f"""{_arrival_ctes(_FP_FAMILIES)},
+    fb AS (
+        SELECT c.doc_id, bmap.b, {_LLM_FP_SQL.format(t='c.text')} AS fp
+        FROM corpus c JOIN bmap ON bmap.doc_id = c.doc_id
+    )"""
 
 # One oracle for BOTH store-ingest variants: the Bloom prefilter has no
 # false negatives, so the prefiltered query's decisions are provably
 # identical — registering it against the same text makes the driver
 # hash-prove that.
 STREAM_DEDUP_STORE_ORACLE = f"""
-    WITH store AS (
-        SELECT DISTINCT {_LLM_FP_SQL.format(t='text')} AS fp
-        FROM documents WHERE doc_id % 2 = 0
-    ),
-    newbatch AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id + {_FP_PLANT_OFFSET} AS doc_id, text
-        FROM documents WHERE doc_id % 6 = 0
-    ),
-    nf AS (SELECT doc_id, {_LLM_FP_SQL.format(t='text')} AS fp FROM newbatch),
+    WITH {_FP_BATCH_CTES},
     ranked AS (
         SELECT doc_id, fp,
                row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        FROM nf
+        FROM fb WHERE b >= 0
     )
-    SELECT r.doc_id,
-           CASE WHEN s.fp IS NOT NULL OR r.rn > 1 THEN 'duplicate'
-                ELSE 'novel' END AS status
-    FROM ranked r LEFT JOIN store s ON r.fp = s.fp
+    SELECT doc_id,
+           CASE WHEN rn > 1 OR fp IN (SELECT fp FROM fb WHERE b = -1)
+                THEN 'duplicate' ELSE 'novel' END AS status
+    FROM ranked
     """
 
 
@@ -767,13 +838,6 @@ def _fp_store_seed(docs: DataFrame) -> DataFrame:
     )
 
 
-def _fp_arrival_parts(docs: DataFrame) -> list:
-    """The store-ingest arrival files: odd ids in 3 id ranges + the
-    +_FP_PLANT_OFFSET exact re-crawls of every 6th doc, id-ordered so
-    arrival order == doc_id order (the oracle's rank-by-doc_id rule)."""
-    return _odd_plus_plants(docs, 6, _FP_PLANT_OFFSET)
-
-
 def _arrivals_stream(
     spark: SparkSession, src_dir: str, schema: str
 ) -> DataFrame:
@@ -785,6 +849,23 @@ def _arrivals_stream(
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir + "/*")
     )
+
+
+def _labelled(name: str, handler: Callable) -> Callable:
+    """``handler`` with its jobs described ``<name>/b<batch_id>`` (the
+    StateIO.write threads inherit it); the stream's own description is
+    restored afterwards."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        sc = batch_df.sparkSession.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"{name}/b{batch_id}")
+        try:
+            handler(batch_df, batch_id)
+        finally:
+            sc.setJobDescription(prev)
+
+    return run
 
 
 def run_lifecycle(
@@ -825,6 +906,7 @@ def run_lifecycle(
         for ph in (("a", "b") if compact else ("",))
     ]
     first = runs[0]
+    parts = spec.parts(table)  # its id guard raises before any write
     # Seed and arrival writes are independent jobs — overlap them.
     _run_jobs(
         *[
@@ -834,9 +916,7 @@ def run_lifecycle(
             for r in spec.relations
             if r.seed is not None
         ],
-        lambda: _write_id_ordered_arrivals(
-            first.dir("arrivals"), spec.parts(table)
-        ),
+        lambda: _write_id_ordered_arrivals(first.dir("arrivals"), parts),
     )
     if compact:  # phase B's source takes the later files (mtimes kept)
         later = runs[1].dir("arrivals")
@@ -858,7 +938,7 @@ def run_lifecycle(
             )
         foreach_batch_sink(
             _arrivals_stream(spark, io.dir("arrivals"), spec.arrival_schema),
-            spec.handler(io),
+            _labelled(spec.name, spec.handler(io)),
             checkpoint=io.dir("ckpt"),
             mode="append",
         ).awaitTermination()
@@ -876,7 +956,7 @@ FP_STORE = MaintainedState(
     name="fp_store",
     table=_docs_table,
     relations=(Relation("store", "fp string", _fp_store_seed),),
-    parts=_fp_arrival_parts,
+    parts=partial(_odd_plus_plants, families=_FP_FAMILIES),
     arrival_schema=_DOC_ARRIVAL_SCHEMA,
     handler=_dedup_store_handler,
     decisions="doc_id long, status string",
@@ -3257,20 +3337,14 @@ def _prior_hits(
     return collide(prior).select("doc_id", "prior_id").unionByName(within)
 
 
-# One oracle for the growing-catalog ingest AND its mid-lifecycle
-# compaction twin (the STREAM_DEDUP_STORE_ORACLE sharing pattern):
-# compaction preserves the catalog's content exactly, so registering
-# both against the same text makes the driver hash-prove it.
-STREAM_MH_CATALOG_ORACLE = f"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + {_MH_PLANT_OFFSET} AS doc_id,
-               substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))
-                   AS text
-        FROM documents WHERE doc_id % 10 = 0
-    ),
-    {_MH_SHINGLES_CTE.strip()},
+# The catalog's plants: 4/5 tail-truncated re-uploads of every 10th doc
+# (Jaccard ~0.75 vs their source, where 5x3 banding recalls ~95%).
+_TRUNC_SQL = "substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))"
+_MH_FAMILIES = ((10, 0, _MH_PLANT_OFFSET, _TRUNC_SQL),)
+
+# corpus -> shingles -> within-doc signatures -> band rows (doc_id,
+# band_id, band_val): the lifecycle oracles' twin of _batch_band_rows.
+_MH_BANDS_CTES = f"""{_MH_SHINGLES_CTE.strip()},
     hashed AS (SELECT doc_id, {_MH_BASE_H} AS h FROM sh),
     sig AS (
         SELECT doc_id,
@@ -3279,23 +3353,25 @@ STREAM_MH_CATALOG_ORACLE = f"""
     ),
     bands AS (
     {_MH_BAND_SELECTS}
-    ),
-    arr AS (SELECT doc_id FROM corpus
-            WHERE doc_id % 2 = 1 OR doc_id >= {_MH_PLANT_OFFSET}),
-    hits AS (
-        SELECT DISTINCT a.doc_id, p.doc_id AS prior_id
-        FROM bands a JOIN bands p
-          ON a.band_id = p.band_id AND a.band_val = p.band_val
-        WHERE (a.doc_id % 2 = 1 OR a.doc_id >= {_MH_PLANT_OFFSET})
-          AND ((p.doc_id % 2 = 0 AND p.doc_id < {_MH_PLANT_OFFSET})
-               OR ((p.doc_id % 2 = 1 OR p.doc_id >= {_MH_PLANT_OFFSET})
-                   AND p.doc_id < a.doc_id))
+    )"""
+_BAND_MATCH_SQL = "a.band_id = p.band_id AND a.band_val = p.band_val"
+
+
+def _mh_catalog_oracle(window: int | None = None) -> str:
+    """The band catalog's oracle: distinct band-sharing visible priors
+    per arrival; ``window`` renders the TTL twin."""
+    return _catalog_oracle(
+        f"{_arrival_ctes(_MH_FAMILIES)},\n    {_MH_BANDS_CTES}",
+        _prior_pairs_sql("bands", _BAND_MATCH_SQL, window=window),
+        "n_prior_candidates",
     )
-    SELECT arr.doc_id,
-           CAST(count(h.prior_id) AS BIGINT) AS n_prior_candidates
-    FROM arr LEFT JOIN hits h ON arr.doc_id = h.doc_id
-    GROUP BY arr.doc_id
-    """
+
+
+# One oracle for the growing-catalog ingest AND its mid-lifecycle
+# compaction twin (the STREAM_DEDUP_STORE_ORACLE sharing pattern):
+# compaction preserves the catalog's content exactly, so registering
+# both against the same text makes the driver hash-prove it.
+STREAM_MH_CATALOG_ORACLE = _mh_catalog_oracle()
 
 
 @register("stream_minhash_catalog_ingest", STREAM_MH_CATALOG_ORACLE)
@@ -3330,19 +3406,6 @@ def _mh_catalog_seed(docs: DataFrame) -> DataFrame:
     )
 
 
-def _mh_arrival_parts(docs: DataFrame) -> list:
-    """The catalog-ingest arrival files: odd ids in 3 id ranges + the
-    +_MH_PLANT_OFFSET tail-truncated re-uploads of every 10th doc."""
-    return _odd_plus_plants(
-        docs,
-        10,
-        _MH_PLANT_OFFSET,
-        F.expr(
-            "substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))"
-        ).alias("text"),
-    )
-
-
 _BAND_KEYS = ("band_id", "band_val")
 
 MH_CATALOG = MaintainedState(
@@ -3355,7 +3418,7 @@ MH_CATALOG = MaintainedState(
             _mh_catalog_seed,
         ),
     ),
-    parts=_mh_arrival_parts,
+    parts=partial(_odd_plus_plants, families=_MH_FAMILIES),
     arrival_schema=_DOC_ARRIVAL_SCHEMA,
     handler=_candidate_count_handler(_batch_band_rows, _BAND_KEYS),
     decisions="doc_id long, n_prior_candidates long",
@@ -3446,42 +3509,28 @@ def stream_minhash_catalog_compacted(
 # unrolling convention): nv0/nv1/nv2 are the per-batch append sets, and
 # each batch's visible set is exactly the W preceding ones (the seed
 # ages out after W batches like any other append — batch 2 is the first
-# that cannot see it). The batch id of every arrival derives from the
-# _id_range_parts boundaries (max odd id thirds), so the oracle replays
-# the batch split itself. W is hard-coded at 2 in the unrolled CTEs —
+# that cannot see it). Every arrival's batch id is the template's bmap
+# (the max odd id thirds), so the oracle replays the batch split
+# itself. W is hard-coded at 2 in the unrolled CTEs —
 # changing _FP_TTL_W means re-deriving them together.
 # ---------------------------------------------------------------------------
 
 _FP_TTL_W = 2
 
 STREAM_DEDUP_STORE_RETENTION_ORACLE = f"""
-    WITH newbatch AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id + {_FP_PLANT_OFFSET} AS doc_id, text
-        FROM documents WHERE doc_id % 6 = 0
-    ),
-    mx AS (SELECT max(doc_id) AS m FROM documents WHERE doc_id % 2 = 1),
-    fb AS (
+    WITH {_FP_BATCH_CTES},
+    ranked AS (
         SELECT doc_id, b, fp,
                row_number() OVER (PARTITION BY fp, b ORDER BY doc_id) AS rnb
-        FROM (
-            SELECT doc_id,
-                   CASE WHEN doc_id >= {_FP_PLANT_OFFSET} THEN 3
-                        WHEN doc_id <= (SELECT m // 3 FROM mx) THEN 0
-                        WHEN doc_id <= (SELECT (2 * m) // 3 FROM mx) THEN 1
-                        ELSE 2 END AS b,
-                   {_LLM_FP_SQL.format(t='text')} AS fp
-            FROM newbatch)
+        FROM fb WHERE b >= 0
     ),
-    seedf AS (SELECT DISTINCT {_LLM_FP_SQL.format(t='text')} AS fp
-              FROM documents WHERE doc_id % 2 = 0),
-    nv0 AS (SELECT fp FROM fb WHERE b = 0 AND rnb = 1
+    seedf AS (SELECT fp FROM fb WHERE b = -1),
+    nv0 AS (SELECT fp FROM ranked WHERE b = 0 AND rnb = 1
             AND fp NOT IN (SELECT fp FROM seedf)),
-    nv1 AS (SELECT fp FROM fb WHERE b = 1 AND rnb = 1
+    nv1 AS (SELECT fp FROM ranked WHERE b = 1 AND rnb = 1
             AND fp NOT IN (SELECT fp FROM seedf
                            UNION ALL SELECT fp FROM nv0)),
-    nv2 AS (SELECT fp FROM fb WHERE b = 2 AND rnb = 1
+    nv2 AS (SELECT fp FROM ranked WHERE b = 2 AND rnb = 1
             AND fp NOT IN (SELECT fp FROM nv0
                            UNION ALL SELECT fp FROM nv1))
     SELECT doc_id,
@@ -3498,7 +3547,7 @@ STREAM_DEDUP_STORE_RETENTION_ORACLE = f"""
                                       UNION ALL SELECT fp FROM nv2)
                     THEN 'duplicate'
                 ELSE 'novel' END AS status
-    FROM fb
+    FROM ranked
     """
 
 
@@ -3520,59 +3569,10 @@ def stream_dedup_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NOT recursive — every ingested doc's band rows append regardless of
 # status — so a row is visible at batch b iff its own batch is in
 # [b - W, b - 1] (the seed, batch -1, ages out at b = W), and the oracle
-# is a batch-windowed variant of STREAM_MH_CATALOG_ORACLE: one bmap CTE
-# derives every corpus doc's batch id (seed -1, arrival thirds, plants
-# 3), and the prior rule adds the window bound.
+# is the ingest oracle rendered with the window bound.
 _MH_TTL_W = 2
 
-STREAM_MH_CATALOG_RETENTION_ORACLE = f"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + {_MH_PLANT_OFFSET} AS doc_id,
-               substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))
-                   AS text
-        FROM documents WHERE doc_id % 10 = 0
-    ),
-    {_MH_SHINGLES_CTE.strip()},
-    hashed AS (SELECT doc_id, {_MH_BASE_H} AS h FROM sh),
-    sig AS (
-        SELECT doc_id,
-           {_MH_SIG_MINS}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-    {_MH_BAND_SELECTS}
-    ),
-    mx AS (SELECT max(doc_id) AS m FROM documents WHERE doc_id % 2 = 1),
-    bmap AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 2 = 0 AND doc_id < {_MH_PLANT_OFFSET}
-                        THEN -1
-                    WHEN doc_id >= {_MH_PLANT_OFFSET} THEN 3
-                    WHEN doc_id <= (SELECT m // 3 FROM mx) THEN 0
-                    WHEN doc_id <= (SELECT (2 * m) // 3 FROM mx) THEN 1
-                    ELSE 2 END AS b
-        FROM corpus
-    ),
-    arr AS (SELECT doc_id FROM corpus
-            WHERE doc_id % 2 = 1 OR doc_id >= {_MH_PLANT_OFFSET}),
-    hits AS (
-        SELECT DISTINCT a.doc_id, p.doc_id AS prior_id
-        FROM bands a
-        JOIN bmap ba ON ba.doc_id = a.doc_id
-        JOIN bands p
-          ON a.band_id = p.band_id AND a.band_val = p.band_val
-        JOIN bmap bp ON bp.doc_id = p.doc_id
-        WHERE ba.b >= 0
-          AND ((bp.b < ba.b AND bp.b >= ba.b - {_MH_TTL_W})
-               OR (bp.b = ba.b AND p.doc_id < a.doc_id))
-    )
-    SELECT arr.doc_id,
-           CAST(count(h.prior_id) AS BIGINT) AS n_prior_candidates
-    FROM arr LEFT JOIN hits h ON arr.doc_id = h.doc_id
-    GROUP BY arr.doc_id
-    """
+STREAM_MH_CATALOG_RETENTION_ORACLE = _mh_catalog_oracle(_MH_TTL_W)
 
 
 @register(
@@ -3607,7 +3607,7 @@ def stream_minhash_catalog_retention(
 # pigeonhole completeness of the chunk equi-join (phash_chunks) makes
 # the candidate set exact, so the oracle replays counts with the
 # earlier-prior rule over one global nibs relation — batch-split-free.
-# Plants: exact re-crawls of every 7th doc under +_IMG_PLANT_OFFSET —
+# Plants: exact re-crawls of every 7th doc under +200000 —
 # even sources are seed dups, ODD sources arrived in an earlier batch,
 # so their copies are caught purely by appended partitions (the
 # cross-batch catch; pinned by test_image_catalog_cross_batch_growth).
@@ -3616,33 +3616,26 @@ def stream_minhash_catalog_retention(
 # on collisions only; appends never rewrite the catalog.
 # ---------------------------------------------------------------------------
 
-_IMG_PLANT_OFFSET = 200000  # the _exact_corpus re-crawl offset
+# Exact re-crawls of every 7th doc (+200000, the _exact_corpus offset).
+_IMG_FAMILIES = ((7, 0, 200000, "text"),)
 
-STREAM_IMAGE_CATALOG_ORACLE = f"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + {_IMG_PLANT_OFFSET} AS doc_id, text
-        FROM documents WHERE doc_id % 7 = 0
-    ),
-    {_PHASH_NIBS_CTE.strip()},
-    arr AS (SELECT doc_id FROM corpus
-            WHERE doc_id % 2 = 1 OR doc_id >= {_IMG_PLANT_OFFSET}),
-    hits AS (
-        SELECT DISTINCT a.doc_id, p.doc_id AS prior_id
-        FROM nibs a JOIN nibs p
-          ON (a.doc_id % 2 = 1 OR a.doc_id >= {_IMG_PLANT_OFFSET})
-         AND ((p.doc_id % 2 = 0 AND p.doc_id < {_IMG_PLANT_OFFSET})
-              OR ((p.doc_id % 2 = 1 OR p.doc_id >= {_IMG_PLANT_OFFSET})
-                  AND p.doc_id < a.doc_id))
-        WHERE CAST(list_sum(list_transform(range(1, 17),
-                j -> bit_count(xor(a.nb[j], p.nb[j])))) AS INT) <= 3
+# hamming(a, p) <= 3 over the aHash nibbles: the oracle twin of _phash_close.
+_NIBS_CLOSE_SQL = """CAST(list_sum(list_transform(range(1, 17),
+                j -> bit_count(xor(a.nb[j], p.nb[j])))) AS INT) <= 3"""
+
+
+def _image_catalog_oracle(window: int | None = None) -> str:
+    """The image catalog's oracle: distinct hamming<=3 cover near-dups
+    among the visible priors per arrival; ``window`` renders the TTL
+    twin."""
+    return _catalog_oracle(
+        f"{_arrival_ctes(_IMG_FAMILIES)},\n    {_PHASH_NIBS_CTE.strip()}",
+        _prior_pairs_sql("nibs", verify=_NIBS_CLOSE_SQL, window=window),
+        "n_prior_candidates",
     )
-    SELECT arr.doc_id,
-           CAST(count(h.prior_id) AS BIGINT) AS n_prior_candidates
-    FROM arr LEFT JOIN hits h ON arr.doc_id = h.doc_id
-    GROUP BY arr.doc_id
-    """
+
+
+STREAM_IMAGE_CATALOG_ORACLE = _image_catalog_oracle()
 
 
 def _image_chunk_rows(batch_df: DataFrame) -> DataFrame:
@@ -3684,23 +3677,8 @@ def stream_image_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _image_catalog_seed(docs: DataFrame) -> DataFrame:
-    """The seeded catalog's chunk rows: even doc ids BELOW the plant
-    range (the oracle's seed branch is doc_id % 2 = 0 AND
-    doc_id < _IMG_PLANT_OFFSET, and _id_range_parts' guard only checks
-    the max ODD id — mirror _mh_catalog_seed's bound so a corpus whose
-    even ids reach the plant range cannot diverge from the oracle)."""
-    return _image_chunk_rows(
-        docs.filter(
-            (F.col("doc_id") % 2 == 0)
-            & (F.col("doc_id") < _IMG_PLANT_OFFSET)
-        )
-    )
-
-
-def _image_arrival_parts(docs: DataFrame) -> list:
-    """The image-catalog-ingest arrival files: odd ids in 3 id ranges +
-    the +_IMG_PLANT_OFFSET exact re-crawls of every 7th doc."""
-    return _odd_plus_plants(docs, 7, _IMG_PLANT_OFFSET)
+    """The seeded catalog's chunk rows: the even doc ids."""
+    return _image_chunk_rows(docs.filter(F.col("doc_id") % 2 == 0))
 
 
 IMAGE_CATALOG = MaintainedState(
@@ -3713,7 +3691,7 @@ IMAGE_CATALOG = MaintainedState(
             _image_catalog_seed,
         ),
     ),
-    parts=_image_arrival_parts,
+    parts=partial(_odd_plus_plants, families=_IMG_FAMILIES),
     arrival_schema=_DOC_ARRIVAL_SCHEMA,
     handler=_candidate_count_handler(
         _image_chunk_rows, _CHUNK_KEYS, _phash_close
@@ -3732,9 +3710,7 @@ IMAGE_CATALOG = MaintainedState(
 # STREAM_IMAGE_CATALOG_ORACLE unchanged (the hash IS the compaction-
 # safety proof); catalog visibility is non-recursive (every ingested
 # doc's chunks append regardless of status), so the TTL oracle is the
-# windowed bmap variant of the ingest oracle — the exact template
-# STREAM_MH_CATALOG_RETENTION_ORACLE established, with the band-equality
-# join swapped for the hamming<=3 nibble verify.
+# ingest oracle rendered with the window bound, as for the band catalog.
 # ---------------------------------------------------------------------------
 
 
@@ -3753,44 +3729,7 @@ def stream_image_catalog_compacted(
 
 _IMG_TTL_W = 2
 
-STREAM_IMAGE_CATALOG_RETENTION_ORACLE = f"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + {_IMG_PLANT_OFFSET} AS doc_id, text
-        FROM documents WHERE doc_id % 7 = 0
-    ),
-    {_PHASH_NIBS_CTE.strip()},
-    mx AS (SELECT max(doc_id) AS m FROM documents WHERE doc_id % 2 = 1),
-    bmap AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 2 = 0 AND doc_id < {_IMG_PLANT_OFFSET}
-                        THEN -1
-                    WHEN doc_id >= {_IMG_PLANT_OFFSET} THEN 3
-                    WHEN doc_id <= (SELECT m // 3 FROM mx) THEN 0
-                    WHEN doc_id <= (SELECT (2 * m) // 3 FROM mx) THEN 1
-                    ELSE 2 END AS b
-        FROM corpus
-    ),
-    arr AS (SELECT doc_id FROM corpus
-            WHERE doc_id % 2 = 1 OR doc_id >= {_IMG_PLANT_OFFSET}),
-    hits AS (
-        SELECT DISTINCT a.doc_id, p.doc_id AS prior_id
-        FROM nibs a
-        JOIN bmap ba ON ba.doc_id = a.doc_id
-        JOIN nibs p ON TRUE
-        JOIN bmap bp ON bp.doc_id = p.doc_id
-        WHERE ba.b >= 0
-          AND ((bp.b < ba.b AND bp.b >= ba.b - {_IMG_TTL_W})
-               OR (bp.b = ba.b AND p.doc_id < a.doc_id))
-          AND CAST(list_sum(list_transform(range(1, 17),
-                j -> bit_count(xor(a.nb[j], p.nb[j])))) AS INT) <= 3
-    )
-    SELECT arr.doc_id,
-           CAST(count(h.prior_id) AS BIGINT) AS n_prior_candidates
-    FROM arr LEFT JOIN hits h ON arr.doc_id = h.doc_id
-    GROUP BY arr.doc_id
-    """
+STREAM_IMAGE_CATALOG_RETENTION_ORACLE = _image_catalog_oracle(_IMG_TTL_W)
 
 
 @register(
@@ -3828,7 +3767,7 @@ def stream_image_catalog_retention(
 # survives >= 1 of 16 bands with prob 1-3e-9 — so the all-pairs
 # earlier-prior oracle stays the checker, exactly as it does for
 # dedup_embedding_cosine. Plants = exact re-crawls of every 5th vector
-# (+_EMBCAT_OFF): even sources dup the SEED, odd sources arrived in an
+# (+100000): even sources dup the SEED, odd sources arrived in an
 # earlier micro-batch — the cross-batch catch
 # (test_embedding_catalog_cross_batch_growth pins growth + replay).
 # Scale: per batch one band-keyed catalog join + one id-keyed vector
@@ -3837,36 +3776,34 @@ def stream_image_catalog_retention(
 # rows + |batch| vectors, never a state rewrite.
 # ---------------------------------------------------------------------------
 
-_EMBCAT_OFF = 100000
+# Exact re-crawls of every 5th vector (+100000), over the embeddings
+# keyed by doc_id like the Spark table (_emb_table).
+_EMB_FAMILIES = ((5, 0, 100000, "embedding"),)
+_EMB_SOURCE_SQL = """(SELECT vec_id AS doc_id,
+               CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings)"""
 
-STREAM_EMB_CATALOG_ORACLE = f"""
-    WITH vcorpus AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        UNION ALL
-        SELECT vec_id + {_EMBCAT_OFF}, CAST(embedding AS DOUBLE[])
-        FROM embeddings WHERE vec_id % 5 = 0
-    ),
-    arr AS (SELECT vec_id, v FROM vcorpus
-            WHERE vec_id % 2 = 1 OR vec_id >= {_EMBCAT_OFF}),
-    hits AS (
-        SELECT a.vec_id, p.vec_id AS prior_id
-        FROM arr a JOIN vcorpus p
-          ON ((p.vec_id % 2 = 0 AND p.vec_id < {_EMBCAT_OFF})
-              OR ((p.vec_id % 2 = 1 OR p.vec_id >= {_EMBCAT_OFF})
-                  AND p.vec_id < a.vec_id))
-        WHERE round({{dot}} / ({{na}} * {{np}}), 4) >= 0.99
-    )
-    SELECT arr.vec_id,
-           CAST(count(h.prior_id) AS BIGINT) AS n_prior_neardups
-    FROM arr LEFT JOIN hits h ON arr.vec_id = h.vec_id
-    GROUP BY arr.vec_id
-    """.format(
-    # Rendered from llm's _DOT/_NORM templates so this text
-    # can never silently diverge from dedup_embedding_cosine's 0.99 rule.
-    dot=_DOT.format(a="a.v", b="p.v"),
-    na=_NORM.format(a="a.v"),
-    np=_NORM.format(a="p.v"),
+# cos(a, p) >= 0.99 at round-4, rendered from llm's _DOT/_NORM templates
+# so it can never silently diverge from dedup_embedding_cosine's rule.
+_COS_CLOSE_SQL = "round({dot} / ({na} * {np}), 4) >= 0.99".format(
+    dot=_DOT.format(a="a.embedding", b="p.embedding"),
+    na=_NORM.format(a="a.embedding"),
+    np=_NORM.format(a="p.embedding"),
 )
+
+
+def _emb_catalog_oracle(window: int | None = None) -> str:
+    """The embedding catalog's oracle: distinct cosine>=0.99 near-dups
+    among the visible priors per arrival (by vec_id, the table's id);
+    ``window`` renders the TTL twin."""
+    return _catalog_oracle(
+        _arrival_ctes(_EMB_FAMILIES, _EMB_SOURCE_SQL, "embedding"),
+        _prior_pairs_sql("corpus", verify=_COS_CLOSE_SQL, window=window),
+        "n_prior_neardups",
+        id_col="vec_id",
+    )
+
+
+STREAM_EMB_CATALOG_ORACLE = _emb_catalog_oracle()
 
 
 def _emb_code_rows(batch_df: DataFrame) -> DataFrame:
@@ -3942,8 +3879,8 @@ def stream_embedding_catalog_ingest(
 ) -> DataFrame:
     """(vec_id, n_prior_neardups): each arriving vector's count of
     cosine>=0.99 near-dups among every PRIOR ingested vector — seeded
-    evens (below the plant range) plus everything earlier micro-batches
-    appended. The +_EMBCAT_OFF plants are exact re-crawls of every 5th
+    evens plus everything earlier micro-batches appended. The +100000
+    plants are exact re-crawls of every 5th
     vector: even sources dup the seed, ODD sources arrived earlier in
     the stream, so their copies are caught purely by appended
     partitions (the cross-batch catch)."""
@@ -3959,17 +3896,8 @@ def _emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_catalog_seed(emb: DataFrame) -> DataFrame:
-    """The seeded vectors: even ids BELOW the plant range (the
-    _image_catalog_seed bound — the oracle's seed branch has it)."""
-    return emb.filter(
-        (F.col("doc_id") % 2 == 0) & (F.col("doc_id") < _EMBCAT_OFF)
-    )
-
-
-def _emb_arrival_parts(emb: DataFrame) -> list:
-    """The embedding-catalog arrival files: odd ids in 3 id ranges + the
-    +_EMBCAT_OFF exact re-crawls of every 5th vector."""
-    return _odd_plus_plants(emb, 5, _EMBCAT_OFF, "embedding")
+    """The seeded vectors: the even ids."""
+    return emb.filter(F.col("doc_id") % 2 == 0)
 
 
 EMB_CATALOG = MaintainedState(
@@ -3987,7 +3915,7 @@ EMB_CATALOG = MaintainedState(
             "vectors", "doc_id long, embedding array<float>", _emb_catalog_seed
         ),
     ),
-    parts=_emb_arrival_parts,
+    parts=partial(_odd_plus_plants, families=_EMB_FAMILIES),
     arrival_schema=_EMB_ARRIVAL_SCHEMA,
     handler=_embedding_catalog_handler,
     decisions="doc_id long, n_prior_neardups long",
@@ -4014,46 +3942,7 @@ def stream_embedding_catalog_compacted(
 
 _EMBCAT_TTL_W = 2
 
-STREAM_EMB_CATALOG_RETENTION_ORACLE = f"""
-    WITH vcorpus AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        UNION ALL
-        SELECT vec_id + {_EMBCAT_OFF}, CAST(embedding AS DOUBLE[])
-        FROM embeddings WHERE vec_id % 5 = 0
-    ),
-    mx AS (SELECT max(vec_id) AS m FROM embeddings WHERE vec_id % 2 = 1),
-    bmap AS (
-        SELECT vec_id,
-               CASE WHEN vec_id % 2 = 0 AND vec_id < {_EMBCAT_OFF}
-                        THEN -1
-                    WHEN vec_id >= {_EMBCAT_OFF} THEN 3
-                    WHEN vec_id <= (SELECT m // 3 FROM mx) THEN 0
-                    WHEN vec_id <= (SELECT (2 * m) // 3 FROM mx) THEN 1
-                    ELSE 2 END AS b
-        FROM vcorpus
-    ),
-    arr AS (SELECT vec_id, v FROM vcorpus
-            WHERE vec_id % 2 = 1 OR vec_id >= {_EMBCAT_OFF}),
-    hits AS (
-        SELECT a.vec_id, p.vec_id AS prior_id
-        FROM arr a
-        JOIN bmap ba ON ba.vec_id = a.vec_id
-        JOIN vcorpus p ON TRUE
-        JOIN bmap bp ON bp.vec_id = p.vec_id
-        WHERE ((bp.b < ba.b AND bp.b >= ba.b - {_EMBCAT_TTL_W})
-               OR (bp.b = ba.b AND p.vec_id < a.vec_id))
-          AND round({{dot}} / ({{na}} * {{np}}), 4) >= 0.99
-    )
-    SELECT arr.vec_id,
-           CAST(count(h.prior_id) AS BIGINT) AS n_prior_neardups
-    FROM arr LEFT JOIN hits h ON arr.vec_id = h.vec_id
-    GROUP BY arr.vec_id
-    """.format(
-    # Same _DOT/_NORM renders as STREAM_EMB_CATALOG_ORACLE.
-    dot=_DOT.format(a="a.v", b="p.v"),
-    na=_NORM.format(a="a.v"),
-    np=_NORM.format(a="p.v"),
-)
+STREAM_EMB_CATALOG_RETENTION_ORACLE = _emb_catalog_oracle(_EMBCAT_TTL_W)
 
 
 @register(
@@ -4086,11 +3975,11 @@ def stream_embedding_catalog_retention(
 # stream_minhash_catalog_ingest machinery), and the quality arm stays a
 # stateless projection. Reason priority: exact_dup > near_dup >
 # low_quality > ok. The plants exercise every path CROSS-BATCH:
-#   +_GV2_SEED_OFF  exact re-crawls of seeded (even) docs  -> exact via seed
-#   +_GV2_CROSS_OFF exact copies of EARLIER-ARRIVING odd docs -> exact via
-#                   fps an earlier micro-batch APPENDED (the v1 gap)
-#   +_GV2_NEAR_OFF  tail-truncated (4/5) re-uploads of earlier odd docs
-#                   -> near-dup via band rows an earlier batch APPENDED
+#   +300000  exact re-crawls of seeded (even) docs  -> exact via seed
+#   +500000  exact copies of EARLIER-ARRIVING odd docs -> exact via
+#            fps an earlier micro-batch APPENDED (the v1 gap)
+#   +700000  tail-truncated (4/5) re-uploads of earlier odd docs
+#            -> near-dup via band rows an earlier batch APPENDED
 # Maintenance rules inherited verbatim: novel fps append per batch
 # (first-arrival-wins), EVERY ingested doc's band rows join the catalog
 # regardless of its own gate decision (a near-dup of a near-dup still
@@ -4098,7 +3987,21 @@ def stream_embedding_catalog_retention(
 # dynamic-overwrite partitions (replays overwrite themselves). Arrival
 # order is id order by construction, so the oracle replays the whole
 # lifecycle order-free: seed-store hit OR smaller-id same-fp arrival =
-# exact; band share with seed OR any smaller-id arrival = near.
+# exact; band share with any visible prior = near.
+#
+# v3 adds the MAINTAINED image modality. v1 gated near_dup_image
+# against a chunk catalog FROZEN at stream start; v2 has no image arm.
+# In v3 every batch's cover images (the v1 prefix-stable _gate_cover
+# derivation — the cover renders from the first _GATE_COVER_LEN chars,
+# so tail edits keep it identical) probe the chunk catalog AS OF the
+# batch and then append their own chunk rows. Reason priority:
+# exact_dup > near_dup > near_dup_image > low_quality > ok. The fourth
+# plant family (+900000, sources %8=1 — odd, so they ARRIVED in an
+# earlier micro-batch rather than being seeded) keeps the first
+# _GATE_COVER_LEN chars and REVERSES the tail: same cover image,
+# texturally unrelated shingles — caught by chunk rows an earlier batch
+# appended, through the image arm, not the text arms (pinned by
+# test_pretrain_gate_v3_cross_batch_image).
 #
 # Scale: per batch one fp-keyed store join + one band-keyed catalog join
 # (both UNHINTED — state grows with the corpus) + a batch-bounded
@@ -4107,73 +4010,89 @@ def stream_embedding_catalog_retention(
 # tests/test_streaming.py::test_pretrain_gate_v2_cross_batch_state.
 # ---------------------------------------------------------------------------
 
-_GV2_SEED_OFF = 300000  # exact re-crawl of a seeded (even) doc
-_GV2_CROSS_OFF = 500000  # exact copy of an earlier-arriving odd doc
-_GV2_NEAR_OFF = 700000  # tail-truncated re-upload of an earlier odd doc
-_GV3_IMG_OFF = 900000  # cover-stable tail-scramble of an earlier odd doc
+_GATE_V2_FAMILIES = _FP_FAMILIES + (
+    (12, 1, 500000, "text"),
+    (10, 1, 700000, _TRUNC_SQL),
+)
+_GATE_V3_FAMILIES = _GATE_V2_FAMILIES + (
+    (8, 1, 900000,
+     f"concat(substring(text, 1, {_GATE_COVER_LEN}),"
+     f" reverse(substring(text, {_GATE_COVER_LEN + 1})))"),
+)
 
-PRETRAIN_GATE_V2_ORACLE = f"""
-    WITH seed AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-    arriving AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id + {_GV2_SEED_OFF} AS doc_id, text
-        FROM documents WHERE doc_id % 6 = 0
-        UNION ALL
-        SELECT doc_id + {_GV2_CROSS_OFF} AS doc_id, text
-        FROM documents WHERE doc_id % 12 = 1
-        UNION ALL
-        SELECT doc_id + {_GV2_NEAR_OFF} AS doc_id,
-               substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))
-                   AS text
-        FROM documents WHERE doc_id % 10 = 1
+from .llm import _rename_ctes  # noqa: E402
+
+# The cover corpus's nibs chain, renamed so it coexists with the
+# shingle corpus.
+_GV3_NIBS_CTE = _rename_ctes(
+    _PHASH_NIBS_CTE,
+    {
+        "corpus": "covers",
+        "px": "gipx",
+        "pixels": "gipixels",
+        "stat": "gistat",
+        "nibs": "ginibs",
+    },
+)
+
+
+def _gate_oracle(image_arm: bool) -> str:
+    """The gate's oracle: each arrival's first matching reason — exact
+    (a seed fp or a smaller-id same-fp arrival), near (a band shared with
+    a visible prior), with ``image_arm`` near-image (a hamming<=3 cover
+    of a visible prior), low quality — and keep iff none matched."""
+    families = _GATE_V3_FAMILIES if image_arm else _GATE_V2_FAMILIES
+    fp = _LLM_FP_SQL.format(t="text")
+    image_ctes = image_reason = image_join = ""
+    if image_arm:
+        image_ctes = f"""
+    covers AS (
+        SELECT doc_id, substring(text, 1, {_GATE_COVER_LEN}) AS text
+        FROM corpus
     ),
-    sfp AS (SELECT DISTINCT {_LLM_FP_SQL.format(t='text')} AS fp FROM seed),
+    {_GV3_NIBS_CTE.strip()},
+    imghits AS ({_prior_pairs_sql("ginibs", verify=_NIBS_CLOSE_SQL)}),"""
+        image_reason = """
+                    WHEN i.doc_id IS NOT NULL THEN 'near_dup_image'"""
+        image_join = """
+        LEFT JOIN (SELECT DISTINCT doc_id FROM imghits) i
+          ON r.doc_id = i.doc_id"""
+    return f"""
+    WITH {_arrival_ctes(families)},
+    batched AS (
+        SELECT c.doc_id, c.text, bmap.b
+        FROM corpus c JOIN bmap ON bmap.doc_id = c.doc_id
+    ),
+    arriving AS (SELECT doc_id, text FROM batched WHERE b >= 0),
+    sfp AS (SELECT DISTINCT {fp} AS fp FROM batched WHERE b = -1),
     ranked AS (
-        SELECT doc_id, {_LLM_FP_SQL.format(t='text')} AS fp,
-               row_number() OVER (
-                   PARTITION BY {_LLM_FP_SQL.format(t='text')}
-                   ORDER BY doc_id) AS rn
+        SELECT doc_id, {fp} AS fp,
+               row_number() OVER (PARTITION BY {fp} ORDER BY doc_id) AS rn
         FROM arriving
     ),
-    corpus AS (
-        SELECT doc_id, text FROM seed
-        UNION ALL
-        SELECT doc_id, text FROM arriving
-    ),
-    {_MH_SHINGLES_CTE.strip()},
-    hashed AS (SELECT doc_id, {_MH_BASE_H} AS h FROM sh),
-    sig AS (
-        SELECT doc_id,
-           {_MH_SIG_MINS}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-    {_MH_BAND_SELECTS}
-    ),
-    nearhits AS (
-        SELECT DISTINCT a.doc_id
-        FROM bands a JOIN bands p
-          ON a.band_id = p.band_id AND a.band_val = p.band_val
-        WHERE (a.doc_id % 2 = 1 OR a.doc_id >= {_GV2_SEED_OFF})
-          AND ((p.doc_id % 2 = 0 AND p.doc_id < {_GV2_SEED_OFF})
-               OR ((p.doc_id % 2 = 1 OR p.doc_id >= {_GV2_SEED_OFF})
-                   AND p.doc_id < a.doc_id))
-    ),
+    {_MH_BANDS_CTES},
+    nearhits AS ({_prior_pairs_sql("bands", _BAND_MATCH_SQL)}),{image_ctes}
     {_quality_cte_sql('arriving').strip()}
-    SELECT r.doc_id,
-           CASE WHEN s.fp IS NOT NULL OR r.rn > 1 OR n.doc_id IS NOT NULL
-                     OR q.quality_p < {_GATE_QUALITY_LT}
-                THEN 'drop' ELSE 'keep' END AS decision,
-           CASE WHEN s.fp IS NOT NULL OR r.rn > 1 THEN 'exact_dup'
-                WHEN n.doc_id IS NOT NULL THEN 'near_dup'
-                WHEN q.quality_p < {_GATE_QUALITY_LT} THEN 'low_quality'
-                ELSE 'ok' END AS reason
-    FROM ranked r
-    LEFT JOIN sfp s ON r.fp = s.fp
-    LEFT JOIN nearhits n ON r.doc_id = n.doc_id
-    JOIN quality q ON r.doc_id = q.doc_id
+    SELECT doc_id,
+           CASE WHEN reason = 'ok' THEN 'keep' ELSE 'drop' END AS decision,
+           reason
+    FROM (
+        SELECT r.doc_id,
+               CASE WHEN s.fp IS NOT NULL OR r.rn > 1 THEN 'exact_dup'
+                    WHEN n.doc_id IS NOT NULL THEN 'near_dup'{image_reason}
+                    WHEN q.quality_p < {_GATE_QUALITY_LT} THEN 'low_quality'
+                    ELSE 'ok' END AS reason
+        FROM ranked r
+        LEFT JOIN sfp s ON r.fp = s.fp
+        LEFT JOIN (SELECT DISTINCT doc_id FROM nearhits) n
+          ON r.doc_id = n.doc_id{image_join}
+        JOIN quality q ON r.doc_id = q.doc_id
+    )
     """
+
+
+PRETRAIN_GATE_V2_ORACLE = _gate_oracle(image_arm=False)
+PRETRAIN_GATE_V3_ORACLE = _gate_oracle(image_arm=True)
 
 
 def _gate_handler(image_arm: bool):
@@ -4264,66 +4183,10 @@ def stream_pretrain_gate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     INGEST-MAINTAINED state: exact-dup via the per-batch-appended fp
     store, near-dup via the growing band catalog, low-quality via the
     stateless logistic score; first matching reason wins (exact_dup >
-    near_dup > low_quality > ok). The +_GV2_CROSS_OFF / +_GV2_NEAR_OFF
+    near_dup > low_quality > ok). The +500000 / +700000
     plants arrive in the LAST file and are caught purely by state earlier
     micro-batches appended — the freshness v1's frozen catalog lacks."""
     return run_lifecycle(spark, sf_dir, GATE_V2, "gatev2_")[0]
-
-
-def _gate_arrival_parts(image_arm: bool):
-    """The gates' plant-bearing id-ordered arrival parts: odd ids in 3
-    id ranges + ONE plants file holding every plant family (v3 adds
-    the cover-stable tail-scrambles)."""
-
-    def parts(docs: DataFrame) -> list:
-        # The plant families share one arrivals file, so their id ranges
-        # must be DISJOINT (a collision would give two arrivals one doc_id —
-        # the oracle's quality join would fan out where the handler emits
-        # one row per physical arrival). Ranges stay disjoint iff every real
-        # id is below the smallest inter-offset gap; _id_range_parts'
-        # plant_offset guard only checks the odd max against _GV2_SEED_OFF,
-        # so bound the FULL corpus here.
-        families = [  # (modulus, remainder, id offset, text expression)
-            (6, 0, _GV2_SEED_OFF, "text"),
-            (12, 1, _GV2_CROSS_OFF, "text"),
-            (10, 1, _GV2_NEAR_OFF,
-             "substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))"),
-        ]
-        if image_arm:
-            # Cover-stable tail-scramble: same first _GATE_COVER_LEN chars
-            # (identical cover image), texturally unrelated tail (reversed
-            # chars -> different shingles, so the text bands miss w.h.p. and
-            # the IMAGE arm is what catches it).
-            families.append(
-                (8, 1, _GV3_IMG_OFF,
-                 f"concat(substring(text, 1, {_GATE_COVER_LEN}),"
-                 f" reverse(substring(text, {_GATE_COVER_LEN + 1})))")
-            )
-        offsets = [off for _m, _r, off, _t in families]
-        m_all = docs.agg(F.max("doc_id")).first()[0]
-        gap = min(
-            b - a for a, b in zip([0] + offsets[:-1], offsets)
-        )
-        if m_all is None or m_all >= gap:
-            raise ValueError(
-                f"stream_pretrain_gate: max doc_id {m_all} >= plant-family "
-                f"gap {gap}; the plant id ranges would overlap"
-            )
-
-        plants = reduce(
-            DataFrame.unionByName,
-            [
-                docs.filter(F.col("doc_id") % m == r).select(
-                    (F.col("doc_id") + off).alias("doc_id"),
-                    F.expr(text).alias("text"),
-                )
-                for m, r, off, text in families
-            ],
-        )
-        odds = docs.filter(F.col("doc_id") % 2 == 1)
-        return _id_range_parts(odds, plants, plant_offset=_GV2_SEED_OFF)
-
-    return parts
 
 
 # Seeds are the shared ingest-arm relations (the CLAUDE.md seed rule):
@@ -4336,7 +4199,7 @@ GATE_V2 = MaintainedState(
     name="pretrain_gate_v2",
     table=_docs_table,
     relations=FP_STORE.relations + MH_CATALOG.relations,
-    parts=_gate_arrival_parts(image_arm=False),
+    parts=partial(_odd_plus_plants, families=_GATE_V2_FAMILIES),
     arrival_schema=_DOC_ARRIVAL_SCHEMA,
     handler=_gate_handler(image_arm=False),
     decisions="doc_id long, decision string, reason string",
@@ -4354,131 +4217,9 @@ GATE_V3 = replace(
             ),
         ),
     ),
-    parts=_gate_arrival_parts(image_arm=True),
+    parts=partial(_odd_plus_plants, families=_GATE_V3_FAMILIES),
     handler=_gate_handler(image_arm=True),
 )
-
-
-# ---------------------------------------------------------------------------
-# At-ingest pretrain gate v3: v2 + the
-# MAINTAINED image modality. v1 gated near_dup_image against a chunk
-# catalog FROZEN at stream start; v2 made the exact/near-text arms
-# maintained but dropped the image arm entirely. v3 composes the
-# image-catalog machinery in: every batch's cover images (the v1
-# prefix-stable _gate_cover derivation — the cover renders from the
-# first _GATE_COVER_LEN chars, so tail edits keep it identical) probe
-# the chunk catalog AS OF the batch and then append their own chunk
-# rows. Reason priority is v1's documented order with v2's arms:
-# exact_dup > near_dup > near_dup_image > low_quality > ok. The fourth
-# plant family (+_GV3_IMG_OFF, sources %8=1 — odd, so they ARRIVED in
-# an earlier micro-batch rather than being seeded) keeps the first
-# _GATE_COVER_LEN chars and REVERSES the tail: same cover image,
-# texturally unrelated shingles — caught by chunk rows an earlier batch
-# appended, through the image arm, not the text arms (the cross-batch
-# image catch; pinned by test_pretrain_gate_v3_cross_batch_image).
-# Oracle: v2's text verbatim in structure, plus the cover-corpus nibs
-# chain (renamed via _rename_ctes so it coexists with the shingle
-# corpus) and the earlier-prior image-hit rule.
-# ---------------------------------------------------------------------------
-
-from .llm import _rename_ctes  # noqa: E402
-
-_GV3_NIBS_CTE = _rename_ctes(
-    _PHASH_NIBS_CTE,
-    {
-        "corpus": "covers",
-        "px": "gipx",
-        "pixels": "gipixels",
-        "stat": "gistat",
-        "nibs": "ginibs",
-    },
-)
-
-PRETRAIN_GATE_V3_ORACLE = f"""
-    WITH seed AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-    arriving AS (
-        SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT doc_id + {_GV2_SEED_OFF} AS doc_id, text
-        FROM documents WHERE doc_id % 6 = 0
-        UNION ALL
-        SELECT doc_id + {_GV2_CROSS_OFF} AS doc_id, text
-        FROM documents WHERE doc_id % 12 = 1
-        UNION ALL
-        SELECT doc_id + {_GV2_NEAR_OFF} AS doc_id,
-               substring(text, 1, CAST(floor(4*length(text)/5.0) AS INT))
-                   AS text
-        FROM documents WHERE doc_id % 10 = 1
-        UNION ALL
-        SELECT doc_id + {_GV3_IMG_OFF} AS doc_id,
-               substring(text, 1, {_GATE_COVER_LEN}) ||
-                   reverse(substring(text, {_GATE_COVER_LEN + 1})) AS text
-        FROM documents WHERE doc_id % 8 = 1
-    ),
-    sfp AS (SELECT DISTINCT {_LLM_FP_SQL.format(t='text')} AS fp FROM seed),
-    ranked AS (
-        SELECT doc_id, {_LLM_FP_SQL.format(t='text')} AS fp,
-               row_number() OVER (
-                   PARTITION BY {_LLM_FP_SQL.format(t='text')}
-                   ORDER BY doc_id) AS rn
-        FROM arriving
-    ),
-    corpus AS (
-        SELECT doc_id, text FROM seed
-        UNION ALL
-        SELECT doc_id, text FROM arriving
-    ),
-    {_MH_SHINGLES_CTE.strip()},
-    hashed AS (SELECT doc_id, {_MH_BASE_H} AS h FROM sh),
-    sig AS (
-        SELECT doc_id,
-           {_MH_SIG_MINS}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-    {_MH_BAND_SELECTS}
-    ),
-    nearhits AS (
-        SELECT DISTINCT a.doc_id
-        FROM bands a JOIN bands p
-          ON a.band_id = p.band_id AND a.band_val = p.band_val
-        WHERE (a.doc_id % 2 = 1 OR a.doc_id >= {_GV2_SEED_OFF})
-          AND ((p.doc_id % 2 = 0 AND p.doc_id < {_GV2_SEED_OFF})
-               OR ((p.doc_id % 2 = 1 OR p.doc_id >= {_GV2_SEED_OFF})
-                   AND p.doc_id < a.doc_id))
-    ),
-    covers AS (
-        SELECT doc_id, substring(text, 1, {_GATE_COVER_LEN}) AS text
-        FROM corpus
-    ),
-    {_GV3_NIBS_CTE.strip()},
-    imghits AS (
-        SELECT DISTINCT a.doc_id
-        FROM ginibs a JOIN ginibs p ON TRUE
-        WHERE (a.doc_id % 2 = 1 OR a.doc_id >= {_GV2_SEED_OFF})
-          AND ((p.doc_id % 2 = 0 AND p.doc_id < {_GV2_SEED_OFF})
-               OR ((p.doc_id % 2 = 1 OR p.doc_id >= {_GV2_SEED_OFF})
-                   AND p.doc_id < a.doc_id))
-          AND CAST(list_sum(list_transform(range(1, 17),
-                j -> bit_count(xor(a.nb[j], p.nb[j])))) AS INT) <= 3
-    ),
-    {_quality_cte_sql('arriving').strip()}
-    SELECT r.doc_id,
-           CASE WHEN s.fp IS NOT NULL OR r.rn > 1 OR n.doc_id IS NOT NULL
-                     OR i.doc_id IS NOT NULL
-                     OR q.quality_p < {_GATE_QUALITY_LT}
-                THEN 'drop' ELSE 'keep' END AS decision,
-           CASE WHEN s.fp IS NOT NULL OR r.rn > 1 THEN 'exact_dup'
-                WHEN n.doc_id IS NOT NULL THEN 'near_dup'
-                WHEN i.doc_id IS NOT NULL THEN 'near_dup_image'
-                WHEN q.quality_p < {_GATE_QUALITY_LT} THEN 'low_quality'
-                ELSE 'ok' END AS reason
-    FROM ranked r
-    LEFT JOIN sfp s ON r.fp = s.fp
-    LEFT JOIN nearhits n ON r.doc_id = n.doc_id
-    LEFT JOIN imghits i ON r.doc_id = i.doc_id
-    JOIN quality q ON r.doc_id = q.doc_id
-    """
 
 
 @register("stream_pretrain_gate_v3", PRETRAIN_GATE_V3_ORACLE)
@@ -4488,7 +4229,7 @@ def stream_pretrain_gate_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, near-dup via the text band catalog, near-dup-image via the
     growing cover chunk catalog, low-quality via the stateless score —
     reason priority exact_dup > near_dup > near_dup_image > low_quality
-    > ok. The +_GV3_IMG_OFF cover-stable tail-scrambles of EARLIER-
+    > ok. The +900000 cover-stable tail-scrambles of EARLIER-
     ARRIVING odd docs are caught purely by chunk rows previous
     micro-batches appended — the image freshness v1's frozen catalog and
     v2's missing image arm both lack."""
@@ -4694,8 +4435,15 @@ def stream_split_by_neardup_incremental(
 
 
 def _ndinc_arrival_parts(docs: DataFrame) -> list:
-    """The whole corpus in 3 id ranges + the near_plants re-crawls."""
-    return _id_range_parts(docs, near_plants(docs), plant_offset=100000)
+    """The whole corpus in 3 id ranges + the near_plants re-crawls
+    (+100000, so every real id must sit below it)."""
+    m = docs.agg(F.max("doc_id")).first()[0]
+    if m is None or m >= 100000:
+        raise ValueError(
+            f"cluster map arrivals: max doc_id {m} must be below the "
+            "near_plants offset 100000"
+        )
+    return _id_range_parts(docs, near_plants(docs), m)
 
 
 # Seedless: the catalog and the map first appear at batch 0. Shared by

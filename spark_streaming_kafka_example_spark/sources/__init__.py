@@ -38,7 +38,6 @@ __all__ = [
     "read_jsonl",
     "load_table",
     "read_csv_master",
-    "read_json_stream_as_table",
     "kafka_stream",
     "kafka_batch",
     "socket_stream",

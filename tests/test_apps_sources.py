@@ -4,7 +4,9 @@ console sinks (K1-K3), partition-pruned archive read-back (S5)."""
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
 
 import pytest
 
@@ -247,3 +249,20 @@ def test_orc_and_json_roundtrip(spark, sf_dir, tmp_path):
     docs.write.json(json_dir)
     back = spark.read.schema(docs.schema).json(json_dir)
     assert {tuple(r) for r in back.collect()} == expect
+
+
+def _package_modules() -> list[str]:
+    import spark_streaming_kafka_example_spark as pkg
+
+    return sorted(
+        m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+    )
+
+
+@pytest.mark.parametrize("module", _package_modules())
+def test_module_all_names_resolve(module):
+    """Every name a module's __all__ exports exists, so a star import of
+    it cannot raise AttributeError."""
+    mod = importlib.import_module(module)
+    missing = [n for n in getattr(mod, "__all__", ()) if not hasattr(mod, n)]
+    assert not missing, f"{module}.__all__ names undefined: {missing}"

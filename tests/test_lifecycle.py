@@ -13,7 +13,9 @@ once per spec here instead of once per arm:
 - a seeded spec with one relation dir missing fails fast, naming it.
 
 Each spec runs once at sf0.001 (module-cached) and the replay, TTL and
-half-seeded checks reuse that run's state.
+half-seeded checks reuse that run's state. The seeded specs' plant
+families render both their Spark arrival parts and their oracles; the
+checks that the two agree run the parts and DuckDB only, no lifecycle.
 """
 
 from __future__ import annotations
@@ -21,10 +23,15 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import replace
+from functools import partial
 
 import pytest
+from pyspark.sql import functions as F
 
+from spark_streaming_kafka_example_spark import plans
 from spark_streaming_kafka_example_spark.plans import stream as S
+
+from .oracle_harness import duckdb_connection
 
 SPECS = {
     spec.name: spec
@@ -49,6 +56,20 @@ SEEDED = [
     n for n, s in SPECS.items() if any(r.seed is not None for r in s.relations)
 ]
 SEEDLESS = [n for n in SPECS if n not in SEEDED]
+# Seeded spec -> its registered ingest oracle, and the plant families
+# with the oracle-side table and column they render over.
+DECLARED = {
+    "fp_store": ("stream_dedup_store_ingest", S._FP_FAMILIES),
+    "fp_bloom_store": ("stream_dedup_store_bloom_ingest", S._FP_FAMILIES),
+    "minhash_catalog": ("stream_minhash_catalog_ingest", S._MH_FAMILIES),
+    "image_catalog": ("stream_image_catalog_ingest", S._IMG_FAMILIES),
+    "embedding_catalog": (
+        "stream_embedding_catalog_ingest",
+        S._EMB_FAMILIES, S._EMB_SOURCE_SQL, "embedding",
+    ),
+    "pretrain_gate_v2": ("stream_pretrain_gate_v2", S._GATE_V2_FAMILIES),
+    "pretrain_gate_v3": ("stream_pretrain_gate_v3", S._GATE_V3_FAMILIES),
+}
 
 
 def _rows(df) -> list[str]:
@@ -208,3 +229,97 @@ def test_state_write_rejects_schema_drift(spark, tmp_path):
     ):
         io.write(0, store=drifted)
     assert not os.path.exists(io.dir("store"))
+
+
+def test_overlapping_plant_families_fail_before_any_job(spark, sf_dir):
+    """Two families at one offset overlap whatever the table holds: the
+    guard names the gap before any Spark job runs."""
+    docs = S._docs_table(spark, sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("family_guard", "must fail before any job")
+    try:
+        with pytest.raises(ValueError, match="smallest offset gap 0"):
+            S._odd_plus_plants(
+                docs, S._FP_FAMILIES + ((12, 1, 300000, "text"),)
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("family_guard") == []
+
+
+@pytest.mark.parametrize(
+    "families, shift, gap",
+    [
+        # 100 apart: the two families' id ranges overlap on 500 docs
+        (((6, 0, 300000, "text"), (12, 1, 300100, "text")), 0, 100),
+        # the table's ids reach the only family's offset
+        (S._FP_FAMILIES, 300000, 300000),
+    ],
+)
+def test_plant_family_guard_raises_before_any_write(
+    spark, sf_dir, families, shift, gap
+):
+    spec = replace(
+        S.FP_STORE,
+        table=lambda spark, sf: S._docs_table(spark, sf).withColumn(
+            "doc_id", F.col("doc_id") + shift
+        ),
+        parts=partial(S._odd_plus_plants, families=families),
+    )
+    with pytest.raises(ValueError, match=f"smallest offset gap {gap};"):
+        S.run_lifecycle(spark, sf_dir, spec, "lifecycle_family_guard_")
+    base = plans._RUN_TMPDIRS[-1]
+    assert "lifecycle_family_guard_" in base
+    assert os.listdir(base) == []  # no seed, no arrival file
+
+
+@pytest.mark.parametrize("name", SEEDED)
+def test_arrival_parts_are_the_oracle_batches(spark, sf_dir, name):
+    """The one declaration: the Spark arrival parts hold exactly the ids
+    the oracle's bmap puts in each batch, and the registered oracle
+    renders that bmap."""
+    oracle, families, *over = DECLARED[name]
+    ctes = S._arrival_ctes(families, *over)
+    assert ctes in plans.ORACLE[oracle]
+    spec = SPECS[name]
+    got = [
+        sorted(r.doc_id for r in part.select("doc_id").collect())
+        for part in spec.parts(spec.table(spark, sf_dir))
+    ]
+    want = [[], [], [], []]
+    con = duckdb_connection(sf_dir)
+    for doc_id, b in con.execute(
+        f"WITH {ctes} SELECT doc_id, b FROM bmap WHERE b >= 0 ORDER BY doc_id"
+    ).fetchall():
+        want[b].append(doc_id)
+    assert got == want and all(want)
+
+
+@pytest.mark.parametrize(
+    "render", [S._mh_catalog_oracle, S._image_catalog_oracle, S._emb_catalog_oracle]
+)
+def test_catalog_ttl_beyond_lifetime_is_ingest(sf_dir, render):
+    """A catalog's TTL render with W >= 4 (the seed's age at the last of
+    the 4 batches) sees every prior, so it returns the ingest rows; W=2
+    must not."""
+    con = duckdb_connection(sf_dir)
+    rows = {w: sorted(con.execute(render(w)).fetchall()) for w in (None, 2, 4)}
+    assert rows[4] == rows[None] != rows[2]
+
+
+def test_handler_jobs_are_labelled(spark, sf_dir):
+    """Every job of a lifecycle batch, the overlapped StateIO.write jobs
+    on run_parallel threads included, is described <spec>/b<batch_id>."""
+    spec = replace(S.FP_STORE, name="labelled_store")
+    S.run_lifecycle(spark, sf_dir, spec, "lifecycle_labels_")
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    label = {}
+    for j in (jobs.apply(i) for i in range(jobs.size())):
+        d = j.description()
+        label[j.jobId()] = d.get() if d.isDefined() else None
+    ours = [i for i, d in label.items() if d and d.startswith("labelled_store/")]
+    assert ours, "no handler job carries a label"
+    window = [label[i] for i in sorted(label) if min(ours) <= i <= max(ours)]
+    assert None not in window and window == sorted(window), window
+    assert sorted(set(window)) == [f"labelled_store/b{b}" for b in range(4)]
+    assert window.count("labelled_store/b3") >= 3  # checkpoint + 2 writes
