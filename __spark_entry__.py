@@ -121,13 +121,16 @@ FORCE_RECHECK: dict[str, int] = {
     "u1_u3_udf_sql": 21,
     "stream_ivf_appendix_probe": 21,
     "sim_ivf_compacted_probe": 21,
-    # The windowed HLL tumbling and sliding queries share one body.
+    # Every windowed sketch folds through analytics.windowed_agg, and every
+    # window oracle renders its panes through plans.pane_sql.
     "stream_hll_windowed": 21,
     "stream_hll_sliding": 21,
-    # The windowed count-min drains overlap with their batch arm, and
-    # residual IVF-PQ assigns buckets with keep_cv.
-    "stream_countmin_windowed": 20,
-    "stream_countmin_sliding": 20,
+    "stream_countmin_windowed": 21,
+    "stream_countmin_sliding": 21,
+    "stream_quantile_windowed": 21,
+    "stream_quantile_sliding": 21,
+    "sketch_quantile_rollup": 21,
+    # Residual IVF-PQ assigns buckets with keep_cv.
     "sim_ivfpq_residual_recall": 20,
 }
 

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 __all__ = [
     "enrich_join",
     "windowed_agg",
+    "window_panes",
     "alert_filter",
     "group_count",
 ]
@@ -47,7 +48,7 @@ def enrich_join(
 def windowed_agg(
     df: DataFrame,
     ts_col: str,
-    group_col: str,
+    group_cols: Sequence[str],
     window_duration: str,
     slide_duration: str | None,
     aggs: Sequence[Column],
@@ -56,11 +57,11 @@ def windowed_agg(
     """Tumbling/sliding event-time window aggregation (SURVEY A2/A3, W1-W4;
     reference TumblingWindow.scala:52-58, SlidingWindow.scala:52-59) — the
     one window aggregation the sensor pipeline, the reference-parity
-    queries and their streaming twins all run.
+    queries, their streaming twins and the windowed sketch folds all run.
 
     Pass ``slide_duration=None`` for a tumbling window. ``aggs`` are aliased
-    Columns; the result is ``window_start, window_end, group_col`` followed
-    by the aggs in order. ``watermark`` (e.g. "10 minutes", reference
+    Columns; the result is ``window_start, window_end, *group_cols``
+    followed by the aggs in order. ``watermark`` (e.g. "10 minutes", reference
     SlidingWindow.scala:52) applies only to streaming inputs, where it
     bounds state and drops late rows; a batch input keeps its plan.
 
@@ -71,12 +72,34 @@ def windowed_agg(
     if watermark is not None and df.isStreaming:
         df = df.withWatermark(ts_col, watermark)
     win = F.window(F.col(ts_col), window_duration, slide_duration)
-    out = df.groupBy(win, F.col(group_col)).agg(*aggs)
-    # Window-bounds extraction (SURVEY W4; reference TumblingWindow.scala:60).
-    return out.select(
+    return _pane_bounds(
+        df.groupBy(win, *[F.col(c) for c in group_cols]).agg(*aggs)
+    )
+
+
+def window_panes(
+    df: DataFrame,
+    ts_col: str,
+    window_duration: str,
+    slide_duration: str | None,
+    cols: Sequence[str | Column],
+) -> DataFrame:
+    """The pane projection ``windowed_agg`` groups by, for batch arms that
+    aggregate the panes themselves: each row as ``window_start,
+    window_end, *cols``, once per window that holds its ``ts_col`` (one
+    for tumbling, window/slide for sliding)."""
+    win = F.window(F.col(ts_col), window_duration, slide_duration)
+    return _pane_bounds(df.select(win.alias("window"), *cols))
+
+
+def _pane_bounds(df: DataFrame) -> DataFrame:
+    """Window-bounds extraction (SURVEY W4; reference
+    TumblingWindow.scala:60): ``df``'s leading ``window`` struct becomes
+    ``window_start, window_end``; the other columns follow in order."""
+    return df.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
-        *out.columns[1:],
+        *df.columns[1:],
     )
 
 

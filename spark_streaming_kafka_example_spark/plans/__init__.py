@@ -18,6 +18,7 @@ Conventions that keep the two sides hash-identical:
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,6 +56,45 @@ def hex_bigint_sql(h: str, start: int, n_chars: int) -> str:
         for i in range(n_chars)
     ]
     return "(" + " + ".join(terms) + ")"
+
+
+class WindowShape(NamedTuple):
+    """One event-time window, declared once for both engines: Spark runs
+    it through ``analytics.windowed_agg`` / ``window_panes``, DuckDB
+    through ``pane_sql``. ``slide=None`` is tumbling; ``watermark``
+    bounds streaming state and is ignored on batch inputs."""
+
+    size: str
+    slide: str | None
+    watermark: str | None
+
+
+HOURLY = WindowShape("1 hour", None, "2 hours")
+TRAILING_3H = WindowShape("3 hours", "1 hour", "4 hours")
+DAILY = WindowShape("1 day", None, None)
+# The reference-parity shapes (TumblingWindow.scala, SlidingWindow.scala).
+MINUTE = WindowShape("1 minute", None, "10 minutes")
+SLIDING_5M = WindowShape("5 minutes", "1 minute", "10 minutes")
+
+
+def pane_sql(
+    shape: WindowShape, cols: str, source: str = "events", where: str = ""
+) -> str:
+    """DuckDB twin of Spark's window pane assignment: every ``source`` row
+    (``ts`` is its event time) as ``window_start, window_end, cols``, once
+    per ``shape`` window that holds it. Panes start at the row's slide
+    bucket and ``i`` slides before it; tumbling is the one-pane case."""
+    import pandas as pd
+
+    step = shape.slide or shape.size
+    n, rem = divmod(pd.Timedelta(shape.size), pd.Timedelta(step))
+    if rem:
+        raise ValueError(f"window {shape.size} is not a multiple of {step}")
+    start = f"time_bucket(INTERVAL '{step}', ts) - i.i * INTERVAL '{step}'"
+    return f"""SELECT {start} AS window_start,
+               {start} + INTERVAL '{shape.size}' AS window_end,
+               {cols}
+        FROM {source}, range({n}) i(i){f' WHERE {where}' if where else ''}"""
 
 
 _RUN_TMPDIRS: list[str] = []

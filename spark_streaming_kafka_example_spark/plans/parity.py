@@ -23,7 +23,7 @@ from ..transforms import (
     with_event_time,
     with_month,
 )
-from . import register
+from . import MINUTE, SLIDING_5M, pane_sql, register
 
 # ---------------------------------------------------------------------------
 # Flagship: the reference's core pipeline re-expressed in batch
@@ -33,19 +33,12 @@ from . import register
 # analogue at reference SlidingWindow.scala:63).
 # ---------------------------------------------------------------------------
 
-FLAGSHIP_ORACLE = """
+FLAGSHIP_ORACLE = f"""
 WITH enriched AS (
     SELECT e.ts, e.value, c.c_mktsegment AS segment
     FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-), panes AS (
-    SELECT time_bucket(INTERVAL '1 minute', ts) - i.i * INTERVAL '1 minute'
-               AS window_start,
-           segment, value
-    FROM enriched, range(5) i(i)
-)
-SELECT window_start,
-       window_start + INTERVAL '5 minutes' AS window_end,
-       segment,
+), panes AS ({pane_sql(SLIDING_5M, "segment, value", "enriched")})
+SELECT window_start, window_end, segment,
        round(sum(value), 4) AS sum_value,
        count(*) AS n_events
 FROM panes
@@ -71,12 +64,12 @@ def flagship_alert(events: DataFrame, customer: DataFrame) -> DataFrame:
     )
     enriched = enrich_join(events, segments, key="user_id", how="left_outer")
     agg = windowed_agg(
-        enriched, "ts", "segment", "5 minutes", "1 minute",
+        enriched, "ts", ("segment",), SLIDING_5M.size, SLIDING_5M.slide,
         [
             F.round(F.sum("value"), 4).alias("sum_value"),
             F.count(F.lit(1)).alias("n_events"),
         ],
-        watermark="10 minutes",
+        watermark=SLIDING_5M.watermark,
     )
     return alert_filter(agg, "sum_value", 200.0)
 
@@ -313,20 +306,19 @@ def j1_enrich_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a2_tumbling_window_agg",
-    """
-    SELECT time_bucket(INTERVAL '1 minute', ts) AS window_start,
-           time_bucket(INTERVAL '1 minute', ts) + INTERVAL '1 minute'
-               AS window_end,
-           event_type,
+    f"""
+    WITH panes AS ({pane_sql(MINUTE, "event_type, value")})
+    SELECT window_start, window_end, event_type,
            round(sum(value), 4) AS sum_value,
            round(avg(value), 4) AS avg_value,
            count(*) AS n_events
-    FROM events GROUP BY 1, 2, 3
+    FROM panes GROUP BY 1, 2, 3
     """,
 )
 def a2_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_agg(
-        load_table(spark, sf_dir, "events"), "ts", "event_type", "1 minute", None,
+        load_table(spark, sf_dir, "events"), "ts", ("event_type",),
+        MINUTE.size, MINUTE.slide,
         [
             F.round(F.sum("value"), 4).alias("sum_value"),
             F.round(F.avg("value"), 4).alias("avg_value"),
@@ -343,16 +335,9 @@ def a2_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a3_sliding_window_agg",
-    """
-    WITH panes AS (
-        SELECT time_bucket(INTERVAL '1 minute', ts) - i.i * INTERVAL '1 minute'
-                   AS window_start,
-               event_type, value
-        FROM events, range(5) i(i)
-    )
-    SELECT window_start,
-           window_start + INTERVAL '5 minutes' AS window_end,
-           event_type,
+    f"""
+    WITH panes AS ({pane_sql(SLIDING_5M, "event_type, value")})
+    SELECT window_start, window_end, event_type,
            round(sum(value), 4) AS sum_value,
            count(*) AS n_events
     FROM panes GROUP BY 1, 2, 3
@@ -360,7 +345,8 @@ def a2_tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a3_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_agg(
-        load_table(spark, sf_dir, "events"), "ts", "event_type", "5 minutes", "1 minute",
+        load_table(spark, sf_dir, "events"), "ts", ("event_type",),
+        SLIDING_5M.size, SLIDING_5M.slide,
         [
             F.round(F.sum("value"), 4).alias("sum_value"),
             F.count(F.lit(1)).alias("n_events"),

@@ -21,12 +21,21 @@ from functools import partial, reduce
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..analytics import enrich_join, group_count, windowed_agg
+from ..analytics import enrich_join, group_count, window_panes, windowed_agg
 from ..sources import load_table
 from ..streaming.sinks import memory_sink, overwrite_partitions
 from ..streaming.stateful import stateful_running_count, stateful_topk_fold
 from ..transforms import split_explode_words
-from . import register
+from . import (
+    DAILY,
+    HOURLY,
+    MINUTE,
+    SLIDING_5M,
+    TRAILING_3H,
+    WindowShape,
+    pane_sql,
+    register,
+)
 
 # Physical schema of events.parquet as the *streaming* reader sees it (file
 # streams require an explicit schema). The testdata generator has shipped
@@ -191,24 +200,23 @@ def run_to_table(
 
 @register(
     "stream_tumbling_complete",
-    """
-    SELECT time_bucket(INTERVAL '1 minute', ts) AS window_start,
-           time_bucket(INTERVAL '1 minute', ts) + INTERVAL '1 minute'
-               AS window_end,
-           event_type,
+    f"""
+    WITH panes AS ({pane_sql(MINUTE, "event_type, value")})
+    SELECT window_start, window_end, event_type,
            round(sum(value), 2) AS sum_value,
            count(*) AS n_events
-    FROM events GROUP BY 1, 2, 3
+    FROM panes GROUP BY 1, 2, 3
     """,
 )
 def stream_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = windowed_agg(
-        events_stream(spark, sf_dir), "ts", "event_type", "1 minute", None,
+        events_stream(spark, sf_dir), "ts", ("event_type",),
+        MINUTE.size, MINUTE.slide,
         [
             F.round(F.sum("value"), 2).alias("sum_value"),
             F.count(F.lit(1)).alias("n_events"),
         ],
-        watermark="10 minutes",
+        watermark=MINUTE.watermark,
     )
     return run_to_table(spark, agg, "complete")
 
@@ -221,25 +229,19 @@ def stream_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_sliding_update",
-    """
-    WITH panes AS (
-        SELECT time_bucket(INTERVAL '1 minute', ts) - i.i * INTERVAL '1 minute'
-                   AS window_start,
-               event_type, value
-        FROM events, range(5) i(i)
-    )
-    SELECT window_start,
-           window_start + INTERVAL '5 minutes' AS window_end,
-           event_type,
+    f"""
+    WITH panes AS ({pane_sql(SLIDING_5M, "event_type, value")})
+    SELECT window_start, window_end, event_type,
            round(sum(value), 2) AS sum_value
     FROM panes GROUP BY 1, 2, 3
     """,
 )
 def stream_sliding_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = windowed_agg(
-        events_stream(spark, sf_dir), "ts", "event_type", "5 minutes", "1 minute",
+        events_stream(spark, sf_dir), "ts", ("event_type",),
+        SLIDING_5M.size, SLIDING_5M.slide,
         [F.round(F.sum("value"), 2).alias("sum_value")],
-        watermark="10 minutes",
+        watermark=SLIDING_5M.watermark,
     )
     return run_to_table(spark, agg, "update")
 
@@ -797,9 +799,10 @@ def _dedup_store_handler(io: StateIO):
 # doc_id order, so the oracle's rank-by-doc_id replays first-arrival-wins.
 _FP_FAMILIES = ((6, 0, 300000, "text"),)
 
-# The fp store's oracle rows: every corpus doc's batch and fingerprint.
+# The fp store's oracle rows: every corpus doc's batch and fingerprint,
+# materialized so DuckDB joins corpus with bmap once, not per reference.
 _FP_BATCH_CTES = f"""{_arrival_ctes(_FP_FAMILIES)},
-    fb AS (
+    fb AS MATERIALIZED (
         SELECT c.doc_id, bmap.b, {_LLM_FP_SQL.format(t='c.text')} AS fp
         FROM corpus c JOIN bmap ON bmap.doc_id = c.doc_id
     )"""
@@ -2916,15 +2919,18 @@ from .windows_stats import (  # noqa: E402
 
 _HLL_EV_H_SQL = "md5('hll:' || CAST(user_id AS VARCHAR))"
 
-def _hll_window_oracle(ev_cte: str, gcols: tuple) -> str:
+def _hll_window_oracle(shape: WindowShape, keys: tuple) -> str:
     """ONE oracle generator for the windowed/sliding HLL twins (the
-    register-sum and estimate SQL restated per variant could drift). ``ev_cte``
-    must end by defining ev(gcols..., user_id); the chain replays
-    windows_stats.HLL_SKETCH_ORACLE's hashed -> regs -> grid -> full_regs -> sk
-    -> exact -> est stages keyed by ``gcols`` — the register-rank derivation,
-    fixed-point indicator sum, and pinned est_raw op order MUST stay textually
-    in sync with that batch oracle (changing its text costs a FORCE_RECHECK
-    slot, so it stays the canonical copy)."""
+    register-sum and estimate SQL restated per variant could drift): ev
+    holds the ``shape`` panes of every (keys..., user_id) row, and the chain
+    replays windows_stats.HLL_SKETCH_ORACLE's hashed -> regs -> grid ->
+    full_regs -> sk -> exact -> est stages keyed by (window, keys...) — the
+    register-rank derivation, fixed-point indicator sum, and pinned est_raw
+    op order MUST stay textually in sync with that batch oracle (changing
+    its text costs a FORCE_RECHECK slot, so it stays the canonical copy)."""
+    gcols = ("window_start", "window_end", *keys)
+    ev = pane_sql(shape, ", ".join((*keys, "user_id")),
+                  where="user_id IS NOT NULL")
     g = ", ".join(gcols)
     grid_g = ", ".join(f"grid.{c}" for c in gcols)
     sk_g = ", ".join(f"sk.{c}" for c in gcols)
@@ -2932,7 +2938,7 @@ def _hll_window_oracle(ev_cte: str, gcols: tuple) -> str:
     nums = ", ".join(str(i + 1) for i in range(len(gcols)))
     nums_b = ", ".join(str(i + 1) for i in range(len(gcols) + 1))
     return f"""
-    WITH {ev_cte.strip()},
+    WITH ev AS ({ev}),
     hashed AS (
         SELECT {g},
                (strpos('{_HLL_NIBS}', substring({_HLL_EV_H_SQL}, 1, 1)) - 1) * 16
@@ -2981,68 +2987,39 @@ def _hll_window_oracle(ev_cte: str, gcols: tuple) -> str:
     """
 
 
-_HLL_WIN_EV_CTE = """ev AS (
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-               time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
-                   AS window_end,
-               event_type, user_id
-        FROM events WHERE user_id IS NOT NULL
-    )"""
-
-HLL_WINDOWED_ORACLE = _hll_window_oracle(
-    _HLL_WIN_EV_CTE, ("window_start", "window_end", "event_type")
-)
 
 def hll_windowed_fold(
-    ev: DataFrame,
-    watermark: str = "2 hours",
-    win: tuple = ("1 hour",),
-    keys: tuple = ("event_type",),
+    ev: DataFrame, shape: WindowShape = HOURLY, keys: tuple = ("event_type",)
 ) -> DataFrame:
     """The windowed HLL register fold — hash each (ts, keys..., user) row
-    to (bucket, rank), watermark, and max-fold registers per (window,
-    keys..., bucket). ``win`` is the F.window argument tail after "ts":
-    ("1 hour",) tumbling or ("3 hours", "1 hour") sliding. THE production
+    to (bucket, rank), then windowed_agg max-folds registers per (``shape``
+    window, keys..., bucket) under its watermark. THE production
     definition both windowed HLL queries drain and
     tests/test_streaming.py::test_windowed_sketch_watermark_expires_state
     runs in append mode across micro-batches: the watermark bound
     ("state = ACTIVE windows x groups x 256") is a pinned contract, not
     prose."""
-    return (
-        hll_hashed(ev, key="user_id", group_cols=("ts", *keys))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", *win), *keys, "bucket")
-        .agg(F.max("r").alias("r"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            *keys, "bucket", "r",
-        )
+    return windowed_agg(
+        hll_hashed(ev, key="user_id", group_cols=("ts", *keys)), "ts",
+        (*keys, "bucket"), shape.size, shape.slide,
+        [F.max("r").alias("r")], shape.watermark,
     )
 
 
 def _hll_windowed_query(
-    spark: SparkSession, sf_dir: str, win: tuple, watermark: str, keys: tuple
+    spark: SparkSession, sf_dir: str, shape: WindowShape, keys: tuple
 ) -> DataFrame:
     """The windowed HLL query body: drain ``hll_windowed_fold`` and score
-    its registers against a batch exact arm that keys identically (batch
-    F.window replicates sliding panes the same way the streaming fold
-    does)."""
+    its registers against a batch exact arm over the same panes."""
     gcols = ("window_start", "window_end", *keys)
     ev = (
         events_stream(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
         .select("ts", *keys, "user_id")
     )
-    ev_b = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(F.window("ts", *win).alias("window"), *keys, "user_id")
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            *keys, "user_id",
-        )
+    ev_b = window_panes(
+        load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull()),
+        "ts", shape.size, shape.slide, (*keys, "user_id"),
     )
     groups = ev_b.select(*gcols).distinct()
     exact = ev_b.groupBy(*gcols).agg(F.countDistinct("user_id").alias("n"))
@@ -3051,7 +3028,7 @@ def _hll_windowed_query(
     # stats for the downstream grid and score joins.
     regs_drained, groups, exact = _run_jobs(
         lambda: run_to_table(
-            spark, hll_windowed_fold(ev, watermark, win, keys), "complete"
+            spark, hll_windowed_fold(ev, shape, keys), "complete"
         ),
         lambda: groups.localCheckpoint(),
         lambda: exact.localCheckpoint(),
@@ -3064,11 +3041,9 @@ def _hll_windowed_query(
     )
 
 
-@register("stream_hll_windowed", HLL_WINDOWED_ORACLE)
+@register("stream_hll_windowed", _hll_window_oracle(HOURLY, ("event_type",)))
 def stream_hll_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _hll_windowed_query(
-        spark, sf_dir, ("1 hour",), "2 hours", ("event_type",)
-    )
+    return _hll_windowed_query(spark, sf_dir, HOURLY, ("event_type",))
 
 
 # ---------------------------------------------------------------------------
@@ -4574,12 +4549,12 @@ from .windows_stats import (  # noqa: E402
 _CMS_WIN_TOPN = 5
 
 
-def _cms_window_oracle(ev_cte: str) -> str:
+def _cms_window_oracle(shape: WindowShape) -> str:
     """ONE oracle generator for the windowed/sliding count-min twins (the
-    _hll_window_oracle convention): ``ev_cte`` must end by defining
-    ev(window_start, window_end, user_id)."""
+    _hll_window_oracle convention): ev holds the ``shape`` panes of every
+    user_id row."""
     return f"""
-    WITH {ev_cte.strip()},
+    WITH ev AS ({pane_sql(shape, "user_id", where="user_id IS NOT NULL")}),
     js AS (SELECT unnest(range(0, {_CMS_D})) AS j),
     cells AS (
         SELECT window_start, window_end, j,
@@ -4619,28 +4594,29 @@ def _cms_window_oracle(ev_cte: str) -> str:
     """
 
 
-_CMS_WIN_EV_CTE = """ev AS (
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-               time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
-                   AS window_end,
-               user_id
-        FROM events WHERE user_id IS NOT NULL
-    )"""
-
-CMS_WINDOWED_ORACLE = _cms_window_oracle(_CMS_WIN_EV_CTE)
-
 _CMS_WIN_GCOLS = ("window_start", "window_end")
 
 
+def cms_windowed_fold(ev: DataFrame, shape: WindowShape = HOURLY) -> DataFrame:
+    """The windowed count-min fold: hash each (ts, user_id) row to its
+    _CMS_D (j, bucket) cells, then windowed_agg counts per (``shape``
+    window, j, bucket) under its watermark — the frequency member of the
+    windowed-fold family hll_windowed_fold anchors."""
+    hashed = ev.select("ts", "user_id", _cms_js()).select(
+        "ts", "j", _cms_bucket_col(F.col("user_id"), F.col("j")).alias("bucket")
+    )
+    return windowed_agg(
+        hashed, "ts", ("j", "bucket"), shape.size, shape.slide,
+        [F.count(F.lit(1)).alias("c")], shape.watermark,
+    )
+
+
 def _cms_windowed_query(
-    spark: SparkSession, sf_dir: str, win: tuple, watermark: str
+    spark: SparkSession, sf_dir: str, shape: WindowShape
 ) -> DataFrame:
-    """The windowed count-min query body, parametrized by the window spec
-    (the sliding twin extends via parameters — the hll fold convention).
-    ``win`` is the
-    F.window argument tail after "ts": ("1 hour",) tumbling or
-    ("3 hours", "1 hour") sliding (batch F.window replicates panes the
-    same way the streaming fold does, so both arms key identically)."""
+    """The windowed count-min query body: drain ``cms_windowed_fold`` and
+    score its cells against the exact per-window top-N over the same
+    panes."""
     from pyspark.sql.window import Window as W
 
     ev = (
@@ -4648,30 +4624,9 @@ def _cms_windowed_query(
         .filter(F.col("user_id").isNotNull())
         .select("ts", "user_id")
     )
-    folded = (
-        ev.select("ts", "user_id", _cms_js())
-        .select(
-            "ts", "j",
-            _cms_bucket_col(F.col("user_id"), F.col("j")).alias("bucket"),
-        )
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", *win), "j", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "j", "bucket", "c",
-        )
-    )
-    ev_b = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").isNotNull())
-        .select(F.window("ts", *win).alias("window"), "user_id")
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "user_id",
-        )
+    ev_b = window_panes(
+        load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull()),
+        "ts", shape.size, shape.slide, ("user_id",),
     )
     exact = ev_b.groupBy(*_CMS_WIN_GCOLS, "user_id").agg(
         F.count(F.lit(1)).alias("n")
@@ -4696,7 +4651,7 @@ def _cms_windowed_query(
     # SMJ — with no hint, so the choice still degrades to shuffle when
     # retained windows grow).
     cells, top = _run_jobs(
-        lambda: run_to_table(spark, folded, "complete"),
+        lambda: run_to_table(spark, cms_windowed_fold(ev, shape), "complete"),
         lambda: top.localCheckpoint(),
     )
     cand = top.select(*_CMS_WIN_GCOLS, "user_id", "n", _cms_js()).select(
@@ -4717,37 +4672,22 @@ def _cms_windowed_query(
     )
 
 
-@register("stream_countmin_windowed", CMS_WINDOWED_ORACLE)
+@register("stream_countmin_windowed", _cms_window_oracle(HOURLY))
 def stream_countmin_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cms_windowed_query(spark, sf_dir, ("1 hour",), "2 hours")
+    return _cms_windowed_query(spark, sf_dir, HOURLY)
 
 
-_CMS_SLIDE_EV_CTE = """ev0 AS (SELECT ts, user_id FROM events
-            WHERE user_id IS NOT NULL),
-    ev AS (
-        SELECT time_bucket(INTERVAL '1 hour', ts) - i.i * INTERVAL '1 hour'
-                   AS window_start,
-               time_bucket(INTERVAL '1 hour', ts) - i.i * INTERVAL '1 hour'
-                   + INTERVAL '3 hours' AS window_end,
-               user_id
-        FROM ev0, range(3) i(i)
-    )"""
-
-CMS_SLIDING_ORACLE = _cms_window_oracle(_CMS_SLIDE_EV_CTE)
-
-
-@register("stream_countmin_sliding", CMS_SLIDING_ORACLE)
+@register("stream_countmin_sliding", _cms_window_oracle(TRAILING_3H))
 def stream_countmin_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters over a TRAILING 3-hour window sliding hourly — the
     frequency companion to stream_hll_sliding, completing tumbling +
     sliding symmetry for the count-min sketch. Every event feeds 3
     hourly-spaced panes (the pinned sliding replay); state = panes x
-    {_CMS_D} x {_CMS_W} cells in complete mode on the bounded drain,
+    1024 cells in complete mode on the bounded drain,
     watermark-expired to ACTIVE panes in append deployments (the fold
     family's expiry contract). Scoring is the same per-window top-5 +
     min-cell estimate, over the pane-replicated exact arm."""
-    return _cms_windowed_query(spark, sf_dir, ("3 hours", "1 hour"),
-                               "4 hours")
+    return _cms_windowed_query(spark, sf_dir, TRAILING_3H)
 
 
 # ---------------------------------------------------------------------------
@@ -4774,13 +4714,15 @@ def stream_countmin_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .windows_stats import _QSK_QS, _QSK_W, quantile_bucket_col  # noqa: E402
 
 
-def _quantile_window_oracle(v_cte: str) -> str:
-    """ONE oracle generator for the windowed/sliding quantile twins:
-    ``v_cte`` must end by defining v(window_start, window_end, value).
+def _quantile_window_oracle(shape: WindowShape) -> str:
+    """ONE oracle generator for the windowed/sliding quantile twins and
+    the daily rollup: v holds the ``shape`` panes of every non-null value.
     min/max are taken over v — pane replication leaves them unchanged, so
-    both renders share the Spark side's global epoch bounds."""
+    every render shares the Spark side's global epoch bounds."""
+    v = pane_sql(shape, "CAST(value AS DOUBLE) AS value",
+                 where="value IS NOT NULL")
     return f"""
-    WITH {v_cte.strip()},
+    WITH v AS ({v}),
     b AS (SELECT min(value) AS mn, max(value) AS mx FROM v),
     cells AS (
         SELECT window_start, window_end,
@@ -4825,85 +4767,64 @@ def _quantile_window_oracle(v_cte: str) -> str:
     """
 
 
-_QSK_WIN_V_CTE = """v AS (
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-               time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
-                   AS window_end,
-               CAST(value AS DOUBLE) AS value
-        FROM events WHERE value IS NOT NULL
-    )"""
-
-QUANTILE_WINDOWED_ORACLE = _quantile_window_oracle(_QSK_WIN_V_CTE)
-
 _QSK_WIN_GCOLS = ("window_start", "window_end")
 
 
 def quantile_windowed_fold(
-    ev: DataFrame,
-    bounds: DataFrame,
-    win: tuple = ("1 hour",),
-    watermark: str = "2 hours",
+    ev: DataFrame, bounds: DataFrame, shape: WindowShape = HOURLY
 ) -> DataFrame:
     """The windowed histogram fold: bucket each (ts, value) row map-side
-    against the broadcast 1-row epoch bounds, then count per (window
-    spec ``win``, bucket) under the watermark — the quantile member of
-    the windowed-fold family hll_windowed_fold anchors."""
-    return (
-        ev.join(F.broadcast(bounds.select("mn", "mx")))
-        .select(
-            "ts",
-            quantile_bucket_col(F.col("value"), F.col("mn"), F.col("mx"))
-            .alias("bucket"),
-        )
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", *win), "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "bucket", "c",
-        )
+    against the broadcast 1-row epoch bounds, then windowed_agg counts
+    per (``shape`` window, bucket) under its watermark — the quantile
+    member of the windowed-fold family hll_windowed_fold anchors."""
+    bucketed = ev.join(F.broadcast(bounds.select("mn", "mx"))).select(
+        "ts",
+        quantile_bucket_col(F.col("value"), F.col("mn"), F.col("mx"))
+        .alias("bucket"),
+    )
+    return windowed_agg(
+        bucketed, "ts", ("bucket",), shape.size, shape.slide,
+        [F.count(F.lit(1)).alias("c")], shape.watermark,
     )
 
 
 def _quantile_windowed_query(
-    spark: SparkSession, sf_dir: str, win: tuple, watermark: str
+    spark: SparkSession, sf_dir: str, shape: WindowShape
 ) -> DataFrame:
-    """The windowed quantile query body, parametrized by the window spec
-    (the _cms_windowed_query convention): ``win`` is the F.window argument
-    tail — ("1 hour",) tumbling or ("3 hours", "1 hour") sliding."""
+    """The windowed quantile query body: drain ``quantile_windowed_fold``
+    and score its cells against the exact ranks over the same panes."""
     bounds = quantile_bounds(quantile_vals(spark, sf_dir))
     ev = (
         events_stream(spark, sf_dir)
         .filter(F.col("value").isNotNull())
         .select("ts", F.col("value").cast("double").alias("value"))
     )
-    folded = quantile_windowed_fold(ev, bounds, win=win, watermark=watermark)
-    cells = run_to_table(spark, folded, "complete")
-    vals_w = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            F.window("ts", *win).alias("window"),
-            F.col("value").cast("double").alias("value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "value",
-        )
+    cells = run_to_table(
+        spark, quantile_windowed_fold(ev, bounds, shape), "complete"
     )
     return quantile_score(
         spark, sf_dir, cells, bounds,
-        group_cols=_QSK_WIN_GCOLS, vals=vals_w,
+        group_cols=_QSK_WIN_GCOLS, vals=_value_panes(spark, sf_dir, shape),
     )
 
 
-@register("stream_quantile_windowed", QUANTILE_WINDOWED_ORACLE)
+def _value_panes(
+    spark: SparkSession, sf_dir: str, shape: WindowShape
+) -> DataFrame:
+    """The exact-rank arm's input: every non-null events value (as double)
+    in each ``shape`` pane that holds it."""
+    return window_panes(
+        load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull()),
+        "ts", shape.size, shape.slide,
+        (F.col("value").cast("double").alias("value"),),
+    )
+
+
+@register("stream_quantile_windowed", _quantile_window_oracle(HOURLY))
 def stream_quantile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p90/p95/p99 of events.value PER HOUR from the windowed
     histogram fold, with the per-window exact-rank error surface."""
-    return _quantile_windowed_query(spark, sf_dir, ("1 hour",), "2 hours")
+    return _quantile_windowed_query(spark, sf_dir, HOURLY)
 
 
 # Hour -> day rollup: the shared-global-grid mergeability claim as
@@ -4914,18 +4835,7 @@ def stream_quantile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # match proves sum(hourly cells) == daily cells exactly — the property
 # that lets a 100 TB pipeline keep one hourly sketch table and serve
 # hour/day/epoch quantiles from rollups alone.
-_QSK_DAY_V_CTE = """v AS (
-        SELECT time_bucket(INTERVAL '1 day', ts) AS window_start,
-               time_bucket(INTERVAL '1 day', ts) + INTERVAL '1 day'
-                   AS window_end,
-               CAST(value AS DOUBLE) AS value
-        FROM events WHERE value IS NOT NULL
-    )"""
-
-QUANTILE_ROLLUP_ORACLE = _quantile_window_oracle(_QSK_DAY_V_CTE)
-
-
-@register("sketch_quantile_rollup", QUANTILE_ROLLUP_ORACLE)
+@register("sketch_quantile_rollup", _quantile_window_oracle(DAILY))
 def sketch_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily p50/p90/p95/p99 of events.value served from the HOURLY
     sketch table: hourly cells (the same quantile_windowed_fold the
@@ -4953,40 +4863,13 @@ def sketch_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket", "c",
         )
     )
-    vals_d = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(
-            F.window("ts", "1 day").alias("window"),
-            F.col("value").cast("double").alias("value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "value",
-        )
-    )
     return quantile_score(
         spark, sf_dir, daily_cells, bounds,
-        group_cols=_QSK_WIN_GCOLS, vals=vals_d,
+        group_cols=_QSK_WIN_GCOLS, vals=_value_panes(spark, sf_dir, DAILY),
     )
 
 
-_QSK_SLIDE_V_CTE = """v0 AS (SELECT ts, CAST(value AS DOUBLE) AS value
-             FROM events WHERE value IS NOT NULL),
-    v AS (
-        SELECT time_bucket(INTERVAL '1 hour', ts) - i.i * INTERVAL '1 hour'
-                   AS window_start,
-               time_bucket(INTERVAL '1 hour', ts) - i.i * INTERVAL '1 hour'
-                   + INTERVAL '3 hours' AS window_end,
-               value
-        FROM v0, range(3) i(i)
-    )"""
-
-QUANTILE_SLIDING_ORACLE = _quantile_window_oracle(_QSK_SLIDE_V_CTE)
-
-
-@register("stream_quantile_sliding", QUANTILE_SLIDING_ORACLE)
+@register("stream_quantile_sliding", _quantile_window_oracle(TRAILING_3H))
 def stream_quantile_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-3h value percentiles refreshed hourly — the distribution
     companion to stream_hll_sliding/stream_countmin_sliding, completing
@@ -4996,8 +4879,7 @@ def stream_quantile_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACTIVE panes in append deployments. The shared global grid means a
     pane's cells are the SUM of its 3 tumbling hours' cells — the
     mergeability the epoch-bounds design buys."""
-    return _quantile_windowed_query(spark, sf_dir, ("3 hours", "1 hour"),
-                                    "4 hours")
+    return _quantile_windowed_query(spark, sf_dir, TRAILING_3H)
 
 
 # ---------------------------------------------------------------------------
@@ -5121,23 +5003,6 @@ def stream_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parametrization is proven on more than one caller.
 # ---------------------------------------------------------------------------
 
-_HLL_SLIDE_EV_CTE = """ev0 AS (SELECT ts, user_id FROM events
-            WHERE user_id IS NOT NULL),
-    ev AS (
-        SELECT time_bucket(INTERVAL '1 hour', ts) - i.i * INTERVAL '1 hour'
-                   AS window_start,
-               time_bucket(INTERVAL '1 hour', ts) - i.i * INTERVAL '1 hour'
-                   + INTERVAL '3 hours' AS window_end,
-               user_id
-        FROM ev0, range(3) i(i)
-    )"""
-
-HLL_SLIDING_ORACLE = _hll_window_oracle(
-    _HLL_SLIDE_EV_CTE, ("window_start", "window_end")
-)
-
-@register("stream_hll_sliding", HLL_SLIDING_ORACLE)
+@register("stream_hll_sliding", _hll_window_oracle(TRAILING_3H, ()))
 def stream_hll_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _hll_windowed_query(
-        spark, sf_dir, ("3 hours", "1 hour"), "4 hours", ()
-    )
+    return _hll_windowed_query(spark, sf_dir, TRAILING_3H, ())

@@ -81,7 +81,7 @@ def windowed_analysis(
     agg = windowed_agg(
         with_event_time(joined),
         "timestamp",
-        "field_id",
+        ("field_id",),
         window_duration,
         slide_duration,
         [F.sum(m).alias(f"sum_{m}") for m in SENSOR_MEASURES],

@@ -1983,8 +1983,8 @@ def test_sliding_quantile_panes_sum_tumbling_cells(spark, sf_dir):
         .select("ts", F.col("value").cast("double").alias("value"))
     )
     bounds = quantile_bounds(quantile_vals(spark, sf_dir))
-    tumb = quantile_windowed_fold(ev, bounds)
-    slide = quantile_windowed_fold(ev, bounds, win=("3 hours", "1 hour"))
+    tumb = quantile_windowed_fold(ev, bounds, plans.HOURLY)
+    slide = quantile_windowed_fold(ev, bounds, plans.TRAILING_3H)
     expected = (
         tumb.select(
             F.explode(F.array(*[F.lit(i) for i in range(3)])).alias("i"),

@@ -70,6 +70,54 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     assert len(df.schema.fields) > 0
 
 
+_SHAPES = ("HOURLY", "TRAILING_3H", "DAILY", "MINUTE", "SLIDING_5M")
+
+
+@pytest.mark.parametrize("shape_name", _SHAPES)
+def test_pane_sql_matches_windowed_agg(spark, shape_name):
+    """One pane decision for both engines: for every declared window
+    shape, the DuckDB panes pane_sql renders over a hand-built ts table
+    count the same (window_start, window_end) rows as windowed_agg's Spark
+    windows, so a drifted replication count or window_end offset fails
+    here. The times sit on and just off minute, hour and day edges."""
+    import datetime as dt
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from spark_streaming_kafka_example_spark.analytics import windowed_agg
+
+    shape = getattr(plans, shape_name)
+    d = dt.datetime
+    ts = [
+        d(2024, 1, 1, 0, 0), d(2024, 1, 1, 0, 0, 59), d(2024, 1, 1, 0, 4, 30),
+        d(2024, 1, 1, 0, 59, 59), d(2024, 1, 1, 1, 0), d(2024, 1, 1, 2, 30),
+        d(2024, 1, 1, 23, 59, 59), d(2024, 1, 2, 0, 0), d(2024, 1, 2, 5, 17),
+    ]
+    windows = windowed_agg(
+        spark.createDataFrame([(t,) for t in ts], "ts timestamp"), "ts", (),
+        shape.size, shape.slide, [F.count(F.lit(1)).alias("n")],
+    )
+    got = sorted(tuple(r) for r in windows.collect())
+
+    con = duckdb.connect()
+    values = ", ".join(f"(TIMESTAMP '{t}')" for t in ts)
+    con.execute(f"CREATE TABLE t AS SELECT * FROM (VALUES {values}) v(ts)")
+    want = con.execute(
+        f"SELECT window_start, window_end, count(*) AS n "
+        f"FROM ({plans.pane_sql(shape, 'ts', 't')}) GROUP BY 1, 2"
+    ).fetchall()
+    con.close()
+    assert got == sorted(want)
+
+
+def test_pane_sql_rejects_partial_panes():
+    """A window that is not a whole number of slides has no fixed pane
+    count to replicate, so pane_sql refuses it."""
+    with pytest.raises(ValueError, match="not a multiple"):
+        plans.pane_sql(plans.WindowShape("5 minutes", "2 minutes", None), "ts")
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as entrymod
 

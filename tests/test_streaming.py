@@ -1077,22 +1077,25 @@ def test_pretrain_gate_planted_semantics(spark, sf_dir):
     )
 
 
-@pytest.mark.parametrize("sketch", ["hll", "quantile"])
+@pytest.mark.parametrize("sketch", ["hll", "quantile", "cms"])
 def test_windowed_sketch_watermark_expires_state(spark, tmp_path, sketch):
     """The windowed-sketch state bound as a CONTRACT (r11 VERDICT task 4):
     the windowed twins document "watermark expires closed windows'
     registers/cells, so state = ACTIVE windows x groups x m". The bounded
     complete-mode drains can't show that, so this runs the SAME folds the
-    production queries drain (hll_windowed_fold / quantile_windowed_fold
-    — the count-min fold shares the identical watermark+window+agg shape
-    inside _cms_windowed_query) in APPEND mode across micro-batches: a
-    batch far past the watermark must (a) emit the closed window's rows
-    exactly once and (b) shrink the state store to the still-active
-    window's rows only — state does not grow with window history."""
+    production queries drain (hll_windowed_fold, quantile_windowed_fold,
+    cms_windowed_fold) in APPEND mode across micro-batches: a batch far
+    past the watermark must (a) emit the closed window's rows exactly once
+    and (b) shrink the state store to the still-active window's rows only
+    — state does not grow with window history. An event holds one state
+    row per sketch row it feeds: one register or cell, or _CMS_D cells."""
+    from spark_streaming_kafka_example_spark.plans import HOURLY
     from spark_streaming_kafka_example_spark.plans.stream import (
+        cms_windowed_fold,
         hll_windowed_fold,
         quantile_windowed_fold,
     )
+    from spark_streaming_kafka_example_spark.plans.windows_stats import _CMS_D
 
     src = str(tmp_path / "wm_sketch_src")
     ev_schema = "ts timestamp, event_type string, user_id long, value double"
@@ -1110,13 +1113,17 @@ def test_windowed_sketch_watermark_expires_state(spark, tmp_path, sketch):
     write_batch([(t(0, 10), "click", 1, 10.0), (t(0, 20), "click", 2, 50.0),
                  (t(0, 20), "click", 3, 90.0)])
     stream = spark.readStream.schema(ev_schema).parquet(src)
+    per_event = 1
     if sketch == "hll":
-        folded = hll_windowed_fold(stream, watermark="2 hours")
+        folded = hll_windowed_fold(stream, HOURLY)
+    elif sketch == "cms":
+        folded = cms_windowed_fold(stream.select("ts", "user_id"), HOURLY)
+        per_event = _CMS_D
     else:
         bounds = spark.createDataFrame(
             [(0.0, 100.0, 3)], "mn double, mx double, n long"
         )  # the batch-computed epoch grid configuration
-        folded = quantile_windowed_fold(stream, bounds, watermark="2 hours")
+        folded = quantile_windowed_fold(stream, bounds, HOURLY)
     name = f"t_wm_sketch_{sketch}"
     q = (
         folded
@@ -1131,7 +1138,8 @@ def test_windowed_sketch_watermark_expires_state(spark, tmp_path, sketch):
         # time (00:20) -> nothing emitted, registers buffered in state.
         assert spark.table(name).count() == 0
         hour0_state = _state_rows(q)
-        assert 1 <= hour0_state <= 3  # <=3 buckets (hash/grid collisions ok)
+        # <=3 buckets per sketch row (hash/grid collisions ok)
+        assert per_event <= hour0_state <= 3 * per_event
 
         # Batch 2: one event 10 hours later -> watermark 08:00 passes the
         # hour-0 window, which must emit once and leave the state store.
@@ -1140,7 +1148,8 @@ def test_windowed_sketch_watermark_expires_state(spark, tmp_path, sketch):
         emitted = spark.table(name).collect()
         assert {r.window_start for r in emitted} == {t(0)}
         assert len(emitted) == hour0_state  # every buffered row, once
-        assert _state_rows(q) == 1  # ONLY the active hour-10 row survives
+        # ONLY the active hour-10 rows survive
+        assert _state_rows(q) == per_event
 
         # Batch 3: another jump -> hour-10 emits once, hour-0 is NOT
         # re-emitted, state again holds only the newest window.
@@ -1148,8 +1157,8 @@ def test_windowed_sketch_watermark_expires_state(spark, tmp_path, sketch):
         q.processAllAvailable()
         emitted = spark.table(name).collect()
         assert sum(r.window_start == t(0) for r in emitted) == hour0_state
-        assert sum(r.window_start == t(10) for r in emitted) == 1
-        assert _state_rows(q) == 1
+        assert sum(r.window_start == t(10) for r in emitted) == per_event
+        assert _state_rows(q) == per_event
     finally:
         q.stop()
 
