@@ -404,9 +404,7 @@ def stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest dedup with a PERSISTED fingerprint store: the dedup twin
-# of the incremental IVF appendix, and the production shape
-# dedup_incremental_exact (plans/llm.py:176) sketches — the store is not a
+# At-ingest dedup with a PERSISTED fingerprint store: the store is not a
 # one-shot relation but a partitioned table MAINTAINED at ingest: each
 # micro-batch's decisions join against the store as of arrival, and the
 # batch's novel fingerprints append as their own batch_id partition via
@@ -875,7 +873,6 @@ def run_lifecycle(
     spark: SparkSession,
     sf_dir: str,
     spec: MaintainedState,
-    prefix: str,
     compact: bool = False,
     retention_batches: int | None = None,
 ) -> tuple[DataFrame, StateIO]:
@@ -903,7 +900,7 @@ def run_lifecycle(
     from . import tmp_run_dir
 
     table = spec.table(spark, sf_dir)
-    base_dir = tmp_run_dir(prefix)
+    base_dir = tmp_run_dir(f"{spec.name}_")
     runs = [
         StateIO(spec, os.path.join(base_dir, ph), retention_batches)
         for ph in (("a", "b") if compact else ("",))
@@ -953,6 +950,21 @@ def run_lifecycle(
     return decisions.selectExpr(*spec.output), runs[-1]
 
 
+# name -> (spec, compact, retention_batches) of every registration whose
+# whole body is one run_lifecycle; tests/test_lifecycle.py derives its
+# spec lists from it.
+LIFECYCLE: dict[str, tuple[MaintainedState, bool, int | None]] = {}
+
+
+def _lifecycle_query(name, oracle, spec, compact=False, retention_batches=None):
+    """Register ``name`` as one run_lifecycle of ``spec`` returning its
+    decisions, and record it in LIFECYCLE."""
+    LIFECYCLE[name] = (spec, compact, retention_batches)
+    register(name, oracle)(lambda spark, sf_dir: run_lifecycle(
+        spark, sf_dir, spec, compact=compact, retention_batches=retention_batches
+    )[0])
+
+
 _DOC_ARRIVAL_SCHEMA = "doc_id long, text string"
 
 FP_STORE = MaintainedState(
@@ -967,23 +979,15 @@ FP_STORE = MaintainedState(
 )
 
 
-@register("stream_dedup_store_ingest", STREAM_DEDUP_STORE_ORACLE)
-def stream_dedup_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, status): the already-ingested corpus (even ids) seeds the
-    fingerprint store; the rest (odd ids + the +300000 re-crawl plants)
-    arrives as an id-ordered multi-batch stream (3 id-ranged files + the
-    plants file, maxFilesPerTrigger=1), each batch deciding against and
-    appending to the store. First arrival of novel content wins; every
-    later copy — same batch, later batch, or seeded — reads 'duplicate'.
-    Cross-file odd/odd copies make the APPENDED partitions load-bearing
-    (pytest: test_dedup_store_cross_batch_maintenance)."""
-    return run_lifecycle(spark, sf_dir, FP_STORE, "fpstore_")[0]
+# Cross-file odd/odd copies make the appended partitions load-bearing
+# (test_dedup_store_cross_batch_maintenance).
+_lifecycle_query("stream_dedup_store_ingest", STREAM_DEDUP_STORE_ORACLE, FP_STORE)
 
 
 # ---------------------------------------------------------------------------
-# Bloom-prefiltered store ingest: SCALE.md's "prefilter the store
-# read at 100 TB" made driver-checked. A Bloom filter over the store's
-# fingerprints is MAINTAINED alongside it (per-batch set-bit partitions,
+# Bloom-prefiltered store ingest (SCALE.md's "prefilter the store read
+# at 100 TB"). A Bloom filter over the store's fingerprints is
+# MAINTAINED alongside it (per-batch set-bit partitions,
 # merged by reading them — OR of bit sets is plain distinct-union), and
 # each batch probes the Bloom FIRST: only possible-hit fingerprints touch
 # the fp-keyed store join; definite misses (the vast majority of novel
@@ -996,9 +1000,7 @@ def stream_dedup_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # speed. m is sized from the seed store (8 bits/item, next power of two,
 # capped) and FIXED for the store's lifetime — merging positions hashed
 # under different m is meaningless, so a resize is a rebuild (the
-# centroid re-train rule). Capability lineage: the reference's dedup
-# intent (BasicStreaming.scala:17 state) + the stream_bloom_decontaminate
-# probe pattern.
+# centroid re-train rule).
 # ---------------------------------------------------------------------------
 
 _STORE_BLOOM_K = 3
@@ -1103,7 +1105,7 @@ def stream_dedup_store_bloom_ingest(
     n_seed = _fp_store_seed(FP_STORE.table(spark, sf_dir)).count()
     # one scalar: sizes m for the store's lifetime
     m = min(_STORE_BLOOM_M_CAP, 1 << max(8 * n_seed - 1, 1).bit_length())
-    return run_lifecycle(spark, sf_dir, _fp_bloom_spec(m), "fpbloom_")[0]
+    return run_lifecycle(spark, sf_dir, _fp_bloom_spec(m))[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3171,21 +3173,16 @@ def stream_minhash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# At-ingest near-dup detection with a GROWING band catalog: the
-# third ingest-maintenance operator (IVF appendix = vectors, fp store =
-# exact dedup, this = near-dup) and the production upgrade of
-# stream_minhash_probe, whose catalog is frozen at stream start — a
-# web-crawl ingest must detect near-dups against EVERYTHING ingested so
-# far, including docs that arrived five minutes ago. Each micro-batch
-# computes its band rows (the proven batch machinery — inside
-# foreachBatch the batch is a batch DataFrame, so the groupBy signature
-# form applies), probes the catalog AS OF its batch (partitions with
-# batch_id < current — the read-your-predecessors bound the fp store
-# established) plus same-batch smaller-id rows, then appends its OWN
-# band rows as a dynamic-overwrite partition. Every ingested doc joins
-# the catalog regardless of its own status (a near-dup of a near-dup
-# still bands with both). First arrival wins, arrival order is id order
-# by construction, so the oracle replays every count with an
+# At-ingest near-dup detection with a GROWING band catalog: a web-crawl
+# ingest must detect near-dups against EVERYTHING ingested so far,
+# including docs that arrived five minutes ago. Each micro-batch
+# computes its band rows within the row (_batch_band_rows), probes the
+# catalog AS OF its batch (partitions with batch_id < current — the
+# read-your-predecessors bound) plus same-batch smaller-id rows, then
+# appends its OWN band rows as a dynamic-overwrite partition. Every
+# ingested doc joins the catalog regardless of its own status (a near-dup
+# of a near-dup still bands with both). First arrival wins, arrival order
+# is id order by construction, so the oracle replays every count with an
 # earlier-prior rule over one global bands relation — batch-split-free.
 #
 # Scale: per batch, |batch| x bands rows against the band-keyed catalog
@@ -3349,19 +3346,6 @@ def _mh_catalog_oracle(window: int | None = None) -> str:
 STREAM_MH_CATALOG_ORACLE = _mh_catalog_oracle()
 
 
-@register("stream_minhash_catalog_ingest", STREAM_MH_CATALOG_ORACLE)
-def stream_minhash_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_prior_candidates): per arriving doc, the number of
-    DISTINCT previously-ingested docs (seed catalog, earlier batches, or
-    same-batch smaller ids) it shares >= 1 LSH band with — near-dup
-    candidate detection whose catalog GROWS at ingest. The planted
-    tail-truncated re-uploads band with their store sources like the
-    frozen-catalog probe's, and odd/odd near-dups arriving in different
-    files are counted via partitions an earlier batch APPENDED (pinned by
-    tests/test_streaming.py::test_minhash_catalog_cross_batch_growth)."""
-    return run_lifecycle(spark, sf_dir, MH_CATALOG, "mhcat_")[0]
-
-
 def _mh_catalog_seed(docs: DataFrame) -> DataFrame:
     """The ingested store's band rows (even doc ids below the plant
     range) — the band-catalog seed."""
@@ -3400,24 +3384,23 @@ MH_CATALOG = MaintainedState(
     output=("doc_id", "n_prior_candidates"),
 )
 
+# Odd/odd near-dups arriving in different files are counted via
+# partitions an earlier batch appended
+# (test_minhash_catalog_cross_batch_growth).
+_lifecycle_query("stream_minhash_catalog_ingest", STREAM_MH_CATALOG_ORACLE, MH_CATALOG)
+
 
 # ---------------------------------------------------------------------------
-# Mid-lifecycle state compaction: the IVF index has its housekeeping arm
-# (sim_ivf_compacted_probe); the fp store and band catalog accumulate one
-# partition per micro-batch FOREVER — at one batch per minute that is half a
-# million partitions a year, and the per-batch "batch_id < current" scan pays
-# for every one of them. Compaction collapses all partitions into a single
-# fresh seed
-# partition (one read, one write, off the ingest path — the directory-
-# swap deployment sim_ivf_compacted_probe documents). The proof is
-# STRONGER than compact-at-end: compaction runs MID-INGEST — the first
-# half of the arrival files maintain state_a, the collapsed rewrite
-# seeds state_b, and the remaining files ingest against state_b — and
-# the union of both phases' decisions registers against the SAME oracle
-# as the uninterrupted ingest, so the driver hash proves compaction
-# loses and invents nothing while decisions are still being made
-# against it. Phase B's fresh checkpoint restarts batch ids at 0 > -1,
-# so the read-your-predecessors bound sees the whole compacted state.
+# Mid-lifecycle state compaction. The stores accumulate one partition per
+# micro-batch, and every "batch_id < current" read pays for each of them.
+# Compaction collapses all partitions into one fresh seed partition (one
+# read, one write, off the ingest path). It runs MID-INGEST: the first
+# arrival files maintain state_a, the collapse seeds state_b, the rest
+# ingest against state_b, and the union of both phases' decisions
+# registers against the uninterrupted ingest's oracle VERBATIM, so the
+# hash proves compaction loses and invents nothing. Phase B's fresh
+# checkpoint restarts batch ids at 0 > -1, so the read-your-predecessors
+# bound sees the whole compacted state.
 # ---------------------------------------------------------------------------
 
 
@@ -3442,55 +3425,29 @@ def _compact_state(
     )
 
 
-@register("stream_dedup_store_compacted", STREAM_DEDUP_STORE_ORACLE)
-def stream_dedup_store_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, status): the fp-store ingest with a COMPACTION in the
-    middle — phases A/B decide against pre-/post-compaction state, and
-    the combined decisions share the uninterrupted ingest's oracle, so
-    the driver hash proves the collapsed store preserves every
-    first-arrival-wins decision."""
-    return run_lifecycle(
-        spark, sf_dir, FP_STORE, "fpcompact_", compact=True
-    )[0]
-
-
-@register("stream_minhash_catalog_compacted", STREAM_MH_CATALOG_ORACLE)
-def stream_minhash_catalog_compacted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(doc_id, n_prior_candidates): the band-catalog ingest compacted
-    mid-lifecycle; shares the growing-catalog oracle, so the hash proves
-    the collapsed catalog still bands every later arrival against every
-    prior doc."""
-    return run_lifecycle(
-        spark, sf_dir, MH_CATALOG, "mhcompact_", compact=True
-    )[0]
+_lifecycle_query("stream_dedup_store_compacted", STREAM_DEDUP_STORE_ORACLE,
+                 FP_STORE, compact=True)
+_lifecycle_query("stream_minhash_catalog_compacted", STREAM_MH_CATALOG_ORACLE,
+                 MH_CATALOG, compact=True)
 
 
 # ---------------------------------------------------------------------------
-# Store retention / TTL: the last stage of the state lifecycle —
-# birth (seed), growth (per-batch appends), housekeeping (compaction),
-# and now EXPIRY. A TTL'd dedup store re-admits content after
-# _FP_TTL_W batches of absence (the "re-crawl after N days is fresh
-# again" policy); the decision read is partition-pruned on BOTH sides
-# (batch_id in [current - W, current)), so the scan cost is bounded by
-# the window, not the store's lifetime — retention is also what keeps
-# the store FINITE at 100 TB without compaction heroics. A re-admitted
-# fp appends under its new batch_id, restarting its lifetime; duplicate
-# arrivals never refresh the TTL (novel-only appends, unchanged).
-# Novelty is now RECURSIVE (novel at batch b depends on which earlier
-# arrivals were novel inside their own windows), so the oracle unrolls
-# the recursion over the FIXED 4 arrival batches (the _BPE_ROUNDS
-# unrolling convention): nv0/nv1/nv2 are the per-batch append sets, and
-# each batch's visible set is exactly the W preceding ones (the seed
-# ages out after W batches like any other append — batch 2 is the first
-# that cannot see it). Every arrival's batch id is the template's bmap
-# (the max odd id thirds), so the oracle replays the batch split
-# itself. W is hard-coded at 2 in the unrolled CTEs —
-# changing _FP_TTL_W means re-deriving them together.
+# Store retention / TTL. A TTL'd store re-admits content after _TTL_W
+# batches of absence. The decision read is partition-pruned on BOTH sides
+# (batch_id in [current - W, current)), so the scan is bounded by the
+# window, not the store's lifetime. A re-admitted fp appends under its
+# new batch_id, restarting its lifetime; duplicates never refresh it.
+# Novelty is RECURSIVE (novel at batch b depends on which earlier
+# arrivals were novel inside their own windows), so the oracle unrolls it
+# over the FIXED 4 arrival batches: nv0/nv1/nv2 are the per-batch append
+# sets, and each batch sees exactly the W preceding ones (the seed ages
+# out like any append; batch 2 is the first that cannot see it). W is
+# hard-coded at 2 in the unrolled CTEs — changing _TTL_W means
+# re-deriving them together.
 # ---------------------------------------------------------------------------
 
-_FP_TTL_W = 2
+# Every TTL twin's retention window, in batches.
+_TTL_W = 2
 
 STREAM_DEDUP_STORE_RETENTION_ORACLE = f"""
     WITH {_FP_BATCH_CTES},
@@ -3526,66 +3483,32 @@ STREAM_DEDUP_STORE_RETENTION_ORACLE = f"""
     """
 
 
-@register("stream_dedup_store_retention", STREAM_DEDUP_STORE_RETENTION_ORACLE)
-def stream_dedup_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, status): the fp-store ingest under a _FP_TTL_W(=2)-batch
-    retention window — identical setup and arrival order to
-    stream_dedup_store_ingest, but each batch decides against only the
-    last W batches' appends, so the +plant re-crawls of seeded content
-    arriving after the seed aged out read 'novel' where the unbounded
-    store reads 'duplicate' (expiry pinned by
-    test_dedup_store_retention_expires_and_readmits)."""
-    return run_lifecycle(
-        spark, sf_dir, FP_STORE, "fpttl_", retention_batches=_FP_TTL_W
-    )[0]
+# The +plant re-crawls of seeded content arriving after the seed aged out
+# read 'novel' (test_dedup_store_retention_expires_and_readmits).
+_lifecycle_query("stream_dedup_store_retention", STREAM_DEDUP_STORE_RETENTION_ORACLE,
+                 FP_STORE, retention_batches=_TTL_W)
 
-
-# The band catalog's TTL twin. Unlike the fp store, catalog retention is
-# NOT recursive — every ingested doc's band rows append regardless of
-# status — so a row is visible at batch b iff its own batch is in
-# [b - W, b - 1] (the seed, batch -1, ages out at b = W), and the oracle
-# is the ingest oracle rendered with the window bound.
-_MH_TTL_W = 2
-
-STREAM_MH_CATALOG_RETENTION_ORACLE = _mh_catalog_oracle(_MH_TTL_W)
-
-
-@register(
-    "stream_minhash_catalog_retention", STREAM_MH_CATALOG_RETENTION_ORACLE
-)
-def stream_minhash_catalog_retention(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(doc_id, n_prior_candidates): the band-catalog ingest under a
-    _MH_TTL_W(=2)-batch retention window — each batch probes only the
-    last W batches' band rows (partition-pruned on both sides), so the
-    seed ages out at batch W and the plants' truncated sources stop
-    being counted once out of window (expiry pinned by
-    test_minhash_catalog_retention_expires)."""
-    return run_lifecycle(
-        spark, sf_dir, MH_CATALOG, "mhttl_", retention_batches=_MH_TTL_W
-    )[0]
+# Catalog retention is NOT recursive: every ingested doc's rows append
+# regardless of its decision, so a row is visible at batch b iff its own
+# batch is in [b - W, b - 1] (the seed, batch -1, ages out at b = W), and
+# each catalog's TTL oracle is its ingest oracle rendered with the window.
+_lifecycle_query("stream_minhash_catalog_retention", _mh_catalog_oracle(_TTL_W),
+                 MH_CATALOG, retention_batches=_TTL_W)
 
 
 # ---------------------------------------------------------------------------
-# At-ingest IMAGE near-dup catalog: the maintained-catalog upgrade
-# of stream_image_phash, whose Hamming-band chunk catalog freezes at
-# stream start — the same gap stream_minhash_catalog_ingest closed for
-# text bands, now closed for the image modality, completing the
-# maintenance matrix (exact fps / text bands / vectors / images). Each
-# micro-batch renders its docs' synthetic covers through the REAL
-# decode -> aHash stack (pandas UDFs work unchanged inside
-# foreachBatch), probes catalog chunk partitions batch_id < current on
-# (chunk_id, chunk_val) with the hamming <= 3 verify in codegen, counts
-# same-batch smaller-id near-dups via a batch-bounded self-join, then
-# appends its OWN chunk rows as a dynamic-overwrite partition. The
-# pigeonhole completeness of the chunk equi-join (phash_chunks) makes
-# the candidate set exact, so the oracle replays counts with the
-# earlier-prior rule over one global nibs relation — batch-split-free.
-# Plants: exact re-crawls of every 7th doc under +200000 —
-# even sources are seed dups, ODD sources arrived in an earlier batch,
-# so their copies are caught purely by appended partitions (the
-# cross-batch catch; pinned by test_image_catalog_cross_batch_growth).
+# At-ingest IMAGE near-dup catalog, maintained like the band catalog. Each
+# micro-batch renders its docs' synthetic covers through the REAL decode
+# -> aHash stack (pandas UDFs work unchanged inside foreachBatch), probes
+# catalog chunk partitions batch_id < current on (chunk_id, chunk_val)
+# with the hamming <= 3 verify in codegen, counts same-batch smaller-id
+# near-dups via a batch-bounded self-join, then appends its OWN chunk
+# rows as a dynamic-overwrite partition. The chunk equi-join is
+# pigeonhole-complete (phash_chunks), so the oracle replays counts with
+# the earlier-prior rule over one global nibs relation. Plants: exact
+# re-crawls of every 7th doc under +200000 — even sources are seed dups,
+# ODD sources arrived in an earlier batch, so their copies are caught
+# purely by appended partitions (test_image_catalog_cross_batch_growth).
 # Scale: per batch |batch| x 4 chunk rows against the chunk-keyed
 # catalog read (UNHINTED — grows with the corpus) + the hamming verify
 # on collisions only; appends never rewrite the catalog.
@@ -3640,17 +3563,6 @@ def _phash_close():
     return phash_hamming(F.col("phash"), F.col("p_phash")) <= 3
 
 
-@register("stream_image_catalog_ingest", STREAM_IMAGE_CATALOG_ORACLE)
-def stream_image_catalog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_prior_candidates): per arriving doc, the number of
-    DISTINCT previously-ingested docs whose cover image is a hamming<=3
-    near-dup — detected against a catalog that GROWS at ingest, so a
-    re-upload of an image that arrived two micro-batches ago is caught
-    via the chunk rows that batch appended (stream_image_phash's frozen
-    catalog cannot)."""
-    return run_lifecycle(spark, sf_dir, IMAGE_CATALOG, "imgcat_")[0]
-
-
 def _image_catalog_seed(docs: DataFrame) -> DataFrame:
     """The seeded catalog's chunk rows: the even doc ids."""
     return _image_chunk_rows(docs.filter(F.col("doc_id") % 2 == 0))
@@ -3676,75 +3588,33 @@ IMAGE_CATALOG = MaintainedState(
 )
 
 
-# ---------------------------------------------------------------------------
-# Image-catalog lifecycle symmetry: the text
-# band catalog and the fp store each have a compaction arm AND a TTL
-# arm; the image chunk catalog had neither. Both transfer verbatim:
-# chunk-row appends are per-doc-unique, so _compact_state's novel-only
-# premise holds and the compacted twin registers against
-# STREAM_IMAGE_CATALOG_ORACLE unchanged (the hash IS the compaction-
-# safety proof); catalog visibility is non-recursive (every ingested
-# doc's chunks append regardless of status), so the TTL oracle is the
-# ingest oracle rendered with the window bound, as for the band catalog.
-# ---------------------------------------------------------------------------
-
-
-@register("stream_image_catalog_compacted", STREAM_IMAGE_CATALOG_ORACLE)
-def stream_image_catalog_compacted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(doc_id, n_prior_candidates): the image chunk-catalog ingest
-    compacted mid-lifecycle; shares the growing-catalog oracle, so the
-    driver hash proves the collapsed catalog still pairs every later
-    arrival's cover against every prior doc's."""
-    return run_lifecycle(
-        spark, sf_dir, IMAGE_CATALOG, "imgcompact_", compact=True
-    )[0]
-
-
-_IMG_TTL_W = 2
-
-STREAM_IMAGE_CATALOG_RETENTION_ORACLE = _image_catalog_oracle(_IMG_TTL_W)
-
-
-@register(
-    "stream_image_catalog_retention", STREAM_IMAGE_CATALOG_RETENTION_ORACLE
-)
-def stream_image_catalog_retention(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(doc_id, n_prior_candidates): the image chunk-catalog ingest under
-    a _IMG_TTL_W(=2)-batch retention window — each batch probes only the
-    last W batches' chunk rows (partition-pruned on both sides), so the
-    seed ages out at batch W and the +plant re-crawls of seeded (even)
-    covers stop being counted once the seed is out of window (expiry
-    pinned by test_image_catalog_retention_expires)."""
-    return run_lifecycle(
-        spark, sf_dir, IMAGE_CATALOG, "imgttl_", retention_batches=_IMG_TTL_W
-    )[0]
+# Chunk-row appends are per-doc-unique, so _compact_state's premise holds
+# for the compaction twin.
+_lifecycle_query("stream_image_catalog_ingest", STREAM_IMAGE_CATALOG_ORACLE,
+                 IMAGE_CATALOG)
+_lifecycle_query("stream_image_catalog_compacted", STREAM_IMAGE_CATALOG_ORACLE,
+                 IMAGE_CATALOG, compact=True)
+_lifecycle_query("stream_image_catalog_retention", _image_catalog_oracle(_TTL_W),
+                 IMAGE_CATALOG, retention_batches=_TTL_W)
 
 
 # ---------------------------------------------------------------------------
-# At-ingest embedding near-dup catalog: the EMBEDDING modality's
-# dedup-maintenance arm, completing the matrix's vector row as a true
-# dedup arm (the IVF appendix is the SERVING arm). Each micro-batch's
-# vectors hyperplane-band-code (dedup_embedding_cosine's fixed
-# bands/bits/seed constants — FIXED hyperplanes, so codes never depend
-# on corpus growth), probe the code catalog's partitions batch_id <
-# current on (band_id, code), cosine-verify collisions via the
-# Arrow-batched numpy kernel (round-4, the embedding_near_pairs
-# contract) against the vector store, then append their own code rows
-# AND vectors as dynamic-overwrite batch partitions. Two state
-# relations (codes + vectors, the incremental-cluster-map convention)
-# so the catalog stays bands-wide while each vector is stored once.
-# Candidates are band collisions; exact copies hash identically in
-# every band (structurally impossible to miss) and a pair at cos=0.99
-# survives >= 1 of 16 bands with prob 1-3e-9 — so the all-pairs
-# earlier-prior oracle stays the checker, exactly as it does for
-# dedup_embedding_cosine. Plants = exact re-crawls of every 5th vector
-# (+100000): even sources dup the SEED, odd sources arrived in an
-# earlier micro-batch — the cross-batch catch
-# (test_embedding_catalog_cross_batch_growth pins growth + replay).
+# At-ingest embedding near-dup catalog. Each micro-batch's vectors
+# hyperplane-band-code (dedup_embedding_cosine's fixed bands/bits/seed
+# constants — FIXED hyperplanes, so codes never depend on corpus growth),
+# probe the code catalog's partitions batch_id < current on (band_id,
+# code), cosine-verify collisions via the Arrow-batched numpy kernel
+# (rounded to 4 places, the embedding_near_pairs contract) against the
+# vector store, then append their own code rows AND vectors as
+# dynamic-overwrite batch partitions. Two state relations (codes +
+# vectors) keep the catalog bands-wide while each vector is stored once.
+# Candidates are band collisions; exact copies hash identically in every
+# band and a pair at cos=0.99 survives >= 1 of 16 bands with prob
+# 1-3e-9, so the all-pairs earlier-prior oracle stays the checker, as it
+# does for dedup_embedding_cosine. Plants = exact re-crawls of every 5th
+# vector (+100000): even sources dup the SEED, odd sources arrived in an
+# earlier micro-batch (test_embedding_catalog_cross_batch_growth pins
+# growth + replay).
 # Scale: per batch one band-keyed catalog join + one id-keyed vector
 # fetch (both UNHINTED — state grows with the corpus), verify only on
 # collisions (~n/2^bits bucket occupancy), appends |batch| x bands code
@@ -3848,20 +3718,6 @@ def _embedding_catalog_handler(io: StateIO):
 _EMB_ARRIVAL_SCHEMA = "doc_id long, embedding array<float>"
 
 
-@register("stream_embedding_catalog_ingest", STREAM_EMB_CATALOG_ORACLE)
-def stream_embedding_catalog_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(vec_id, n_prior_neardups): each arriving vector's count of
-    cosine>=0.99 near-dups among every PRIOR ingested vector — seeded
-    evens plus everything earlier micro-batches appended. The +100000
-    plants are exact re-crawls of every 5th
-    vector: even sources dup the seed, ODD sources arrived earlier in
-    the stream, so their copies are caught purely by appended
-    partitions (the cross-batch catch)."""
-    return run_lifecycle(spark, sf_dir, EMB_CATALOG, "embcat_")[0]
-
-
 def _emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings relation with vec_id renamed to doc_id — the id
     column the shared id-ordered arrival plumbing keys on."""
@@ -3898,64 +3754,30 @@ EMB_CATALOG = MaintainedState(
 )
 
 
-@register("stream_embedding_catalog_compacted", STREAM_EMB_CATALOG_ORACLE)
-def stream_embedding_catalog_compacted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(vec_id, n_prior_neardups): the embedding-catalog ingest
-    compacted mid-lifecycle — BOTH state relations (code rows and
-    vectors; appends are per-vector-unique, so _compact_state's
-    novel-only premise holds for each) collapse to one batch_id=-1
-    partition between the two arrival phases. Registers against
-    STREAM_EMB_CATALOG_ORACLE VERBATIM: the driver hash proves a
-    phase-B copy of a phase-A vector is still counted through the
-    collapse."""
-    return run_lifecycle(
-        spark, sf_dir, EMB_CATALOG, "embcompact_", compact=True
-    )[0]
-
-
-_EMBCAT_TTL_W = 2
-
-STREAM_EMB_CATALOG_RETENTION_ORACLE = _emb_catalog_oracle(_EMBCAT_TTL_W)
-
-
-@register(
-    "stream_embedding_catalog_retention",
-    STREAM_EMB_CATALOG_RETENTION_ORACLE,
-)
-def stream_embedding_catalog_retention(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(vec_id, n_prior_neardups): the embedding-catalog ingest under a
-    _EMBCAT_TTL_W(=2)-batch retention window — each batch probes only
-    the last W batches' code rows + vectors (both reads
-    partition-pruned on both sides), so the seed ages out at batch W
-    and the +plant re-crawls of seeded (even) vectors stop being
-    counted once the seed is out of window (expiry pinned by
-    test_embedding_catalog_retention_expires)."""
-    return run_lifecycle(
-        spark, sf_dir, EMB_CATALOG, "embttl_", retention_batches=_EMBCAT_TTL_W
-    )[0]
+# Code-row and vector appends are per-vector-unique, so the compaction
+# twin collapses BOTH relations.
+_lifecycle_query("stream_embedding_catalog_ingest", STREAM_EMB_CATALOG_ORACLE,
+                 EMB_CATALOG)
+_lifecycle_query("stream_embedding_catalog_compacted", STREAM_EMB_CATALOG_ORACLE,
+                 EMB_CATALOG, compact=True)
+_lifecycle_query("stream_embedding_catalog_retention", _emb_catalog_oracle(_TTL_W),
+                 EMB_CATALOG, retention_batches=_TTL_W)
 
 
 # ---------------------------------------------------------------------------
-# At-ingest pretrain gate v2: the maintenance
-# composition. stream_pretrain_gate probes state FROZEN at stream
-# start — a duplicate of a doc that arrived two micro-batches ago sails
-# through. v2 gates every arriving doc against MAINTAINED state: the
-# exact-dup arm reads the fp store (per-batch novel-fp appends, the
-# stream_dedup_store_ingest machinery), the near-dup arm the growing
-# MinHash band catalog (per-batch band appends, the
-# stream_minhash_catalog_ingest machinery), and the quality arm stays a
-# stateless projection. Reason priority: exact_dup > near_dup >
-# low_quality > ok. The plants exercise every path CROSS-BATCH:
+# At-ingest pretrain gate v2 gates every arriving doc against MAINTAINED
+# state, so a duplicate of a doc that arrived two micro-batches ago is
+# caught: the exact-dup arm reads the fp store (per-batch novel-fp
+# appends), the near-dup arm the growing MinHash band catalog (per-batch
+# band appends), and the quality arm stays a stateless projection.
+# Reason priority: exact_dup > near_dup > low_quality > ok. The plants
+# exercise every path CROSS-BATCH:
 #   +300000  exact re-crawls of seeded (even) docs  -> exact via seed
 #   +500000  exact copies of EARLIER-ARRIVING odd docs -> exact via
-#            fps an earlier micro-batch APPENDED (the v1 gap)
+#            fps an earlier micro-batch APPENDED
 #   +700000  tail-truncated (4/5) re-uploads of earlier odd docs
 #            -> near-dup via band rows an earlier batch APPENDED
-# Maintenance rules inherited verbatim: novel fps append per batch
+# Maintenance rules are the stores': novel fps append per batch
 # (first-arrival-wins), EVERY ingested doc's band rows join the catalog
 # regardless of its own gate decision (a near-dup of a near-dup still
 # bands with both), all reads bounded batch_id < current, all writes
@@ -3964,16 +3786,14 @@ def stream_embedding_catalog_retention(
 # lifecycle order-free: seed-store hit OR smaller-id same-fp arrival =
 # exact; band share with any visible prior = near.
 #
-# v3 adds the MAINTAINED image modality. v1 gated near_dup_image
-# against a chunk catalog FROZEN at stream start; v2 has no image arm.
-# In v3 every batch's cover images (the v1 prefix-stable _gate_cover
-# derivation — the cover renders from the first _GATE_COVER_LEN chars,
-# so tail edits keep it identical) probe the chunk catalog AS OF the
-# batch and then append their own chunk rows. Reason priority:
-# exact_dup > near_dup > near_dup_image > low_quality > ok. The fourth
-# plant family (+900000, sources %8=1 — odd, so they ARRIVED in an
-# earlier micro-batch rather than being seeded) keeps the first
-# _GATE_COVER_LEN chars and REVERSES the tail: same cover image,
+# v3 adds the MAINTAINED image modality: every batch's cover images (the
+# prefix-stable _gate_cover derivation — the cover renders from the
+# first _GATE_COVER_LEN chars, so tail edits keep it identical) probe the
+# chunk catalog AS OF the batch and then append their own chunk rows.
+# Reason priority: exact_dup > near_dup > near_dup_image > low_quality >
+# ok. The fourth plant family (+900000, sources %8=1 — odd, so they
+# ARRIVED in an earlier micro-batch rather than being seeded) keeps the
+# first _GATE_COVER_LEN chars and REVERSES the tail: same cover image,
 # texturally unrelated shingles — caught by chunk rows an earlier batch
 # appended, through the image arm, not the text arms (pinned by
 # test_pretrain_gate_v3_cross_batch_image).
@@ -4152,24 +3972,12 @@ def _gate_handler(image_arm: bool):
     return factory
 
 
-@register("stream_pretrain_gate_v2", PRETRAIN_GATE_V2_ORACLE)
-def stream_pretrain_gate_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, decision, reason) per arriving doc, gated against
-    INGEST-MAINTAINED state: exact-dup via the per-batch-appended fp
-    store, near-dup via the growing band catalog, low-quality via the
-    stateless logistic score; first matching reason wins (exact_dup >
-    near_dup > low_quality > ok). The +500000 / +700000
-    plants arrive in the LAST file and are caught purely by state earlier
-    micro-batches appended — the freshness v1's frozen catalog lacks."""
-    return run_lifecycle(spark, sf_dir, GATE_V2, "gatev2_")[0]
-
-
 # Seeds are the shared ingest-arm relations (the CLAUDE.md seed rule):
 # the fp seed is _fp_store_seed verbatim; _mh_catalog_seed's
 # < _MH_PLANT_OFFSET filter is vacuous here (the parts guard bounds
 # every real id far under it), so the band seed is the plain evens
-# too; the image seed is the evens' COVER chunks (the v1 gate's
-# prefix-stable cover derivation over the maintained-catalog chunker).
+# too; the image seed is the evens' COVER chunks (the prefix-stable
+# cover derivation over the maintained-catalog chunker).
 GATE_V2 = MaintainedState(
     name="pretrain_gate_v2",
     table=_docs_table,
@@ -4196,28 +4004,16 @@ GATE_V3 = replace(
     handler=_gate_handler(image_arm=True),
 )
 
-
-@register("stream_pretrain_gate_v3", PRETRAIN_GATE_V3_ORACLE)
-def stream_pretrain_gate_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, decision, reason) per arriving doc, gated against
-    INGEST-MAINTAINED state across ALL the arms: exact-dup via the fp
-    store, near-dup via the text band catalog, near-dup-image via the
-    growing cover chunk catalog, low-quality via the stateless score —
-    reason priority exact_dup > near_dup > near_dup_image > low_quality
-    > ok. The +900000 cover-stable tail-scrambles of EARLIER-
-    ARRIVING odd docs are caught purely by chunk rows previous
-    micro-batches appended — the image freshness v1's frozen catalog and
-    v2's missing image arm both lack."""
-    return run_lifecycle(spark, sf_dir, GATE_V3, "gatev3_")[0]
+_lifecycle_query("stream_pretrain_gate_v2", PRETRAIN_GATE_V2_ORACLE, GATE_V2)
+_lifecycle_query("stream_pretrain_gate_v3", PRETRAIN_GATE_V3_ORACLE, GATE_V3)
 
 
 # ---------------------------------------------------------------------------
-# Ingest-maintained cluster map for the near-dup split.
-# stream_split_by_neardup reads a rep-fp map MATERIALIZED from
-# the last batch clustering run — between refreshes, a brand-new
-# near-dup pair arriving at ingest still gates independently. This twin
-# maintains the map AT ingest with a deterministic incremental
-# clustering derived from the band catalog's earlier-prior rule: an
+# Ingest-maintained cluster map for the near-dup split. A rep-fp map
+# materialized from a batch clustering run lets a brand-new near-dup pair
+# arriving between refreshes gate independently, so the map is maintained
+# AT ingest with a deterministic incremental clustering derived from the
+# band catalog's earlier-prior rule: an
 # arriving doc's PARENT is its earliest (min doc_id) band-sharing prior
 # — seedless catalog partitions appended by earlier batches, or
 # same-batch smaller ids — and the doc adopts its parent's cluster
@@ -4230,8 +4026,7 @@ def stream_pretrain_gate_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 # localCheckpoint-truncated — the connected_components convergence
 # idiom). The split gates on the representative's fingerprint, so a
 # cluster formed ENTIRELY after stream start (both members arrived via
-# the stream, in different micro-batches) still moves as one unit —
-# the gap the batch-refresh twin has between refreshes.
+# the stream, in different micro-batches) still moves as one unit.
 #
 # NOTE this is deliberately NOT connected components: parent edges form
 # a forest keyed on the earliest-prior rule, and a doc with no smaller
@@ -4395,20 +4190,6 @@ def _neardup_clustermap_handler(io: StateIO):
     return handler
 
 
-@register("stream_split_by_neardup_incremental", SPLIT_BY_NEARDUP_INC_ORACLE)
-def stream_split_by_neardup_incremental(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(doc_id, split) per arriving doc under the INGEST-MAINTAINED
-    cluster map: every doc (the whole corpus plus the near_plants
-    re-crawls stream in — no frozen clustering run) adopts its earliest
-    band-sharing prior's cluster representative and gates on the rep's
-    fingerprint, so a near-dup pair whose members BOTH arrive after
-    stream start, in different micro-batches, still lands in one split
-    (pinned by test_stream_split_by_neardup_incremental_cross_batch)."""
-    return run_lifecycle(spark, sf_dir, CLUSTER_MAP, "ndinc_")[0]
-
-
 def _ndinc_arrival_parts(docs: DataFrame) -> list:
     """The whole corpus in 3 id ranges + the near_plants re-crawls
     (+100000, so every real id must sit below it)."""
@@ -4436,6 +4217,12 @@ CLUSTER_MAP = MaintainedState(
     decisions="doc_id long, split string",
     output=("doc_id", "split"),
 )
+
+# A near-dup pair whose members BOTH arrive after stream start, in
+# different micro-batches, still lands in one split
+# (test_stream_split_by_neardup_incremental_cross_batch).
+_lifecycle_query("stream_split_by_neardup_incremental", SPLIT_BY_NEARDUP_INC_ORACLE,
+                 CLUSTER_MAP)
 
 
 @register(
@@ -4473,7 +4260,7 @@ def stream_split_by_neardup_inc_audit(
     proves it against the recursive-chain oracle's replay. The cluster
     key is the maintained map's rep_id (founders rep themselves), the
     split_by_neardup_cluster_audit convention over at-ingest state."""
-    decisions, io = run_lifecycle(spark, sf_dir, CLUSTER_MAP, "ndincaudit_")
+    decisions, io = run_lifecycle(spark, sf_dir, CLUSTER_MAP)
     clustermap = _read_state(
         spark, io.dir("clustermap"), io.relation("clustermap")
     )
@@ -4505,22 +4292,10 @@ def stream_split_by_neardup_inc_audit(
     )
 
 
-@register(
-    "stream_split_by_neardup_inc_compacted", SPLIT_BY_NEARDUP_INC_ORACLE
-)
-def stream_split_by_neardup_inc_compacted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """(doc_id, split): the incremental cluster-map ingest compacted
-    mid-lifecycle — BOTH state relations (band catalog and rep map;
-    appends are per-doc-unique, so _compact_state's novel-only premise
-    holds for each) collapse to one batch_id=-1 partition between the
-    two arrival phases. Registers against SPLIT_BY_NEARDUP_INC_ORACLE
-    VERBATIM: the driver hash proves a phase-B arrival still adopts a
-    phase-A rep through the collapse."""
-    return run_lifecycle(
-        spark, sf_dir, CLUSTER_MAP, "ndinccomp_", compact=True
-    )[0]
+# The band catalog and the rep map both collapse (appends are
+# per-doc-unique on each): a phase-B arrival still adopts a phase-A rep.
+_lifecycle_query("stream_split_by_neardup_inc_compacted", SPLIT_BY_NEARDUP_INC_ORACLE,
+                 CLUSTER_MAP, compact=True)
 
 
 # ---------------------------------------------------------------------------

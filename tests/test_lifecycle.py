@@ -2,7 +2,9 @@
 
 Every ingest-maintained state kind is a ``MaintainedState`` spec driven by
 ``plans.stream.run_lifecycle``, so the lifecycle invariants are checked
-once per spec here instead of once per arm:
+once per spec here instead of once per arm. The spec lists derive from
+``plans.stream.LIFECYCLE``, so a new registration is covered with no
+edit here:
 
 - a batch replayed after a crash between its overlapped writes (any one
   of them missing) rewrites every relation byte-identically — including
@@ -33,43 +35,23 @@ from spark_streaming_kafka_example_spark.plans import stream as S
 
 from .oracle_harness import duckdb_connection
 
+# Every spec with a plain lifecycle registration, plus the Bloom store
+# (its registration sizes m at run time).
 SPECS = {
     spec.name: spec
-    for spec in (
-        S.FP_STORE,
-        S._fp_bloom_spec(1024),
-        S.MH_CATALOG,
-        S.IMAGE_CATALOG,
-        S.EMB_CATALOG,
-        S.GATE_V2,
-        S.GATE_V3,
-        S.CLUSTER_MAP,
-    )
+    for spec in [s for s, _c, _w in S.LIFECYCLE.values()]
+    + [S._fp_bloom_spec(1024)]
 }
 # Specs with a registered compaction / retention twin.
-COMPACTED = [
-    "fp_store", "minhash_catalog", "image_catalog", "embedding_catalog",
-    "cluster_map",
-]
-RETAINED = ["fp_store", "minhash_catalog", "image_catalog", "embedding_catalog"]
+COMPACTED = [s.name for s, compact, _w in S.LIFECYCLE.values() if compact]
+RETAINED = [s.name for s, _c, w in S.LIFECYCLE.values() if w is not None]
 SEEDED = [
     n for n, s in SPECS.items() if any(r.seed is not None for r in s.relations)
 ]
 SEEDLESS = [n for n in SPECS if n not in SEEDED]
-# Seeded spec -> its registered ingest oracle, and the plant families
-# with the oracle-side table and column they render over.
-DECLARED = {
-    "fp_store": ("stream_dedup_store_ingest", S._FP_FAMILIES),
-    "fp_bloom_store": ("stream_dedup_store_bloom_ingest", S._FP_FAMILIES),
-    "minhash_catalog": ("stream_minhash_catalog_ingest", S._MH_FAMILIES),
-    "image_catalog": ("stream_image_catalog_ingest", S._IMG_FAMILIES),
-    "embedding_catalog": (
-        "stream_embedding_catalog_ingest",
-        S._EMB_FAMILIES, S._EMB_SOURCE_SQL, "embedding",
-    ),
-    "pretrain_gate_v2": ("stream_pretrain_gate_v2", S._GATE_V2_FAMILIES),
-    "pretrain_gate_v3": ("stream_pretrain_gate_v3", S._GATE_V3_FAMILIES),
-}
+# The oracle-side sources an arrival CTE chain renders over: documents
+# (the default) or the embeddings keyed by doc_id.
+ARRIVAL_SOURCES = [(), (S._EMB_SOURCE_SQL, "embedding")]
 
 
 def _rows(df) -> list[str]:
@@ -100,9 +82,7 @@ def lifecycle_run(spark, sf_dir):
 
     def run(name: str):
         if name not in cache:
-            decisions, io = S.run_lifecycle(
-                spark, sf_dir, SPECS[name], f"lifecycle_{name}_"
-            )
+            decisions, io = S.run_lifecycle(spark, sf_dir, SPECS[name])
             cache[name] = (_rows(decisions), io)
         return cache[name]
 
@@ -154,9 +134,7 @@ def test_seedless_batch0_replay_is_idempotent(
 @pytest.mark.parametrize("name", COMPACTED)
 def test_compaction_keeps_decisions(spark, sf_dir, lifecycle_run, name):
     plain, _io = lifecycle_run(name)
-    compacted, io = S.run_lifecycle(
-        spark, sf_dir, SPECS[name], f"lifecycle_{name}_compact_", compact=True
-    )
+    compacted, io = S.run_lifecycle(spark, sf_dir, SPECS[name], compact=True)
     assert _rows(compacted) == plain
     # phase B collapsed phase A's relations into one seed partition
     for rel in SPECS[name].relations:
@@ -212,8 +190,7 @@ def test_run_lifecycle_rejects_compaction_with_retention(spark, sf_dir):
     raised before any state is written."""
     with pytest.raises(ValueError, match="unbounded-state-only"):
         S.run_lifecycle(
-            spark, sf_dir, S.FP_STORE, "lifecycle_guard_",
-            compact=True, retention_batches=2,
+            spark, sf_dir, S.FP_STORE, compact=True, retention_batches=2
         )
 
 
@@ -261,13 +238,14 @@ def test_plant_family_guard_raises_before_any_write(
 ):
     spec = replace(
         S.FP_STORE,
+        name="lifecycle_family_guard",
         table=lambda spark, sf: S._docs_table(spark, sf).withColumn(
             "doc_id", F.col("doc_id") + shift
         ),
         parts=partial(S._odd_plus_plants, families=families),
     )
     with pytest.raises(ValueError, match=f"smallest offset gap {gap};"):
-        S.run_lifecycle(spark, sf_dir, spec, "lifecycle_family_guard_")
+        S.run_lifecycle(spark, sf_dir, spec)
     base = plans._RUN_TMPDIRS[-1]
     assert "lifecycle_family_guard_" in base
     assert os.listdir(base) == []  # no seed, no arrival file
@@ -276,12 +254,17 @@ def test_plant_family_guard_raises_before_any_write(
 @pytest.mark.parametrize("name", SEEDED)
 def test_arrival_parts_are_the_oracle_batches(spark, sf_dir, name):
     """The one declaration: the Spark arrival parts hold exactly the ids
-    the oracle's bmap puts in each batch, and the registered oracle
-    renders that bmap."""
-    oracle, families, *over = DECLARED[name]
-    ctes = S._arrival_ctes(families, *over)
-    assert ctes in plans.ORACLE[oracle]
+    the oracle's bmap puts in each batch, and the plain registration
+    over the same parts renders that bmap."""
     spec = SPECS[name]
+    (oracle,) = [
+        plans.ORACLE[n]
+        for n, (s, compact, w) in S.LIFECYCLE.items()
+        if s.parts is spec.parts and not compact and w is None
+    ]
+    families = spec.parts.keywords["families"]
+    renders = [S._arrival_ctes(families, *src) for src in ARRIVAL_SOURCES]
+    (ctes,) = [c for c in renders if c in oracle]
     got = [
         sorted(r.doc_id for r in part.select("doc_id").collect())
         for part in spec.parts(spec.table(spark, sf_dir))
@@ -311,7 +294,7 @@ def test_handler_jobs_are_labelled(spark, sf_dir):
     """Every job of a lifecycle batch, the overlapped StateIO.write jobs
     on run_parallel threads included, is described <spec>/b<batch_id>."""
     spec = replace(S.FP_STORE, name="labelled_store")
-    S.run_lifecycle(spark, sf_dir, spec, "lifecycle_labels_")
+    S.run_lifecycle(spark, sf_dir, spec)
     jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
     label = {}
     for j in (jobs.apply(i) for i in range(jobs.size())):

@@ -2316,7 +2316,7 @@ def test_bloom_pos_col_matches_row_form(spark):
         assert sorted(got[g]) == expect, g
 
 
-def test_bench_line_fits_driver_capture():
+def test_bench_line_fits_driver_capture(monkeypatch):
     """emit_line's worst case (every HEADLINE query at a 4-digit time,
     full calibration block) must fit ENTIRELY inside the driver's capture
     of the trailing 2000 bytes of stdout. The line self-sizes by dropping
@@ -2324,10 +2324,13 @@ def test_bench_line_fits_driver_capture():
     rotates across rounds; totals cover ALL queries regardless.
 
     Assertions are STRUCTURAL — re-derived from the same capture-history
-    key emit_line uses, with no hard-coded survivor — so the gate holds
-    for any committed capture history."""
+    key emit_line uses, with no hard-coded survivor. The history is a
+    fixed one (every HEADLINE name but the last ten, captured over five
+    rounds), so the result does not depend on git metadata."""
     import bench
 
+    fixed = {n: 1 + i % 5 for i, n in enumerate(bench.HEADLINE[:-10])}
+    monkeypatch.setattr(bench, "_capture_rounds", lambda: dict(fixed))
     worst = {n: 9999.99 for n in bench.HEADLINE}
     calib = {"jvm_agg_sec": 999.999, "jvm_agg32_sec": 999.999,
              "python_hash_sec": 999.999}

@@ -2185,8 +2185,8 @@ def test_image_catalog_cross_batch_growth(spark, tmp_path):
 
 
 def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
-    """r17: the TTL'd store forgets — content absent for
-    _FP_TTL_W(=2) batches reads 'novel' again (the seed ages out like
+    """The TTL'd store forgets — content absent for
+    _TTL_W(=2) batches reads 'novel' again (the seed ages out like
     any append), a re-admitted fp restarts its lifetime (a copy in the
     NEXT batch reads 'duplicate' via the re-append), and an expired
     batch-0 append is re-admitted too."""
@@ -2196,7 +2196,7 @@ def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
         fingerprint,
     )
     from spark_streaming_kafka_example_spark.plans.stream import (
-        _FP_TTL_W,
+        _TTL_W,
         FP_STORE,
         StateIO,
     )
@@ -2204,7 +2204,7 @@ def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
         foreach_batch_sink,
     )
 
-    io = StateIO(FP_STORE, str(tmp_path), retention_batches=_FP_TTL_W)
+    io = StateIO(FP_STORE, str(tmp_path), retention_batches=_TTL_W)
     store = io.dir("store")
     decisions = io.dir("decisions")
     src = str(tmp_path / "arrivals")
@@ -2261,82 +2261,80 @@ def test_dedup_store_retention_expires_and_readmits(spark, tmp_path):
     }, got
 
 
-def test_minhash_catalog_retention_expires(spark, tmp_path):
-    """r17: the TTL'd band catalog forgets — band rows older than
-    _MH_TTL_W(=2) batches stop being probed (the seed ages out at batch
-    W, a batch-0 near-dup source ages out at batch 3), proven by running
-    the SAME arrival files through the windowed and unbounded handlers
-    and contrasting the counts."""
-    import pyspark.sql.functions as SF
+def _vec(seed):
+    """A hand-built 64-d vector; seeds 1, 3 and 5 are pairwise at cosine
+    below 0.1, far from the 0.99 near-dup bound."""
+    return [float(((seed * 31 + i * 7) % 13) - 6) for i in range(64)]
 
-    from spark_streaming_kafka_example_spark.operators import dedup as DD
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _MH_TTL_W,
-        MH_CATALOG,
-        StateIO,
+
+def _hand_fed(spark, attr, schema, seeded, arrivals):
+    """The ``plans.stream`` spec named ``attr`` over a hand-built table:
+    (2, seeded) is its one seeded (even) row, and each (doc_id, payload)
+    of ``arrivals`` is one arrival file, in order."""
+    from dataclasses import replace
+
+    from spark_streaming_kafka_example_spark.plans import stream as S
+
+    seed = spark.createDataFrame([(2, seeded)], schema)
+    parts = [spark.createDataFrame([row], schema) for row in arrivals]
+    return replace(
+        getattr(S, attr), table=lambda _s, _sf: seed, parts=lambda _t: parts
     )
-    from spark_streaming_kafka_example_spark.streaming.sinks import (
-        foreach_batch_sink,
-    )
 
-    src = str(tmp_path / "arrivals")
-    schema = "doc_id long, text string"
 
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "small red hen counts seven bright stars tonight")
-    other = ("pack my box with five dozen liquor jugs and then carry "
+_TEXT_SCHEMA = "doc_id long, text string"
+_MH_OTHER = ("pack my box with five dozen liquor jugs and then carry "
              "them down the long winding cellar stairs quietly")
-    trunc = " ".join(other.split()[:15])  # near-dup of `other`, not `base`
+_IMG_BASE = "the quick brown fox jumps over the lazy dog tonight"
+_IMG_OTHER = "pack my box with five dozen liquor jugs and carry them"
 
-    batches = [
-        [(11, other)],  # b0: novel
-        [(13, trunc)],  # b1: near-dup of b0 (in window)
-        [(15, base)],  # b2: copy of the seed — but the seed aged out
-        [(17, trunc)],  # b3: 11's rows aged out; 13's still in window
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{src}/b{i}"
-        )
-        for root, _dirs, files in os.walk(f"{src}/b{i}"):
-            for fn in files:
-                os.utime(
-                    os.path.join(root, fn),
-                    (1_700_000_000 + i, 1_700_000_000 + i),
-                )
+# Per catalog kind: its spec, arrival schema, the seeded payload, and a
+# payload with its near-dup (the band catalog's is a 15-word truncation;
+# the image and vector near-dups are exact copies).
+_CATALOG_TTL_CASES = {
+    "minhash_catalog": (
+        "MH_CATALOG", _TEXT_SCHEMA,
+        "the quick brown fox jumps over the lazy dog while the "
+        "small red hen counts seven bright stars tonight",
+        _MH_OTHER, " ".join(_MH_OTHER.split()[:15]),
+    ),
+    "image_catalog": (
+        "IMAGE_CATALOG", _TEXT_SCHEMA, _IMG_BASE, _IMG_OTHER, _IMG_OTHER,
+    ),
+    "embedding_catalog": (
+        "EMB_CATALOG", "doc_id long, embedding array<float>",
+        _vec(1), _vec(5), _vec(5),
+    ),
+}
 
+
+@pytest.mark.parametrize("kind", list(_CATALOG_TTL_CASES))
+def test_catalog_retention_expires(spark, kind):
+    """A TTL'd catalog forgets: rows older than _TTL_W(=2) batches stop
+    being probed (the seed ages out at batch W, a batch-0 source at batch
+    3), proven by running the SAME seed and arrivals through the windowed
+    and the unbounded lifecycle and contrasting the counts."""
+    from spark_streaming_kafka_example_spark.plans import stream as S
+
+    attr, schema, seeded, first, near = _CATALOG_TTL_CASES[kind]
+    spec = _hand_fed(spark, attr, schema, seeded, [
+        (11, first),  # b0: novel
+        (13, near),  # b1: near-dup of b0 (in window)
+        (15, seeded),  # b2: copy of the seed — but the seed aged out
+        (17, near),  # b3: 11's rows aged out; 13's still in window
+    ])
     got = {}
-    for mode, retention in [("ttl", _MH_TTL_W), ("unbounded", None)]:
-        io = StateIO(MH_CATALOG, str(tmp_path / mode), retention)
-        catalog = io.dir("catalog")
-        decisions = io.dir("decisions")
-        seed = spark.createDataFrame([(2, base)], schema)
-        DD.lsh_band_values(
-            DD.minhash_signatures(DD.doc_shingles(seed, distinct=False))
-        ).withColumn("batch_id", SF.lit(-1)).write.partitionBy(
-            "batch_id"
-        ).parquet(catalog)
-        q = foreach_batch_sink(
-            (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src + "/*")
-            ),
-            MH_CATALOG.handler(io),
-            checkpoint=io.dir("ckpt"),
-            mode="append",
+    for mode, retention in [("ttl", S._TTL_W), ("unbounded", None)]:
+        decisions, _io = S.run_lifecycle(
+            spark, "", spec, retention_batches=retention
         )
-        q.awaitTermination()
-        got[mode] = {
-            r.doc_id: r.n_prior_candidates
-            for r in spark.read.parquet(decisions).collect()
-        }
+        got[mode] = dict(decisions.collect())
 
     assert got["unbounded"] == {11: 0, 13: 1, 15: 1, 17: 2}
     assert got["ttl"] == {
         11: 0,
         13: 1,  # 11 still in window
-        15: 0,  # the seed aged out at batch _MH_TTL_W
+        15: 0,  # the seed aged out at batch _TTL_W
         17: 1,  # 11's batch-0 rows aged out; 13's batch-1 rows retained
     }, got["ttl"]
 
@@ -2366,43 +2364,45 @@ def test_compact_state_single_partition(spark, tmp_path):
     assert os.path.isdir(os.path.join(out, "batch_id=-1"))
 
 
-def test_compacted_ingest_cross_phase_through_compaction(spark):
-    """r17: the mid-lifecycle compaction is load-bearing — a phase-B
-    arrival duplicating PHASE-A content is decided via the COMPACTED
-    state (the only place phase A's append survives), and a phase-B
-    duplicate of the original seed proves the seed rode through the
-    collapse too."""
-    from dataclasses import replace
+# Per kind: its spec, arrival schema, the seeded payload, two unrelated
+# payloads, and the decisions of the four arrivals.
+_COMPACT_CASES = {
+    "fp_store": (
+        "FP_STORE", _TEXT_SCHEMA, "alpha beta", "gamma delta xx",
+        "epsilon zeta yy",
+        {11: "novel", 13: "novel", 15: "duplicate", 17: "duplicate"},
+    ),
+    "image_catalog": (
+        "IMAGE_CATALOG", _TEXT_SCHEMA, _IMG_BASE, _IMG_OTHER,
+        "sphinx of black quartz judge my vow and then some more",
+        {11: 0, 13: 0, 15: 1, 17: 1},
+    ),
+    "embedding_catalog": (
+        "EMB_CATALOG", "doc_id long, embedding array<float>",
+        _vec(1), _vec(5), _vec(3),
+        {11: 0, 13: 0, 15: 1, 17: 1},
+    ),
+}
 
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        FP_STORE,
-        run_lifecycle,
-    )
 
-    schema = "doc_id long, text string"
-    seed = spark.createDataFrame([(2, "alpha beta")], schema)  # even: seeded
-    parts = [
-        spark.createDataFrame(rows, schema)
-        for rows in [
-            [(11, "gamma delta xx")],  # phase A: novel
-            [(13, "epsilon zeta yy")],  # phase A: novel
-            [(15, "gamma delta xx")],  # phase B: dup of PHASE A via compact
-            [(17, "alpha beta")],  # phase B: dup of the seed via compact
-        ]
-    ]
-    spec = replace(
-        FP_STORE, table=lambda _s, _sf: seed, parts=lambda _docs: parts
-    )
-    decisions, _io = run_lifecycle(
-        spark, "", spec, "fpcompact_test_", compact=True
-    )
-    got = {r.doc_id: r.status for r in decisions.collect()}
-    assert got == {
-        11: "novel",
-        13: "novel",
-        15: "duplicate",
-        17: "duplicate",
-    }, got
+@pytest.mark.parametrize("kind", list(_COMPACT_CASES))
+def test_compacted_ingest_cross_phase(spark, kind):
+    """The mid-lifecycle compaction is load-bearing: a phase-B arrival
+    duplicating PHASE-A content is decided via the COMPACTED state (the
+    only place phase A's append survives), and a phase-B copy of the
+    seed proves the seed rode through the collapse too."""
+    from spark_streaming_kafka_example_spark.plans import stream as S
+
+    attr, schema, seeded, first, second, want = _COMPACT_CASES[kind]
+    spec = _hand_fed(spark, attr, schema, seeded, [
+        (11, first),  # phase A: novel
+        (13, second),  # phase A: novel
+        (15, first),  # phase B: prior ONLY via compacted phase A
+        (17, seeded),  # phase B: prior = the seed through the collapse
+    ])
+    decisions, _io = S.run_lifecycle(spark, "", spec, compact=True)
+    got = dict(decisions.collect())
+    assert got == want, got
 
 
 def test_stream_split_by_neardup_recrawl(spark, sf_dir):
@@ -2528,117 +2528,6 @@ def test_dedup_store_bloom_prunes_and_agrees(spark, sf_dir):
     assert n_poss >= true_hits  # no false negatives
     # ...and the filter must discard a real share of the definite misses
     assert n_poss < n_arr, "Bloom pruned nothing"
-
-
-def test_image_catalog_retention_expires(spark, tmp_path):
-    """r18 (r17 VERDICT task 5): the TTL'd image chunk catalog forgets —
-    chunk rows older than _IMG_TTL_W(=2) batches stop being probed (the
-    seed ages out at batch W, a batch-0 cover source ages out at batch
-    3), proven by running the SAME arrival files through the windowed
-    and unbounded handlers and contrasting the counts."""
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _IMG_TTL_W,
-        IMAGE_CATALOG,
-        StateIO,
-        _image_chunk_rows,
-    )
-    from spark_streaming_kafka_example_spark.streaming.sinks import (
-        foreach_batch_sink,
-    )
-
-    src = str(tmp_path / "arrivals")
-    schema = "doc_id long, text string"
-
-    base = "the quick brown fox jumps over the lazy dog tonight"
-    other = "pack my box with five dozen liquor jugs and carry them"
-
-    batches = [
-        [(11, other)],  # b0: novel image
-        [(13, other)],  # b1: re-upload of b0's (in window)
-        [(15, base)],  # b2: copy of the seed — but the seed aged out
-        [(17, other)],  # b3: b0's rows aged out; b1's still in window
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{src}/b{i}"
-        )
-        for root, _dirs, files in os.walk(f"{src}/b{i}"):
-            for fn in files:
-                os.utime(
-                    os.path.join(root, fn),
-                    (1_700_000_000 + i, 1_700_000_000 + i),
-                )
-
-    got = {}
-    for mode, retention in [("ttl", _IMG_TTL_W), ("unbounded", None)]:
-        io = StateIO(IMAGE_CATALOG, str(tmp_path / mode), retention)
-        decisions = io.dir("decisions")
-        io.write(
-            -1,
-            catalog=_image_chunk_rows(
-                spark.createDataFrame([(2, base)], schema)
-            ),
-        )
-        q = foreach_batch_sink(
-            (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src + "/*")
-            ),
-            IMAGE_CATALOG.handler(io),
-            checkpoint=io.dir("ckpt"),
-            mode="append",
-        )
-        q.awaitTermination()
-        got[mode] = {
-            r.doc_id: r.n_prior_candidates
-            for r in spark.read.parquet(decisions).collect()
-        }
-
-    assert got["unbounded"] == {11: 0, 13: 1, 15: 1, 17: 2}
-    assert got["ttl"] == {
-        11: 0,
-        13: 1,  # 11 still in window
-        15: 0,  # the seed aged out at batch _IMG_TTL_W
-        17: 1,  # 11's batch-0 rows aged out; 13's batch-1 rows retained
-    }, got["ttl"]
-
-
-def test_image_compacted_ingest_cross_phase(spark):
-    """r18: the image catalog's mid-lifecycle compaction is load-bearing
-    — a phase-B cover duplicating PHASE-A content is counted via the
-    COMPACTED catalog (the only place phase A's chunk rows survive), and
-    a phase-B copy of the seed cover proves the seed rode through the
-    collapse too."""
-    from dataclasses import replace
-
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        IMAGE_CATALOG,
-        run_lifecycle,
-    )
-
-    schema = "doc_id long, text string"
-    base = "the quick brown fox jumps over the lazy dog tonight"
-    other = "pack my box with five dozen liquor jugs and carry them"
-    third = "sphinx of black quartz judge my vow and then some more"
-    seed = spark.createDataFrame([(2, base)], schema)  # even: seeded
-    parts = [
-        spark.createDataFrame(rows, schema)
-        for rows in [
-            [(11, other)],  # phase A: novel
-            [(13, third)],  # phase A: novel
-            [(15, other)],  # phase B: prior ONLY via compacted phase A
-            [(17, base)],  # phase B: prior = the seed through the collapse
-        ]
-    ]
-    spec = replace(
-        IMAGE_CATALOG, table=lambda _s, _sf: seed, parts=lambda _docs: parts
-    )
-    decisions, _io = run_lifecycle(
-        spark, "", spec, "imgcompact_test_", compact=True
-    )
-    got = {r.doc_id: r.n_prior_candidates for r in decisions.collect()}
-    assert got == {11: 0, 13: 0, 15: 1, 17: 1}, got
 
 
 def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
@@ -3001,106 +2890,3 @@ def test_embedding_catalog_cross_batch_growth(spark, tmp_path):
     assert got2 == got
 
 
-def test_embedding_catalog_retention_expires(spark, tmp_path):
-    """r18: the TTL'd embedding catalog forgets — code rows + vectors
-    older than _EMBCAT_TTL_W(=2) batches stop being probed (the seed
-    ages out at batch W, a batch-0 vector ages out at batch 3), proven
-    by running the SAME arrival files through the windowed and
-    unbounded handlers and contrasting the counts."""
-    from spark_streaming_kafka_example_spark.plans.stream import (
-        _EMB_ARRIVAL_SCHEMA,
-        _EMBCAT_TTL_W,
-        EMB_CATALOG,
-        StateIO,
-        _emb_code_rows,
-    )
-    from spark_streaming_kafka_example_spark.streaming.sinks import (
-        foreach_batch_sink,
-    )
-
-    src = str(tmp_path / "arrivals")
-
-    def vec(seed):
-        return [float(((seed * 31 + i * 7) % 13) - 6) for i in range(64)]
-
-    rows = lambda pairs: spark.createDataFrame(  # noqa: E731
-        pairs, _EMB_ARRIVAL_SCHEMA
-    )
-    batches = [
-        [(11, vec(5))],  # b0: novel vector
-        [(13, vec(5))],  # b1: copy of b0's (in window)
-        [(15, vec(1))],  # b2: copy of the seed — but the seed aged out
-        [(17, vec(5))],  # b3: b0's rows aged out; b1's still in window
-    ]
-    for i, pairs in enumerate(batches):
-        rows(pairs).coalesce(1).write.parquet(f"{src}/b{i}")
-        for root, _dirs, files in os.walk(f"{src}/b{i}"):
-            for fn in files:
-                os.utime(
-                    os.path.join(root, fn),
-                    (1_700_000_000 + i, 1_700_000_000 + i),
-                )
-
-    got = {}
-    for mode, retention in [("ttl", _EMBCAT_TTL_W), ("unbounded", None)]:
-        io = StateIO(EMB_CATALOG, str(tmp_path / mode), retention)
-        decisions = io.dir("decisions")
-        seed_df = rows([(2, vec(1))]).localCheckpoint()
-        io.write(-1, codes=_emb_code_rows(seed_df), vectors=seed_df)
-        q = foreach_batch_sink(
-            (
-                spark.readStream.schema(_EMB_ARRIVAL_SCHEMA)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src + "/*")
-            ),
-            EMB_CATALOG.handler(io),
-            checkpoint=io.dir("ckpt"),
-            mode="append",
-        )
-        q.awaitTermination()
-        got[mode] = {
-            r.doc_id: r.n_prior_neardups
-            for r in spark.read.parquet(decisions).collect()
-        }
-
-    assert got["unbounded"] == {11: 0, 13: 1, 15: 1, 17: 2}
-    assert got["ttl"] == {
-        11: 0,
-        13: 1,  # 11 still in window
-        15: 0,  # the seed aged out at batch _EMBCAT_TTL_W
-        17: 1,  # 11's batch-0 rows aged out; 13's batch-1 rows retained
-    }, got["ttl"]
-
-
-def test_embedding_compacted_ingest_cross_phase(spark):
-    """r18: the embedding catalog's mid-lifecycle compaction is
-    load-bearing — a phase-B vector duplicating PHASE-A content is
-    counted via the COMPACTED relations (the only place phase A's code
-    rows + vectors survive), and a phase-B copy of the seed proves the
-    seed rode through the collapse too."""
-    from spark_streaming_kafka_example_spark import plans
-    from spark_streaming_kafka_example_spark.plans import (  # noqa: F401
-        stream as _force_registration,
-    )
-
-    # The registered compacted twin shares the unbounded twin's oracle;
-    # value-compare the two registrations directly at sf0.001 — phase B
-    # holds the third odd-id range AND the plants, whose sources sit in
-    # the seed and phase A, so equality is exactly the
-    # through-the-collapse claim.
-    sf_dir = "/root/testdata/sf0.001"
-    comp = {
-        r.vec_id: r.n_prior_neardups
-        for r in plans.QUERIES["stream_embedding_catalog_compacted"](
-            spark, sf_dir
-        ).collect()
-    }
-    plain = {
-        r.vec_id: r.n_prior_neardups
-        for r in plans.QUERIES["stream_embedding_catalog_ingest"](
-            spark, sf_dir
-        ).collect()
-    }
-    assert comp == plain
-    # non-vacuous: phase-B plants (ids >= 100000) DO count priors
-    assert any(v > 0 for k, v in comp.items() if k >= 100000)
