@@ -380,7 +380,7 @@ def main() -> None:
 
     from spark_streaming_kafka_example_spark.sources import load_table
 
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
+    load_table(spark, sf_dir, "lineitem").count()
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer")
     ev.join(F.broadcast(cust), ev.user_id == cust.c_custkey, "left_outer").count()

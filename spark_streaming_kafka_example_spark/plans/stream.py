@@ -3316,6 +3316,8 @@ _MH_FAMILIES = ((10, 0, _MH_PLANT_OFFSET, _TRUNC_SQL),)
 
 # corpus -> shingles -> within-doc signatures -> band rows (doc_id,
 # band_id, band_val): the lifecycle oracles' twin of _batch_band_rows.
+# _prior_pairs_sql reads bands twice; materialized, DuckDB shingles the
+# corpus once instead of once per reference.
 _MH_BANDS_CTES = f"""{_MH_SHINGLES_CTE.strip()},
     hashed AS (SELECT doc_id, {_MH_BASE_H} AS h FROM sh),
     sig AS (
@@ -3323,7 +3325,7 @@ _MH_BANDS_CTES = f"""{_MH_SHINGLES_CTE.strip()},
            {_MH_SIG_MINS}
         FROM hashed GROUP BY doc_id
     ),
-    bands AS (
+    bands AS MATERIALIZED (
     {_MH_BAND_SELECTS}
     )"""
 _BAND_MATCH_SQL = "a.band_id = p.band_id AND a.band_val = p.band_val"
@@ -3818,7 +3820,7 @@ _GATE_V3_FAMILIES = _GATE_V2_FAMILIES + (
 from .llm import _rename_ctes  # noqa: E402
 
 # The cover corpus's nibs chain, renamed so it coexists with the
-# shingle corpus.
+# shingle corpus. ginibs is materialized: _prior_pairs_sql reads it twice.
 _GV3_NIBS_CTE = _rename_ctes(
     _PHASH_NIBS_CTE,
     {
@@ -3828,7 +3830,7 @@ _GV3_NIBS_CTE = _rename_ctes(
         "stat": "gistat",
         "nibs": "ginibs",
     },
-)
+).replace("ginibs AS (", "ginibs AS MATERIALIZED (")
 
 
 def _gate_oracle(image_arm: bool) -> str:
@@ -3852,9 +3854,11 @@ def _gate_oracle(image_arm: bool) -> str:
         image_join = """
         LEFT JOIN (SELECT DISTINCT doc_id FROM imghits) i
           ON r.doc_id = i.doc_id"""
+    # batched is materialized so DuckDB joins corpus with bmap once, not
+    # at each of its references (the fp store's fb rule).
     return f"""
     WITH {_arrival_ctes(families)},
-    batched AS (
+    batched AS MATERIALIZED (
         SELECT c.doc_id, c.text, bmap.b
         FROM corpus c JOIN bmap ON bmap.doc_id = c.doc_id
     ),

@@ -10,7 +10,8 @@ the Spark 4 Python DataSource API (``read_jsonl``).
 
 Scale notes: parquet reads are vectorized + predicate-pushdown + column-
 pruned by Catalyst for free as long as callers express filters/projections
-declaratively. ``load_table`` never caches or collects.
+declaratively. ``load_table`` never caches or collects rows; it
+remembers only each table file's inferred schema.
 """
 
 from __future__ import annotations
@@ -45,8 +46,47 @@ __all__ = [
 ]
 
 
+# Confs that change what parquet schema inference returns for one file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+# Process-wide: the key holds everything an inferred schema depends on,
+# and two first readers that race only infer the same schema twice.
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _stat_key(path: str) -> tuple:
+    st = os.stat(path)
+    return (path, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    """The file facts and conf values ``load_table``'s memo is keyed on."""
+    real = os.path.realpath(path)
+    files = [_stat_key(real)]
+    if os.path.isdir(real):
+        for root, dirs, names in os.walk(real):
+            dirs.sort()
+            files += [_stat_key(os.path.join(root, n)) for n in sorted(names)]
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return tuple(files), confs
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata parquet table.
+
+    Caches no data. The first read of a file infers its schema through
+    Spark, which runs one job; later reads of the same unchanged file pass
+    that schema and launch no job. The remembered schema is keyed on the
+    file's realpath, inode, ``st_mtime_ns`` and ``st_size`` (for a
+    directory, the same facts for each file in it) and on the confs that
+    change inference (``nanosAsLong``, ``inferTimestampNTZ``,
+    ``binaryAsString``, ``int96AsTimestamp``, ``mergeSchema``), so a
+    rewritten file or a changed conf is inferred again.
 
     ``events.ts``'s physical type varies by testdata round:
 
@@ -61,7 +101,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       pinned UTC session the NTZ->TZ cast is wall-clock identity, keeping
       DuckDB value parity.
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):

@@ -1,6 +1,6 @@
 """Accuracy checks for the two approximate aggregates — the only registry
 entries without a DuckDB oracle (sketches aren't cross-engine reproducible).
-r03 VERDICT: "it ran" is not a correctness check; assert each approximation
+"It ran" is not a correctness check: assert each approximation
 lands within its documented error bound of the exact answer computed on the
 SAME data."""
 
@@ -59,8 +59,8 @@ def test_rows_only_sketch_outputs_are_scalar_typed(spark, sf_dir):
     """The two rows-only registry entries (no DuckDB oracle) must emit
     only scalar-typed columns: the driver's rows-only canonicalizer cannot
     sort array cells, so a complex-typed column would make its check
-    order-dependent. agg_freq_items serializes its arrays to strings
-    (r06); agg_percentile_approx uses scalar percentages (array form of
+    order-dependent. agg_freq_items serializes its arrays to strings;
+    agg_percentile_approx uses scalar percentages (array form of
     percentile_approx would return array<double>). One documented idiom,
     pinned here for both."""
     from pyspark.sql.types import AtomicType

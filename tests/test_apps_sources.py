@@ -251,6 +251,186 @@ def test_orc_and_json_roundtrip(spark, sf_dir, tmp_path):
     assert {tuple(r) for r in back.collect()} == expect
 
 
+def _jobs_launched(spark, fn):
+    """(fn(), the number of Spark jobs fn launched), read from the status
+    store once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = f"count-{uuid.uuid4().hex}"
+    bus.waitUntilEmpty()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def _load_t(spark, table_dir):
+    return load_table(spark, str(table_dir), "t")
+
+
+def _read_outcome(read):
+    """A read's schema and sorted rows, or the class of the error that
+    rejects it."""
+    try:
+        df = read()
+        return df.schema, sorted(df.collect())
+    except Exception as e:  # noqa: BLE001 - the outcome under test
+        return type(e).__name__
+
+
+def test_load_table_reuses_inferred_schema(spark, tmp_path):
+    """The first read of a table file infers its schema (one job); a later
+    read of the same unchanged file launches none and returns what a fresh
+    spark.read.parquet returns."""
+    _write(tmp_path / "t.parquet", a=[1, 2, 3], s=["x", "y", None])
+    _, first = _jobs_launched(spark, lambda: _load_t(spark, tmp_path))
+    again, jobs = _jobs_launched(spark, lambda: _load_t(spark, tmp_path))
+    assert first >= 1 and jobs == 0
+    fresh = spark.read.parquet(str(tmp_path / "t.parquet"))
+    assert again.schema == fresh.schema
+    assert sorted(again.collect()) == sorted(fresh.collect())
+
+
+@pytest.mark.parametrize(
+    "rewrite",
+    [
+        {"a": [1, 2], "b": ["x", "y"]},  # an added column
+        {"a": ["1", "2"]},  # a changed type
+    ],
+    ids=["added_column", "changed_type"],
+)
+def test_load_table_reinfers_rewritten_file(spark, tmp_path, rewrite):
+    """A file rewritten in place is inferred again, so the read sees the
+    new footer's schema, not the remembered one."""
+    path = tmp_path / "t.parquet"
+    _write(path, a=[1, 2])
+    assert _load_t(spark, tmp_path).schema.names == ["a"]
+    _write(path, **rewrite)
+    got, jobs = _jobs_launched(spark, lambda: _load_t(spark, tmp_path))
+    assert jobs >= 1
+    assert _read_outcome(lambda: got) == _read_outcome(
+        lambda: spark.read.parquet(str(path))
+    )
+
+
+@pytest.mark.parametrize(
+    "conf, unit",
+    [
+        ("spark.sql.legacy.parquet.nanosAsLong", "ns"),
+        ("spark.sql.parquet.inferTimestampNTZ.enabled", "us"),
+    ],
+)
+def test_load_table_follows_inference_confs(spark, tmp_path, conf, unit):
+    """A naive timestamp column read under each value of a conf that
+    changes inference gives what a fresh read gives under that value —
+    rows, or the error that rejects the type — and a value seen before
+    reuses its own remembered schema."""
+    import pyarrow as pa
+
+    path = tmp_path / "t.parquet"
+    ts = [1_700_000_000_123_456_789, 1_700_000_001_000_000_001]
+    if unit == "us":
+        ts = [t // 1000 for t in ts]
+    _write(path, id=pa.array([1, 2]), ts=pa.array(ts, pa.timestamp(unit)))
+    prev = spark.conf.get(conf, None)
+    try:
+        for value in ("true", "false", "true"):
+            spark.conf.set(conf, value)
+            got = _read_outcome(lambda: _load_t(spark, tmp_path))
+            fresh = _read_outcome(lambda: spark.read.parquet(str(path)))
+            assert got == fresh, value
+        _, jobs = _jobs_launched(spark, lambda: _load_t(spark, tmp_path))
+        assert jobs == 0
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+
+
+def test_load_table_reinfers_directory_after_change(spark, tmp_path):
+    """A directory table's key covers every file in it: an added file and
+    a file rewritten in place each make the next read infer again."""
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    _write(table / "part-0.parquet", a=[1, 2])
+    _load_t(spark, tmp_path).collect()
+    for change in (
+        lambda: _write(table / "part-1.parquet", a=[3]),
+        lambda: _write(table / "part-0.parquet", a=[1, 2], b=[0.5, 1.5]),
+    ):
+        change()
+        got, jobs = _jobs_launched(spark, lambda: _load_t(spark, tmp_path))
+        assert jobs >= 1
+        assert _read_outcome(lambda: got) == _read_outcome(
+            lambda: spark.read.parquet(str(table))
+        )
+
+
+def test_load_table_parallel_readers(spark, tmp_path):
+    """Concurrent run_parallel readers of one not yet inferred file, more
+    of them than cores, all succeed with the file's rows: two readers that
+    both miss the memo each infer and store the same schema."""
+    import sys
+
+    from spark_streaming_kafka_example_spark.engine import run_parallel
+
+    _write(tmp_path / "t.parquet", a=list(range(100)))
+    readers = 2 * len(os.sched_getaffinity(0))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        got = run_parallel(
+            *[lambda: _load_t(spark, tmp_path).collect()] * readers
+        )
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(got) == readers
+    assert all(sorted(r.a for r in rows) == list(range(100)) for rows in got)
+
+
+# The perfbench batch queries whose build runs no eager job: on a
+# remembered schema, building one reads no data at all.
+_LAZY_BUILD_QUERIES = (
+    "flagship_sliding_alert",
+    "a3_sliding_window_agg",
+    "j1_enrich_left_outer",
+    "p2_from_json_flatten",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q9_product_profit",
+    "q18_large_volume_customer",
+    "window_topk_per_group",
+    "sessionize_gap_30m",
+)
+
+
+@pytest.mark.parametrize("name", _LAZY_BUILD_QUERIES)
+def test_second_build_launches_no_job(spark, sf_dir, name):
+    """Building a lazily planned query a second time launches no Spark
+    job: every table schema comes from load_table's memo."""
+    from spark_streaming_kafka_example_spark import plans
+
+    plans.load_all()
+    build = lambda: plans.QUERIES[name](spark, sf_dir)  # noqa: E731
+    build()
+    _, jobs = _jobs_launched(spark, build)
+    assert jobs == 0
+
+
 def _package_modules() -> list[str]:
     import spark_streaming_kafka_example_spark as pkg
 

@@ -100,7 +100,7 @@ def test_jsonl_directory_input_and_slice_plan(spark, tmp_path):
 
 
 def test_jsonl_option_and_schema_validation(spark, tmp_path):
-    """Invalid inputs fail loudly at plan time (r07 review): unsupported
+    """Invalid inputs fail loudly at plan time, not as task errors: unsupported
     declared types, non-positive partition_bytes; a malformed FIRST line
     doesn't break inference (it's data, not a planning failure)."""
     import pytest
@@ -122,8 +122,8 @@ def test_jsonl_option_and_schema_validation(spark, tmp_path):
 
 
 def test_jsonl_inference_merges_probe_window(spark, tmp_path):
-    """Schema inference must merge keys/types across the probe window
-    (r07 ADVICE), not stop at the first parseable object: late-appearing
+    """Schema inference must merge keys/types across the probe window (all
+    sampled lines), not stop at the first parseable object: late-appearing
     keys exist, a null-first field takes its later-observed type,
     long+double widens to double, and a hard conflict widens to string."""
     p = str(tmp_path / "m.jsonl")
@@ -153,7 +153,7 @@ def test_jsonl_inference_merges_probe_window(spark, tmp_path):
 def test_jsonl_string_cast_renders_json_text(spark, tmp_path):
     """Casting non-string JSON values into a declared string column must
     yield JSON text — {"a":1}, true — exactly like spark.read.json, never
-    Python reprs (r07 ADVICE: str() gave "{'a': 1}" / "True")."""
+    Python reprs (str() would give "{'a': 1}" / "True")."""
     p = str(tmp_path / "s.jsonl")
     with open(p, "w") as fh:
         fh.write('{"id": 1, "payload": {"a": 1, "b": [2, 3]}}\n')
@@ -173,8 +173,8 @@ def test_jsonl_string_cast_renders_json_text(spark, tmp_path):
         for r in spark.read.schema(schema).json(p).collect()
     }
     # spark.read.json returns the RAW input substring for nested values
-    # (original whitespace); we re-serialize via json.dumps (the r07
-    # ADVICE fix), so nested rows compare as parsed JSON and scalars
+    # (original whitespace); we re-serialize via json.dumps, so nested
+    # rows compare as parsed JSON and scalars
     # compare exactly.
     for rid in (1, 2):
         assert json.loads(got[rid]) == json.loads(exp[rid]), rid

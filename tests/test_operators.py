@@ -205,8 +205,7 @@ def test_cosine_pandas_bit_identical_to_expression(spark, sf_dir):
     """cosine_pandas accumulates sequentially over dims, so it must equal
     the F.aggregate fold expression to the LAST ULP (no rounding): that
     exact-fold property is what lets oracle-parity queries use the fast
-    numpy path without data-dependent round(4) boundary flips (r03
-    ADVICE)."""
+    numpy path without data-dependent round(4) boundary flips."""
     from spark_streaming_kafka_example_spark.functions.vectors import (
         cosine,
         cosine_pandas,
@@ -256,7 +255,7 @@ def test_ivf_recall_on_clustered_vectors(spark):
 def test_kmeans_ivf_recall_vs_bruteforce(spark):
     """Learned (k-means) centroids must give the trained-IVF path real
     recall: on clustered data, k-means from arbitrary init + n_probe=1
-    recovers the exact top-1 for every query (VERDICT r1 'missing' #3)."""
+    recovers the exact top-1 for every query."""
     import random
 
     from spark_streaming_kafka_example_spark.operators.similarity import (
@@ -397,7 +396,7 @@ def test_audio_codec_roundtrip_and_features():
     back2, _ = A.decode_wav(A.encode_wav(stereo, 8000))
     assert back2.shape == (8000, 2)
     assert np.abs(back2 - stereo).max() < 1e-4
-    # 8-bit path: header says bits=8, unsigned bytes around 128
+    # 8-bit path: header says bits=8, unsigned bytes centred on 128
     pcm8 = (np.clip(mono, -1, 1) * 127 + 128).astype(np.uint8).tobytes()
     fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
     wav8 = (
@@ -520,8 +519,7 @@ def test_multimodal_permissive_decode_modes(spark):
 
 def test_multimodal_real_decode_end_to_end(spark):
     """In-test-generated PNG/PPM images through the REAL decode path:
-    features must equal the locally computed luminance histogram
-    (VERDICT r1 'what's missing' #2)."""
+    features must equal the locally computed luminance histogram."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -588,7 +586,7 @@ def test_asof_join_matches_pandas_merge_asof(spark, sf_dir):
 
 
 def test_asof_tolerance_exact_microsecond_boundary(spark):
-    """Tolerance freshness must compare EXACT timestamps (r06 ADVICE): an
+    """Tolerance freshness must compare EXACT timestamps, not whole seconds: an
     age of 1800.5s (whole-second difference 1800 but true age > 1800)
     nulls out, an age of exactly 1800.0s matches, and 1799.5s matches —
     identical to DuckDB's ``c.ts >= p.ts - INTERVAL 30 MINUTE`` and
@@ -966,7 +964,7 @@ def test_semdedup_recovers_planted_copies(spark, sf_dir):
     got = {(r.id_a, r.id_b) for r in pairs}
     emb_ids = {
         r.vec_id
-        for r in spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        for r in load_table(spark, sf_dir, "embeddings")
         .select("vec_id").collect()
     }
     planted = {(v, v + 100000) for v in emb_ids if v % 10 == 0}
@@ -991,7 +989,7 @@ def test_chunk_windows_cover_all_tokens(spark, sf_dir):
     rows = text_chunk_windows(spark, sf_dir).collect()
     docs = {
         r.doc_id: r.text.split(" ")
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
+        for r in load_table(spark, sf_dir, "documents").collect()
     }
     by_doc: dict = {}
     for r in rows:
@@ -1062,7 +1060,7 @@ def test_ivf_recall_bound(spark, sf_dir):
 
 
 def test_clustered_recall_bound_and_tier_order(spark, sf_dir):
-    """r15 (r12 VERDICT task 4): on the deterministic CLUSTERED corpus —
+    """On the deterministic CLUSTERED corpus —
     where quantization error sits far below the 64-combo cluster structure
     — the quantized tiers genuinely recover true neighbors: IVF-PQ mean
     recall@5 >= 0.8 (measured 1.0 at sf0.001/sf0.01, vs 0.2-0.4 on the
@@ -1389,7 +1387,7 @@ def test_pagerank_hand_computed_triangle(spark):
 
 
 def test_phash_real_images_behavior(spark):
-    """Perceptual hashing on REAL decoded images (r08): identical content
+    """Perceptual hashing on REAL decoded images: identical content
     collides at hamming 0 across codecs, a lightly-perturbed copy stays
     within the near-dup threshold, an unrelated image does not, and dHash
     is exactly invariant to a global brightness shift."""
@@ -1447,7 +1445,7 @@ def test_phash_real_images_behavior(spark):
 
 
 def test_audio_envelope_hash_behavior(spark):
-    """Envelope hashing on REAL decoded WAV (r08): identical clips collide
+    """Envelope hashing on REAL decoded WAV: identical clips collide
     at hamming 0, the hash is volume-invariant (envelope and threshold
     scale together), a lightly-edited clip stays near, and unrelated audio
     does not; the Spark pipeline finds exactly the planted pairs."""
@@ -1545,7 +1543,7 @@ def test_phash_banding_is_pigeonhole_complete(spark, seed, hex_len, max_hamming)
 
 
 def test_audio_scalogram_spectral_sensitivity_and_robustness(spark):
-    """Haar-scalogram fingerprint (r09, the r08 VERDICT task-5 robust
+    """Haar-scalogram fingerprint (the envelope hash's spectrally robust
     twin): (a) two clips with IDENTICAL loudness contours but different
     frequency content — a high-freq burst vs a period-4 wave, both
     |0.5| then silence — hash identically under the envelope (blind) but
@@ -1653,7 +1651,7 @@ def test_audio_envelope_stereo_and_short_clip(spark):
 
 
 def test_video_frame_set_dedup_alignment_boundary(spark):
-    """Frame-set video dedup (r09): a frame-ALIGNED head trim keeps
+    """Frame-set video dedup: a frame-ALIGNED head trim keeps
     (F-1)/F Jaccard overlap (pairs), while the same edit shifted by one
     byte re-cuts every frame boundary and zeroes the overlap (no pair) —
     the documented sensitivity boundary of content-ID-style frame
@@ -1730,7 +1728,7 @@ def test_countmin_never_underestimates(spark):
 
 
 def test_scalogram_dyadic_exactness_vs_integer_reference():
-    """The oracle-exactness claim, pinned directly (r09): scalogram_hash on
+    """The oracle-exactness claim, pinned directly: scalogram_hash on
     float64 samples (byte-128)/128 must equal a pure-INTEGER Haar
     reference on q = byte-128 for random clips — the unnormalized
     transform keeps every coefficient a dyadic rational that float64
@@ -1962,7 +1960,7 @@ def test_residual_pq_roundtrip_on_clustered_data(spark):
 
 def test_sliding_quantile_panes_sum_tumbling_cells(spark, sf_dir):
     """The mergeability claim behind the shared global grid, pinned
-    exactly (r12): a sliding 3h/1h pane's cells must equal the SUM of its
+    exactly: a sliding 3h/1h pane's cells must equal the SUM of its
     three tumbling hours' cells — window rollups need no re-bucketing.
     Both sides run the SAME quantile_windowed_fold (watermark is a no-op
     on a batch DataFrame), so this also proves Spark's sliding F.window
@@ -2267,8 +2265,8 @@ def test_hll_sketch_accuracy(spark, sf_dir):
     error is 1.04/sqrt(256) = 6.5%; assert |err_pct| <= 15 (2.3 sigma) and
     that the small-range indicator is honest. The thresholds are
     sf0.01-specific, so the test resolves that scale as a SIBLING of the
-    suite's sf_dir and skips loudly when it isn't there (r10 ADVICE: the
-    bare absolute path silently assumed the default testdata layout)."""
+    suite's sf_dir and skips loudly when it isn't there (a bare absolute
+    path would silently assume the default testdata layout)."""
     sf001 = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.01")
     if not os.path.isdir(sf001):
         pytest.skip(
@@ -2440,7 +2438,7 @@ def test_minhash_within_row_sigs_match_groupby(spark):
 
 
 def test_split_by_cluster_zero_leakage(spark, sf_dir):
-    """The contrast that closes the r07 audit's loop: the doc-id-gated
+    """The contrast that makes the leakage audit observable: the doc-id-gated
     split leaks planted duplicates into eval splits (nonzero
     n_contaminated — the observable failure), while the content-keyed
     split's audit is exactly 0 on every eval split, and fp-equal docs

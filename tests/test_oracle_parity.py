@@ -40,12 +40,12 @@ def _any_negative_zero(v) -> bool:
 
 @pytest.mark.parametrize("name", sorted(plans.ORACLE))
 def test_oracle_no_negative_zero(oracle_con, name):
-    """Lint the -0.0 bug class out of every oracle (r07 VERDICT task 2).
+    """Lint the -0.0 bug class out of every oracle.
 
     DuckDB's round() keeps the IEEE sign bit on a tiny-negative expression
     that rounds to zero; Spark's BigDecimal round never emits -0.0, so the
     driver's strict value-hash fails even though both answers are "zero".
-    This slipped through twice (r03 vector_normalize, r07
+    It slipped through twice (vector_normalize,
     train_quality_logreg) because the pytest harness canonicalizes -0.0 ==
     0.0. The house rule (plans/__init__.py docstring) is to append "+ 0"
     to any rounded possibly-negative output; this test enforces it by
@@ -186,7 +186,7 @@ def _comments_and_docstrings(path):
 
 
 def test_comments_state_rules_not_history():
-    """Comments and docstrings in the package, bench.py and
+    """Comments and docstrings in the package, the tests, bench.py and
     __spark_entry__.py state the rule or the reason, never the review
     round that produced it; history lives in git and CHANGES.md. String
     constants (oracle SQL, messages) are exempt."""
@@ -197,6 +197,7 @@ def test_comments_state_rules_not_history():
     tag = re.compile(r"\br\d{2}\b|round \d+|VERDICT|ADVICE|guide §")
     files = [
         *sorted((root / "spark_streaming_kafka_example_spark").rglob("*.py")),
+        *sorted((root / "tests").glob("*.py")),
         root / "bench.py",
         root / "__spark_entry__.py",
     ]
@@ -214,7 +215,7 @@ def test_mixture_source_cardinality(spark, sf_dir):
     """sample_domain_mixture's residual weight splits over exactly
     _MIX_RESIDUAL_SHARDS = 20 - 2 unnamed shards; if the fixture's source
     cardinality ever drifts, the target mixture stops summing to 1 — fail
-    loudly here instead (r05 ADVICE)."""
+    loudly here instead."""
     from spark_streaming_kafka_example_spark.plans import textprep
     from spark_streaming_kafka_example_spark.sources import load_table
 

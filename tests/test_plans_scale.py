@@ -34,7 +34,7 @@ def plan_of(spark, sf_dir):
         # Building a plan executes any eager parts of the query (phash
         # decode checkpoints, gradient .first()s, component loops); cache
         # per name so the repo-wide cartesian sweep and the per-family
-        # shape tests share one build (r08 review).
+        # shape tests share one build.
         if name not in _PLAN_CACHE:
             _PLAN_CACHE[name] = formatted_plan(plans.QUERIES[name](spark, sf_dir))
         return _PLAN_CACHE[name]
@@ -43,7 +43,7 @@ def plan_of(spark, sf_dir):
 
 
 def test_no_query_plans_a_cartesian_product(plan_of):
-    """Repo-wide 100 TB contract (r08): NO registered batch query may plan
+    """Repo-wide 100 TB contract: NO registered batch query may plan
     a CartesianProduct — every cross-relation composition must either
     equi-join (possibly on LSH/band/bucket keys) or crossJoin a BROADCAST
     fixed-size relation (which plans as BroadcastNestedLoopJoin over a
@@ -125,7 +125,7 @@ def test_minhash_no_cartesian(plan_of, name):
 
 def test_embedding_cosine_no_cartesian(plan_of):
     """Embedding near-dup must equi-join on epsilon-grid cells — never the
-    all-pairs crossJoin it replaced (VERDICT r1 weak item #1)."""
+    all-pairs crossJoin (quadratic in the corpus)."""
     plan = plan_of("dedup_embedding_cosine")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -133,7 +133,7 @@ def test_embedding_cosine_no_cartesian(plan_of):
 
 @pytest.mark.parametrize("name", ["dedup_image_phash", "dedup_audio_envelope"])
 def test_media_hash_dedup_no_cartesian(plan_of, name):
-    """Perceptual-hash media dedup (r08) must equi-join on
+    """Perceptual-hash media dedup must equi-join on
     (chunk_id, chunk_val) Hamming-band buckets — the simhash pigeonhole
     generalized to hex fingerprints — never an all-pairs blob join. Covers
     the image (aHash) and audio (envelope-hash) entries; the image
@@ -145,7 +145,7 @@ def test_media_hash_dedup_no_cartesian(plan_of, name):
 
 
 def test_vocab_coverage_topv_and_broadcast(plan_of):
-    """Vocabulary building (r08) must pick the top-V via
+    """Vocabulary building must pick the top-V via
     TakeOrderedAndProject (fixed-size, no global sort) and run the
     coverage pass as a map-side BROADCAST join of that vocabulary —
     shuffling the full token stream for the membership check would be the
@@ -157,7 +157,7 @@ def test_vocab_coverage_topv_and_broadcast(plan_of):
 
 
 def test_feature_binning_broadcast_bounds(plan_of):
-    """Quantile binning (r08): the decile bounds must reach the
+    """Quantile binning: the decile bounds must reach the
     assignment pass as a broadcast one-row relation; the only window runs
     over the per-VALUE counts (bounded by the 1e-4 score grid), never the
     corpus."""
@@ -178,7 +178,7 @@ def test_jaccard_is_candidate_bounded(spark, sf_dir, plan_of):
     """The jaccard stage must be candidate-driven (LSH candidates keyed back
     into the shingle relation on (id, shingle)) — never a self-join keyed on
     the shingle alone, whose hot boilerplate shingles explode quadratically
-    on a web corpus (r03 VERDICT weak item #1). dedup_clusters' final plan
+    on a web corpus. dedup_clusters' final plan
     is a checkpointed-label scan, so its pair graph is pinned via the
     jaccard_pair_graph helper it consumes."""
     from spark_streaming_kafka_example_spark.plans.llm import jaccard_pair_graph
@@ -278,9 +278,9 @@ def test_q11_threshold_broadcasts(plan_of):
     "name", sorted(n for n in plans.QUERIES if n.startswith("q") and n[1].isdigit())
 )
 def test_tpch_plans_never_cartesian(plan_of, name):
-    """Blanket contract over the whole TPC-H block (the r04 driver rotation
-    window): whatever join strategy Catalyst picks, no query may degrade to
-    an unconditioned CartesianProduct — correlated subqueries must stay
+    """Blanket contract over the whole TPC-H block: whatever join
+    strategy Catalyst picks, no query may degrade to an unconditioned
+    CartesianProduct — correlated subqueries must stay
     semi/anti equi-joins and scalar thresholds must broadcast."""
     assert "CartesianProduct" not in plan_of(name)
 
@@ -558,7 +558,7 @@ def test_clustered_recall_synthesis_broadcast(spark, sf_dir, plan_of):
     against the constant 8-row prototype relation — all broadcast
     (FIXED-K), with no distributed cartesian anywhere in the composed
     recall plan (the brute/probe crossJoins stay broadcast, as in
-    sim_ivf_recall). r19: the proto joins are pinned on the SYNTHESIS
+    sim_ivf_recall). The proto joins are pinned on the SYNTHESIS
     plan itself — in the composed plan they sit behind the documented
     lazy lineage cut, which the fused PQ-codebook training now
     materializes before explain, so they no longer print there."""
@@ -573,7 +573,7 @@ def test_clustered_recall_synthesis_broadcast(spark, sf_dir, plan_of):
     plan = plan_of("sim_ivfpq_clustered_recall")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # broadcast crossJoins
-    # r19 ADVICE: keep some composed-plan coverage — the composed plan
+    # Keep some composed-plan coverage — the composed plan
     # carries exactly the 2 documented corpus-proportional (unhinted)
     # sort-merge joins of the recall frame; if a regression re-plans the
     # 4 synthesis joins INSIDE the composed query (in front of the
@@ -650,8 +650,8 @@ def test_gapfill_islands_langid_plan_shape(plan_of):
 def test_centroid_literal_array_rejects_unbounded(spark):
     """stream_ann_probe's plan-literal centroid embedding is only legal for
     a FIXED-K centroid relation: the guard must refuse a row set larger
-    than k (the r06 stride pick collected N/50 full vectors to the driver —
-    linear in the corpus — before the kmeans fix; r06 VERDICT task 2)."""
+    than k (a stride pick that collects N/50 full vectors to the driver is
+    linear in the corpus)."""
     from spark_streaming_kafka_example_spark.plans.stream import (
         _centroid_literal_array,
     )
@@ -701,7 +701,7 @@ def test_ivf_index_build_memoized_per_session(spark, sf_dir, monkeypatch):
     """The materialized IVF index is built at most once per (session,
     sf_dir): repeated constructions — plan enumerations, the probe-only
     twin after the indexed query — must reuse the files instead of
-    re-running the write (r06 ADVICE)."""
+    re-running the write."""
     from spark_streaming_kafka_example_spark.operators import similarity
     from spark_streaming_kafka_example_spark.plans import llm
 
@@ -720,8 +720,8 @@ def test_ivf_index_build_memoized_per_session(spark, sf_dir, monkeypatch):
 
 
 def test_r07_analytics_plan_shapes(plan_of):
-    """r07 additions: paths top-20 must be TakeOrderedAndProject over two
-    hash exchanges (user collect + path count); anomaly re-uses its
+    """Analytics plan shapes: paths top-20 must be TakeOrderedAndProject
+    over two hash exchanges (user collect + path count); anomaly re-uses its
     checkpointed minute rollup (one scan) and broadcasts the one-row
     moments; stickiness and pagerank stay cartesian-free with the
     checkpointed base relations hiding re-scans; quality-weighted sampling
@@ -753,7 +753,7 @@ def test_perplexity_buckets_reuses_lm_relation(plan_of):
 
 def test_ivf_index_path_distinct_per_sf_dir(spark, sf_dir, tmp_path):
     """Two sf_dirs with the SAME basename must never share one memoized
-    index path in a session (r07 review) — the key is the full resolved
+    index path in a session — the key is the full resolved
     directory, not its basename."""
     import os
     import shutil
@@ -771,7 +771,7 @@ def test_ivf_index_path_distinct_per_sf_dir(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# r09 (r08 VERDICT task 1): the three stream-static joins whose static side
+# The three stream-static joins whose static side
 # GROWS with users/corpus must not hard-code a broadcast hint. The pre-drain
 # builders are explained WITHOUT executing the stream; each must plan an
 # equi-join (broadcast while the planner's stats say the side is small, a
@@ -786,10 +786,10 @@ def test_ivf_index_path_distinct_per_sf_dir(spark, sf_dir, tmp_path):
      "stream_image_phash_plan", "stream_audio_envelope_plan",
      "stream_audio_spectral_plan", "stream_video_frames_plan",
      "stream_pretrain_gate_plan", "stream_minhash_probe_plan",
-     # r12: the coded-catalog ANN probe — the catalog (bucket + PQ
+     # The coded-catalog ANN probe — the catalog (bucket + PQ
      # reconstruction per corpus vector) grows with the corpus.
      "stream_ivfpq_probe_plan",
-     # r17: the rep-fp split map — grows with the corpus's duplicate
+     # The rep-fp split map — grows with the corpus's duplicate
      # subset, so the doc_id-keyed map join must stay unhinted too.
      "stream_split_by_neardup_plan"],
 )
@@ -814,7 +814,7 @@ def test_stream_static_joins_unhinted_equi(spark, sf_dir, builder):
 
 
 def test_countmin_broadcast_cells_and_topk(plan_of):
-    """Count-min (r09): the 1024-cell sketch must reach the candidate
+    """Count-min: the 1024-cell sketch must reach the candidate
     scoring as a BROADCAST side (shuffling candidates against cells would
     be absurd at any scale), and the exact top-20 must plan as
     TakeOrderedAndProject, never a global sort."""
@@ -825,7 +825,7 @@ def test_countmin_broadcast_cells_and_topk(plan_of):
 
 
 def test_video_frame_dedup_bucket_bounded(plan_of):
-    """Video frame-set dedup (r09): candidate pairs come from an equi-join
+    """Video frame-set dedup: candidate pairs come from an equi-join
     on frame_md5 — bucket-bounded like every dedup family, never
     all-pairs/nested-loop."""
     plan = plan_of("dedup_video_frames")
@@ -839,7 +839,7 @@ def test_video_frame_dedup_bucket_bounded(plan_of):
 
 
 def test_hll_sketch_partial_agg_and_broadcast_grid(plan_of):
-    """HLL sketch (r10): the register fold must partial-aggregate (max
+    """HLL sketch: the register fold must partial-aggregate (max
     combines map-side — executors ship <= 5 x 256 registers, never raw
     hash rows), the all-buckets grid crossJoin must broadcast its
     fixed-256-row side, and nothing may plan a CartesianProduct."""
@@ -851,7 +851,7 @@ def test_hll_sketch_partial_agg_and_broadcast_grid(plan_of):
 
 
 def test_bloom_sketch_broadcast_bits_and_config(plan_of):
-    """Bloom decontamination (r10): the bit set and the 1-row self-sizing
+    """Bloom decontamination: the bit set and the 1-row self-sizing
     m config must reach the corpus-gram explode as BROADCAST sides (the
     corpus is never shuffled against them — the text_decontaminate
     discipline with a constant-bounded broadcast side), the bench-gram
@@ -867,7 +867,7 @@ def test_bloom_sketch_broadcast_bits_and_config(plan_of):
 
 
 def test_quantile_sketch_broadcast_bounds_and_estimates(plan_of):
-    """Quantile sketch (r10): the 1-row grid bounds and the 4-row estimate
+    """Quantile sketch: the 1-row grid bounds and the 4-row estimate
     relation must reach the value scans as BROADCAST sides (the
     moments/bounds idiom) — never a shuffle of value rows against them —
     and nothing may plan a CartesianProduct."""
@@ -879,7 +879,7 @@ def test_quantile_sketch_broadcast_bounds_and_estimates(plan_of):
 
 
 def test_stream_bloom_probe_broadcast_pinned(spark, sf_dir):
-    """Streaming Bloom probe (r11): the at-ingest arm must be pure
+    """Streaming Bloom probe: the at-ingest arm must be pure
     map-side — its ONLY exchanges are broadcasts of the constant-bounded
     sketch sides (bits <= _BLOOM_M_CAP rows as _BLOOM_K BroadcastHashJoins,
     the 1-row m config as a broadcast cross). No shuffle may touch the
@@ -915,7 +915,7 @@ def test_stream_bloom_probe_broadcast_pinned(spark, sf_dir):
 
 
 def test_stream_bpe_tokenize_mapside(spark, sf_dir):
-    """At-ingest BPE tokenization (r11): the learned merge table embeds as
+    """At-ingest BPE tokenization: the learned merge table embeds as
     literal patterns, so the streaming arm must be a pure projection —
     zero joins, zero exchanges of any kind, zero state."""
     from spark_streaming_kafka_example_spark.operators.bpe import train_bpe
@@ -939,7 +939,7 @@ def test_stream_bpe_tokenize_mapside(spark, sf_dir):
 
 
 def test_bloom_prefilter_probe_broadcast(plan_of):
-    """Bloom-pruned join (r11): the fact scan must be pre-screened by
+    """Bloom-pruned join: the fact scan must be pre-screened by
     exactly _BLOOM_K broadcast probe joins before the exact join — the
     runtime-filter shape — with no cartesian anywhere and the final
     aggregation partial-combining map-side."""
@@ -955,7 +955,7 @@ def test_bloom_prefilter_probe_broadcast(plan_of):
 
 def test_native_runtime_bloom_filter_ab(spark, tmp_path):
     """Grounds layout_bloom_prefilter's "AQE automates this" claim in an
-    OBSERVED plan (r12, r11 VERDICT task 6): Spark's InjectRuntimeFilter
+    OBSERVED plan: Spark's InjectRuntimeFilter
     rewrite (spark.sql.optimizer.runtime.bloomFilter.*) plants the same
     build-bloom-on-the-selective-dim / might_contain-probe-before-the-
     exchange shape the hand-rolled query builds explicitly.
@@ -1015,8 +1015,8 @@ def test_native_runtime_bloom_filter_ab(spark, tmp_path):
 
 def test_aqe_skew_join_split_ab(spark):
     """Grounds SCALE.md's "AQE splits skewed keys" claim in an OBSERVED
-    final plan (r15, r12 VERDICT task 6; the test_native_runtime_bloom_
-    filter_ab precedent): plant a skewed equi-join — one hot key owning
+    final plan (as test_native_runtime_bloom_filter_ab does for the
+    runtime filter): plant a skewed equi-join — one hot key owning
     ~83% of the fact side — and read the executed AdaptiveSparkPlan.
 
     A-arm (default thresholds): skewedPartitionThresholdInBytes defaults
@@ -1121,8 +1121,8 @@ def test_ivf_appendix_probe_prunable_both_parts(spark, sf_dir):
     (1) each of base and appendix carries its OWN probe join — two
     BroadcastHashJoins in the executed plan, the union sits above them —
     because a Union between the join and a partitioned scan forecloses
-    dynamic partition pruning entirely (observed before the r16
-    restructure); (2) each bucket-partitioned scan carries the STATIC
+    dynamic partition pruning entirely (observed when the plan had
+    that shape); (2) each bucket-partitioned scan carries the STATIC
     bucket PartitionFilters the optimizer infers through the centroid
     equi-join (constraint propagation, deterministic). The dynamicpruning
     subquery itself IS observed on these scans but its insertion is a

@@ -146,8 +146,8 @@ def test_audio_codec_property_random(seed):
                 A.decode_wav(prefix + blob)
             except ValueError:
                 pass  # the contract: malformed payloads raise ValueError
-    # Adversarial well-formed-prefix corruptions random garbage rarely hits
-    # (ADVICE r04): a truncated fmt chunk and a fmt declaring 0 channels
+    # Adversarial well-formed-prefix corruptions, which random garbage
+    # rarely hits: a truncated fmt chunk and a fmt declaring 0 channels
     # must also surface as ValueError, or the permissive on_error modes
     # would die on exactly the blobs they exist for.
     import struct
@@ -255,7 +255,7 @@ def test_stream_and_batch_event_schemas_agree(spark):
 @pytest.mark.parametrize("unit", ["ns", "us"])
 def test_event_schemas_agree_across_ts_layouts(spark, tmp_path, unit):
     """The testdata generator has shipped events.ts as TIMESTAMP(NANOS)
-    (r01) and naive TIMESTAMP(MICROS) (r02/r03). Both physical layouts must
+    and as naive TIMESTAMP(MICROS). Both physical layouts must
     surface the SAME logical schema (TimestampType ts) from the batch and
     streaming readers, with identical microsecond values."""
     import pyarrow as pa
@@ -325,7 +325,7 @@ def test_paths_trigrams_property_random(spark, seed):
 
 @pytest.mark.parametrize("seed", [13])
 def test_paths_cap_keeps_most_recent_events(spark, seed):
-    """The _PATH_MAX_EVENTS bound (r07 VERDICT task 4): when a user has
+    """The _PATH_MAX_EVENTS bound: when a user has
     more events than the cap, the sequence pipeline must mine only the
     MOST RECENT ``max_events`` of them (ties broken by event_id, matching
     the ordered collect). Run with a tiny cap so the bound actually binds

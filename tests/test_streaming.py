@@ -162,7 +162,7 @@ def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
 
 
 def test_watermark_drops_late_rows_sliding_window(spark, tmp_path):
-    """W1 x W3 (VERDICT r1 next-round #8): the same late-row exclusion must
+    """W1 x W3: the same late-row exclusion must
     hold for SLIDING windows — a late row may not reopen any of the
     already-finalized overlapping windows it would have contributed to."""
     src = str(tmp_path / "wm_slide_src")
@@ -978,8 +978,7 @@ def test_stateful_transition_pairs_bridge_across_batches(spark, tmp_path):
     # The bridge assertion needs b0 DISCOVERED before b1 (the file source
     # orders candidates by modification time under maxFilesPerTrigger=1);
     # coarse filesystem timestamps could tie the two writes, so pin
-    # explicit distinct mtimes on every file of each batch dir (r08
-    # ADVICE).
+    # explicit distinct mtimes on every file of each batch dir.
     for i in range(len(batches)):
         for root, _dirs, files in os.walk(f"{src}/b{i}"):
             for f in files:
@@ -1009,7 +1008,7 @@ def test_stateful_transition_pairs_bridge_across_batches(spark, tmp_path):
 
 
 def test_stateful_transition_pairs_pair_cap_raises(spark, tmp_path):
-    """The in-state pair_cap guard (r08 ADVICE, landed r09): a key whose
+    """The in-state pair_cap guard: a key whose
     cumulative transition count exceeds the cap must fail the query
     LOUDLY at ingest (the batch twin's rank-capped oracle would otherwise
     silently diverge), while a run under the cap is untouched — and the
@@ -1079,7 +1078,7 @@ def test_pretrain_gate_planted_semantics(spark, sf_dir):
 
 @pytest.mark.parametrize("sketch", ["hll", "quantile", "cms"])
 def test_windowed_sketch_watermark_expires_state(spark, tmp_path, sketch):
-    """The windowed-sketch state bound as a CONTRACT (r11 VERDICT task 4):
+    """The windowed-sketch state bound as a CONTRACT:
     the windowed twins document "watermark expires closed windows'
     registers/cells, so state = ACTIVE windows x groups x m". The bounded
     complete-mode drains can't show that, so this runs the SAME folds the
@@ -1174,13 +1173,12 @@ def _state_rows(q) -> int:
 
 
 def test_minhash_probe_recalls_planted_near_dups(spark, sf_dir):
-    """The at-ingest MinHash probe's recall claim as a contract (r11
-    ADVICE): the planted tail-truncated re-uploads (source +
-    _MH_PLANT_OFFSET, Jaccard ~0.75 vs their source — every plant source
-    is doc_id % 10 == 0, hence even, hence IN the store catalog) must
-    mostly surface with >= 1 store candidate — 5x3 banding at j~0.75
-    recalls 1-(1-j^3)^5 ~ 0.93 per plant, so well over half of the ~n/10
-    plants must band."""
+    """The at-ingest MinHash probe's recall claim as a contract: the planted
+    tail-truncated re-uploads (source + _MH_PLANT_OFFSET, Jaccard ~0.75 vs
+    their source — every plant source is doc_id % 10 == 0, hence even, hence
+    IN the store catalog) must mostly surface with >= 1 store candidate —
+    5x3 banding at j~0.75 recalls 1-(1-j^3)^5 ~ 0.93 per plant, so well over
+    half of the ~n/10 plants must band."""
     from spark_streaming_kafka_example_spark.plans.stream import (
         _MH_PLANT_OFFSET,
         stream_minhash_probe,
@@ -1205,7 +1203,7 @@ def test_minhash_probe_recalls_planted_near_dups(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# r14 (r12/r13 VERDICT task 1): the at-ingest ANN probes' top-k state must
+# The at-ingest ANN probes' top-k state must
 # be bounded by k, never by the candidate count — the state-space FIXED-K
 # rule. The fold is unit-tested against a fake GroupState (exact state
 # contents) and behaviorally across micro-batches (the stored k is all
@@ -1285,11 +1283,11 @@ def test_stateful_topk_fold_state_bounded_by_k():
 
 
 def test_stateful_topk_fold_dedupes_ids_and_drops_nan():
-    """r15 ADVICE: (a) a re-observed (key, id) candidate — source replay,
-    re-yielding generator — must occupy ONE slot with its best score, in
-    and across batches; (b) NaN scores are excluded before ranking (the
-    batch rankers' semantics: -NaN sorts last in the struct sort, outside
-    the top-k slice)."""
+    """Two fold contracts: (a) a re-observed (key, id) candidate — source
+    replay, re-yielding generator — must occupy ONE slot with its best
+    score, in and across batches; (b) NaN scores are excluded before ranking
+    (the batch rankers' semantics: -NaN sorts last in the struct sort,
+    outside the top-k slice)."""
     import pandas as pd
 
     from spark_streaming_kafka_example_spark.streaming.stateful import (
@@ -1332,7 +1330,7 @@ def test_stateful_topk_fold_dedupes_ids_and_drops_nan():
 
 
 def test_stateful_topk_fold_timeout_removes_state_unit():
-    """r15 (r14 VERDICT task 2): the timed-out invocation drops the key's
+    """The timed-out invocation drops the key's
     state entirely and emits nothing; normal batches arm the TTL."""
     import pandas as pd
 
@@ -1357,7 +1355,7 @@ def test_stateful_topk_fold_timeout_removes_state_unit():
 
 def test_stateful_topk_fold_ttl_expires_idle_key(spark, tmp_path):
     """End-to-end TTL expiry (the test_windowed_sketch_watermark_expires_
-    state style, r14 VERDICT task 2), in a CONTINUOUSLY-TRIGGERED stream —
+    state style), in a CONTINUOUSLY-TRIGGERED stream —
     not availableNow, which can never terminate under ProcessingTimeTimeout
     (shouldRunAnotherBatch returns true unconditionally for that conf; see
     TOPK_TTL_MS). With ttl_ms=1 every served key goes idle after its data
@@ -1404,7 +1402,7 @@ def test_stateful_topk_fold_ttl_expires_idle_key(spark, tmp_path):
     # NOTE: no awaitTermination/processAllAvailable — under
     # ProcessingTimeTimeout the engine keeps scheduling no-data batches
     # (never signals noNewData), so BOTH block forever; polling is the
-    # only correct wait (measured r15, ~8s to converge).
+    # only correct wait (measured ~8s to converge on 4 cores).
     try:
         got: set = set()
         deadline = time.time() + 120
@@ -1428,7 +1426,7 @@ def test_stateful_topk_fold_ttl_expires_idle_key(spark, tmp_path):
 
 
 def test_sessionizer_idle_timeout_flushes_open_session():
-    """r15: stateful_sessionizer's opt-in idle_timeout_ms makes a left
+    """stateful_sessionizer's opt-in idle_timeout_ms makes a left
     user's FINAL session close — the timed-out invocation emits the open
     session as closed (end = last event seen) and drops the key's state;
     normal batches arm the timeout and keep the gap semantics unchanged.
@@ -1482,7 +1480,7 @@ def test_sessionizer_idle_timeout_flushes_open_session():
 
 
 def test_sessionizer_idle_timeout_flushes_e2e(spark, tmp_path):
-    """r16 (r15 VERDICT task 3): the continuous-trigger e2e twin of
+    """The continuous-trigger e2e twin of
     test_sessionizer_idle_timeout_flushes_open_session, making the fold/
     sessionizer timeout pins symmetric (unit + e2e each, the
     test_stateful_topk_fold_ttl_expires_idle_key shape). Two users' open
@@ -1573,8 +1571,8 @@ def test_topk_fold_matches_dedup_model_property():
 
     import pandas as pd
 
-    hypothesis = pytest.importorskip("hypothesis")  # r15 ADVICE: not a
-    given, settings = hypothesis.given, hypothesis.settings  # declared dep
+    hypothesis = pytest.importorskip("hypothesis")  # not a declared dep
+    given, settings = hypothesis.given, hypothesis.settings
     st = pytest.importorskip("hypothesis.strategies")
 
     from spark_streaming_kafka_example_spark.streaming.stateful import (
@@ -1634,8 +1632,8 @@ def test_sessionizer_fold_batch_boundary_invariance_property():
 
     import pandas as pd
 
-    hypothesis = pytest.importorskip("hypothesis")  # r15 ADVICE: not a
-    given, settings = hypothesis.given, hypothesis.settings  # declared dep
+    hypothesis = pytest.importorskip("hypothesis")  # not a declared dep
+    given, settings = hypothesis.given, hypothesis.settings
     st = pytest.importorskip("hypothesis.strategies")
 
     from spark_streaming_kafka_example_spark.streaming.stateful import (
@@ -1685,8 +1683,8 @@ def test_sessionizer_fold_batch_boundary_invariance_property():
 
 
 def test_fold_timeout_validation(spark):
-    """Driver-side validation of the fold family's opt-in timeouts (r15
-    review): a zero/negative ms would configure ProcessingTimeTimeout
+    """Driver-side validation of the fold family's opt-in timeouts: a
+    zero/negative ms would configure ProcessingTimeTimeout
     (non-terminating availableNow drains, see TOPK_TTL_MS) and then crash
     worker-side in state.setTimeoutDuration mid-stream; a sessionizer
     idle flush shorter than the gap would split sessions the gap contract
@@ -1773,7 +1771,7 @@ def test_stateful_topk_fold_multibatch_stream(spark, tmp_path):
 
 
 def test_ivf_appendix_probe_equals_full_rebuild(spark, sf_dir):
-    """r16 (r15 VERDICT task 7): index freshness as an exact equality —
+    """Index freshness as an exact equality —
     the probe over (batch-built even-id base index) ∪ (odd ids streamed
     in and appended micro-batch by micro-batch, never rebuilding the
     base) returns EXACTLY the from-scratch full-corpus IVF result. If
@@ -1797,7 +1795,7 @@ def test_ivf_appendix_probe_equals_full_rebuild(spark, sf_dir):
 
 
 def test_dedup_store_cross_batch_maintenance(spark, tmp_path):
-    """r16: the fingerprint-store maintenance is load-bearing, not
+    """The fingerprint-store maintenance is load-bearing, not
     decoration — a later micro-batch's copy of content first seen in an
     EARLIER micro-batch reads 'duplicate' purely via the fps that batch
     appended (the seed store never contained them); and a replayed batch
@@ -1875,7 +1873,7 @@ def test_dedup_store_cross_batch_maintenance(spark, tmp_path):
 
 
 def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
-    """r16: the band catalog's growth is load-bearing — a near-dup of
+    """The band catalog's growth is load-bearing — a near-dup of
     content that arrived in an EARLIER micro-batch is detected purely
     via the band rows that batch appended (the seed catalog never banded
     with it); and a replayed batch, bounded to catalog partitions below
@@ -1957,10 +1955,10 @@ def test_minhash_catalog_cross_batch_growth(spark, tmp_path):
 
 
 def test_batch_band_rows_within_row_equals_groupby_form(spark, sf_dir):
-    """r20: _batch_band_rows switched to the within-row signature form
-    (array_min over the shingle-hash array — the r11 stream_minhash_probe
-    idiom) to drop the per-micro-batch explode+groupBy shuffle. Pin the
-    relation byte-equal to the groupBy machinery it replaced — including
+    """_batch_band_rows takes the within-row signature form (array_min
+    over the shingle-hash array, as stream_minhash_probe does), which has
+    no per-micro-batch explode+groupBy shuffle. Pin the relation
+    byte-equal to the groupBy form — including
     the zero-shingle edge, where the groupBy form (and the oracle's
     GROUP BY CTE) emits NO rows for a <n-word doc."""
     from spark_streaming_kafka_example_spark.operators import dedup as DD
@@ -2001,7 +1999,7 @@ def test_batch_band_rows_within_row_equals_groupby_form(spark, sf_dir):
 
 
 def test_pretrain_gate_v2_cross_batch_state(spark, tmp_path):
-    """r17 (r16 VERDICT task 4): the v2 gate's decisions depend on state
+    """The v2 gate's decisions depend on state
     MAINTAINED at ingest, not the frozen seed — an exact copy and a
     near-dup of content that arrived in an EARLIER micro-batch are gated
     via the fps / band rows that batch appended (the seed store and
@@ -2113,7 +2111,7 @@ def test_pretrain_gate_v2_cross_batch_state(spark, tmp_path):
 
 
 def test_image_catalog_cross_batch_growth(spark, tmp_path):
-    """r17: the image chunk catalog's growth is load-bearing — a
+    """The image chunk catalog's growth is load-bearing — a
     re-upload of a cover image that arrived in an EARLIER micro-batch is
     counted purely via the chunk rows that batch appended (the seed
     catalog never hashed it); and a replayed batch, bounded to catalog
@@ -2340,7 +2338,7 @@ def test_catalog_retention_expires(spark, kind):
 
 
 def test_compact_state_single_partition(spark, tmp_path):
-    """r17 (r16 VERDICT stretch): _compact_state collapses every
+    """_compact_state collapses every
     batch_id partition of an ingest-maintained state into exactly one
     fresh batch_id=-1 seed partition with identical content."""
     import pyspark.sql.functions as SF
@@ -2406,7 +2404,7 @@ def test_compacted_ingest_cross_phase(spark, kind):
 
 
 def test_stream_split_by_neardup_recrawl(spark, sf_dir):
-    """r17 (r16 VERDICT task 5): a truncated re-crawl ARRIVING AT INGEST
+    """A truncated re-crawl ARRIVING AT INGEST
     lands in its source's split — the rep-fp map join moves whole
     clusters as one unit where the stateless own-fp gate
     (stream_split_by_cluster's) measurably disagrees — and docs the
@@ -2466,7 +2464,7 @@ def test_stream_split_by_neardup_recrawl(spark, sf_dir):
 
 
 def test_dedup_store_bloom_prunes_and_agrees(spark, sf_dir):
-    """r16: the Bloom prefilter (1) never changes a decision — the
+    """The Bloom prefilter (1) never changes a decision — the
     prefiltered query's (doc_id, status) set equals the plain store
     ingest's exactly (no false negatives; both also share one driver
     oracle) — and (2) actually prunes: against the sf seed store's bits,
@@ -2531,7 +2529,7 @@ def test_dedup_store_bloom_prunes_and_agrees(spark, sf_dir):
 
 
 def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
-    """r18 (r17 VERDICT task 4): the v3 gate's image arm reads the
+    """The v3 gate's image arm reads the
     MAINTAINED chunk catalog — a cover-stable tail-scramble of content
     that arrived in an EARLIER micro-batch (same first _GATE_COVER_LEN
     chars, reversed tail: identical cover image, unrelated shingles) is
@@ -2636,7 +2634,7 @@ def test_pretrain_gate_v3_cross_batch_image(spark, tmp_path):
 
 
 def test_stream_split_by_neardup_incremental_cross_batch(spark, tmp_path):
-    """r18 (r17 VERDICT task 6): the INGEST-MAINTAINED cluster map closes
+    """The INGEST-MAINTAINED cluster map closes
     the batch-refresh twin's gap — a near-dup pair whose members BOTH
     arrive after stream start, in DIFFERENT micro-batches, still lands
     in one split (the later member adopts the earlier's rep through the
@@ -2765,7 +2763,7 @@ def test_stream_split_by_neardup_incremental_cross_batch(spark, tmp_path):
 
 
 def test_neardup_inc_compacted_adopts_through_collapse(spark, tmp_path):
-    """r18: the incremental cluster map's mid-lifecycle compaction is
+    """The incremental cluster map's mid-lifecycle compaction is
     load-bearing — a phase-B arrival near-dupping a PHASE-A doc adopts
     its rep through the COMPACTED catalog + map (the only place phase
     A's state survives), where the stateless own-fp gate disagrees."""
@@ -2817,7 +2815,7 @@ def test_neardup_inc_compacted_adopts_through_collapse(spark, tmp_path):
 
 
 def test_embedding_catalog_cross_batch_growth(spark, tmp_path):
-    """r18: the embedding near-dup catalog's growth is load-bearing — an
+    """The embedding near-dup catalog's growth is load-bearing — an
     exact copy of a vector that arrived in an EARLIER micro-batch is
     counted purely via the code rows + vector that batch appended (the
     seed never saw it); and a replayed batch, bounded to partitions
